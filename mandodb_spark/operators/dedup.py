@@ -347,23 +347,6 @@ def simhash_band_pairs(hashes: DataFrame, id_col: str, hash_col: str = "simhash"
     )
 
 
-def token_ngrams(text: Column, n: int) -> Column:
-    """Distinct word n-grams of lowercased whitespace-tokenized text
-    (COLUMN form, for composition inside other expressions on short
-    strings — the per-element ``transform`` lambda is interpreted, so
-    corpus-scale paths use the explode-first scalar construction inside
-    :func:`ngram_contamination` instead; measured 2.7× at sf0.1)."""
-    toks = F.split(F.lower(text), " ")
-    grams = F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, F.lit(n)), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    return F.array_distinct(grams)
-
-
 def ngram_contamination(eval_df: DataFrame, bench_df: DataFrame, id_col: str,
                         text_col: str, n: int = 5, threshold: float = 0.2) -> DataFrame:
     """Benchmark decontamination: per eval document, the fraction of its
@@ -545,18 +528,20 @@ _SIZE_SUFFIXES = {"b": 1, "k": 1024, "kb": 1024, "m": 1024**2,
                   "mb": 1024**2, "g": 1024**3, "gb": 1024**3}
 
 
-def _conf_bytes(spark, key: str, default: int) -> int:
-    """A Spark byte-size conf ("64MB", "10485760b", "-1") as int bytes;
-    non-positive (broadcast disabled) and unparseable both → ``default``
-    treated conservatively: disabled means never broadcast."""
+def _broadcast_threshold(spark) -> int:
+    """``spark.sql.autoBroadcastJoinThreshold`` ("64MB", "10485760b",
+    "-1") as int bytes.  Non-positive means broadcast is disabled, so the
+    caller never broadcasts; an unparseable value falls back to Spark's
+    own 10 MB default, never to anything larger."""
     try:
-        raw = str(spark.conf.get(key)).strip().lower()
+        raw = str(spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+                  ).strip().lower()
         for suf in sorted(_SIZE_SUFFIXES, key=len, reverse=True):
             if raw.endswith(suf):
                 return int(float(raw[:-len(suf)]) * _SIZE_SUFFIXES[suf])
         return int(raw)
     except Exception:
-        return default
+        return 10 * 1024 * 1024
 
 
 def _pinned_parallelism(spark) -> int:
@@ -650,9 +635,7 @@ def _verify_candidates(df: DataFrame, id_col: str, cands: DataFrame,
     n_docs, n_shingles = cand_docs.agg(
         F.count(F.lit(1)), F.sum(F.size("__sh"))).first()
     est_bytes = (n_docs or 0) * 32 + (n_shingles or 0) * _SHINGLE_BCAST_BYTES
-    bcast_cap = _conf_bytes(
-        df.sparkSession, "spark.sql.autoBroadcastJoinThreshold",
-        64 * 1024 * 1024)
+    bcast_cap = _broadcast_threshold(df.sparkSession)
     hint = F.broadcast if est_bytes <= bcast_cap else (lambda x: x)
     a = cand_docs.select(F.col("__cid").alias("id_a"), F.col("__sh").alias("__sha"))
     b = cand_docs.select(F.col("__cid").alias("id_b"), F.col("__sh").alias("__shb"))

@@ -97,10 +97,11 @@ def url_parts(url: Column) -> Column:
     per row (measured 3.0 s / 100k rows at sf0.1, 20× the cost of one
     match).  Here one ``regexp_replace`` rewrites the matched URL to its
     groups joined by ``\\x01`` and a split recovers them; a non-matching
-    URL passes through unchanged (split size ≠ 5), yielding the same
-    all-empty components ``regexp_extract`` returns.  Alias the struct in
-    its OWN projection (multi-referenced aliases are not collapsed, so
-    the parse stays single-execution) and build on the fields.
+    URL passes through unchanged and takes the per-component extractors,
+    yielding the same all-empty components ``regexp_extract`` returns.
+    Alias the struct in its OWN projection (multi-referenced aliases are
+    not collapsed, so the parse stays single-execution) and build on the
+    fields.
     """
     rep = F.regexp_replace(
         url, _URL_RE,
@@ -111,10 +112,13 @@ def url_parts(url: Column) -> Column:
     # limit=-1), so a match with empty port/path/query still yields
     # exactly 5 parts — pinned by a regression test.  A url that CONTAINS
     # the separator byte (not RFC-conforming, but possible input) would
-    # split into != 5 parts; the guard routes those rows through the
-    # per-component extractors so the struct agrees with
-    # :func:`canonicalize_url` on every input (ADVICE r12).
-    ok = F.size(arr) == 5
+    # split into != 5 parts, and a non-matching input with exactly four
+    # separators would split into 5 parts of garbage; the guard routes
+    # both through the per-component extractors so the struct agrees
+    # with :func:`canonicalize_url` on every input.  ``rep != url`` is
+    # "the regex matched" without a second regex pass: a match rewrites
+    # the ``://`` after the scheme, a non-match passes through unchanged.
+    ok = (rep != url) & (F.size(arr) == 5)
     g = lambda i, alt: F.when(ok, arr[i]).otherwise(alt)  # noqa: E731
     q = g(4, url_query(url))
     return F.struct(

@@ -42,18 +42,3 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
-
-
-def configure_session(spark: SparkSession) -> SparkSession:
-    """Apply the semantic runtime confs to an externally-created session.
-
-    The driver's verify harness builds its own SparkSession; these two
-    settings must hold for the engine's semantics regardless of who built
-    the session (both are runtime-settable).
-    """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-    except Exception:
-        pass
-    return spark

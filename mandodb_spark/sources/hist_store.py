@@ -51,12 +51,6 @@ def canonicalize_payload(df: DataFrame, payload: tuple,
     )
 
 
-def canonicalize_hist(df: DataFrame,
-                      segment_duration: int = DEFAULT_SEGMENT_DURATION) -> DataFrame:
-    """Histogram-sample canonicalization (``hist`` payload)."""
-    return canonicalize_payload(df, ("hist",), segment_duration)
-
-
 class HistStore:
     """Disk store: ``<root>`` holds seg-partitioned parquet of
     ``(labels, ts, hist, series_key)``.  The seg-partitioned sibling-store

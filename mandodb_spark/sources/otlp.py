@@ -37,11 +37,11 @@ from __future__ import annotations
 
 import re
 import struct
-from typing import Iterator
 
 from pyspark.sql import DataFrame
 
-from .prompb import _enc_uvarint, _msg, _unzigzag, _uvarint
+from .prompb import (_enc_uvarint, _f64_d, _fields, _msg, _packed_fixed64,
+                     _unzigzag, _uvarint)
 
 #: Engine row schema for the number-point / classic-histogram lowering.
 OTLP_ROW_SCHEMA = ("metric string, labels map<string,string>, ts bigint, "
@@ -56,53 +56,14 @@ OTLP_EXPHIST_SCHEMA = (
 )
 
 
-def _ofields(buf: bytes) -> Iterator[tuple[int, int, object]]:
-    """Like ``prompb._fields`` but FIXED64 yields the raw 8 bytes —
-    OTLP uses fixed64 for both uint64 counters and double sums, so the
-    caller picks the unpack.  Truncated payloads (a declared length or a
-    fixed-width field running past the buffer end) raise instead of
-    yielding a short slice, so corruption fails the whole-payload decode
-    (ADVICE r11: silent partial mis-decodes could slip garbage rows
-    through in drop mode)."""
-    i, n = 0, len(buf)
-    while i < n:
-        key, i = _uvarint(buf, i)
-        field, wt = key >> 3, key & 0x07
-        if wt == 0:
-            v, i = _uvarint(buf, i)
-            yield field, wt, v
-        elif wt == 1:
-            if i + 8 > n:
-                raise ValueError("truncated fixed64 field")
-            yield field, wt, buf[i:i + 8]
-            i += 8
-        elif wt == 2:
-            ln, i = _uvarint(buf, i)
-            if i + ln > n:
-                raise ValueError("length-delimited field overruns buffer")
-            yield field, wt, buf[i:i + ln]
-            i += ln
-        elif wt == 5:
-            if i + 4 > n:
-                raise ValueError("truncated fixed32 field")
-            yield field, wt, buf[i:i + 4]
-            i += 4
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
-
-
 def _f64_u(raw: bytes) -> int:
     return struct.unpack("<Q", raw)[0]
-
-
-def _f64_d(raw: bytes) -> float:
-    return struct.unpack("<d", raw)[0]
 
 
 def _any_value(buf: bytes) -> str:
     """AnyValue → the flattened string every OTLP→Prometheus bridge
     emits for label use."""
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 1 and wt == 2:
             return v.decode("utf-8")
         if f == 2 and wt == 0:
@@ -114,11 +75,11 @@ def _any_value(buf: bytes) -> str:
             return str(_f64_d(v))
         if f == 5 and wt == 2:  # ArrayValue{values=1}
             return "[" + ",".join(
-                _any_value(x) for g, w, x in _ofields(v)
+                _any_value(x) for g, w, x in _fields(v)
                 if g == 1 and w == 2) + "]"
         if f == 6 and wt == 2:  # KeyValueList{values=1}
             return "{" + ",".join(
-                "%s=%s" % _key_value(x) for g, w, x in _ofields(v)
+                "%s=%s" % _key_value(x) for g, w, x in _fields(v)
                 if g == 1 and w == 2) + "}"
         if f == 7 and wt == 2:
             return v.hex()
@@ -127,7 +88,7 @@ def _any_value(buf: bytes) -> str:
 
 def _key_value(buf: bytes) -> tuple[str, str]:
     key, val = "", ""
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 1 and wt == 2:
             key = v.decode("utf-8")
         elif f == 2 and wt == 2:
@@ -136,13 +97,13 @@ def _key_value(buf: bytes) -> tuple[str, str]:
 
 
 def _attrs(buf: bytes, field: int) -> dict:
-    return dict(_key_value(v) for f, wt, v in _ofields(buf)
+    return dict(_key_value(v) for f, wt, v in _fields(buf)
                 if f == field and wt == 2)
 
 
 def _number_point(buf: bytes) -> dict:
     out = {"attrs": {}, "ts": 0, "value": None}
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 7 and wt == 2:
             out["attrs"].update([_key_value(v)])
         elif f == 3 and wt == 1:
@@ -158,7 +119,7 @@ def _number_point(buf: bytes) -> dict:
 def _hist_point(buf: bytes) -> dict:
     out = {"attrs": {}, "ts": 0, "count": 0, "sum": None,
            "bucket_counts": [], "bounds": []}
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 9 and wt == 2:
             out["attrs"].update([_key_value(v)])
         elif f == 3 and wt == 1:
@@ -168,22 +129,15 @@ def _hist_point(buf: bytes) -> dict:
         elif f == 5 and wt == 1:
             out["sum"] = _f64_d(v)
         elif f == 6:  # packed fixed64 bucket counts
-            if wt == 2:
-                out["bucket_counts"].extend(
-                    struct.unpack(f"<{len(v) // 8}Q", v))
-            else:
-                out["bucket_counts"].append(_f64_u(v))
+            out["bucket_counts"].extend(_packed_fixed64(v, wt, "Q"))
         elif f == 7:  # packed double bounds
-            if wt == 2:
-                out["bounds"].extend(struct.unpack(f"<{len(v) // 8}d", v))
-            else:
-                out["bounds"].append(_f64_d(v))
+            out["bounds"].extend(_packed_fixed64(v, wt))
     return out
 
 
 def _exp_buckets(buf: bytes) -> tuple[int, list[int]]:
     offset, counts = 0, []
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 1 and wt == 0:
             offset = _unzigzag(v)
         elif f == 2:
@@ -202,7 +156,7 @@ def _exphist_point(buf: bytes) -> dict:
            "zero_count": 0, "zero_threshold": 0.0,
            "pos_offset": 0, "pos_counts": [],
            "neg_offset": 0, "neg_counts": []}
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 1 and wt == 2:
             out["attrs"].update([_key_value(v)])
         elif f == 3 and wt == 1:
@@ -229,7 +183,7 @@ def _summary_point(buf: bytes) -> dict:
     time_unix_nano=3, count=4, sum=5, quantile_values=6 with
     ValueAtQuantile{quantile=1, value=2})."""
     out = {"attrs": {}, "ts": 0, "count": 0, "sum": None, "quantiles": []}
-    for f, wt, v in _ofields(buf):
+    for f, wt, v in _fields(buf):
         if f == 7 and wt == 2:
             out["attrs"].update([_key_value(v)])
         elif f == 3 and wt == 1:
@@ -240,7 +194,7 @@ def _summary_point(buf: bytes) -> dict:
             out["sum"] = _f64_d(v)
         elif f == 6 and wt == 2:
             q = val = 0.0
-            for g, w, x in _ofields(v):
+            for g, w, x in _fields(v):
                 if g == 1 and w == 1:
                     q = _f64_d(x)
                 elif g == 2 and w == 1:
@@ -265,20 +219,20 @@ def decode_export_request(data: bytes) -> list[dict]:
     (gauges have no temporality) and Summary is cumulative by
     definition."""
     points: list[dict] = []
-    for f, wt, rm in _ofields(data):
+    for f, wt, rm in _fields(data):
         if f != 1 or wt != 2:
             continue
         res_attrs: dict = {}
         metrics: list[bytes] = []
-        for f2, wt2, v2 in _ofields(rm):
+        for f2, wt2, v2 in _fields(rm):
             if f2 == 1 and wt2 == 2:  # Resource
                 res_attrs = _attrs(v2, 1)
             elif f2 == 2 and wt2 == 2:  # ScopeMetrics
-                metrics.extend(v3 for f3, wt3, v3 in _ofields(v2)
+                metrics.extend(v3 for f3, wt3, v3 in _fields(v2)
                                if f3 == 2 and wt3 == 2)
         for m in metrics:
             name, kinds = "", []
-            for f3, wt3, v3 in _ofields(m):
+            for f3, wt3, v3 in _fields(m):
                 if f3 == 1 and wt3 == 2:
                     name = v3.decode("utf-8")
                 elif f3 == 5 and wt3 == 2:  # Gauge (no temporality)
@@ -299,12 +253,12 @@ def decode_export_request(data: bytes) -> list[dict]:
                 is_monotonic = None
                 if has_temporality:
                     temporality = "unspecified"
-                    for f4, wt4, v4 in _ofields(body):
+                    for f4, wt4, v4 in _fields(body):
                         if f4 == 2 and wt4 == 0:
                             temporality = _TEMPORALITY.get(v4, "unspecified")
                         elif f4 == 3 and wt4 == 0 and kind == "number":
                             is_monotonic = bool(v4)
-                for f4, wt4, dp in _ofields(body):
+                for f4, wt4, dp in _fields(body):
                     if f4 != 1 or wt4 != 2:  # data_points
                         continue
                     p = dec(dp)

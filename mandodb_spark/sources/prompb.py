@@ -48,7 +48,9 @@ from .loaders import REMOTE_WRITE_TIMESERIES_SCHEMA
 
 
 def _uvarint(buf: bytes, i: int) -> tuple[int, int]:
-    """Decode one unsigned varint at ``buf[i:]`` → (value, next index)."""
+    """Decode one unsigned varint at ``buf[i:]`` → (value, next index).
+    The value must fit 64 bits: a tenth byte above 1 raises, so no
+    decoded integer can overflow its int64/uint64 column."""
     result = 0
     shift = 0
     while True:
@@ -56,12 +58,12 @@ def _uvarint(buf: bytes, i: int) -> tuple[int, int]:
             raise ValueError("truncated varint")
         b = buf[i]
         i += 1
+        if shift == 63 and b > 1:
+            raise ValueError("varint overflows 64 bits")
         result |= (b & 0x7F) << shift
         if not b & 0x80:
             return result, i
         shift += 7
-        if shift > 63:
-            raise ValueError("varint too long")
 
 
 def _to_int64(u: int) -> int:
@@ -71,6 +73,14 @@ def _to_int64(u: int) -> int:
 
 def _unzigzag(u: int) -> int:
     return (u >> 1) ^ -(u & 1)
+
+
+def _fits(v: int, bits: int) -> int:
+    """``v`` when it fits a signed ``bits``-wide Arrow column, else
+    ValueError — a decoded payload must never fail the batch build."""
+    if not -(1 << bits - 1) <= v < (1 << bits - 1):
+        raise ValueError(f"value {v} overflows int{bits}")
+    return v
 
 
 def _enc_uvarint(v: int) -> bytes:
@@ -94,40 +104,55 @@ def _zigzag(v: int) -> int:
 # ------------------------------------------------------ field iteration
 
 
+def _field_value(buf: bytes, i: int, end: int, wt: int) -> tuple[object, int]:
+    """Read the value of one field of wire type ``wt`` at ``buf[i:]`` →
+    (raw value, next index).  Raw value: int for varint, bytes for the
+    rest — fixed64/fixed32 as their raw little-endian bytes, because the
+    message decides whether they hold a double or an integer (OTLP uses
+    fixed64 for both).  ``end`` is the end of the enclosing message: a
+    value or declared length running past it raises, so a corrupt
+    payload never decodes bytes that belong to a sibling message."""
+    if wt == 0:
+        v, i = _uvarint(buf, i)
+        if i > end:
+            raise ValueError("truncated varint")
+        return v, i
+    if wt == 2:
+        ln, i = _uvarint(buf, i)
+        j = i + ln
+    elif wt == 1:
+        j = i + 8
+    elif wt == 5:
+        j = i + 4
+    else:
+        raise ValueError(f"unsupported wire type {wt}")
+    if j > end:
+        raise ValueError("truncated field")
+    return buf[i:j], j
+
+
 def _fields(buf: bytes) -> Iterator[tuple[int, int, object]]:
-    """Iterate (field_no, wire_type, raw value) over one message.  Raw
-    value: int for varint, float for fixed64 (decoded as double), bytes
-    for length-delimited, int for fixed32."""
-    i = 0
-    n = len(buf)
+    """Iterate (field_no, wire_type, raw value) over one message, every
+    value read by :func:`_field_value` — the framing reader of both wire
+    codecs (prompb and OTLP)."""
+    i, n = 0, len(buf)
     while i < n:
         key, i = _uvarint(buf, i)
-        field, wt = key >> 3, key & 0x07
-        if wt == 0:
-            v, i = _uvarint(buf, i)
-            yield field, wt, v
-        elif wt == 1:
-            if i + 8 > n:
-                raise ValueError("truncated fixed64")
-            yield field, wt, struct.unpack_from("<d", buf, i)[0]
-            i += 8
-        elif wt == 2:
-            ln, i = _uvarint(buf, i)
-            if i + ln > n:
-                raise ValueError("truncated bytes field")
-            yield field, wt, buf[i:i + ln]
-            i += ln
-        elif wt == 5:
-            if i + 4 > n:
-                raise ValueError("truncated fixed32")
-            yield field, wt, struct.unpack_from("<I", buf, i)[0]
-            i += 4
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
+        v, i = _field_value(buf, i, n, key & 0x07)
+        yield key >> 3, key & 0x07, v
+
+
+_UNPACK_D = struct.Struct("<d").unpack_from
+
+
+def _f64_d(raw: bytes) -> float:
+    """A fixed64 field's raw bytes as a double."""
+    return _UNPACK_D(raw)[0]
 
 
 def _packed_svarints(v: object, wt: int) -> list[int]:
-    """Packed (length-delimited) or single unpacked sint64 → zigzag ints."""
+    """Packed (length-delimited) or single unpacked sint64 → zigzag ints;
+    any other wire type is a mismatched field and is skipped."""
     if wt == 2:
         out = []
         i = 0
@@ -136,39 +161,41 @@ def _packed_svarints(v: object, wt: int) -> list[int]:
             u, i = _uvarint(buf, i)
             out.append(_unzigzag(u))
         return out
-    return [_unzigzag(int(v))]  # type: ignore[arg-type]
+    return [_unzigzag(v)] if wt == 0 else []  # type: ignore[arg-type]
 
 
-def _packed_doubles(v: object, wt: int) -> list[float]:
-    if wt == 2:
-        buf: bytes = v  # type: ignore[assignment]
-        if len(buf) % 8:
-            raise ValueError("packed doubles not a multiple of 8")
-        return list(struct.unpack(f"<{len(buf) // 8}d", buf))
-    return [float(v)]  # type: ignore[arg-type]
+def _packed_fixed64(v: object, wt: int, code: str = "d") -> list:
+    """Packed (length-delimited) or single unpacked fixed64 values as
+    doubles (``code="d"``) or uint64 (``"Q"``); any other wire type is
+    a mismatched field and is skipped."""
+    if wt not in (1, 2):
+        return []
+    buf: bytes = v  # type: ignore[assignment]
+    if len(buf) % 8:
+        raise ValueError("packed fixed64 not a multiple of 8 bytes")
+    return list(struct.unpack(f"<{len(buf) // 8}{code}", buf))
 
 
 # ---------------------------------------------------------- decode side
 
 
-def _decode_label(buf: bytes) -> dict:
+def _label(buf: bytes, i: int, end: int) -> tuple[str, str]:
+    """``Label{string name = 1; string value = 2}`` at ``buf[i:end]`` →
+    (name, value) — the one Label parser (series, exemplars, chunks)."""
     name = value = ""
-    for f, wt, v in _fields(buf):
-        if f == 1 and wt == 2:
+    while i < end:
+        key, i = _uvarint(buf, i)
+        v, i = _field_value(buf, i, end, key & 0x07)
+        if key == 0x0A:
             name = v.decode("utf-8")
-        elif f == 2 and wt == 2:
+        elif key == 0x12:
             value = v.decode("utf-8")
+    return name, value
+
+
+def _decode_label(buf: bytes) -> dict:
+    name, value = _label(buf, 0, len(buf))
     return {"name": name, "value": value}
-
-
-def _decode_sample(buf: bytes) -> dict:
-    out = {"timestamp": 0, "value": 0.0}
-    for f, wt, v in _fields(buf):
-        if f == 1 and wt == 1:
-            out["value"] = v
-        elif f == 2 and wt == 0:
-            out["timestamp"] = _to_int64(v)
-    return out
 
 
 def _decode_exemplar(buf: bytes) -> dict:
@@ -177,7 +204,7 @@ def _decode_exemplar(buf: bytes) -> dict:
         if f == 1 and wt == 2:
             out["labels"].append(_decode_label(v))
         elif f == 2 and wt == 1:
-            out["value"] = v
+            out["value"] = _f64_d(v)
         elif f == 3 and wt == 0:
             out["timestamp"] = _to_int64(v)
     return out
@@ -187,9 +214,9 @@ def _decode_span(buf: bytes) -> dict:
     out = {"offset": 0, "length": 0}
     for f, wt, v in _fields(buf):
         if f == 1 and wt == 0:
-            out["offset"] = _unzigzag(v)
+            out["offset"] = _fits(_unzigzag(v), 32)
         elif f == 2 and wt == 0:
-            out["length"] = v
+            out["length"] = _fits(v, 32)
     return out
 
 
@@ -203,59 +230,159 @@ def _decode_histogram(buf: bytes) -> dict:
     }
     for f, wt, v in _fields(buf):
         if f == 1 and wt == 0:
-            out["count_int"] = v
+            out["count_int"] = _fits(v, 64)
         elif f == 2 and wt == 1:
-            out["count_float"] = v
+            out["count_float"] = _f64_d(v)
         elif f == 3 and wt == 1:
-            out["sum"] = v
+            out["sum"] = _f64_d(v)
         elif f == 4 and wt == 0:
-            out["schema"] = _unzigzag(v)
+            out["schema"] = _fits(_unzigzag(v), 32)
         elif f == 5 and wt == 1:
-            out["zero_threshold"] = v
+            out["zero_threshold"] = _f64_d(v)
         elif f == 6 and wt == 0:
-            out["zero_count_int"] = v
+            out["zero_count_int"] = _fits(v, 64)
         elif f == 7 and wt == 1:
-            out["zero_count_float"] = v
+            out["zero_count_float"] = _f64_d(v)
         elif f == 8 and wt == 2:
             out["negative_spans"].append(_decode_span(v))
         elif f == 9:
             out["negative_deltas"].extend(_packed_svarints(v, wt))
         elif f == 10:
-            out["negative_counts"].extend(_packed_doubles(v, wt))
+            out["negative_counts"].extend(_packed_fixed64(v, wt))
         elif f == 11 and wt == 2:
             out["positive_spans"].append(_decode_span(v))
         elif f == 12:
             out["positive_deltas"].extend(_packed_svarints(v, wt))
         elif f == 13:
-            out["positive_counts"].extend(_packed_doubles(v, wt))
+            out["positive_counts"].extend(_packed_fixed64(v, wt))
         elif f == 15 and wt == 0:
             out["timestamp"] = _to_int64(v)
         # field 14 (reset_hint) intentionally skipped
     return out
 
 
-def _decode_timeseries(buf: bytes) -> dict:
-    out = {"labels": [], "samples": [], "histograms": [], "exemplars": []}
-    for f, wt, v in _fields(buf):
-        if wt != 2:
+class _Cols:
+    """Flat column accumulators for one decode batch: python lists for
+    samples/labels (one append per item — no per-item dict), dict lists
+    for the rare histogram/exemplar messages."""
+
+    __slots__ = ("s_counts", "ts", "val", "l_counts", "l_names", "l_vals",
+                 "hists", "exs")
+
+    def __init__(self):
+        self.s_counts: list = []   # samples per series
+        self.ts: list = []         # flat sample timestamps
+        self.val: list = []        # flat sample values
+        self.l_counts: list = []   # labels per series
+        self.l_names: list = []    # flat label names
+        self.l_vals: list = []     # flat label values
+        self.hists: list = []      # per-series histogram dict lists
+        self.exs: list = []        # per-series exemplar dict lists
+
+
+def _decode_series_cols(buf: bytes, i: int, end: int, c: _Cols) -> None:
+    """Scan one TimeSeries submessage ``buf[i:end]`` into flat columns —
+    the only TimeSeries parser, for remote write and remote read alike.
+    One general field loop; Sample fields, the hot path, are read in
+    place (one-byte keys and lengths without a call, ``_uvarint`` only
+    when the high bit is set) and every length and fixed-width read is
+    checked against the end of the message that encloses it, so a
+    corrupt payload raises ``ValueError`` instead of decoding a
+    sibling's bytes.  Labels, exemplars and histograms go to their own
+    decoders."""
+    ns = nl = 0
+    hs: list = []
+    es: list = []
+    while i < end:
+        key = buf[i]
+        if key < 0x80:
+            i += 1
+        else:
+            key, i = _uvarint(buf, i)
+        if key & 0x07 != 2:
+            _, i = _field_value(buf, i, end, key & 0x07)
             continue
-        if f == 1:
-            out["labels"].append(_decode_label(v))
-        elif f == 2:
-            out["samples"].append(_decode_sample(v))
-        elif f == 3:
-            out["exemplars"].append(_decode_exemplar(v))
-        elif f == 4:
-            out["histograms"].append(_decode_histogram(v))
-    return out
+        if i < end and buf[i] < 0x80:
+            j = i + 1 + buf[i]
+            i += 1
+        else:
+            ln, i = _uvarint(buf, i)
+            j = i + ln
+        if j > end:
+            raise ValueError("truncated field")
+        if key == 0x12:  # Sample{double value = 1; int64 timestamp = 2}
+            t, v = 0, 0.0
+            while i < j:
+                k = buf[i]
+                if k < 0x80:
+                    i += 1
+                else:
+                    k, i = _uvarint(buf, i)
+                if k == 0x09:
+                    if i + 8 > j:
+                        raise ValueError("truncated field")
+                    v = _UNPACK_D(buf, i)[0]
+                    i += 8
+                elif k == 0x10:
+                    t, i = _uvarint(buf, i)
+                else:
+                    _, i = _field_value(buf, i, j, k & 0x07)
+            if i > j:
+                raise ValueError("truncated varint")
+            c.ts.append(t - (1 << 64) if t >= (1 << 63) else t)
+            c.val.append(v)
+            ns += 1
+        elif key == 0x0A:
+            name, value = _label(buf, i, j)
+            c.l_names.append(name)
+            c.l_vals.append(value)
+            nl += 1
+        elif key == 0x1A:
+            es.append(_decode_exemplar(buf[i:j]))
+        elif key == 0x22:
+            hs.append(_decode_histogram(buf[i:j]))
+        i = j
+    c.s_counts.append(ns)
+    c.l_counts.append(nl)
+    c.hists.append(hs)
+    c.exs.append(es)
+
+
+def _np_decode_request(raw: bytes, c: _Cols) -> None:
+    """Decode one uncompressed WriteRequest (or remote-read QueryResult,
+    which frames its series the same way: ``repeated TimeSeries = 1``)
+    into the flat columns; no per-sample or per-label dict is built."""
+    i, n = 0, len(raw)
+    while i < n:
+        key, i = _uvarint(raw, i)
+        if key == 0x0A:
+            ln, i = _uvarint(raw, i)
+            if i + ln > n:
+                raise ValueError("truncated field")
+            _decode_series_cols(raw, i, i + ln, c)
+            i += ln
+        else:
+            _, i = _field_value(raw, i, n, key & 0x07)
 
 
 def decode_write_request(data: bytes) -> list[dict]:
     """Uncompressed ``WriteRequest`` protobuf → list of TimeSeries dicts
-    shaped like ``REMOTE_WRITE_TIMESERIES_SCHEMA`` rows.  Unknown fields
+    shaped like ``REMOTE_WRITE_TIMESERIES_SCHEMA`` rows: a dict view over
+    the columns :func:`_np_decode_request` fills.  Unknown fields
     (metadata, future additions) are skipped per protobuf rules."""
-    return [_decode_timeseries(v)
-            for f, wt, v in _fields(data) if f == 1 and wt == 2]
+    c = _Cols()
+    _np_decode_request(data, c)
+    out, so, lo = [], 0, 0
+    for ns, nl, hs, es in zip(c.s_counts, c.l_counts, c.hists, c.exs):
+        out.append({
+            "labels": [{"name": k, "value": v} for k, v in
+                       zip(c.l_names[lo:lo + nl], c.l_vals[lo:lo + nl])],
+            "samples": [{"timestamp": t, "value": v} for t, v in
+                        zip(c.ts[so:so + ns], c.val[so:so + ns])],
+            "histograms": hs, "exemplars": es})
+        so += ns
+        lo += nl
+    return out
 
 
 # ---------------------------------------------------------------- snappy
@@ -376,17 +503,17 @@ def encode_write_request(timeseries: list[dict], compress: bool = True
     return snappy_compress(raw) if compress else raw
 
 
-# --------------------------------------------- numpy-vectorized fast path
-# The per-sample wire framing is tiny and regular (one ``Sample`` message
-# is ``0x12 len 0x09 <8-byte LE double> 0x10 <ts varint>``), so the hot
-# loops of both codec directions vectorize over whole Arrow batches with
-# numpy (guide §4.2: hand batches to native code inside the UDF).  Every
-# fast path verifies the exact byte layout it assumes and falls back to
-# the generic pure-Python codec on any deviation — foreign payloads,
-# histograms/exemplars, out-of-order fields — so the wire semantics are
-# IDENTICAL to ``encode_write_request``/``decode_write_request`` (the
-# encode fast path is byte-for-byte identical by construction; pinned by
-# a parity test against the pure codec on random batches).
+# ------------------------------------------ vectorized encode, Arrow seams
+# Encode: the per-sample wire framing is tiny and regular (one ``Sample``
+# message is ``0x12 len 0x09 <8-byte LE double> 0x10 <ts varint>``), so
+# (labels, samples)-only Arrow batches are assembled with numpy over the
+# whole batch (guide §4.2: hand batches to native code inside the UDF),
+# byte-for-byte identical to ``encode_write_request`` (pinned by a parity
+# test); batches carrying histograms, exemplars or nulls take the
+# per-record encoder.  Decode has ONE path with no fallback: every
+# TimeSeries goes through ``_decode_series_cols``, whose reads are all
+# bounds-checked against their enclosing message, into flat columns that
+# ``_build_ts_batch`` turns into one Arrow batch.
 
 
 def _np_varint_lengths(u):
@@ -418,130 +545,8 @@ def _np_encode_samples(ts, vals):
     vb = np.asarray(vals, np.float64).astype("<f8").view(np.uint8).reshape(n, 8)
     out[starts[:, None] + np.arange(3, 11)] = vb
     out[starts + 11] = 0x10                  # field 2, wire 0 (varint)
-    rem = u.copy()
-    for b in range(int(nb.max()) if n else 0):
-        mask = nb > b
-        byte = (rem[mask] & np.uint64(0x7F)).astype(np.uint8)
-        cont = ((nb[mask] - 1) > b).astype(np.uint8) << 7
-        out[starts[mask] + 12 + b] = byte | cont
-        rem >>= np.uint64(7)
+    _np_scatter_varints(out, starts + 12, u, nb)
     return out, bstart
-
-
-def _skip_val(buf: bytes, i: int, wt: int) -> int:
-    if wt == 0:
-        _, i = _uvarint(buf, i)
-        return i
-    if wt == 1:
-        return i + 8
-    if wt == 2:
-        ln, i = _uvarint(buf, i)
-        return i + ln
-    if wt == 5:
-        return i + 4
-    raise ValueError(f"unsupported wire type {wt}")
-
-
-_UNPACK_D = struct.Struct("<d").unpack_from
-
-
-class _Cols:
-    """Flat column accumulators for one decode batch: python lists for
-    samples/labels (one append per item — no per-item dict), dict lists
-    for the rare histogram/exemplar messages."""
-
-    __slots__ = ("s_counts", "ts", "val", "l_counts", "l_names", "l_vals",
-                 "hists", "exs")
-
-    def __init__(self):
-        self.s_counts: list = []   # samples per series
-        self.ts: list = []         # flat sample timestamps
-        self.val: list = []        # flat sample values
-        self.l_counts: list = []   # labels per series
-        self.l_names: list = []    # flat label names
-        self.l_vals: list = []     # flat label values
-        self.hists: list = []      # per-series histogram dict lists
-        self.exs: list = []        # per-series exemplar dict lists
-
-
-def _decode_series_cols(buf: bytes, i: int, end: int, c: _Cols) -> None:
-    """Scan one TimeSeries submessage [i, end) into flat columns.  The
-    canonical sample/label layouts (what every known sender emits —
-    fields in proto order, 1-byte inner lengths) parse inline with zero
-    intermediate objects; anything else falls back to the generic
-    per-message decoders, so wire semantics are identical to
-    ``_decode_timeseries``."""
-    ns = nl = 0
-    hs: list = []
-    es: list = []
-    while i < end:
-        key, i = _uvarint(buf, i)
-        f, wt = key >> 3, key & 0x07
-        if f == 2 and wt == 2:
-            ln, i = _uvarint(buf, i)
-            j = i
-            i += ln
-            # canonical Sample: 0x09 <8-byte LE double> 0x10 <ts varint>
-            if ln >= 11 and buf[j] == 0x09 and buf[j + 9] == 0x10:
-                u, k2 = _uvarint(buf, j + 10)
-                if k2 == i:
-                    c.ts.append(u - (1 << 64) if u >= (1 << 63) else u)
-                    c.val.append(_UNPACK_D(buf, j + 1)[0])
-                    ns += 1
-                    continue
-            s = _decode_sample(buf[j:i])
-            c.ts.append(s["timestamp"])
-            c.val.append(s["value"])
-            ns += 1
-        elif f == 1 and wt == 2:
-            ln, i = _uvarint(buf, i)
-            j = i
-            i += ln
-            # canonical Label: 0x0A <len<128> name> 0x12 <len<128> value>
-            if ln >= 4 and buf[j] == 0x0A:
-                n1 = buf[j + 1]
-                j2 = j + 2 + n1
-                if n1 < 0x80 and j2 + 2 <= i and buf[j2] == 0x12:
-                    n2 = buf[j2 + 1]
-                    if n2 < 0x80 and j2 + 2 + n2 == i:
-                        c.l_names.append(buf[j + 2:j2].decode("utf-8"))
-                        c.l_vals.append(buf[j2 + 2:i].decode("utf-8"))
-                        nl += 1
-                        continue
-            lab = _decode_label(buf[j:i])
-            c.l_names.append(lab["name"])
-            c.l_vals.append(lab["value"])
-            nl += 1
-        elif f == 3 and wt == 2:
-            ln, i = _uvarint(buf, i)
-            es.append(_decode_exemplar(buf[i:i + ln]))
-            i += ln
-        elif f == 4 and wt == 2:
-            ln, i = _uvarint(buf, i)
-            hs.append(_decode_histogram(buf[i:i + ln]))
-            i += ln
-        else:
-            i = _skip_val(buf, i, wt)
-    c.s_counts.append(ns)
-    c.l_counts.append(nl)
-    c.hists.append(hs)
-    c.exs.append(es)
-
-
-def _np_decode_request(raw: bytes, c: _Cols) -> None:
-    """Decode one uncompressed WriteRequest into the flat columns —
-    exactly ``decode_write_request``'s rows, with no per-sample or
-    per-label dict ever built."""
-    i, n = 0, len(raw)
-    while i < n:
-        key, i = _uvarint(raw, i)
-        f, wt = key >> 3, key & 0x07
-        if f == 1 and wt == 2:
-            ln, i = _uvarint(raw, i)
-            _decode_series_cols(raw, i, i + ln, c)
-            i += ln
-        else:
-            i = _skip_val(raw, i, wt)
 
 
 def _arrow_ts_schema():
@@ -620,16 +625,19 @@ def timeseries_from_prompb(df: DataFrame, bytes_col: str = "payload",
     """BINARY remote-write POST bodies → ``REMOTE_WRITE_TIMESERIES_SCHEMA``
     rows, Arrow-batched ``mapInArrow`` (one Python pass per batch; the
     decode is per-payload independent, so it scales with input partitions
-    — no shuffle, no driver involvement).  Sample messages decode through
-    the numpy run parser (framing verified byte-for-byte, generic varint
-    fallback on any deviation) and land directly in Arrow buffers — no
-    per-sample Python dict is ever built.  Feed the output to
-    ``loaders.rows_from_remote_write`` / ``exemplars_from_remote_write`` /
-    ``native_hist.histograms_from_remote_write``.
+    — no shuffle, no driver involvement).  Every payload goes through the
+    one bounds-checked TimeSeries parser (:func:`_decode_series_cols`,
+    no fallback parser) into flat columns that land directly in Arrow
+    buffers — no per-sample Python dict is ever built.  Feed the output
+    to ``loaders.rows_from_remote_write`` / ``exemplars_from_remote_write``
+    / ``native_hist.histograms_from_remote_write``.
 
-    ``on_error``: ``"drop"`` skips undecodable payloads (the documented
-    try_cast→null posture of the text codecs); ``"raise"`` propagates —
-    use in tests and validation sweeps."""
+    ``on_error``: a payload is undecodable when the parser raises — a
+    length or fixed-width field running past its enclosing message, a
+    truncated or over-long varint, invalid UTF-8, bad snappy framing.
+    ``"drop"`` skips the whole payload (the documented try_cast→null
+    posture of the text codecs); ``"raise"`` propagates — use in tests
+    and validation sweeps."""
     if on_error not in ("drop", "raise"):
         raise ValueError("on_error must be 'drop' or 'raise'")
 
@@ -842,13 +850,8 @@ def prompb_from_timeseries(df: DataFrame, compress: bool = True,
         import pyarrow as pa
 
         for rb in it:
-            payloads = None
-            if fast_ok:
-                try:
-                    payloads = _try_encode_batch_fast(
-                        rb, series_per_request, compress)
-                except Exception:
-                    payloads = None
+            payloads = (_try_encode_batch_fast(rb, series_per_request, compress)
+                        if fast_ok else None)
             if payloads is None:
                 payloads = _encode_records_slow(
                     rb.to_pandas().to_dict("records"), present,
@@ -969,14 +972,9 @@ def encode_read_response(results: list[list[dict]],
 def decode_read_response(data: bytes) -> list[list[dict]]:
     """Wire ``ReadResponse`` (snappy) → per-query TimeSeries dict lists
     (the client side of :func:`encode_read_response`)."""
-    raw = snappy_decompress(data)
-    results = []
-    for f, wt, v in _fields(raw):
-        if f == 1 and wt == 2:
-            results.append([_decode_timeseries(t)
-                            for f2, wt2, t in _fields(v)
-                            if f2 == 1 and wt2 == 2])
-    return results
+    return [decode_write_request(v)
+            for f, wt, v in _fields(snappy_decompress(data))
+            if f == 1 and wt == 2]
 
 
 # ------------------------------------------- streamed remote read (chunks)

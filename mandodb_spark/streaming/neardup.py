@@ -70,17 +70,6 @@ def _shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     ).select(F.col(id_col), F.expr(f"substring(__lt, __p, {SHINGLE_LEN})").alias("sh"))
 
 
-def _agreement(n_hashes: int, left_prefix: str = "", right_prefix: str = "__s_"):
-    """Column: number of agreeing signature components between two rows."""
-    agree = None
-    for i in range(n_hashes):
-        term = F.when(
-            F.col(f"{left_prefix}h{i}") == F.col(f"{right_prefix}h{i}"), 1
-        ).otherwise(0)
-        agree = term if agree is None else agree + term
-    return agree
-
-
 def _min_agree(threshold: float, n_hashes: int) -> int:
     import math
 

@@ -192,24 +192,6 @@ def events_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ev.withColumn("ts", _ts_seconds(dtype, unit))
 
 
-def events_tsdb_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events mapped to the engine's ingest ROW_SCHEMA shape.
-
-    metric = event_type; labels = {user, k}; ts = unix seconds;
-    value = value — the ``events`` table playing the ingested TSDB
-    relation (SURVEY.md §2.9).
-    """
-    return events_base(spark, sf_dir).select(
-        F.col("event_type").alias("metric"),
-        F.create_map(
-            F.lit("user"), F.col("user_id").cast("string"),
-            F.lit("k"), F.regexp_extract(F.col("props"), "[0-9]+", 0),
-        ).alias("labels"),
-        F.col("ts"),
-        F.col("value"),
-    )
-
-
 def events_relation(
     spark: SparkSession, sf_dir: str, start: int | None = None, end: int | None = None
 ) -> DataFrame:

@@ -427,6 +427,37 @@ def test_ahash64_is_brightness_and_scale_invariant(seed, shift, w, h):
     assert ahash64(2 * w, 2 * h, 3, up.tobytes()) == base
 
 
+_URL_PIECES = ["http", "HTTPS", "://", ":", "/", "?", "#", "&", "=", ".",
+               "ex.com", "H", ":80", ":443", "a=1", "utm_source=x"]
+#: 2-6 random URL fragments joined by the separator: matching and
+#: non-matching strings with one to five separators.
+_SEP_STRINGS = st.lists(
+    st.lists(st.sampled_from(_URL_PIECES), max_size=5).map("".join),
+    min_size=2, max_size=6).map("\x01".join)
+
+
+@settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
+@given(urls=st.lists(_SEP_STRINGS, min_size=1, max_size=30))
+def test_url_parts_agrees_with_canonicalize_url_on_separator_strings(spark, urls):
+    """url_parts + canonicalize_from_parts == canonicalize_url on random
+    strings that contain the ``\\x01`` group separator — matching and
+    non-matching inputs alike, including non-matches that split into
+    exactly five parts."""
+    from mandodb_spark.operators.web import (canonicalize_from_parts,
+                                             canonicalize_url, url_parts)
+
+    rows = spark.createDataFrame([(u,) for u in urls], "url string").select(
+        "url", url_parts(F.col("url")).alias("p"),
+    ).select(
+        "url",
+        canonicalize_from_parts(F.col("p")).alias("via_parts"),
+        canonicalize_url(F.col("url")).alias("via_composed"),
+    ).collect()
+    for r in rows:
+        assert r.via_parts == r.via_composed, (r.url, r.via_parts,
+                                               r.via_composed)
+
+
 @settings(max_examples=15, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     scheme=st.sampled_from(["http", "https", "HTTP", "ftp"]),

@@ -1178,11 +1178,10 @@ def test_prompb_pure_codec_round_trip():
 
 
 def test_prompb_numpy_fast_path_parity():
-    """The vectorized sample packer/parser (r13: numpy batch varint
-    encode/decode inside the Arrow seams) is BYTE-identical to the pure
-    codec on the encode side and value-identical on the decode side —
-    including varint-length edges (negative ts → 10-byte varint, 0,
-    2^62) where the run parser must fall back per message."""
+    """The vectorized sample packer (numpy batch varint encode inside the
+    Arrow seam) is BYTE-identical to the pure encoder, and the columnar
+    decoder returns the input series — including varint-length edges
+    (negative ts → 10-byte varint, 0, 2^62)."""
     import random
 
     import numpy as np
@@ -1203,6 +1202,11 @@ def test_prompb_numpy_fast_path_parity():
             "labels": [{"name": "__name__", "value": f"m{i % 3}"},
                        {"name": "user", "value": str(i)}],
             "samples": samples, "histograms": [], "exemplars": []})
+    series.append({  # the varint-length edges, pinned
+        "labels": [{"name": "__name__", "value": "edge"}],
+        "samples": [{"timestamp": t, "value": 1.5}
+                    for t in (-(2**63), -1, 0, 1, 2**62, 2**63 - 1)],
+        "histograms": [], "exemplars": []})
 
     # encode: flat numpy packer == pure codec, chunk by chunk
     flat_ts = np.array([s["timestamp"] for t in series
@@ -1246,23 +1250,11 @@ def test_prompb_numpy_fast_path_parity():
                 [{"labels": t["labels"], "samples": t["samples"]}
                  for t in series[3:12]], ["labels", "samples"], 500, False))
 
-    # decode: the columnar parser reproduces decode_write_request exactly
-    payload = prompb.encode_write_request(series, compress=False)
-    want = prompb.decode_write_request(payload)
-    c = prompb._Cols()
-    prompb._np_decode_request(payload, c)
-    got, o, lo = [], 0, 0
-    for j in range(len(c.s_counts)):
-        k, nl = c.s_counts[j], c.l_counts[j]
-        got.append({
-            "labels": [{"name": c.l_names[lo + m], "value": c.l_vals[lo + m]}
-                       for m in range(nl)],
-            "samples": [{"timestamp": c.ts[o + m], "value": c.val[o + m]}
-                        for m in range(k)],
-            "histograms": c.hists[j], "exemplars": c.exs[j]})
-        o += k
-        lo += nl
-    assert got == want
+    # decode: the columnar parser round-trips the input series, both the
+    # vectorized payloads and the pure encoder's
+    for payload in (b"".join(prompb._try_encode_batch_fast(rb, 4, False)),
+                    prompb.encode_write_request(series, compress=False)):
+        assert prompb.decode_write_request(payload) == series
 
 
 def test_prompb_decoder_skips_unknown_fields_and_unpacked_repeats():
@@ -1404,16 +1396,25 @@ def test_prompb_spark_round_trip_histograms_and_exemplars(spark):
 
 def test_prompb_undecodable_payload_policy(spark):
     """Garbage payloads drop by default (the codecs' try_cast→null
-    posture) and raise under on_error='raise'."""
+    posture) and raise under on_error='raise' — including well-framed
+    payloads whose integers overflow their Arrow columns (a timestamp
+    varint past 64 bits, a histogram schema past int32), which must not
+    fail the whole batch."""
     import pytest
 
     from mandodb_spark.sources import prompb
 
+    label = [{"name": "__name__", "value": "m"}]
     good = prompb.encode_write_request(
-        [{"labels": [{"name": "__name__", "value": "m"}],
-          "samples": [{"timestamp": 1000, "value": 1.0}]}])
+        [{"labels": label, "samples": [{"timestamp": 1000, "value": 1.0}]}])
+    ts_overflow = prompb.snappy_compress(prompb._msg(1, prompb._msg(
+        2, prompb._enc_double_field(1, 1.0) + b"\x10" + b"\xff" * 9
+        + b"\x7f")))
+    schema_overflow = prompb.encode_write_request(
+        [{"labels": label, "histograms": [{"schema": 2**40, "timestamp": 1}]}])
     df = spark.createDataFrame(
-        [(good,), (b"\xff\xfe not snappy",), (None,)], "payload binary")
+        [(good,), (b"\xff\xfe not snappy",), (None,), (ts_overflow,),
+         (schema_overflow,)], "payload binary")
     out = prompb.timeseries_from_prompb(df)
     assert out.count() == 1
     with pytest.raises(Exception):
@@ -1723,7 +1724,7 @@ def test_otlp_resource_attrs_and_ingest_to_promql(spark, tmp_path):
     from mandodb_spark.engine import TSDB
     from mandodb_spark.functions import native_hist as nh
     from mandodb_spark.sources import otlp
-    from mandodb_spark.sources.prompb import _msg
+    from mandodb_spark.sources.prompb import _fields, _msg
 
     pts = [{"kind": "number", "metric": "m", "labels": {"a": "point"},
             "ts": 1000, "value": 1.0}]
@@ -1735,9 +1736,9 @@ def test_otlp_resource_attrs_and_ingest_to_promql(spark, tmp_path):
     # decode original to get scope_metrics bytes, then rebuild envelope
     # with a Resource message present
     body = None
-    for f, wt, v in otlp._ofields(raw):
+    for f, wt, v in _fields(raw):
         if f == 1 and wt == 2:
-            for f2, wt2, v2 in otlp._ofields(v):
+            for f2, wt2, v2 in _fields(v):
                 if f2 == 2 and wt2 == 2:
                     body = v2
     assert body is not None
@@ -2024,6 +2025,257 @@ def test_golden_xor_chunk():
     samples = [(1000, 1.0), (1060, 1.0), (1120, 2.0)]
     assert decode_chunk(GOLDEN_XOR_CHUNK) == samples
     assert encode_chunk(samples) == GOLDEN_XOR_CHUNK
+
+
+# ------------------------------------------ malformed wire payloads
+# Seeded mutants (truncations, bit flips, in-place length inflations) of
+# real payloads.  The prompb oracle is a dict decoder over its own
+# bounds-checked field iterator — no framing code shared with
+# mandodb_spark; histogram and exemplar messages have one parser, which
+# it calls.
+
+
+def _ref_uvarint(buf: bytes, i: int) -> tuple[int, int]:
+    result = shift = 0
+    while True:
+        if i >= len(buf):
+            raise ValueError("truncated varint")
+        b = buf[i]
+        i += 1
+        if shift == 63 and b > 1:
+            raise ValueError("varint overflows 64 bits")
+        result |= (b & 0x7F) << shift
+        if not b & 0x80:
+            return result, i
+        shift += 7
+
+
+def _ref_fields(buf: bytes):
+    i, n = 0, len(buf)
+    while i < n:
+        key, i = _ref_uvarint(buf, i)
+        wt = key & 0x07
+        if wt == 0:
+            v, i = _ref_uvarint(buf, i)
+        elif wt in (1, 2, 5):
+            if wt == 2:
+                ln, i = _ref_uvarint(buf, i)
+            else:
+                ln = 8 if wt == 1 else 4
+            if i + ln > n:
+                raise ValueError("truncated field")
+            v, i = buf[i:i + ln], i + ln
+        else:
+            raise ValueError(f"unsupported wire type {wt}")
+        yield key >> 3, wt, v
+
+
+def _ref_decode_write_request(data: bytes) -> list[dict]:
+    import struct
+
+    from mandodb_spark.sources import prompb
+
+    def label(buf):
+        name = value = ""
+        for f, wt, v in _ref_fields(buf):
+            if f == 1 and wt == 2:
+                name = v.decode("utf-8")
+            elif f == 2 and wt == 2:
+                value = v.decode("utf-8")
+        return {"name": name, "value": value}
+
+    def sample(buf):
+        out = {"timestamp": 0, "value": 0.0}
+        for f, wt, v in _ref_fields(buf):
+            if f == 1 and wt == 1:
+                out["value"] = struct.unpack("<d", v)[0]
+            elif f == 2 and wt == 0:
+                out["timestamp"] = v - (1 << 64) if v >= (1 << 63) else v
+        return out
+
+    def timeseries(buf):
+        out = {"labels": [], "samples": [], "histograms": [], "exemplars": []}
+        for f, wt, v in _ref_fields(buf):
+            if wt != 2:
+                continue
+            if f == 1:
+                out["labels"].append(label(v))
+            elif f == 2:
+                out["samples"].append(sample(v))
+            elif f == 3:
+                out["exemplars"].append(prompb._decode_exemplar(v))
+            elif f == 4:
+                out["histograms"].append(prompb._decode_histogram(v))
+        return out
+
+    return [timeseries(v) for f, wt, v in _ref_fields(data)
+            if f == 1 and wt == 2]
+
+
+def _length_sites(buf: bytes, i: int = 0, end: int | None = None,
+                  depth: int = 0) -> list | None:
+    """(offset, varint width, length, depth) of every length-delimited
+    field, descending into each body that parses as a message; None
+    when ``buf[i:end]`` is not a message."""
+    end = len(buf) if end is None else end
+    out = []
+    try:
+        while i < end:
+            key, i = _ref_uvarint(buf, i)
+            wt = key & 0x07
+            if wt == 0:
+                _, i = _ref_uvarint(buf, i)
+            elif wt in (1, 5):
+                i += 8 if wt == 1 else 4
+            elif wt == 2:
+                ln, j = _ref_uvarint(buf, i)
+                out.append((i, j - i, ln, depth))
+                out.extend(_length_sites(buf, j, j + ln, depth + 1) or [])
+                i = j + ln
+            else:
+                return None
+    except ValueError:
+        return None
+    return out if i == end else None
+
+
+def _inflate(buf: bytes, site: tuple, rng) -> bytes:
+    """``buf`` with the length at ``site`` raised in place (same varint
+    width), so the field overruns the message that encloses it."""
+    off, width, ln, _ = site
+    v = rng.randint(ln + 1, (1 << 7 * width) - 1)
+    enc = bytes(((v >> 7 * k) & 0x7F) | (0x80 if k < width - 1 else 0)
+                for k in range(width))
+    return buf[:off] + enc + buf[off + width:]
+
+
+def _mutants(payload: bytes, rng, n_trunc: int, n_flip: int,
+             n_inflate: int) -> set:
+    sites = [s for s in _length_sites(payload) if s[2] + 1 < 1 << 7 * s[1]]
+    out = {payload[:rng.randrange(len(payload))] for _ in range(n_trunc)}
+    for _ in range(n_flip):
+        k = rng.randrange(len(payload))
+        out.add(payload[:k] + bytes([payload[k] ^ 1 << rng.randrange(8)])
+                + payload[k + 1:])
+    out.update(_inflate(payload, rng.choice(sites), rng)
+               for _ in range(n_inflate))
+    out.discard(payload)
+    return out
+
+
+def _canon(x):
+    """Comparable form of decoded rows: NaN equal to NaN, -0.0 distinct
+    from 0.0, dicts by sorted key."""
+    if isinstance(x, float):
+        return "nan" if x != x else x.hex()
+    if isinstance(x, dict):
+        return tuple(sorted((k, _canon(v)) for k, v in x.items()))
+    if isinstance(x, (list, tuple)):
+        return tuple(_canon(v) for v in x)
+    return x
+
+
+def _bench_shaped_write_request() -> bytes:
+    """Several series of sorted labels and 15 s-spaced ms samples — the
+    layout of the benchmark's remote-write batches (6-byte timestamp
+    varints, 18-byte Sample messages)."""
+    import random
+
+    from mandodb_spark.sources import prompb
+
+    rng = random.Random(5)
+    series = []
+    for s in range(6):
+        labels = {"__name__": f"bench_metric_{s % 3}", "host": f"h{s:02d}",
+                  "region": f"r{s % 2}", "zone": "z1"}
+        series.append({
+            "labels": [{"name": k, "value": v}
+                       for k, v in sorted(labels.items())],
+            "samples": [{"timestamp": 1_700_000_000_000 + 15_000 * k,
+                         "value": rng.uniform(0, 100)} for k in range(15)],
+            "histograms": [], "exemplars": []})
+    return prompb.encode_write_request(series, compress=False)
+
+
+def test_prompb_malformed_payloads_take_one_defined_path(spark):
+    """Every mutant of the golden WriteRequest and of a benchmark-shaped
+    payload either raises ValueError in the decoder — exactly when the
+    reference decoder raises — or decodes to exactly the reference's
+    series; never garbage rows, never another exception type.  The
+    Spark seam in drop mode drops exactly the raising mutants."""
+    import random
+
+    from mandodb_spark.sources import prompb
+
+    rng = random.Random(20261017)
+    mutants = sorted(
+        _mutants(GOLDEN_PROMPB_WRITE_REQUEST, rng, 60, 500, 900)
+        | _mutants(_bench_shaped_write_request(), rng, 600, 1500, 700))
+    assert len(mutants) >= 3000
+    want_rows, n_raise = [], 0
+    for m in mutants:
+        try:
+            want = _ref_decode_write_request(m)
+        except ValueError:
+            want = None
+        try:
+            got = prompb.decode_write_request(m)
+        except ValueError:
+            got = None
+        if want is None:
+            assert got is None, m.hex()
+            n_raise += 1
+        else:
+            assert got is not None and _canon(got) == _canon(want), m.hex()
+            want_rows.extend(want)
+    assert 0 < n_raise < len(mutants)
+
+    df = spark.createDataFrame([(prompb.snappy_compress(m),) for m in mutants],
+                               "payload binary")
+    got_rows = prompb.timeseries_from_prompb(df, on_error="drop").collect()
+    assert (sorted(map(repr, (_canon(r.asDict(recursive=True))
+                              for r in got_rows)))
+            == sorted(map(repr, map(_canon, want_rows))))
+
+
+def test_otlp_malformed_payloads_raise_value_error():
+    """Truncated and length-inflated OTLP export requests raise
+    ValueError — never IndexError or struct.error.  Every proper
+    truncation of a one-resource request cuts its outer field, and an
+    inflated envelope length (ResourceMetrics, Resource/ScopeMetrics,
+    Metric/KeyValue) overruns its parent, so those always raise; deeper
+    sites may sit inside opaque bytes and decode."""
+    import random
+
+    from mandodb_spark.sources import otlp
+
+    rng = random.Random(11)
+    payloads = [GOLDEN_OTLP_EXPORT_REQUEST, otlp.encode_export_request([
+        {"kind": "number", "metric": "m", "labels": {"job": "api"},
+         "ts": 1000, "value": 1.0},
+        {"kind": "histogram", "metric": "lat", "labels": {"job": "api"},
+         "ts": 1000, "count": 10, "sum": 7.5,
+         "bucket_counts": [4, 3, 2, 1], "bounds": [0.1, 0.5, 1.0]},
+        {"kind": "exphist", "metric": "nh", "labels": {"job": "api"},
+         "ts": 1000, "count": 10, "sum": 7.5, "scale": 3, "zero_count": 0,
+         "zero_threshold": 1e-10, "pos_offset": 0, "pos_counts": [10],
+         "neg_offset": 0, "neg_counts": []},
+        {"kind": "summary", "metric": "s", "labels": {}, "ts": 1000,
+         "count": 3, "sum": 1.5, "quantiles": [(0.5, 0.4), (0.9, 0.8)]}])]
+    for payload in payloads:
+        otlp.decode_export_request(payload)
+        for k in range(1, len(payload)):
+            with pytest.raises(ValueError):
+                otlp.decode_export_request(payload[:k])
+        sites = _length_sites(payload)
+        assert sites
+        for site in sites:
+            for _ in range(4):
+                try:
+                    otlp.decode_export_request(_inflate(payload, site, rng))
+                except ValueError:
+                    continue
+                assert site[3] > 2, site
 
 
 def test_openmetrics_metadata_codec(spark):
