@@ -39,43 +39,26 @@ class TSDB:
         retention: int = DEFAULT_RETENTION,
         codec: str = "zstd",
         only_memory: bool = False,
-        bucket_by_series: int | None = None,
-        table: str | None = None,
-        promote_labels: list[str] | None = None,
         max_rows_per_segment: int | None = None,
     ) -> None:
         """``only_memory=True`` (or ``path=None``) mirrors the reference's
-        onlyMemoryMode (tsdb.go:30, T6): nothing touches disk.
-
-        ``bucket_by_series=N`` stores the data bucketed by ``series_key``
-        into N buckets (catalog table ``table``, default derived from the
-        path) — removes query_range's one shuffle entirely at the cost of
-        N files per segment per batch (see BucketedSegmentStore).
+        onlyMemoryMode (tsdb.go:30, T6): nothing touches disk.  Otherwise
+        the data lives in one :class:`SegmentStore` at ``path``
+        (seg-partitioned, sorted zstd Parquet).
 
         ``max_rows_per_segment`` is the reference's
         ``WithMaxRowsPerSegment`` option (tsdb.go:99-105): a hot segment
         whose batch exceeds the budget fans out across extra files so no
-        single write task owns the whole hot partition (plain disk store
-        only — the bucketed store's layout is already fanned out by
-        series bucket, and the memory store holds rows, not files)."""
+        single write task owns the whole hot partition (disk store only —
+        the memory store holds rows, not files)."""
         self.spark = spark
         if only_memory or path is None:
             from .sources.memory_store import MemoryStore
 
             self.store: SegmentStore | "MemoryStore" = MemoryStore(spark, segment_duration)
-        elif bucket_by_series:
-            from .sources.segment_store import BucketedSegmentStore
-
-            tname = table or "tsdb_" + "".join(
-                c if c.isalnum() else "_" for c in str(path)
-            ).strip("_")
-            self.store = BucketedSegmentStore(
-                spark, path, tname, bucket_by_series, segment_duration, codec
-            )
         else:
             self.store = SegmentStore(
                 spark, path, segment_duration, codec,
-                promote_labels=promote_labels,
                 max_rows_per_segment=max_rows_per_segment,
             )
         self.segment_duration = segment_duration
@@ -750,11 +733,6 @@ class TSDB:
         n = _restore(snapshot_root, root)
         self.spark.catalog.clearCache()
         self.spark.catalog.refreshByPath(root)
-        # bucketed stores read through a catalog table whose file index
-        # is cached per NAME — refreshByPath alone leaves it stale
-        table = getattr(self.store, "table", None)
-        if table is not None:
-            self.spark.catalog.refreshTable(table)
         return n
 
     def fsck(self) -> dict:
@@ -861,7 +839,7 @@ class TSDB:
         hi = min(cut - 1, end) // self.segment_duration
         rollup = self.rollup_relation(dest).filter(
             F.col("seg").between(lo, hi)
-            & matchers_predicate(F.col("labels"), lms, set())
+            & matchers_predicate(F.col("labels"), lms)
         )
         raw = tsdb_ops._filtered(
             self.store.relation(), metric, matchers or [],

@@ -158,30 +158,14 @@ def matcher_predicate(labels: Column, m: LabelMatcher) -> Column:
     return _value_predicate(labels.getItem(m.name), m)
 
 
-#: Column-name prefix for promoted (materialized) label columns.
-PROMOTED_PREFIX = "lbl_"
-
-
-def matchers_predicate(labels: Column, matchers: list[LabelMatcher],
-                       promoted: set[str] | frozenset = frozenset()) -> Column:
+def matchers_predicate(labels: Column, matchers: list[LabelMatcher]) -> Column:
     """Conjunction across matchers (index.go:111-143's sid intersection).
 
     The AND of per-matcher predicates is the declarative form of the
     reference's sid-set intersection; Catalyst short-circuits and pushes
     the pushable conjuncts to the Parquet scan.
-
-    ``promoted``: label names materialized as top-level ``lbl_<name>``
-    columns by the store (``SegmentStore(promote_labels=...)``).  Map
-    extractions are NOT pushable into a Parquet scan; for a promoted
-    label the same test is ANDed again over the plain column — a
-    semantically redundant conjunct (implied by the map test) that IS
-    pushable (EqualTo / StringStartsWith / IsNotNull reach
-    PushedFilters), the columnar replacement for the reference's
-    label→sid posting-list index (index.go:170-186).
     """
     pred = F.lit(True)
     for m in sanitize(matchers):
         pred = pred & matcher_predicate(labels, m)
-        if m.name in promoted:
-            pred = pred & _value_predicate(F.col(PROMOTED_PREFIX + m.name), m)
     return pred

@@ -16,6 +16,9 @@ curation, built to hold at 100 TB:
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -516,9 +519,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str, text_col: str,
 
 
 #: RDD ids retained by :func:`_verify_candidates`'s and
-#: :func:`jaccard_join`'s localCheckpoints in this session, released via
-#: :func:`release_minhash_checkpoints`.
-_RETAINED_CKPT_IDS: list[int] = []
+#: :func:`jaccard_join`'s localCheckpoints, per SparkContext (weakly
+#: keyed: a stopped context's ids go with it), released via
+#: :func:`release_minhash_checkpoints`.  Guarded by ``_RETAINED_LOCK``.
+_RETAINED_CKPTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_RETAINED_LOCK = threading.Lock()
 
 #: Estimated per-shingle broadcast bytes (8-char UTF8 string + array
 #: element overhead) used by the automatic broadcast/shuffle switch.
@@ -570,27 +575,28 @@ def release_minhash_checkpoints(spark) -> int:
     Mirrors ``connected_components``' per-round release pattern, but
     deferred to the caller because the checkpointed tables back the
     function's RESULT rather than an internal round."""
-    registry = spark.sparkContext._jsc.getPersistentRDDs()
+    sc = spark.sparkContext
+    with _RETAINED_LOCK:
+        rids = _RETAINED_CKPTS.pop(sc, set())
+    registry = sc._jsc.getPersistentRDDs()
     released = 0
-    for rid in list(_RETAINED_CKPT_IDS):
+    for rid in rids:
         ref = registry.get(rid)
         if ref is not None:
             ref.unpersist(False)
             released += 1
-        _RETAINED_CKPT_IDS.remove(rid)
     return released
 
 
 def _ckpt_tracked(df: DataFrame) -> DataFrame:
     """localCheckpoint + record the persisted RDD ids it created so
     :func:`release_minhash_checkpoints` can free them."""
-    spark = df.sparkSession
-    registry = spark.sparkContext._jsc.getPersistentRDDs()
-    before = {rid for rid in registry.keySet().toArray()}
+    sc = df.sparkSession.sparkContext
+    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
     out = df.localCheckpoint()
-    registry = spark.sparkContext._jsc.getPersistentRDDs()
-    _RETAINED_CKPT_IDS.extend(
-        rid for rid in registry.keySet().toArray() if rid not in before)
+    new = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+    with _RETAINED_LOCK:
+        _RETAINED_CKPTS.setdefault(sc, set()).update(new)
     return out
 
 

@@ -219,17 +219,12 @@ def _filtered(
     of O(rows), a win whenever cardinality ≪ row count (broadcast keeps
     the join shuffle-free).
     """
-    from ..matchers import PROMOTED_PREFIX
-
     lms = add_metric_name(metric, matchers)
     has_seg = "seg" in df.columns
-    promoted = {
-        c[len(PROMOTED_PREFIX):] for c in df.columns if c.startswith(PROMOTED_PREFIX)
-    }
     inline = [m for m in lms if not (regex_via_dim and m.is_regex and not m.is_present)]
     out = df.filter(
         time_predicate(start, end, has_seg, segment_duration)
-        & matchers_predicate(F.col("labels"), inline, promoted)
+        & matchers_predicate(F.col("labels"), inline)
     )
     if regex_via_dim:
         for m in lms:

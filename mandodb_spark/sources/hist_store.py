@@ -10,9 +10,8 @@ groups (dictionary + delta encodings apply to the int keys).
 The reference engine has no histogram sample type at all (tsdb.go:158-163
 stores float64 only); this store is part of the engine's native-histogram
 superset.  It deliberately reuses the float store's conventions rather
-than its code: the schemas differ, the knobs (bloom/promoted labels /
-row budgets) don't apply to the much-smaller histogram relations, and
-keeping it lean keeps the write path one repartition + one sorted write.
+than its code: the schemas differ, the row-budget knob doesn't apply
+to the much-smaller histogram relations, and keeping it lean keeps the write path one repartition + one sorted write.
 """
 
 from __future__ import annotations

@@ -265,52 +265,34 @@ class SegmentStore:
         root: str,
         segment_duration: int = DEFAULT_SEGMENT_DURATION,
         codec: str = "zstd",
-        bloom_filter_series: bool = False,
-        max_records_per_file: int | None = None,
-        zstd_level: int | None = 1,
         max_rows_per_segment: int | None = None,
-        promote_labels: list[str] | None = None,
     ) -> None:
-        """``bloom_filter_series`` writes a Parquet bloom filter on
-        ``series_key`` — the optional stand-in for the reference's
-        label→sid posting lists (index.go:170-186, F7) for point-lookup
-        workloads.  ``max_records_per_file`` bounds file size at high
-        ingest rates (spill-aware layout control); ``max_rows_per_segment``
-        additionally fans a hot segment's WRITE out over multiple tasks
-        (see :meth:`append` — the reference's ``WithMaxRowsPerSegment``
-        row-budget rotation, tsdb.go:99-105, re-expressed as write
-        parallelism instead of early head rotation).
+        """``max_rows_per_segment`` fans a hot segment's WRITE out over
+        multiple tasks (see :meth:`append` — the reference's
+        ``WithMaxRowsPerSegment`` row-budget rotation, tsdb.go:99-105,
+        re-expressed as write parallelism instead of early head rotation).
 
-        ``zstd_level`` defaults to 1 (not parquet-zstd's default 3):
-        on time-series batches the size is set by the DELTA_BINARY_PACKED
-        / dictionary encodings, not the zstd pass — measured IDENTICAL
+        The zstd level is fixed at 1 (not parquet-zstd's default 3): on
+        time-series batches the size is set by the DELTA_BINARY_PACKED /
+        dictionary encodings, not the zstd pass — measured IDENTICAL
         0.569 B/point at levels 1 and 3 on the ingest-bench grid — while
         the encode CPU drops (~7% ingest throughput).  The level is a
-        Hadoop conf (session-wide for parquet writes), so pass ``None``
-        to leave the ambient setting untouched."""
+        Hadoop conf, so it applies session-wide to parquet writes."""
         self.spark = spark
         self.root = str(root)
         self.segment_duration = segment_duration
         self.codec = codec
-        self.bloom_filter_series = bloom_filter_series
-        self.max_records_per_file = max_records_per_file
         self.max_rows_per_segment = max_rows_per_segment
-        self.promote_labels = list(promote_labels or [])
-        if codec == "zstd" and zstd_level is not None:
+        if codec == "zstd":
             try:
                 spark.sparkContext._jsc.hadoopConfiguration().set(
-                    "parquet.compression.codec.zstd.level", str(zstd_level)
+                    "parquet.compression.codec.zstd.level", "1"
                 )
             except Exception:
                 pass  # Connect-mode sessions have no _jsc; ambient level applies
 
     def _write_options(self, writer):
-        writer = writer.option("compression", self.codec)
-        if self.bloom_filter_series:
-            writer = writer.option("parquet.bloom.filter.enabled#series_key", "true")
-        if self.max_records_per_file:
-            writer = writer.option("maxRecordsPerFile", str(self.max_records_per_file))
-        return writer
+        return writer.option("compression", self.codec)
 
     # ---------------------------------------------------------------- write
     def append(
@@ -350,9 +332,9 @@ class SegmentStore:
         head early on a row budget (``WithMaxRowsPerSegment``,
         tsdb.go:99-105); here the equivalent scale hazard is one writer
         task (and one giant file) absorbing a hot 2-hour window, and the
-        salt removes it while ``maxRecordsPerFile`` still bounds file
-        size.  The per-seg count is a driver-side collect of O(touched
-        segments) — the same bounded-metadata class as the segment list.
+        salt removes it.  The per-seg count is a driver-side collect of
+        O(touched segments) — the same bounded-metadata class as the
+        segment list.
         """
         batch = canonicalize(rows, self.segment_duration)
         if dedup_points:
@@ -365,20 +347,6 @@ class SegmentStore:
                 .select("seg", "series_key", "ts")
             )
             batch = batch.join(existing, ["seg", "series_key", "ts"], "left_anti")
-        # promoted label columns (the columnar label index): each configured
-        # label is materialized as a plain lbl_<name> column so matcher
-        # predicates on it reach PushedFilters — map extractions cannot.
-        # The layout must be HOMOGENEOUS: a file missing a promoted column
-        # reads as NULL, and the promoted conjunct would silently drop its
-        # matching rows — so a promotion change is refused until compact()
-        # migrates the existing files.
-        self._check_promoted_layout()
-        from ..matchers import PROMOTED_PREFIX
-
-        for name in self.promote_labels:
-            batch = batch.withColumn(
-                PROMOTED_PREFIX + name, F.col("labels").getItem(name)
-            )
         # explicit partition count: a hash repartition without one is
         # AQE-coalescible, and size-based coalescing would serialize the
         # writers (each seg still lands wholly in one task → one file)
@@ -443,6 +411,16 @@ class SegmentStore:
             int(p.name.split("=", 1)[1]) for p in root.glob("seg=*"))
 
     # ------------------------------------------------------------ retention
+    def _expired_segments(self, now_ts: int, retention: int) -> list[int]:
+        """Segment ids whose max possible ts — ``(seg+1)*duration - 1`` —
+        is older than ``now - retention`` (tsdb.go:384-406), from the
+        partition directory listing alone."""
+        cutoff = now_ts - retention
+        return [
+            seg for seg in self.segment_ids()
+            if (seg + 1) * self.segment_duration - 1 < cutoff
+        ]
+
     def remove_expired(self, now_ts: int, retention: int) -> list[int]:
         """Drop whole segments older than the retention window (S7/T5).
 
@@ -454,16 +432,9 @@ class SegmentStore:
         ``DELETE WHERE seg < cutoff`` against the table format.
         Returns the dropped segment ids.
         """
-        cutoff = now_ts - retention
-        dropped: list[int] = []
-        root = Path(self.root)
-        if not root.exists():
-            return dropped
-        for p in sorted(root.glob("seg=*")):
-            seg = int(p.name.split("=", 1)[1])
-            if (seg + 1) * self.segment_duration - 1 < cutoff:
-                shutil.rmtree(p)
-                dropped.append(seg)
+        dropped = self._expired_segments(now_ts, retention)
+        for seg in dropped:
+            shutil.rmtree(Path(self.root) / f"seg={seg}")
         return dropped
 
     def downsample_expired(self, now_ts: int, retention: int, step: int,
@@ -495,13 +466,7 @@ class SegmentStore:
         must merge with raw partials and with each other across seg
         splits, and the purge gate needs Σn to be meaningful.
         """
-        cutoff = now_ts - retention
-        root = Path(self.root)
-        expired = [
-            int(p.name.split("=", 1)[1])
-            for p in sorted(root.glob("seg=*"))
-            if (int(p.name.split("=", 1)[1]) + 1) * self.segment_duration - 1 < cutoff
-        ] if root.exists() else []
+        expired = self._expired_segments(now_ts, retention)
         if not expired:
             return []
         rel = self.relation().filter(F.col("seg").isin(expired))
@@ -524,10 +489,10 @@ class SegmentStore:
         crash mid-rewrite leaves the previous partition files live (the
         delete simply re-runs).  Returns the number of points removed.
 
-        Semantics note: matching on ``labels`` means PROMOTED label
-        columns are consulted through the same predicate the query paths
-        use, and an empty matcher list is rejected (a full-store delete
-        should be an explicit ``shutil.rmtree``, not a matcher typo).
+        Semantics note: matching goes through the same ``labels``
+        predicate the query paths use, and an empty matcher list is
+        rejected (a full-store delete should be an explicit
+        ``shutil.rmtree``, not a matcher typo).
         """
         from ..matchers import add_metric_name, matchers_predicate
 
@@ -570,44 +535,7 @@ class SegmentStore:
         self.spark.catalog.refreshByPath(self.root)
         return int(n_before - n_after)
 
-    def _check_promoted_layout(self) -> None:
-        """Fail fast when ``promote_labels`` disagrees with the on-disk
-        layout (one footer read — O(1)): appending into a store whose
-        existing files carry a different promoted-column set would create
-        a mixed schema, and the promoted conjunct reads missing columns
-        as NULL — silently dropping matching rows.  ``compact()`` is the
-        migration: it re-derives the configured set from ``labels`` and
-        rewrites every file."""
-        from ..matchers import PROMOTED_PREFIX
-
-        root = Path(self.root)
-        if not root.exists():
-            return
-        sample = next(iter(root.glob("seg=*/*.parquet")), None)
-        if sample is None:
-            return
-        import pyarrow.parquet as _pq
-
-        on_disk = {
-            n[len(PROMOTED_PREFIX):]
-            for n in _pq.ParquetFile(str(sample)).schema_arrow.names
-            if n.startswith(PROMOTED_PREFIX)
-        }
-        if on_disk != set(self.promote_labels):
-            raise ValueError(
-                f"promote_labels {sorted(self.promote_labels)} does not match "
-                f"the store's existing promoted columns {sorted(on_disk)}; "
-                "run compact() on a store configured with the NEW set to "
-                "migrate the layout, then append"
-            )
-
     # ----------------------------------------------------------- compaction
-    def _swap_in(self, staging_root: str) -> None:
-        swap_in(self.root, staging_root)
-
-    def _swap_in_keep_old(self, staging_root: str) -> str:
-        return swap_in(self.root, staging_root, keep_old=True)
-
     def compact(self, min_files_per_segment: int | None = None) -> list[int]:
         """Rewrite each segment partition into one sorted file.
 
@@ -630,9 +558,7 @@ class SegmentStore:
         partition pruning means only their files are even read).  Cross-
         segment the swap is not one atomic instant, but every segment is
         individually consistent at all times and content is identical
-        either way.  Promotion migration (a changed ``promote_labels``)
-        still requires a FULL compact — the selective path refuses a
-        layout mismatch rather than leave a mixed store.
+        either way.
 
         Concurrent WRITERS are safe too (round 6): the rewrite consumes
         exactly the files its plan listed (`inputFiles` — the file index
@@ -649,18 +575,11 @@ class SegmentStore:
             return self._compact_selected(min_files_per_segment)
         staging_root = f"{self.root}__compact"
         shutil.rmtree(staging_root, ignore_errors=True)
-        from ..matchers import PROMOTED_PREFIX
-
-        rel = self.relation()
-        # promotion migration: re-derive the CONFIGURED promoted set from
-        # the labels map and drop stale lbl_ columns, so compact() is how
-        # a promote_labels change becomes a homogeneous layout
-        for c in rel.columns:
-            if c.startswith(PROMOTED_PREFIX):
-                rel = rel.drop(c)
-        for name in self.promote_labels:
-            rel = rel.withColumn(PROMOTED_PREFIX + name, F.col("labels").getItem(name))
-        rel = rel.repartition(F.col("seg")).sortWithinPartitions("series_key", "ts")
+        rel = (
+            self.relation()
+            .repartition(F.col("seg"))
+            .sortWithinPartitions("series_key", "ts")
+        )
         # membership by FILE NAME: part files carry a per-task UUID, and the
         # old tree is compared after it has been renamed aside, so absolute
         # paths would never match
@@ -668,7 +587,7 @@ class SegmentStore:
         self._write_options(rel.write).partitionBy("seg").mode("overwrite").parquet(
             staging_root
         )
-        old = self._swap_in_keep_old(staging_root)
+        old = swap_in(self.root, staging_root, keep_old=True)
         try:
             segs = []
             for p in Path(old).rglob("*.parquet"):
@@ -693,10 +612,6 @@ class SegmentStore:
         )
         if not picked:
             return []
-        # configured promote set must already match the on-disk layout —
-        # rewriting only SOME segments under a new set would create the
-        # mixed layout _check_promoted_layout exists to prevent
-        self._check_promoted_layout()
         staging_root = f"{self.root}__compact"
         shutil.rmtree(staging_root, ignore_errors=True)
         rel = (
@@ -754,255 +669,6 @@ class SegmentStore:
         )
 
 
-class BucketedSegmentStore(SegmentStore):
-    """Segment store bucketed by ``series_key`` — the zero-shuffle trade.
-
-    Same layout as :class:`SegmentStore` (seg= partitions, sorted files)
-    plus ``bucketBy(n_buckets, series_key)`` via ``saveAsTable``: the scan
-    of a bucketed table reports hash-partitioning on ``series_key``, so
-    ``query_range``'s per-series aggregation needs NO exchange at all —
-    SCALE.md names this trade (write-side co-location bought at ingest
-    time, read-side shuffle removed) and test_plans locks it at
-    ``shuffle_count == 0``.
-
-    The price: every batch writes n_buckets files per touched segment
-    (bucket files can't merge across batches), so this variant wants
-    coarser micro-batches and periodic :meth:`compact`.  At cluster scale
-    the same trade is expressed over a lakehouse table format; the Spark
-    bucketing contract used here is the portable core of it.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        table: str,
-        n_buckets: int = 8,
-        segment_duration: int = DEFAULT_SEGMENT_DURATION,
-        codec: str = "zstd",
-        promote_labels: list[str] | None = None,
-    ) -> None:
-        super().__init__(spark, root, segment_duration, codec,
-                         promote_labels=promote_labels)
-        self.table = table
-        self.n_buckets = n_buckets
-
-    def append(
-        self,
-        rows: DataFrame,
-        dedup_points: bool = False,
-        dedup_against_store: bool = False,
-    ) -> None:
-        batch = canonicalize(rows, self.segment_duration)
-        if dedup_points:
-            batch = dedup_last_write(batch)
-        from ..matchers import PROMOTED_PREFIX
-
-        for name in self.promote_labels:
-            batch = batch.withColumn(
-                PROMOTED_PREFIX + name, F.col("labels").getItem(name)
-            )
-        if dedup_against_store and self.spark.catalog.tableExists(self.table):
-            segs = [r["seg"] for r in batch.select("seg").distinct().collect()]
-            # relation(), not the raw table: a tombstoned (deleted) point
-            # must not suppress a re-append of the same (seg, series, ts)
-            existing = (
-                self.relation()
-                .filter(F.col("seg").isin(segs))
-                .select("seg", "series_key", "ts")
-            )
-            batch = batch.join(existing, ["seg", "series_key", "ts"], "left_anti")
-        writer = self._write_options(
-            batch.repartition(self.n_buckets, F.col("series_key")).write
-        )
-        (
-            writer.partitionBy("seg")
-            .bucketBy(self.n_buckets, "series_key")
-            .sortBy("series_key", "ts")
-            .option("path", self.root)
-            .mode("append")
-            .saveAsTable(self.table)
-        )
-
-    @property
-    def _tombstone_root(self) -> str:
-        # sibling of the data root (a non-seg dir INSIDE the root would
-        # poison partition discovery, same rule as the __compact staging)
-        return f"{self.root}__tombstones"
-
-    def _tombstones(self) -> DataFrame | None:
-        """The deletion-vector overlay table, or None when empty:
-        ``(__file, series_key, n)`` rows naming physical rows hidden from
-        every read until :meth:`compact` folds them in."""
-        p = Path(self._tombstone_root)
-        if not p.exists() or not any(p.rglob("*.parquet")):
-            return None
-        return self.spark.read.parquet(self._tombstone_root)
-
-    def _visible(self) -> DataFrame:
-        """Catalog table minus tombstoned rows, ``__file`` column kept
-        (callers that need the physical-file identity — delete_series —
-        use this; :meth:`relation` drops it)."""
-        base = self.spark.table(self.table).withColumn(
-            "__file", F.input_file_name()
-        )
-        tomb = self._tombstones()
-        if tomb is None:
-            return base
-        # broadcast anti-join: O(tombstone) overlay cost, no Exchange, so
-        # the bucketed zero-shuffle aggregation guarantee survives
-        return base.join(
-            F.broadcast(tomb.select("__file", "series_key")),
-            ["__file", "series_key"],
-            "left_anti",
-        )
-
-    def relation(self) -> DataFrame:
-        if self.spark.catalog.tableExists(self.table):
-            return self._visible().drop("__file")
-        return super().relation()  # empty canonical relation
-
-    def remove_expired(self, now_ts: int, retention: int) -> list[int]:
-        """Partition-level retention: catalog drop + directory delete."""
-        cutoff = now_ts - retention
-        dropped: list[int] = []
-        root = Path(self.root)
-        if not root.exists():
-            return dropped
-        for p in sorted(root.glob("seg=*")):
-            seg = int(p.name.split("=", 1)[1])
-            if (seg + 1) * self.segment_duration - 1 < cutoff:
-                self.spark.sql(
-                    f"ALTER TABLE {self.table} DROP IF EXISTS PARTITION (seg={seg})"
-                )
-                shutil.rmtree(p)
-                dropped.append(seg)
-        return dropped
-
-    def compact(self, min_files_per_segment: int | None = None) -> list[int]:
-        """Rebuild the bucketed table with one file per (segment, bucket).
-
-        Rewrites through a staging table then swaps the DATA directories
-        (rename aside, rename in, delete last — :meth:`SegmentStore._swap_in`)
-        — a table can't be overwritten from a plan that reads it, and the
-        rename-aside order means a crash at any point leaves the full old
-        data at ``<root>`` or ``<root>__old`` (ADVICE r2: the previous
-        DROP → rmtree → rename sequence stranded the only copy under the
-        staging path on a mid-sequence crash).  No-op before the first
-        append.  A lakehouse table format does this natively (OPTIMIZE);
-        the staging swap is the plain-Spark equivalent.
-        """
-        if min_files_per_segment is not None:
-            raise ValueError(
-                "selective compaction is not supported on the bucketed store: "
-                "Spark's bucket spec is a whole-table catalog property, so a "
-                "partial rewrite cannot re-register consistently; run full "
-                "compact()"
-            )
-        if not self.spark.catalog.tableExists(self.table) or not Path(self.root).exists():
-            return []
-        # relation() already excludes tombstoned rows, so the rewrite IS
-        # the physical apply; clear the overlay only after the swap — a
-        # crash in between leaves tombstones naming files that no longer
-        # exist, which the anti-join ignores (correct either way)
-        segs = self._rewrite_table(self.relation())
-        shutil.rmtree(self._tombstone_root, ignore_errors=True)
-        return segs
-
-    def delete_series(self, matchers: list, metric: str | None = None) -> int:
-        """Targeted series deletion on the bucketed store — tombstone
-        overlay, not a rewrite (round-6 verdict #6: the previous full
-        staged rewrite made every delete O(store)).
-
-        Spark's bucket spec is a whole-table catalog property (same
-        constraint that forbids selective compaction here), so matched
-        rows can't be rewritten in place; instead the delete appends
-        ``(file, series_key)`` deletion-vector rows to a small sibling
-        table that every read anti-joins away (:meth:`_visible`), and the
-        next :meth:`compact` applies them physically and clears the
-        overlay.  Pinning the FILE identity (not just the series) keeps
-        rewrite semantics exact: rows of the same series appended AFTER
-        the delete land in new files and are never hidden.  Cost:
-        one filter scan (no write amplification) + an O(matched-files)
-        overlay append.  Same matcher language / return contract as
-        ``SegmentStore.delete_series``."""
-        from ..matchers import add_metric_name, matchers_predicate
-
-        lms = add_metric_name(metric, list(matchers))
-        if not lms:
-            raise ValueError("delete_series: need at least one matcher")
-        if not self.spark.catalog.tableExists(self.table) or not Path(self.root).exists():
-            return 0
-        pred = matchers_predicate(F.col("labels"), lms)
-        # one pass over the visible rows: per-(file, series) match counts,
-        # checkpointed so the overlay write and the total don't rescan
-        stats = (
-            self._visible()
-            .filter(pred)
-            .groupBy("__file", "series_key")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_match = stats.agg(F.coalesce(F.sum("n"), F.lit(0))).first()[0]
-        if n_match == 0:
-            return 0
-        stats.write.mode("append").parquet(self._tombstone_root)
-        return int(n_match)
-
-    def _rewrite_table(self, rel) -> list[int]:
-        """Full staged rewrite of the bucketed table from ``rel`` (the
-        back half of compact(), which is also where delete_series
-        tombstones get applied physically): staging saveAsTable ->
-        data-dir swap with concurrent-append salvage -> catalog
-        re-register."""
-        staging, staging_root = f"{self.table}__compact", f"{self.root}__compact"
-        shutil.rmtree(staging_root, ignore_errors=True)
-        rel = rel.repartition(self.n_buckets, F.col("series_key"))
-        # same concurrent-writer salvage as SegmentStore.compact: the
-        # rewrite consumes exactly the files its pinned file index listed
-        consumed = {Path(f).name for f in rel.inputFiles()}
-        writer = self._write_options(rel.write)
-        (
-            writer.partitionBy("seg")
-            .bucketBy(self.n_buckets, "series_key")
-            .sortBy("series_key", "ts")
-            .option("path", staging_root)
-            .mode("overwrite")
-            .saveAsTable(staging)
-        )
-        old = self._swap_in_keep_old(staging_root)
-        try:
-            for p in Path(old).rglob("*.parquet"):
-                if p.name not in consumed:
-                    dest = Path(self.root) / p.relative_to(old)
-                    dest.parent.mkdir(parents=True, exist_ok=True)
-                    p.rename(dest)
-        finally:
-            shutil.rmtree(old, ignore_errors=True)
-        # re-point the catalog at the canonical root: re-register the
-        # external table with the same bucket spec and rediscover
-        # partitions.  The catalog churn is metadata-only — the data was
-        # swapped above and survives any crash here (worst case: re-run
-        # compact() or re-register the table by hand).
-        self.spark.sql(f"DROP TABLE IF EXISTS {staging}")
-        self.spark.sql(f"DROP TABLE IF EXISTS {self.table}")
-        data_cols = ", ".join(
-            f"{name} {dtype}"
-            for name, dtype in self.spark.read.parquet(self.root).dtypes
-            if name != "seg"
-        )
-        self.spark.sql(
-            f"CREATE TABLE {self.table} ({data_cols}, seg BIGINT) USING parquet "
-            f"PARTITIONED BY (seg) "
-            f"CLUSTERED BY (series_key) SORTED BY (series_key, ts) INTO {self.n_buckets} BUCKETS "
-            f"LOCATION '{self.root}'"
-        )
-        self.spark.sql(f"MSCK REPAIR TABLE {self.table}")
-        return sorted(
-            int(p.name.split("=", 1)[1]) for p in Path(self.root).glob("seg=*")
-        )
-
-
 def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
     """Store integrity check — the startup validation the reference does in
     ``loadFiles`` (tsdb.go:408-463: walk ``seg-*`` dirs, open each data
@@ -1030,10 +696,7 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
 
     import pyarrow.parquet as _pq
 
-    from ..matchers import PROMOTED_PREFIX
-
-    report: dict = {"segments": [], "corrupt": [], "orphans": [], "mixed_promotion": []}
-    promo_sets: dict = {}
+    report: dict = {"segments": [], "corrupt": [], "orphans": []}
     rootp = _P(root)
     for suffix in ("__old", "__compact", "__rebuild"):
         if _P(f"{root}{suffix}").exists():
@@ -1055,9 +718,6 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
                     md.row_group(0).column(i).path_in_schema
                     for i in range(md.row_group(0).num_columns)
                 ] if md.num_row_groups else []
-                promo_sets[str(f)] = frozenset(
-                    n for n in names if n.startswith(PROMOTED_PREFIX)
-                )
                 if "ts" in names:
                     ti = names.index("ts")
                     for g in range(md.num_row_groups):
@@ -1078,21 +738,9 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
                     ),
                 }
             )
-    # mixed promoted-column layouts (files deviating from the majority
-    # set): a query's promoted conjunct reads the missing column as NULL
-    # and silently drops that file's matching rows — the exact hazard the
-    # append-time guard refuses and compact() migrates
-    if promo_sets:
-        from collections import Counter
-
-        majority = Counter(promo_sets.values()).most_common(1)[0][0]
-        report["mixed_promotion"] = sorted(
-            f for f, ps in promo_sets.items() if ps != majority
-        )
     report["ok"] = (
         not report["corrupt"]
         and not report["orphans"]
-        and not report["mixed_promotion"]
         and not any(s["out_of_bounds"] for s in report["segments"])
     )
     return report
@@ -1154,30 +802,15 @@ def snapshot(root: str, dest: str) -> int:
     between jobs is crash-consistent and stays frozen while the live tree
     moves on.
 
-    The tombstone overlay (``<root>__tombstones`` — the bucketed store's
-    pending GDPR deletes, applied physically only at compact) IS store
-    state and is captured alongside as ``<dest>__tombstones``: without
-    it, restoring a snapshot taken before the compact that applied the
-    deletes would silently resurrect deleted rows, and a snapshot taken
-    with pending tombstones would not carry them.
-
     Validate with :func:`fsck`; restore with :func:`restore`.  The
     object-store analogue is a manifest copy.  Returns the linked file
-    count (overlay files included).  Refuses an existing non-empty
-    ``dest`` (or overlay dest)."""
+    count.  Refuses an existing non-empty ``dest``."""
     src, dst = Path(root), Path(dest)
     if not src.exists():
         raise FileNotFoundError(f"no store at {root}")
     if dst.exists() and any(dst.iterdir()):
         raise FileExistsError(f"snapshot dest {dest} exists and is not empty")
-    tomb_src, tomb_dst = Path(f"{root}__tombstones"), Path(f"{dest}__tombstones")
-    if tomb_dst.exists() and any(tomb_dst.iterdir()):
-        raise FileExistsError(
-            f"snapshot overlay dest {tomb_dst} exists and is not empty")
-    n = _link_tree(src, dst)
-    if tomb_src.exists():
-        n += _link_tree(tomb_src, tomb_dst)
-    return n
+    return _link_tree(src, dst)
 
 
 def restore(snapshot_root: str, root: str) -> int:
@@ -1189,27 +822,14 @@ def restore(snapshot_root: str, root: str) -> int:
     live tree is deleted by the swap; take a snapshot of it FIRST if the
     post-incident state matters forensically.
 
-    The tombstone overlay rides along: the snapshot's
-    ``__tombstones`` sibling replaces the live one (and a live overlay
-    with no snapshot counterpart is REMOVED — restore means "exactly the
-    snapshot's logical state", pending deletes included/excluded as they
-    were).  The overlay swap happens immediately after the main-tree
-    swap, so run restores on a quiesced store: a reader racing the two
-    swaps could briefly pair the restored tree with the old overlay.
-
     Returns the restored file count."""
     if not Path(snapshot_root).exists():
         raise FileNotFoundError(f"no snapshot at {snapshot_root}")
     staging = f"{root}__restore"
     shutil.rmtree(staging, ignore_errors=True)
-    shutil.rmtree(f"{staging}__tombstones", ignore_errors=True)
     n = snapshot(snapshot_root, staging)
     if Path(root).exists():
         swap_in(root, staging)
     else:
         Path(staging).rename(root)
-    tomb_live, tomb_staged = Path(f"{root}__tombstones"), Path(f"{staging}__tombstones")
-    shutil.rmtree(tomb_live, ignore_errors=True)
-    if tomb_staged.exists():
-        tomb_staged.rename(tomb_live)
     return n

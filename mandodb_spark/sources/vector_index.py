@@ -276,7 +276,7 @@ class VectorIndex:
         """Rewrite each cell partition into one file, restoring the
         one-file-per-cell invariant streaming appends erode (one file per
         trigger per cell otherwise).  Same staging-then-rename-aside swap
-        as :meth:`SegmentStore._swap_in` — crash at any point leaves the
+        as :func:`segment_store.swap_in` — crash at any point leaves the
         full old index recoverable, and a reader re-probing mid-compact
         sees a consistent snapshot.  No-op on an empty index."""
         import shutil

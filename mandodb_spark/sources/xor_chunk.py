@@ -75,13 +75,19 @@ class _BitWriter:
 
 
 class _BitReader:
-    __slots__ = ("buf", "pos")
+    """MSB-first bit source.  Every read is bounds-checked against the
+    buffer, so a truncated chunk raises ValueError."""
+
+    __slots__ = ("buf", "pos", "nbits")
 
     def __init__(self, buf: bytes, pos: int = 0) -> None:
         self.buf = buf
         self.pos = pos  # in BITS
+        self.nbits = len(buf) * 8
 
     def read_bit(self) -> int:
+        if self.pos >= self.nbits:
+            raise ValueError("XOR chunk truncated")
         byte = self.buf[self.pos >> 3]
         bit = (byte >> (7 - (self.pos & 7))) & 1
         self.pos += 1
@@ -91,6 +97,8 @@ class _BitReader:
         # whole-slice extraction: one int.from_bytes per call, not one
         # shift per bit
         end = self.pos + nbits
+        if end > self.nbits:
+            raise ValueError("XOR chunk truncated")
         first = self.pos >> 3
         last = (end + 7) >> 3
         chunk = int.from_bytes(self.buf[first:last], "big")
@@ -207,7 +215,9 @@ def encode_chunk(samples: list[tuple[int, float]]) -> bytes:
 
 
 def decode_chunk(data: bytes) -> list[tuple[int, float]]:
-    """One XOR chunk → (ts_ms, value) pairs."""
+    """One XOR chunk → (ts_ms, value) pairs.  Malformed input (a
+    truncated chunk, a value window wider than 64 bits) raises
+    ValueError."""
     r = _BitReader(data)
     n = r.read_bits(16)
     out: list[tuple[int, float]] = []
@@ -243,6 +253,8 @@ def decode_chunk(data: bytes) -> list[tuple[int, float]]:
                 if r.read_bit():
                     lead = r.read_bits(5)
                     sig = r.read_bits(6) or 64
+                    if lead + sig > 64:
+                        raise ValueError("XOR chunk value window exceeds 64 bits")
                     trail = 64 - lead - sig
                 sig = 64 - lead - trail
                 vbits ^= r.read_bits(sig) << trail

@@ -72,9 +72,7 @@ class RecordingRuleMaintainer:
         any of the rule's rows holds their global max ts — probe segments
         newest-first (each probe is one partition-pruned scan) and stop at
         the first hit.  A continuously-maintained rule lands in the newest
-        segment, so a restart typically reads ONE segment.  When the store
-        promotes ``__name__`` to a column, the per-segment probe predicate
-        additionally reaches PushedFilters (row-group skipping).  Stores
+        segment, so a restart typically reads ONE segment.  Stores
         without segment listing (memory mode) keep the direct aggregate —
         they are in-memory by definition.
         """
@@ -89,14 +87,10 @@ class RecordingRuleMaintainer:
         return max(found) if found else None
 
     def _recover_from(self, store) -> int | None:
-        from ..matchers import PROMOTED_PREFIX
         from ..model import METRIC_NAME_LABEL
 
         rel = store.relation()
-        promoted = PROMOTED_PREFIX + METRIC_NAME_LABEL
-        name_col = (F.col(promoted) if promoted in rel.columns
-                    else F.col("labels").getItem(METRIC_NAME_LABEL))
-        pred = name_col == self.rule_name
+        pred = F.col("labels").getItem(METRIC_NAME_LABEL) == self.rule_name
         seg_ids = getattr(store, "segment_ids", None)
         segs = sorted(seg_ids(), reverse=True) if callable(seg_ids) else None
         if segs and "seg" in rel.columns:

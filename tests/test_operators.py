@@ -81,6 +81,26 @@ def test_lsh_pipelines_leave_no_persisted_rdds(spark):
     assert final & (after_jaccard - before) == set()
 
 
+def test_repeated_jaccard_join_and_release_stay_flat(spark):
+    """A long-lived session alternating jaccard_join with
+    release_minhash_checkpoints keeps the persisted-RDD set flat, and the
+    per-context registry is empty after every release."""
+    df = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon zeta"), (2, "alpha beta gamma delta epsilon eta")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    dedup.release_minhash_checkpoints(spark)
+    base = set(sc._jsc.getPersistentRDDs().keySet())
+    for _ in range(3):
+        assert len(dedup.jaccard_join(df, "doc_id", "text", 0.5).collect()) == 1
+        dedup.release_minhash_checkpoints(spark)
+        assert sc not in dedup._RETAINED_CKPTS
+        # subset, not equality: the ContextCleaner may drop an earlier
+        # test's RDD asynchronously
+        assert set(sc._jsc.getPersistentRDDs().keySet()) <= base
+
+
 def test_memory_store_holds_single_materialized_copy(spark):
     """MemoryStore must release superseded localCheckpoint RDDs on every
     append/retention/close — only ONE materialized copy may ever live in

@@ -172,35 +172,6 @@ def test_query_range_single_shuffle(spark, tmp_path_factory):
     assert pushed_filters(df)  # time/seg predicates reached the scan
 
 
-def test_bucketed_store_query_range_zero_shuffle(spark, tmp_path_factory):
-    """With bucketBy(series_key) the scan itself is hash-partitioned on the
-    grouping key, so query_range needs NO exchange — the SCALE.md trade
-    (write-side co-location removes the read-side shuffle), now implemented.
-    Results must equal the unbucketed store's exactly."""
-    base = tmp_path_factory.mktemp("bucketed")
-    rows = [("m", {"a": f"v{i % 5}"}, START + i, float(i)) for i in range(50)]
-
-    plain = TSDB(spark, str(base / "plain"))
-    plain.insert_rows(rows)
-    bucketed = TSDB(spark, str(base / "bstore"), bucket_by_series=4, table="t_bucketed_plan")
-    try:
-        bucketed.insert_rows(rows)
-
-        df = bucketed.query_range("m", [], START, START + 100)
-        assert shuffle_count(df) == 0
-        want = {
-            tuple(sorted(r.labels.items())): [(p.ts, p.value) for p in r.points]
-            for r in plain.query_range("m", [], START, START + 100).collect()
-        }
-        got = {
-            tuple(sorted(r.labels.items())): [(p.ts, p.value) for p in r.points]
-            for r in df.collect()
-        }
-        assert got == want and len(got) == 5
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_plan")
-
-
 def test_contamination_benchmark_set_is_broadcast(spark):
     """The benchmark n-gram set must be the broadcast side (eval = the big
     corpus at 100 TB) and the plan must never cross-join."""
@@ -406,41 +377,6 @@ def test_vector_index_probe_prunes_cell_partitions(spark, tmp_path_factory):
 
     m = re.search(r"PartitionFilters: \[([^\]]*)\]", plan)
     assert m and "cell" in m.group(1)  # non-empty partition filter on cell
-
-
-def test_promoted_label_columns_reach_pushed_filters(spark, tmp_path_factory):
-    """SegmentStore(promote_labels=...): an equality matcher on a promoted
-    label produces a pushable EqualTo on the lbl_ column (map extractions
-    never push), and results are identical to the unpromoted store."""
-    from mandodb_spark.operators import tsdb_ops
-    from mandodb_spark.sources.segment_store import SegmentStore
-
-    base = tmp_path_factory.mktemp("promoted")
-    rows = [
-        ("m", {"node": f"vm{i % 3}", "dc": "sh"}, 1_700_000_000 + i, float(i))
-        for i in range(60)
-    ]
-    from mandodb_spark import TSDB
-
-    plain = SegmentStore(spark, str(base / "plain"))
-    promo = TSDB(
-        spark, str(base / "promo"), promote_labels=["node"]
-    ).store  # engine passthrough covered too
-    plain.insert_pylist(rows)
-    promo.insert_pylist(rows)
-
-    from mandodb_spark import LabelMatcher
-
-    args = ("m", [LabelMatcher("node", "vm1")], 0, 10**10)
-    a = sorted((r.ts, r.value) for r in tsdb_ops.query_range_rows(plain.relation(), *args).collect())
-    b = sorted((r.ts, r.value) for r in tsdb_ops.query_range_rows(promo.relation(), *args).collect())
-    assert a == b and len(a) == 20
-
-    plan = tsdb_ops.query_range_rows(promo.relation(), *args)._jdf.queryExecution().explainString(
-        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-    )
-    pushed = [l for l in plan.splitlines() if "PushedFilters" in l]
-    assert any("lbl_node" in l and "EqualTo" in l for l in pushed), pushed
 
 
 def test_text_index_search_prunes_term_buckets(spark, tmp_path_factory):

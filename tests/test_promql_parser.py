@@ -743,16 +743,14 @@ def test_unparse_parse_roundtrip(ast):
 
 def test_promql_store_parity_disk_bucketed_memory(spark, tmp_path):
     """The text surface is store-agnostic: the same samples through the
-    plain disk store, the series-bucketed store, and the memory store
-    yield identical promql / promql_range / promql_alerts results."""
+    disk store and the memory store yield identical promql /
+    promql_range / promql_alerts results."""
     from mandodb_spark import TSDB
 
     rows = [("m", {"j": chr(97 + (k % 3))}, k * 60,
              float(k * (1 + k % 3))) for k in range(120)]
     dbs = [
         TSDB(spark, str(tmp_path / "disk"), segment_duration=3600),
-        TSDB(spark, str(tmp_path / "bkt"), segment_duration=3600,
-             bucket_by_series=4, table="promql_parity_bkt"),
         TSDB(spark, None, segment_duration=3600, only_memory=True),
     ]
     for db in dbs:
@@ -773,7 +771,6 @@ def test_promql_store_parity_disk_bucketed_memory(spark, tmp_path):
     base = snap(dbs[0])
     assert base[0] and base[1] and base[2]  # non-trivial results
     assert snap(dbs[1]) == base
-    assert snap(dbs[2]) == base
 
 
 @pytest.mark.parametrize("seed", [3, 17, 91])

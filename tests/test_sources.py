@@ -80,57 +80,6 @@ def test_salted_query_range_equals_unsalted(spark):
         assert [(p.ts, p.value) for p in a.points] == [(p.ts, p.value) for p in b.points]
 
 
-def test_storage_knobs_write_and_read_back(spark, tmp_path_factory):
-    path = str(tmp_path_factory.mktemp("knobs") / "s")
-    store = SegmentStore(spark, path, bloom_filter_series=True, max_records_per_file=50)
-    store.insert_pylist([("m", {"i": str(i % 7)}, START + i, float(i)) for i in range(300)])
-    from pathlib import Path
-
-    files = list(Path(path).glob("seg=*/*.parquet"))
-    assert len(files) >= 6  # 300 rows / 50 per file
-    assert store.relation().count() == 300
-
-
-def test_bucketed_store_lifecycle(spark, tmp_path_factory):
-    """BucketedSegmentStore: append accumulates bucket files, compact
-    restores one file per (segment, bucket) keeping the bucket spec
-    (query_range stays zero-shuffle), retention drops whole partitions
-    from both catalog and disk."""
-    from pathlib import Path
-
-    from mandodb_spark.sources.segment_store import BucketedSegmentStore
-
-    START = 1_700_000_000
-    base = tmp_path_factory.mktemp("bstore")
-    # n_buckets=1 makes the compaction invariant exact: one file per segment
-    store = BucketedSegmentStore(
-        spark, str(base / "data"), "t_bucketed_lifecycle", n_buckets=1
-    )
-    try:
-        rows = [("m", {"n": f"v{i % 3}"}, START + i * 3600, float(i)) for i in range(8)]
-        # interleave so both appends land files into the SAME segments
-        store.insert_pylist(rows[::2])
-        store.insert_pylist(rows[1::2])
-        assert store.relation().count() == 8
-
-        files_before = len(list(Path(store.root).rglob("*.parquet")))
-        store.compact()
-        files_after = len(list(Path(store.root).rglob("*.parquet")))
-        assert files_after < files_before
-        assert store.relation().count() == 8
-        # bucket spec survived compaction: still zero-shuffle aggregation
-        from mandodb_spark.operators.tsdb_ops import query_range
-        from mandodb_spark.plans import shuffle_count
-
-        assert shuffle_count(query_range(store.relation(), "m", [], 0, 10**10)) == 0
-
-        dropped = store.remove_expired(now_ts=START + 10 * 86400, retention=86400 * 9)
-        assert dropped  # oldest segments gone
-        assert store.relation().count() < 8
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucketed_lifecycle")
-
-
 def test_influx_line_protocol_parses_jvm_side(spark):
     from mandodb_spark.sources.loaders import rows_from_influx_line
 
@@ -1519,6 +1468,51 @@ def test_xor_chunk_property_round_trip():
     check()
 
 
+def test_xor_chunk_malformed_input_raises_value_error():
+    """Malformed XOR chunks take one defined path: every proper
+    truncation raises ValueError (never IndexError, never a silently
+    short read), a value window wider than 64 bits raises ValueError,
+    and seeded single-bit flips either raise ValueError or decode to
+    the sample count their header declares."""
+    import random
+
+    from mandodb_spark.sources.xor_chunk import _BitWriter, decode_chunk, encode_chunk
+
+    rng = random.Random(5)
+    t, samples = 1_700_000_000_000, []
+    for i in range(120):
+        # every dod bucket: steady 15 s scrapes, small/large jitter, gaps
+        t += rng.choice([15_000, 15_000, 15_001, 14_000, 90_000, 10**9])
+        samples.append((t, rng.choice([1.0, 1.0, i * 0.25, rng.random(), -3e300])))
+    chunk = encode_chunk(samples)
+    assert decode_chunk(chunk) == samples
+    for k in range(len(chunk)):
+        with pytest.raises(ValueError):
+            decode_chunk(chunk[:k])
+
+    w = _BitWriter()
+    w.write_bits(2, 16)        # two samples
+    w.write_bits(0, 8)         # t0 = 0 (signed varint)
+    w.write_bits(0, 64)        # v0 bits
+    w.write_bits(1, 8)         # delta 1
+    w.write_bits(0b11, 2)      # value changed, new window
+    w.write_bits(31, 5)        # 31 leading zeros ...
+    w.write_bits(63, 6)        # ... plus 63 significant bits > 64
+    w.write_bits(0, 64)
+    with pytest.raises(ValueError, match="64 bits"):
+        decode_chunk(w.to_bytes())
+
+    for _ in range(3000):
+        bit = rng.randrange(len(chunk) * 8)
+        bad = bytearray(chunk)
+        bad[bit >> 3] ^= 0x80 >> (bit & 7)
+        try:
+            out = decode_chunk(bytes(bad))
+        except ValueError:
+            continue
+        assert len(out) == int.from_bytes(bad[:2], "big")
+
+
 def test_remote_read_chunked_endpoint(spark, tmp_path):
     """TSDB.remote_read_chunked: framed ChunkedReadResponse stream with
     CRC-checked frames, per-query indices, and XOR chunks that decode to
@@ -2239,12 +2233,13 @@ def test_prompb_malformed_payloads_take_one_defined_path(spark):
 
 
 def test_otlp_malformed_payloads_raise_value_error():
-    """Truncated and length-inflated OTLP export requests raise
-    ValueError — never IndexError or struct.error.  Every proper
+    """Truncated, length-inflated and bit-flipped OTLP export requests
+    raise ValueError — never IndexError or struct.error.  Every proper
     truncation of a one-resource request cuts its outer field, and an
     inflated envelope length (ResourceMetrics, Resource/ScopeMetrics,
     Metric/KeyValue) overruns its parent, so those always raise; deeper
-    sites may sit inside opaque bytes and decode."""
+    sites may sit inside opaque bytes and decode, and so may a flipped
+    bit (every single-bit flip is tried)."""
     import random
 
     from mandodb_spark.sources import otlp
@@ -2276,6 +2271,13 @@ def test_otlp_malformed_payloads_raise_value_error():
                 except ValueError:
                     continue
                 assert site[3] > 2, site
+        for bit in range(len(payload) * 8):
+            bad = bytearray(payload)
+            bad[bit >> 3] ^= 0x80 >> (bit & 7)
+            try:
+                otlp.decode_export_request(bytes(bad))
+            except ValueError:
+                pass
 
 
 def test_openmetrics_metadata_codec(spark):

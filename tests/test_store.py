@@ -105,15 +105,11 @@ def test_compact_while_reader_requeries(spark, tmp_path_factory):
 
 
 def test_compact_before_any_append_is_noop(spark, tmp_path_factory):
-    """compact() on a never-written store must not raise (ADVICE r2: the
-    bucketed variant rmtree'd an absent root)."""
-    from mandodb_spark.sources.segment_store import BucketedSegmentStore, SegmentStore
+    """compact() on a never-written store must not raise."""
+    from mandodb_spark.sources.segment_store import SegmentStore
 
     base = tmp_path_factory.mktemp("empty")
-    SegmentStore(spark, str(base / "plain")).compact()
-    BucketedSegmentStore(
-        spark, str(base / "bucketed"), table="compact_noop_t"
-    ).compact()
+    assert SegmentStore(spark, str(base / "plain")).compact() == []
 
 
 def test_incremental_rollup_rejects_incompatible_step(spark, tmp_path_factory):
@@ -228,29 +224,6 @@ def test_max_rows_per_segment_fans_out_hot_segment(spark, tmp_path_factory):
     assert db.query_range_rows("m", [], 0, 10**12).count() == 400
 
 
-def test_dedup_policies_bucketed_store(spark, tmp_path_factory):
-    """The bucketed store honors the same duplicate-policy surface."""
-    from mandodb_spark.sources.segment_store import BucketedSegmentStore
-
-    path = str(tmp_path_factory.mktemp("store") / "bdd")
-    store = BucketedSegmentStore(spark, path, table="t_bucket_dedup", n_buckets=2)
-    try:
-        rows = spark.createDataFrame(
-            [("m", {"x": "1"}, START, 1.0), ("m", {"x": "1"}, START, 2.0)],
-            "metric string, labels map<string,string>, ts long, value double",
-        )
-        store.append(rows, dedup_points=True)
-        resend = spark.createDataFrame(
-            [("m", {"x": "1"}, START, 9.0), ("m", {"x": "1"}, START + 1, 3.0)],
-            "metric string, labels map<string,string>, ts long, value double",
-        )
-        store.append(resend, dedup_points=True, dedup_against_store=True)
-        got = sorted((r.ts, r.value) for r in store.relation().collect())
-        assert got == [(START, 2.0), (START + 1, 3.0)]
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bucket_dedup")
-
-
 def test_swap_in_atomic_exchange_and_fallback(tmp_path, monkeypatch):
     """swap_in's primary path is one renameat2(RENAME_EXCHANGE) syscall —
     no instant with a missing root (a concurrent lister can never hit
@@ -358,11 +331,12 @@ def test_snapshot_is_instant_frozen_and_fsck_clean(spark, tmp_path_factory):
         snapshot(snap, restored)
 
 
-def test_compact_salvages_concurrent_append(spark, tmp_path_factory):
+def test_compact_salvages_concurrent_append(spark, tmp_path_factory, monkeypatch):
     """A batch committed between compaction's snapshot read and its swap
     must survive: the rewrite consumes exactly the files its plan listed,
     and post-swap salvage moves anything newer from the replaced tree
     into the live one (previously the swap silently discarded it)."""
+    from mandodb_spark.sources import segment_store as ss
     from mandodb_spark.sources.segment_store import SegmentStore
 
     path = str(tmp_path_factory.mktemp("store") / "race")
@@ -374,111 +348,20 @@ def test_compact_salvages_concurrent_append(spark, tmp_path_factory):
 
     # interpose on the swap: a concurrent writer lands a batch AFTER the
     # compaction rewrite finished but BEFORE the directory swap
-    orig = store._swap_in_keep_old
+    orig = ss.swap_in
     late = [("m", {"late": "1"}, START + 9999, 123.0)]
 
-    def hooked(staging_root):
+    def hooked(root, staging_root, keep_old=False):
         SegmentStore(spark, path).insert_pylist(late)
-        return orig(staging_root)
+        return orig(root, staging_root, keep_old=keep_old)
 
-    store._swap_in_keep_old = hooked
-    try:
-        store.compact()
-    finally:
-        store._swap_in_keep_old = orig
+    monkeypatch.setattr(ss, "swap_in", hooked)
+    store.compact()
 
     got = sorted((r.ts, r.value) for r in store.relation().collect())
     assert (START + 9999, 123.0) in got          # the late batch survived
     assert len(got) == 41                        # 40 compacted + 1 salvaged
     assert not Path(f"{path}__compact").exists() and not Path(f"{path}__old").exists()
-
-
-def test_bucketed_compact_salvages_concurrent_append(spark, tmp_path_factory):
-    """Same race, bucketed store: a batch appended mid-compact survives the
-    table swap (salvaged bucket files coexist like any multi-batch append)."""
-    from mandodb_spark.sources.segment_store import BucketedSegmentStore
-
-    path = str(tmp_path_factory.mktemp("store") / "brace")
-    store = BucketedSegmentStore(spark, path, table="t_salvage", n_buckets=2)
-    try:
-        store.insert_pylist(
-            [("m", {"b": str(i % 2)}, START + i, float(i)) for i in range(20)]
-        )
-        orig = store._swap_in_keep_old
-        late = [("m", {"late": "1"}, START + 9999, 123.0)]
-
-        def hooked(staging_root):
-            BucketedSegmentStore(spark, path, table="t_salvage", n_buckets=2).insert_pylist(late)
-            return orig(staging_root)
-
-        store._swap_in_keep_old = hooked
-        try:
-            store.compact()
-        finally:
-            store._swap_in_keep_old = orig
-        got = sorted((r.ts, r.value) for r in store.relation().collect())
-        assert (START + 9999, 123.0) in got
-        assert len(got) == 21
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_salvage")
-
-
-def test_promote_labels_change_is_refused_then_migrated_by_compact(spark, tmp_path_factory):
-    """A promotion change over existing files would mix schemas (missing
-    promoted columns read as NULL and the pushable conjunct would silently
-    drop their rows) — append refuses; compact() on the newly-configured
-    store migrates every file, after which appends and matcher queries work."""
-    import pytest
-
-    from mandodb_spark import LabelMatcher
-    from mandodb_spark.operators import tsdb_ops
-    from mandodb_spark.sources.segment_store import SegmentStore
-
-    path = str(tmp_path_factory.mktemp("store") / "promo_mig")
-    rows = [("m", {"node": f"vm{i % 2}"}, START + i, float(i)) for i in range(10)]
-    SegmentStore(spark, path).insert_pylist(rows)
-
-    promoted = SegmentStore(spark, path, promote_labels=["node"])
-    with pytest.raises(ValueError, match="promote_labels"):
-        promoted.insert_pylist(rows)
-    promoted.compact()  # migration: derives lbl_node for every file
-    promoted.insert_pylist([("m", {"node": "vm1"}, START + 99, 42.0)])
-
-    got = sorted(
-        (r.ts, r.value)
-        for r in tsdb_ops.query_range_rows(
-            promoted.relation(), "m", [LabelMatcher("node", "vm1")], 0, 10**10
-        ).collect()
-    )
-    assert (START + 99, 42.0) in got and len(got) == 6  # 5 original vm1 + 1 new
-
-
-def test_fsck_flags_mixed_promoted_layout(spark, tmp_path_factory):
-    """fsck reports files whose promoted-column set deviates from the
-    store majority — the silent-row-drop hazard class the append guard
-    refuses and compact() migrates."""
-    from mandodb_spark.sources.segment_store import SegmentStore, fsck
-
-    path = str(tmp_path_factory.mktemp("store") / "mix")
-    plain = SegmentStore(spark, path)
-    plain.insert_pylist([("m", {"node": "a"}, START + i, float(i)) for i in range(3)])
-    plain.insert_pylist([("m", {"node": "a"}, START + 10 + i, float(i)) for i in range(3)])
-    assert fsck(path)["ok"]
-    # simulate a foreign writer dropping promoted files into the same tree
-    # (bypassing the append guard): write a promoted batch elsewhere and
-    # move its file in
-    other = str(tmp_path_factory.mktemp("store") / "promoted")
-    SegmentStore(spark, other, promote_labels=["node"]).insert_pylist(
-        [("m", {"node": "b"}, START + 99, 9.0)]
-    )
-    import shutil as _sh
-
-    seg = next(Path(other).glob("seg=*"))
-    for f in seg.glob("*.parquet"):
-        _sh.copy(f, Path(path) / seg.name / f"foreign-{f.name}")
-    rep = fsck(path)
-    assert not rep["ok"] and len(rep["mixed_promotion"]) == 1
-    assert "foreign-" in rep["mixed_promotion"][0]
 
 
 def test_selective_compact_only_fragmented_segments(spark, tmp_path_factory):
@@ -516,23 +399,13 @@ def test_selective_compact_only_fragmented_segments(spark, tmp_path_factory):
 def test_selective_compact_guards(spark, tmp_path_factory):
     import pytest as _pytest
 
-    from mandodb_spark.sources.segment_store import BucketedSegmentStore, SegmentStore
+    from mandodb_spark.sources.segment_store import SegmentStore
 
     path = str(tmp_path_factory.mktemp("store") / "g")
     store = SegmentStore(spark, path)
     store.append(spark.createDataFrame([("m", {"n": "a"}, START, 1.0)], ROW_SCHEMA))
     with _pytest.raises(ValueError, match="min_files_per_segment"):
         store.compact(min_files_per_segment=0)
-    # promotion change must go through FULL compact, not selective
-    promoted = SegmentStore(spark, path, promote_labels=["n"])
-    with _pytest.raises(ValueError, match="promote_labels"):
-        promoted.compact(min_files_per_segment=1)
-
-    bpath = str(tmp_path_factory.mktemp("store") / "b")
-    b = BucketedSegmentStore(spark, bpath, table="t_selcomp_guard")
-    b.append(spark.createDataFrame([("m", {"n": "a"}, START, 1.0)], ROW_SCHEMA))
-    with _pytest.raises(ValueError, match="selective compaction"):
-        b.compact(min_files_per_segment=2)
 
 
 def test_selective_compact_fallback_never_pollutes_partition_discovery(spark, tmp_path_factory, monkeypatch):
@@ -749,132 +622,6 @@ def test_delete_series_memory_mode(spark):
     left = db.query_range_rows("m", [], 0, 10**12).collect()
     assert len(left) == 1 and left[0]["labels"]["u"] == "b"
     assert db.delete_series([LabelMatcher("u", "a")]) == 0
-
-
-def test_delete_series_bucketed_store(spark, tmp_path_factory):
-    """Bucketed-store GDPR delete is a TOMBSTONE OVERLAY (round-7): the
-    data files are untouched (O(deletions), not O(store)), reads hide the
-    matched rows immediately, and the count contract is identical to the
-    rewrite form."""
-    import os
-
-    base = tmp_path_factory.mktemp("gdprb")
-    db = TSDB(spark, str(base / "live"), segment_duration=2 * 3600,
-              bucket_by_series=4, table="gdpr_bucketed_t")
-    db.insert_rows([("m", {"u": "a"}, START + i * 3600, float(i)) for i in range(4)]
-                   + [("m", {"u": "b"}, START, 9.0)])
-    before_files = {str(p): os.path.getmtime(p)
-                    for p in (base / "live").rglob("part-*")}
-    assert db.delete_series([LabelMatcher("u", "a")]) == 4
-    left = db.query_range_rows("m", [], 0, 10**12).collect()
-    assert len(left) == 1 and left[0]["labels"]["u"] == "b"
-    assert db.delete_series([LabelMatcher("u", "a")]) == 0
-    # overlay, not rewrite: every data file is byte-identical
-    after_files = {str(p): os.path.getmtime(p)
-                   for p in (base / "live").rglob("part-*")}
-    assert after_files == before_files
-    spark.sql("DROP TABLE IF EXISTS gdpr_bucketed_t")
-
-
-def test_snapshot_restore_carries_tombstone_overlay(spark, tmp_path_factory):
-    """Round-7 ADVICE: the tombstone overlay lives at the SIBLING path
-    <root>__tombstones, so snapshot/restore must carry it explicitly.
-
-    Both GDPR directions are pinned:
-    1. snapshot taken WITH pending tombstones, then compact (applies the
-       deletes physically), then restore → the deletes survive (the
-       overlay rode the snapshot; without it the restore would resurrect
-       the deleted rows);
-    2. snapshot taken BEFORE any delete, restored over a store with
-       pending tombstones → rows visible again and the stale live
-       overlay is GONE (restore means exactly the snapshot's state)."""
-    base = tmp_path_factory.mktemp("gdprsnap")
-    root = str(base / "live")
-    db = TSDB(spark, root, segment_duration=2 * 3600,
-              bucket_by_series=4, table="gdpr_snap_t")
-    db.insert_rows([("m", {"u": "a"}, START + i * 60, float(i)) for i in range(3)]
-                   + [("m", {"u": "b"}, START, 9.0)])
-
-    clean_snap = str(base / "snap_clean")
-    db.snapshot(clean_snap)          # no tombstones yet
-
-    assert db.delete_series([LabelMatcher("u", "a")]) == 3
-    pending_snap = str(base / "snap_pending")
-    n = db.snapshot(pending_snap)    # overlay pending
-    assert (base / "snap_pending__tombstones").exists() and n > 0
-
-    db.store.compact()               # deletes applied physically, overlay cleared
-    assert not (base / "live__tombstones").exists()
-
-    # 1. restore the pending-overlay snapshot: deletes still in force
-    db.restore(pending_snap)
-    assert (base / "live__tombstones").exists()
-    left = db.query_range_rows("m", [], 0, 10**12).collect()
-    assert len(left) == 1 and left[0]["labels"]["u"] == "b"
-    # and the carried overlay still compacts cleanly
-    db.store.compact()
-    assert not (base / "live__tombstones").exists()
-    assert db.query_range_rows("m", [], 0, 10**12).count() == 1
-
-    # 2. re-delete to create a live overlay, then restore the clean
-    # snapshot: all rows back, stale overlay removed
-    db.insert_rows([("m", {"u": "a"}, START + i * 60, float(i)) for i in range(3)])
-    assert db.delete_series([LabelMatcher("u", "a")]) == 3
-    assert (base / "live__tombstones").exists()
-    db.restore(clean_snap)
-    assert not (base / "live__tombstones").exists()
-    assert db.query_range_rows("m", [], 0, 10**12).count() == 4
-    spark.sql("DROP TABLE IF EXISTS gdpr_snap_t")
-
-
-def test_bucketed_tombstone_overlay_semantics(spark, tmp_path_factory):
-    """The deletion-vector contract of the bucketed delete:
-
-    1. rows of the SAME series appended AFTER the delete (even into the
-       same segment) are new data — never hidden by old tombstones;
-    2. dedup_against_store treats deleted points as gone (a re-append of
-       the very same (seg, series, ts) is accepted);
-    3. compact() applies tombstones physically and clears the overlay,
-       with reads identical before and after (overlay ≡ rewrite);
-    4. the overlay costs no shuffle on the read path (broadcast anti-join
-       — the bucketed zero-shuffle guarantee survives deletes)."""
-    import os
-
-    from mandodb_spark.plans import shuffle_count
-
-    base = tmp_path_factory.mktemp("gdprv")
-    db = TSDB(spark, str(base / "live"), segment_duration=2 * 3600,
-              bucket_by_series=4, table="gdpr_tomb_t")
-    db.insert_rows([("m", {"u": "a"}, START + i * 60, float(i)) for i in range(3)]
-                   + [("m", {"u": "b"}, START, 9.0)])
-    assert db.delete_series([LabelMatcher("u", "a")]) == 3
-    tomb_root = str(base / "live") + "__tombstones"
-    assert os.path.exists(tomb_root)
-
-    # (1) same series, same segment, appended after the delete: visible
-    db.insert_rows([("m", {"u": "a"}, START + 10 * 60, 42.0)])
-    rows = db.query_range_rows("m", [LabelMatcher("u", "a")], 0, 10**12).collect()
-    assert [(r["ts"], r["value"]) for r in rows] == [(START + 600, 42.0)]
-
-    # (2) re-append of a deleted point passes the store dedup gate
-    db.insert_rows([("m", {"u": "a"}, START, 7.0)], dedup_against_store=True)
-    rows = sorted((r["ts"], r["value"]) for r in db.query_range_rows(
-        "m", [LabelMatcher("u", "a")], 0, 10**12).collect())
-    assert rows == [(START, 7.0), (START + 600, 42.0)]
-
-    # (4) overlay read path: still no Exchange in the bucketed aggregation
-    agg = db.query_range("m", [], 0, 10**12)
-    assert shuffle_count(agg) == 0
-
-    # (3) compact folds the overlay in; reads identical, overlay cleared
-    before = sorted((r["series_key"], r["ts"], r["value"])
-                    for r in db.store.relation().collect())
-    db.store.compact()
-    after = sorted((r["series_key"], r["ts"], r["value"])
-                   for r in db.store.relation().collect())
-    assert after == before
-    assert not os.path.exists(tomb_root)
-    spark.sql("DROP TABLE IF EXISTS gdpr_tomb_t")
 
 
 def test_downsample_expire_memory_mode(spark, tmp_path_factory):
