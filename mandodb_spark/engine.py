@@ -141,8 +141,8 @@ class TSDB:
         tsdb_ops.refresh_label_dim(dest, src)
 
     def label_dim_relation(self, dest: str) -> DataFrame:
-        """Read back a materialized label dim."""
-        return self.spark.read.parquet(dest)
+        """Read back a materialized label dim (declared schema, no job)."""
+        return self.spark.read.schema(tsdb_ops.LABEL_DIM_SCHEMA).parquet(dest)
 
     # ------------------------------------------------------------ SQL surface
     def create_views(self, prefix: str = "tsdb") -> None:
@@ -737,14 +737,16 @@ class TSDB:
 
     def fsck(self) -> dict:
         """Storage integrity report (the reference's loadFiles startup
-        validation, tsdb.go:408-463, on demand): corrupt footers, leftover
-        swap dirs, ts-stats-vs-segment-bounds violations.  Footer-only,
+        validation, tsdb.go:408-463, on demand): corrupt footers, footer
+        schemas that differ from the declared one, leftover swap dirs,
+        ts-stats-vs-segment-bounds violations.  Footer-only,
         O(files).  Memory-only stores have no files — trivially ok."""
         from .sources.segment_store import fsck as _fsck
 
         root = getattr(self.store, "root", None)
         if root is None:
-            return {"segments": [], "corrupt": [], "orphans": [], "ok": True}
+            return {"segments": [], "corrupt": [], "schema_mismatch": [],
+                    "orphans": [], "ok": True}
         return _fsck(root, self.store.segment_duration)
 
     def vacuum(self, dry_run: bool = True) -> dict:

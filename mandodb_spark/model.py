@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
+    ArrayType,
+    DataType,
     DoubleType,
     LongType,
     MapType,
@@ -62,6 +64,22 @@ POINT_STRUCT = StructType(
         StructField("value", DoubleType(), True),
     ]
 )
+
+
+def as_nullable(t: DataType) -> DataType:
+    """``t`` with every field, map value and array element nullable — the
+    type Spark reads a Parquet column back as, whatever the writer
+    declared.  Declared read schemas are built with it so they equal what
+    inference would have returned."""
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, as_nullable(f.dataType), True) for f in t.fields]
+        )
+    if isinstance(t, MapType):
+        return MapType(as_nullable(t.keyType), as_nullable(t.valueType), True)
+    if isinstance(t, ArrayType):
+        return ArrayType(as_nullable(t.elementType), True)
+    return t
 
 
 def clean_labels(labels: Column) -> Column:

@@ -19,9 +19,16 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
 
 from ..matchers import LabelMatcher, add_metric_name, matchers_predicate, regex_predicate
 from ..model import DEFAULT_SEGMENT_DURATION, series_key
+
+#: A materialized label-value dim as every read sees it (declared, so the
+#: read opens no footer and runs no job).
+LABEL_DIM_SCHEMA = StructType(
+    [StructField("name", StringType()), StructField("value", StringType())]
+)
 
 
 def time_predicate(start: int, end: int, has_seg: bool, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> Column:
@@ -81,7 +88,7 @@ def refresh_label_dim(dest: str, batch: DataFrame) -> None:
     spark = batch.sparkSession
     new = label_values_dim(batch)
     if Path(dest).exists():
-        old = spark.read.parquet(dest)
+        old = spark.read.schema(LABEL_DIM_SCHEMA).parquet(dest)
         new = new.join(F.broadcast(old), ["name", "value"], "left_anti")
         # steady state is "no new labels": skip the write entirely rather
         # than appending an empty part file per micro-batch (isEmpty is a
@@ -352,10 +359,20 @@ def query_label_values(
     Exact time filtering on every row — strictly more correct than the
     reference's segment-granularity filter (label.go:62-77 via
     SURVEY.md §3.3), as the survey prescribes.  Output column: ``value``.
+
+    The sort runs in one partition after the distinct: the values are
+    collected anyway, and a global ``orderBy`` would add a range-sampling
+    job and a second exchange to order them.
     """
     flt = _filtered(df, None, matchers or [], start, end, segment_duration)
     v = F.col("labels").getItem(label)
-    return flt.select(v.alias("value")).where(F.col("value").isNotNull()).distinct().orderBy("value")
+    return (
+        flt.select(v.alias("value"))
+        .where(F.col("value").isNotNull())
+        .distinct()
+        .coalesce(1)
+        .sortWithinPartitions("value")
+    )
 
 
 def alert_intervals(

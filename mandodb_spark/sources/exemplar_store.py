@@ -20,6 +20,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from .hist_store import HistStore, MemoryHistStore
 
@@ -27,9 +35,14 @@ from .hist_store import HistStore, MemoryHistStore
 #: exemplar's own payload — ``value``, unix-seconds ``ts``, and the
 #: exemplar label map (trace/span ids; Prometheus caps these at 64
 #: UTF-8 chars of combined length, enforced at the edge, not here).
-EXEMPLAR_ROW_SCHEMA = (
-    "metric string, labels map<string,string>, ts bigint, "
-    "value double, exemplar map<string,string>"
+EXEMPLAR_ROW_SCHEMA = StructType(
+    [
+        StructField("metric", StringType()),
+        StructField("labels", MapType(StringType(), StringType())),
+        StructField("ts", LongType()),
+        StructField("value", DoubleType()),
+        StructField("exemplar", MapType(StringType(), StringType())),
+    ]
 )
 
 

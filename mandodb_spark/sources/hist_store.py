@@ -21,9 +21,11 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..model import (
     DEFAULT_SEGMENT_DURATION,
+    as_nullable,
     clean_labels,
     fold_metric_name,
     seg_bucket,
@@ -73,6 +75,18 @@ class HistStore:
         self.segment_duration = segment_duration
         self.codec = codec
 
+    @property
+    def schema(self) -> StructType:
+        """The store as every read sees it: the written projection
+        ``(labels, ts, *PAYLOAD, series_key, seg)``, every field nullable
+        as Parquet reads back, ``seg`` INT as partition inference types
+        it.  Declared, so :meth:`relation` opens no footer."""
+        row = {f.name: f for f in self.ROW_SCHEMA.fields}
+        return as_nullable(StructType(
+            [row[c] for c in ("labels", "ts", *self.PAYLOAD)]
+            + [StructField("series_key", LongType()), StructField("seg", IntegerType())]
+        ))
+
     # ---------------------------------------------------------------- write
     def append(self, rows: DataFrame,
                dedup_against_store: bool = False) -> None:
@@ -88,7 +102,7 @@ class HistStore:
         if dedup_against_store and Path(self.root).exists():
             segs = [r["seg"] for r in batch.select("seg").distinct().collect()]
             existing = (
-                self.spark.read.parquet(self.root)
+                self.relation()
                 .filter(F.col("seg").isin(segs))
                 .select("seg", "series_key", "ts")
             )
@@ -119,13 +133,12 @@ class HistStore:
 
     # ----------------------------------------------------------------- read
     def relation(self) -> DataFrame:
-        if not Path(self.root).exists():
-            return self.spark.createDataFrame([], self.ROW_SCHEMA).select(
-                "labels", "ts", *self.PAYLOAD,
-                F.lit(0).cast("long").alias("series_key"),
-                F.lit(0).cast("long").alias("seg"),
-            ).limit(0)
-        return self.spark.read.parquet(self.root)
+        """The store with its declared :attr:`schema`, same contract as
+        ``SegmentStore.relation`` (files listed per call, no job; a store
+        never written is the empty relation of the same schema)."""
+        if Path(self.root).exists():
+            return self.spark.read.schema(self.schema).parquet(self.root)
+        return self.spark.createDataFrame([], self.schema)
 
     # ------------------------------------------------------------ retention
     def remove_expired(self, now_ts: int, retention: int) -> list[int]:
@@ -157,8 +170,6 @@ class HistStore:
         if not lms:
             raise ValueError("delete_series: need at least one matcher")
         rel = self.relation()
-        if "seg" not in rel.columns:
-            return 0
         pred = matchers_predicate(F.col("labels"), lms)
         touched = [r["seg"] for r in
                    rel.filter(pred).select("seg").distinct().collect()]
@@ -206,9 +217,9 @@ class MemoryHistStore:
 
     def relation(self) -> DataFrame:
         if self._df is None:
-            empty = HistStore(self.spark, "/nonexistent", self.segment_duration)
-            empty.PAYLOAD, empty.ROW_SCHEMA = self.PAYLOAD, self.ROW_SCHEMA
-            return empty.relation()
+            return canonicalize_payload(
+                self.spark.createDataFrame([], self.ROW_SCHEMA), self.PAYLOAD,
+                self.segment_duration)
         return self._df
 
     def remove_expired(self, now_ts: int, retention: int) -> list[int]:

@@ -16,6 +16,12 @@ disk_segment.go, metadata.go, pkg/mmap) with a partitioned Parquet layout:
 - compression codec is a session conf (``zstd`` default), replacing
   BytesCompressor (compressor.go:22-81, S8).
 
+The schema is declared, not discovered: :data:`STORE_SCHEMA` is what every
+read gets, so building the relation opens no file footer and runs no Spark
+job.  Discovery only LISTS files — again on every read, because a stream
+adds files between reads — and :func:`fsck` is where a file's own schema
+is checked against the declaration.
+
 Scale posture: segment discovery (tsdb.go:408-463, S5) is Spark's partition
 discovery; at 100 TB you'd put a metastore/Delta table over the same layout,
 but the layout itself — time-partitioned, sorted-within-partition — is the
@@ -31,8 +37,31 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    DoubleType,
+    IntegerType,
+    LongType,
+    MapType,
+    StringType,
+    StructField,
+    StructType,
+)
 
-from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, canonicalize
+from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, as_nullable, canonicalize
+
+#: The store as every read sees it: the canonical columns plus the ``seg``
+#: partition column.  ``seg`` is INT because that is what partition
+#: inference gives the written directories; every field is nullable, as
+#: Parquet reads back.
+STORE_SCHEMA = StructType(
+    [
+        StructField("labels", MapType(StringType(), StringType())),
+        StructField("ts", LongType()),
+        StructField("value", DoubleType()),
+        StructField("series_key", LongType()),
+        StructField("seg", IntegerType()),
+    ]
+)
 
 
 def dedup_last_write(batch: DataFrame, order_col: str | None = None) -> DataFrame:
@@ -342,7 +371,7 @@ class SegmentStore:
         if dedup_against_store and Path(self.root).exists():
             segs = [r["seg"] for r in batch.select("seg").distinct().collect()]
             existing = (
-                self.spark.read.parquet(self.root)
+                self.relation()
                 .filter(F.col("seg").isin(segs))
                 .select("seg", "series_key", "ts")
             )
@@ -382,20 +411,15 @@ class SegmentStore:
     def relation(self) -> DataFrame:
         """The full store as a DataFrame (lazy; S5/S6 ≙ partition discovery).
 
-        Returns an empty canonical relation when nothing has been written
-        — or when retention purged every segment (root exists but holds
-        no seg dirs; schema inference would fail) — mirroring a fresh
+        Read with :data:`STORE_SCHEMA`: Spark lists the files on every call
+        (a stream adds files between reads) but infers nothing, so the call
+        runs no job.  A root retention emptied reads as 0 rows; a store
+        never written returns the same empty relation, mirroring a fresh
         TSDB.
         """
-        if Path(self.root).exists() and any(Path(self.root).glob("seg=*")):
-            return self.spark.read.parquet(self.root)
-        return self.spark.createDataFrame([], ROW_SCHEMA).select(
-            "labels",
-            "ts",
-            "value",
-            F.lit(None).cast("long").alias("series_key"),
-            F.lit(None).cast("long").alias("seg"),
-        )
+        if Path(self.root).exists():
+            return self.spark.read.schema(STORE_SCHEMA).parquet(self.root)
+        return self.spark.createDataFrame([], STORE_SCHEMA)
 
     def segment_ids(self) -> list[int]:
         """Sorted segment ids from the partition DIRECTORY LISTING alone —
@@ -500,8 +524,6 @@ class SegmentStore:
         if not lms:
             raise ValueError("delete_series: need at least one matcher")
         rel = self.relation()
-        if "seg" not in rel.columns:
-            raise ValueError("delete_series: store is empty")
         pred = matchers_predicate(F.col("labels"), lms)
         touched = [r["seg"] for r in
                    rel.filter(pred).select("seg").distinct().collect()]
@@ -674,16 +696,23 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
     ``loadFiles`` (tsdb.go:408-463: walk ``seg-*`` dirs, open each data
     file, parse each ``meta.json``, surface failures) re-expressed over the
     Parquet layout.  Pure footer-metadata work: every file's Parquet footer
-    is opened (the exact read a scan's planning does) and its row count and
-    ``ts`` min/max statistics checked against the segment's time bounds —
-    no data pages are read, so cost is O(files), not O(rows).
+    is opened (reads declare :data:`STORE_SCHEMA` and never do) and its
+    columns, row count and ``ts`` min/max statistics checked against the
+    declaration and the segment's time bounds — no data pages are read,
+    so cost is O(files), not O(rows).
 
     Returns ``{"segments": [{seg, files, rows, min_ts, max_ts,
-    out_of_bounds}], "corrupt": [path], "orphans": [path], "ok": bool}``:
+    out_of_bounds}], "corrupt": [path], "schema_mismatch": [path],
+    "orphans": [path], "ok": bool}``:
 
     - ``corrupt`` — files whose footer cannot be read (truncated/partial
       writes that escaped the atomic-rename discipline, e.g. a kill -9
       mid-copy of an external restore);
+    - ``schema_mismatch`` — files whose footer columns or types differ
+      from :data:`STORE_SCHEMA` (less its ``seg`` directory column).
+      Reads use the declared schema and open no footer, so a dropped-in
+      file missing ``series_key`` would otherwise read back as nulls
+      without any error;
     - ``out_of_bounds`` — rows whose ts stats fall outside
       ``[seg*duration, (seg+1)*duration)`` (a mis-partitioned writer —
       impossible through :meth:`SegmentStore.append`, catchable when
@@ -695,8 +724,11 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
     from pathlib import Path as _P
 
     import pyarrow.parquet as _pq
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    report: dict = {"segments": [], "corrupt": [], "orphans": []}
+    expected = {f.name: f.dataType for f in STORE_SCHEMA.fields if f.name != "seg"}
+    report: dict = {"segments": [], "corrupt": [], "schema_mismatch": [],
+                    "orphans": []}
     rootp = _P(root)
     for suffix in ("__old", "__compact", "__rebuild"):
         if _P(f"{root}{suffix}").exists():
@@ -708,10 +740,18 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
             rows, tmin, tmax, nfiles = 0, None, None, 0
             for f in sorted(segdir.glob("*.parquet")):
                 try:
-                    md = _pq.ParquetFile(str(f)).metadata
+                    pf = _pq.ParquetFile(str(f))
+                    md = pf.metadata
                 except Exception:
                     report["corrupt"].append(str(f))
                     continue
+                try:
+                    found = {c.name: as_nullable(from_arrow_type(c.type))
+                             for c in pf.schema_arrow}
+                except TypeError:  # a footer type Spark cannot read at all
+                    found = None
+                if found != expected:
+                    report["schema_mismatch"].append(str(f))
                 nfiles += 1
                 rows += md.num_rows
                 names = [
@@ -740,6 +780,7 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
             )
     report["ok"] = (
         not report["corrupt"]
+        and not report["schema_mismatch"]
         and not report["orphans"]
         and not any(s["out_of_bounds"] for s in report["segments"])
     )

@@ -700,3 +700,138 @@ def test_relation_after_full_purge_is_empty_not_error(spark, tmp_path_factory):
         "m", [], 0, 2**40, 3600, str(base / "tier")
     ).agg(F.sum("n")).first()[0]
     assert total == 24
+
+
+def _jobs_run_by(spark, fn) -> int:
+    """Number of Spark jobs ``fn()`` starts, counted under a job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_declared_schemas_equal_what_the_writers_leave(spark, tmp_path_factory):
+    """Reads declare their schema instead of inferring it, so each
+    declaration must equal what inference returns over a written root:
+    the segment store, the label dim and the histogram/exemplar stores."""
+    from mandodb_spark.operators.tsdb_ops import LABEL_DIM_SCHEMA
+    from mandodb_spark.sources.exemplar_store import ExemplarStore
+    from mandodb_spark.sources.hist_store import HistStore
+    from mandodb_spark.sources.segment_store import STORE_SCHEMA
+
+    base = tmp_path_factory.mktemp("declared")
+    db = TSDB(spark, str(base / "s"))
+    db.insert_rows([("m", {"x": "1"}, START, 1.0), ("m", {"x": "2"}, START + 7200, 2.0)])
+    db.refresh_label_dim(str(base / "dim"))
+    assert STORE_SCHEMA == spark.read.parquet(str(base / "s")).schema
+    assert LABEL_DIM_SCHEMA == spark.read.parquet(str(base / "dim")).schema
+    assert db.label_dim_relation(str(base / "dim")).count() == 3
+
+    hist = HistStore(spark, str(base / "h"))
+    hist.insert_pylist([("h", {"x": "1"}, START,
+                         (2.0, 3.0, 0.0, 0.0, 3, {1: 2.0}, {}))])
+    assert hist.schema == spark.read.parquet(str(base / "h")).schema
+    ex = ExemplarStore(spark, str(base / "e"))
+    ex.insert_pylist([("m", {"x": "1"}, START, 1.0, {"trace_id": "t"})])
+    assert ex.schema == spark.read.parquet(str(base / "e")).schema
+    assert hist.relation().count() == 1 and ex.relation().count() == 1
+
+
+def test_empty_purged_and_populated_stores_share_one_schema(spark, tmp_path_factory):
+    """A store never written, a store retention emptied and a populated
+    store all read back with the declared schema (``seg`` INT in each)."""
+    from mandodb_spark.sources.hist_store import HistStore
+    from mandodb_spark.sources.segment_store import STORE_SCHEMA
+
+    base = tmp_path_factory.mktemp("oneschema")
+    db = TSDB(spark, str(base / "s"))
+    assert db.store.relation().schema == STORE_SCHEMA
+    db.insert_rows([("m", {"x": "1"}, START, 1.0)])
+    assert db.store.relation().schema == STORE_SCHEMA
+    db.store.remove_expired(START + 10**6, 3600)
+    rel = db.store.relation()
+    assert rel.schema == STORE_SCHEMA and rel.count() == 0
+    assert db.query_label_values("x", 0, 10**10).collect() == []
+
+    hist = HistStore(spark, str(base / "h"))
+    assert hist.relation().schema == hist.schema
+
+
+def test_reads_plan_no_jobs_and_run_two_each(spark, tmp_path_factory):
+    """Building the store relation runs no Spark job (no schema
+    inference), and each of the three dashboard reads runs exactly two:
+    its shuffle stage and its result stage (label values sort in one
+    partition, so no range-sampling job)."""
+    db = TSDB(spark, str(tmp_path_factory.mktemp("jobs") / "s"))
+    db.insert_rows([("m", {"n": str(i), "dc": f"d{i % 3}"}, START + i * 1800, float(i))
+                    for i in range(12)])
+    assert _jobs_run_by(spark, db.store.relation) == 0
+    reads = {
+        "query_range": lambda: db.query_range("m", [], 0, 10**10).collect(),
+        "query_series": lambda: db.query_series(
+            [LabelMatcher("dc", "d1")], 0, 10**10).collect(),
+        "query_label_values": lambda: db.query_label_values("n", 0, 10**10).collect(),
+    }
+    assert {name: _jobs_run_by(spark, fn) for name, fn in reads.items()} == {
+        name: 2 for name in reads
+    }
+
+
+def test_label_values_sorted_across_segments_and_partitions(spark, tmp_path_factory):
+    """The distinct values come out of many shuffle partitions and are
+    sorted in one: the result is globally sorted, in one partition."""
+    rng = random.Random(5)
+    values = [f"v{i:03d}" for i in range(120)]
+    rng.shuffle(values)
+    db = TSDB(spark, str(tmp_path_factory.mktemp("lvsort") / "s"))
+    db.insert_rows([("m", {"pod": v}, START + (i % 5) * 7200 + i, 1.0)
+                    for i, v in enumerate(values)])
+    assert len(db.store.segment_ids()) == 5
+    saved = {k: spark.conf.get(k) for k in (
+        "spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")}
+    spark.conf.set("spark.sql.shuffle.partitions", "16")
+    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+    try:
+        df = db.query_label_values("pod", 0, 10**10)
+        got = [r.value for r in df.collect()]
+        assert df.rdd.getNumPartitions() == 1
+    finally:
+        for k, v in saved.items():
+            spark.conf.set(k, v)
+    assert got == sorted(values)
+
+
+def test_fsck_flags_a_file_whose_schema_differs(spark, tmp_path_factory):
+    """Reads open no footer, so a hand-dropped file missing ``series_key``
+    reads back as nulls without error; fsck is what names it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mandodb_spark.sources.segment_store import fsck
+
+    path = str(tmp_path_factory.mktemp("fsckschema") / "s")
+    db = TSDB(spark, path)
+    db.insert_rows([("m", {"x": "1"}, START, 1.0)])
+    rep = fsck(path)
+    assert rep["ok"] and rep["schema_mismatch"] == []
+
+    segdir = next(Path(path).glob("seg=*"))
+    labels = pa.array([[("__name__", "m")]], pa.map_(pa.string(), pa.string()))
+    no_key = segdir / "dropped-no-key.parquet"
+    pq.write_table(pa.table({"labels": labels, "ts": [START + 1], "value": [2.0]}), no_key)
+    wrong_type = segdir / "dropped-wrong-type.parquet"
+    pq.write_table(pa.table({"labels": labels, "ts": [START + 2], "value": ["2.0"],
+                             "series_key": [7]}), wrong_type)
+    rep = fsck(path)
+    assert not rep["ok"] and rep["corrupt"] == []
+    assert sorted(rep["schema_mismatch"]) == sorted([str(no_key), str(wrong_type)])
+    pq.write_table(pa.table({"labels": labels, "ts": [START + 2], "value": [2.0],
+                             "series_key": [7]}), wrong_type)
+    assert fsck(path)["schema_mismatch"] == [str(no_key)]
+    assert db.store.relation().where("series_key IS NULL").count() == 1
