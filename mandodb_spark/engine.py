@@ -772,19 +772,15 @@ class TSDB:
         raw samples — the standard TSDB downsampling story the reference
         lacks.
 
-        ``incremental=True`` is the maintenance form: recompute only from
-        the high-watermark (the max ``seg`` already materialized — that
-        partition may be partial because its source segment was open at the
-        last refresh) and rewrite only the affected ``seg=`` partitions via
-        dynamic partition overwrite.  At 100 TB this is the difference
-        between a refresh that reads hours and one that rewrites months.
-        ``since_seg`` overrides the watermark (e.g. after late backfill
-        into older segments).  Bucket/partition alignment: a rollup bucket
-        b lands in partition floor(b/segment_duration), so refreshing
-        partitions ≥ W requires exactly the buckets with b ≥ W·duration,
-        i.e. source rows with ts ≥ ceil(W·duration/step)·step — there is no
-        step-multiple strictly between W·duration and that ceiling, so no
-        partially-regenerated bucket can clobber a partition.
+        ``incremental=True`` is the maintenance form: rewrite only the
+        ``seg=`` partitions from the high-watermark on (dynamic partition
+        overwrite) — at 100 TB the difference between a refresh that reads
+        hours and one that rewrites months.  ``since_seg`` lowers the
+        start after a late backfill into older segments; it is floored to
+        the containing ``step`` bucket, so a late row in any segment of a
+        bucket rebuilds that whole bucket.  ``step`` and the segment
+        duration must be divide-compatible for a refresh.  Protocol:
+        :func:`sources.segment_store.refresh_aggregate`.
 
         The core lives in :func:`operators.tsdb_ops.materialize_rollup`
         so the streaming ingestor can run the same refresh per
@@ -865,13 +861,9 @@ class TSDB:
         reference lacks.  Merging bucket counts is exactly associative,
         so any refresh cadence composes.
 
-        ``incremental=True`` recomputes only segments at/after the
-        high-watermark (max materialized ``seg`` — that partition may be
-        partial because its source segment was open at the last refresh)
-        via dynamic partition overwrite.  Simpler than the step-rollup's
-        watermark math: histogram rows are keyed by ``seg`` itself, so no
-        bucket can straddle a partition by construction.  ``since_seg``
-        overrides the watermark (late backfill into older segments).
+        ``incremental=True`` / ``since_seg`` refresh from the watermark
+        (:func:`sources.segment_store.refresh_aggregate`); rows are keyed
+        by ``seg`` itself, so no bucket straddles a partition.
         The core lives in :func:`operators.histogram.materialize` so the
         streaming ingestor can run the same refresh per micro-batch
         (``StreamingIngestor(hist_dest=…)``)."""
@@ -897,8 +889,8 @@ class TSDB:
         then UNIONS O(segments) sketch rows under full partition pruning
         instead of a distinct over raw points.  Sketch union is
         associative and lossless w.r.t. the sketch state, so any refresh
-        cadence composes (same watermark protocol as the value
-        histogram)."""
+        cadence composes (refresh protocol:
+        :func:`sources.segment_store.refresh_aggregate`)."""
         from .operators.sketch import cardinality_materialize
 
         cardinality_materialize(
@@ -925,8 +917,8 @@ class TSDB:
         fixed ``le`` bounds, the sketch guarantees a RELATIVE error alpha
         on every quantile regardless of the value range — p50 and p999
         from the same structure — and buckets merge by count addition, so
-        any refresh cadence composes (same watermark protocol as the
-        other rollups)."""
+        any refresh cadence composes (refresh protocol:
+        :func:`sources.segment_store.refresh_aggregate`)."""
         from .operators.sketch import quantile_materialize
 
         quantile_materialize(
@@ -1163,8 +1155,9 @@ class TSDB:
         """Downsampled native-histogram continuous aggregate at ``dest``
         — LOSSLESS for quantiles/fractions over step-aligned ranges
         (bucket merge is exact), so raw histogram windows the tier covers
-        are purgeable without losing percentile history.  Same watermark
-        protocol as the float rollups."""
+        are purgeable without losing percentile history.  ``step`` and the
+        segment duration must be divide-compatible for a refresh
+        (:func:`sources.segment_store.refresh_aggregate`)."""
         from .functions.native_hist import materialize_hist_rollup
 
         materialize_hist_rollup(

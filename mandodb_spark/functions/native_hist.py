@@ -52,11 +52,14 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from ..model import (
+    DEFAULT_SEGMENT_DURATION,
     METRIC_NAME_LABEL,
     clean_labels,
     fold_metric_name,
+    seg_bucket,
     series_key,
 )
+from ..sources.segment_store import refresh_aggregate
 
 #: One native-histogram sample (exposition-format fields).
 HIST_STRUCT = StructType(
@@ -1388,43 +1391,22 @@ def materialize_hist_rollup(spark, rel: DataFrame, dest: str,
     quantile/fraction over the rollup equals the raw answer for
     step-aligned ranges, so raw windows the tier covers are purgeable
     without losing percentile history (the continuous-aggregate ladder,
-    applied to distributions).
-
-    Same watermark protocol as the other rollups
-    (operators/histogram.materialize): ``incremental=True`` refreshes
-    only partitions at/after the high-watermark via dynamic partition
-    overwrite; a ``step`` wider than a segment re-aligns the watermark to
-    the containing window's start so straddling windows refresh whole.
-    ``since_seg`` overrides (late backfill)."""
-    from ..model import DEFAULT_SEGMENT_DURATION, seg_bucket
-
+    applied to distributions).  Window w lands in partition
+    floor(w / segment_duration); refresh protocol:
+    :func:`sources.segment_store.refresh_aggregate`."""
     segment_duration = segment_duration or DEFAULT_SEGMENT_DURATION
-    use_dynamic = False
-    if incremental or since_seg is not None:
-        w = since_seg
-        if w is None:
-            from pathlib import Path as _Path
 
-            if _Path(dest).exists():
-                w = spark.read.parquet(dest).agg(F.max("seg")).first()[0]
-        if w is not None:
-            # re-align to the window containing the watermark segment's
-            # start: a step > segment_duration window straddles segments
-            w = (w * segment_duration // step) * step // segment_duration
-            rel = rel.filter(F.col("seg") >= w)
-            use_dynamic = True
-    stamped = rel.withColumn(
-        "ts", (F.floor(F.col("ts") / step) * step).cast("long"))
-    rolled = hist_merge_partials(stamped).withColumn(
-        "seg", seg_bucket(F.col("ts"), segment_duration))
-    (
-        rolled.select("labels", "ts", "hist", "series_key", "seg")
-        .repartition(F.col("seg"))
-        .sortWithinPartitions("series_key", "ts")
-        .write.option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic" if use_dynamic else "static")
-        .partitionBy("seg").mode("overwrite").parquet(dest)
-    )
+    def build(r: DataFrame) -> DataFrame:
+        stamped = r.withColumn(
+            "ts", (F.floor(F.col("ts") / step) * step).cast("long"))
+        return hist_merge_partials(stamped).withColumn(
+            "seg", seg_bucket(F.col("ts"), segment_duration)
+        ).select("labels", "ts", "hist", "series_key", "seg")
+
+    refresh_aggregate(rel, dest, build, step=step,
+                      segment_duration=segment_duration,
+                      incremental=incremental, since_seg=since_seg,
+                      sort_cols=("series_key", "ts"))
 
 
 # --------------------------------------------------------------------------

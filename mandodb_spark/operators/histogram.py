@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.segment_store import refresh_aggregate
+
 #: Default bucket ladder (events.value spans 0.01..~500; roughly
 #: half-decade geometric steps, Prometheus-style).
 DEFAULT_BOUNDS = (0.5, 1.0, 2.5, 5.0, 10.0, 25.0, 50.0, 100.0, 250.0, 500.0)
@@ -97,30 +99,9 @@ def materialize(
     since_seg: int | None = None,
 ) -> None:
     """Write the (series, seg, le) bucket rollup seg-partitioned — the
-    shared core of ``TSDB.materialize_value_histogram`` and the streaming
-    ingestor's per-batch refresh.  ``incremental=True`` rewrites only
-    partitions at/after the high-watermark (max materialized ``seg``)
-    via dynamic partition overwrite; histogram rows are keyed by ``seg``
-    itself, so no bucket straddles a partition by construction.
-    ``since_seg`` overrides the watermark (late backfill)."""
-    use_dynamic = False
-    if incremental or since_seg is not None:
-        w = since_seg
-        if w is None:
-            from pathlib import Path as _Path
-
-            if _Path(dest).exists():  # else: no rollup yet → full build
-                w = spark.read.parquet(dest).agg(F.max("seg")).first()[0]
-        if w is not None:
-            rel = rel.filter(F.col("seg") >= w)
-            use_dynamic = True
-    hist = value_histogram(rel, bounds)
-    # per-WRITE overwrite mode (ADVICE r5): mutating the session conf
-    # around the write leaks dynamic mode into any concurrent writer in
-    # the same session; the DataFrameWriter option scopes it to this job
-    (
-        hist.repartition(F.col("seg"))
-        .write.option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic" if use_dynamic else "static")
-        .partitionBy("seg").mode("overwrite").parquet(dest)
-    )
+    core of ``TSDB.materialize_value_histogram`` and the streaming
+    ingestor's per-batch refresh.  Rows are keyed by ``seg`` itself, so
+    no bucket straddles a partition; refresh protocol:
+    :func:`sources.segment_store.refresh_aggregate`."""
+    refresh_aggregate(rel, dest, lambda r: value_histogram(r, bounds),
+                      incremental=incremental, since_seg=since_seg)

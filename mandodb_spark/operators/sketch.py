@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.segment_store import refresh_aggregate
+
 #: Default geometry: 4 rows × 1024 buckets → ε ≈ 2e/w, δ ≈ e^-4.
 CMS_DEPTH = 4
 CMS_WIDTH = 1024
@@ -103,32 +105,11 @@ def series_cardinality_sketch(rel: DataFrame) -> DataFrame:
 def cardinality_materialize(spark, rel: DataFrame, dest: str,
                             incremental: bool = False,
                             since_seg: int | None = None) -> None:
-    """Seg-partitioned write of :func:`series_cardinality_sketch` with the
-    same watermark/dynamic-overwrite protocol as the histogram rollup
-    (operators/histogram.py::materialize): ``incremental=True`` rebuilds
-    only partitions at/after the max materialized seg; ``since_seg``
-    overrides for late backfill.  Safe by construction: sketches are
-    keyed by seg itself, so no sketch straddles a partition."""
-    use_dynamic = False
-    if incremental or since_seg is not None:
-        w = since_seg
-        if w is None:
-            from pathlib import Path as _Path
-
-            if _Path(dest).exists():
-                w = spark.read.parquet(dest).agg(F.max("seg")).first()[0]
-        if w is not None:
-            rel = rel.filter(F.col("seg") >= w)
-            use_dynamic = True
-    sk = series_cardinality_sketch(rel)
-    # per-WRITE overwrite mode (ADVICE r5): scoped to this job, no
-    # session-conf mutation a concurrent writer could inherit
-    (
-        sk.repartition(F.col("seg"))
-        .write.option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic" if use_dynamic else "static")
-        .partitionBy("seg").mode("overwrite").parquet(dest)
-    )
+    """Seg-partitioned write of :func:`series_cardinality_sketch`.
+    Sketches are keyed by seg itself, so none straddles a partition;
+    refresh protocol: :func:`sources.segment_store.refresh_aggregate`."""
+    refresh_aggregate(rel, dest, series_cardinality_sketch,
+                      incremental=incremental, since_seg=since_seg)
 
 
 def cardinality_estimate(spark, dest: str, start_seg: int, end_seg: int) -> DataFrame:
@@ -262,28 +243,12 @@ def quantile_materialize(spark, rel: DataFrame, dest: str,
                          alpha: float = DDS_ALPHA,
                          incremental: bool = False,
                          since_seg: int | None = None) -> None:
-    """Seg-partitioned DDSketch rollup of the point values — same
-    watermark/dynamic-overwrite protocol as cardinality_materialize.
-    Each seg's sketch is self-contained, so incremental refresh rewrites
-    only partitions at/after the watermark."""
-    use_dynamic = False
-    if incremental or since_seg is not None:
-        w = since_seg
-        if w is None:
-            from pathlib import Path as _Path
-
-            if _Path(dest).exists():
-                w = spark.read.parquet(dest).agg(F.max("seg")).first()[0]
-        if w is not None:
-            rel = rel.filter(F.col("seg") >= w)
-            use_dynamic = True
-    sk = dds_build(rel, "value", alpha, group_cols=("seg",))
-    (
-        sk.repartition(F.col("seg"))
-        .write.option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic" if use_dynamic else "static")
-        .partitionBy("seg").mode("overwrite").parquet(dest)
-    )
+    """Seg-partitioned DDSketch rollup of the point values.  Each seg's
+    sketch is self-contained; refresh protocol:
+    :func:`sources.segment_store.refresh_aggregate`."""
+    refresh_aggregate(rel, dest,
+                      lambda r: dds_build(r, "value", alpha, group_cols=("seg",)),
+                      incremental=incremental, since_seg=since_seg)
 
 
 def quantile_estimate(spark, dest: str, start_seg: int, end_seg: int,

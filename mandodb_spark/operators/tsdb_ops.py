@@ -23,6 +23,7 @@ from pyspark.sql.types import StringType, StructField, StructType
 
 from ..matchers import LabelMatcher, add_metric_name, matchers_predicate, regex_predicate
 from ..model import DEFAULT_SEGMENT_DURATION, series_key
+from ..sources.segment_store import refresh_aggregate
 
 #: A materialized label-value dim as every read sees it (declared, so the
 #: read opens no footer and runs no job).
@@ -163,49 +164,19 @@ def materialize_rollup(spark, rel: DataFrame, dest: str, step: int = 21600,
                        incremental: bool = False,
                        since_seg: int | None = None) -> None:
     """Materialize the per-series ``step``-second continuous aggregate of a
-    canonical relation as a seg-partitioned Parquet table — the shared
-    core of ``TSDB.materialize_rollup`` (see its docstring for the
-    watermark/alignment reasoning) and the streaming ingestor's per-batch
-    refresh.  ``incremental=True`` rewrites only partitions at/after the
-    high-watermark via dynamic partition overwrite."""
-    use_dynamic = False
-    if incremental or since_seg is not None:
-        # Watermark math is only sound when rollup buckets never straddle
-        # a segment boundary (ADVICE r2) — fail loudly otherwise.
-        if step % segment_duration != 0 and segment_duration % step != 0:
-            raise ValueError(
-                f"incremental rollup requires step ({step}) and "
-                f"segment_duration ({segment_duration}) to be "
-                "divide-compatible (one must divide the other); "
-                "use incremental=False for arbitrary steps"
-            )
-        w = since_seg
-        if w is None:
-            from pathlib import Path as _Path
+    canonical relation (:func:`rollup_aggregate`) as a seg-partitioned
+    Parquet table — the core of ``TSDB.materialize_rollup`` and the
+    streaming ingestor's per-batch refresh.  Bucket b lands in partition
+    floor(b / segment_duration); the watermark, backfill and overwrite
+    protocol is :func:`sources.segment_store.refresh_aggregate`."""
+    def build(r: DataFrame) -> DataFrame:
+        return rollup_aggregate(r, step).withColumn(
+            "seg", (F.col("bucket_ts") / segment_duration).cast("long"))
 
-            if _Path(dest).exists():  # else: no existing rollup → full build
-                w = spark.read.parquet(dest).agg(F.max("seg")).first()[0]
-        if w is not None:
-            refresh_ts = -(-(w * segment_duration) // step) * step
-            rel = rel.filter(
-                (F.col("ts") >= refresh_ts)
-                & (F.col("seg") >= refresh_ts // segment_duration)
-            )
-            use_dynamic = True
-    rollup = rollup_aggregate(rel, step).withColumn(
-        "seg", (F.col("bucket_ts") / segment_duration).cast("long")
-    )
-    # per-WRITE overwrite mode (ADVICE r5): scoped to this job, no
-    # session-conf mutation a concurrent writer could inherit
-    (
-        rollup.repartition(F.col("seg"))
-        .sortWithinPartitions("series_key", "bucket_ts")
-        .write.option("compression", "zstd")
-        .option("partitionOverwriteMode", "dynamic" if use_dynamic else "static")
-        .partitionBy("seg")
-        .mode("overwrite")
-        .parquet(dest)
-    )
+    refresh_aggregate(rel, dest, build, step=step,
+                      segment_duration=segment_duration,
+                      incremental=incremental, since_seg=since_seg,
+                      sort_cols=("series_key", "bucket_ts"))
 
 
 def _filtered(

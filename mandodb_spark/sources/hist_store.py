@@ -32,6 +32,7 @@ from ..model import (
     series_key,
 )
 from ..functions.native_hist import HIST_ROW_SCHEMA
+from .segment_store import segment_ids
 
 
 def canonicalize_payload(df: DataFrame, payload: tuple,
@@ -122,10 +123,7 @@ class HistStore:
         metadata-only discovery, same contract as
         ``SegmentStore.segment_ids`` (newest-first iteration is the
         restart-recovery probe primitive)."""
-        root = Path(self.root)
-        if not root.exists():
-            return []
-        return sorted(int(p.name.split("=", 1)[1]) for p in root.glob("seg=*"))
+        return segment_ids(self.root)
 
     def insert_pylist(self, rows: list[tuple]) -> None:
         """Test convenience: list of (metric, labels, ts, <payload...>)."""

@@ -174,6 +174,85 @@ def swap_in(root: str, staging_root: str, keep_old: bool = False) -> str | None:
     return None
 
 
+def segment_ids(root: str) -> list[int]:
+    """Sorted ids of the ``seg=N`` partition directories under ``root``
+    (``[]`` when it does not exist) — metadata-only discovery (S5,
+    segment.go:17-29): a listing, no data scan and no Spark job."""
+    rootp = Path(root)
+    if not rootp.exists():
+        return []
+    return sorted(int(p.name.split("=", 1)[1]) for p in rootp.glob("seg=*"))
+
+
+def refresh_aggregate(rel: DataFrame, dest: str, build, *, step: int = 1,
+                      segment_duration: int = 1, incremental: bool = False,
+                      since_seg: int | None = None,
+                      sort_cols: tuple[str, ...] = ()) -> None:
+    """Materialize or refresh the seg-partitioned continuous aggregate at
+    ``dest`` — the one refresh protocol behind the step rollup, value
+    histogram, HLL cardinality, DDSketch quantile and native-histogram
+    rollups (``TSDB.materialize_*`` and ``StreamingIngestor``).
+
+    ``build`` maps (a filtered) ``rel`` to aggregate rows carrying a
+    ``seg`` column; an aggregate row of ``step``-second bucket b lives in
+    partition floor(b / segment_duration).  Aggregates keyed by ``seg``
+    itself (one row group per segment) leave ``step`` and
+    ``segment_duration`` at 1.
+
+    A refresh is requested by ``incremental=True`` or by ``since_seg``
+    (late backfill: the batch's lowest touched segment).  Then:
+
+    1. the watermark is the largest ``seg=`` directory under ``dest``,
+       from a listing (no Spark job); a missing or empty ``dest`` has
+       none and gets a full build instead — a refresh from a watermark
+       the aggregate never reached would drop the store's history;
+    2. the start segment is ``min(since_seg, watermark)``: a backfill
+       can lower the start, never skip past the open partition (it may
+       be partial: its source segment was open at the last refresh);
+    3. ``step`` and ``segment_duration`` must be divide-compatible, else
+       ValueError: a bucket straddling a segment boundary would be
+       rewritten from only the rows at/after the start;
+    4. the start is floored to its containing bucket,
+       ``start = floor(W·duration/step)·step`` — a multiple of
+       ``segment_duration`` under 3 — and only rows with
+       ``seg >= start // duration`` are aggregated, so every bucket in a
+       rewritten partition is rebuilt from all of its rows;
+    5. the rows are written ``repartition("seg")``, sorted within
+       partitions by ``sort_cols``, zstd, ``partitionBy("seg")``, with a
+       DYNAMIC partition overwrite: partitions below the start keep
+       their files.
+
+    Without a refresh (or without a watermark) the whole of ``rel`` is
+    aggregated and ``dest`` is replaced by a STATIC overwrite.  The
+    overwrite mode is a per-write option (ADVICE r5), never a session
+    conf a concurrent writer could inherit.  Either way the result equals
+    a full build over the same relation.
+    """
+    refresh = incremental or since_seg is not None
+    if refresh and step % segment_duration and segment_duration % step:
+        raise ValueError(
+            f"incremental refresh requires step ({step}) and "
+            f"segment_duration ({segment_duration}) to be divide-compatible "
+            "(one must divide the other); use incremental=False for "
+            "arbitrary steps"
+        )
+    segs = segment_ids(dest) if refresh else []
+    if segs:
+        w = segs[-1] if since_seg is None else min(since_seg, segs[-1])
+        start = (w * segment_duration // step) * step
+        rel = rel.filter(F.col("seg") >= start // segment_duration)
+    out = build(rel).repartition(F.col("seg"))
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    (
+        out.write.option("compression", "zstd")
+        .option("partitionOverwriteMode", "dynamic" if segs else "static")
+        .partitionBy("seg")
+        .mode("overwrite")
+        .parquet(dest)
+    )
+
+
 def mergeable_rollup(rel, step: int):
     """Per-(series, step-bucket, seg) MERGEABLE aggregate of a canonical
     relation — the purge-tier rollup shape shared by the disk and memory
@@ -428,11 +507,7 @@ class SegmentStore:
         "probe the head first" primitive (e.g. recording-rule restart
         recovery probes segments newest-first and stops at the first
         hit)."""
-        root = Path(self.root)
-        if not root.exists():
-            return []
-        return sorted(
-            int(p.name.split("=", 1)[1]) for p in root.glob("seg=*"))
+        return segment_ids(self.root)
 
     # ------------------------------------------------------------ retention
     def _expired_segments(self, now_ts: int, retention: int) -> list[int]:

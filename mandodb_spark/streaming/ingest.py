@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from ..operators import histogram, sketch, tsdb_ops
 from ..sources.segment_store import SegmentStore
 
 
@@ -85,27 +86,19 @@ class StreamingIngestor:
     updates its label registry per ingested segment the same way,
     memory_segment.go:93-96).
 
-    ``rollup_dest``/``rollup_step``: optional continuous-aggregate
-    maintenance — after each batch lands, the seg-partitioned rollup at
-    ``rollup_dest`` is refreshed incrementally from its high-watermark
-    (the hypertable continuous-aggregate loop: ingest advances the raw
-    table, the refresh touches only the open partitions).  The refresh
-    re-reads only partitions at/after the watermark, so per-batch cost is
-    O(open segments), not O(store).
-
-    ``hist_dest``/``hist_bounds``: same loop for the percentile
-    continuous aggregate (operators/histogram.py) — per-batch incremental
-    refresh of the le-bucket rollup, late rows guarded by the batch's own
-    min event time.
-
-    ``card_dest``: same loop for the HLL series-cardinality rollup
-    (operators/sketch.py) — sketches are keyed by seg directly, so the
-    guard mirrors the histogram's.
-
-    ``quantile_dest``/``quantile_alpha``: same loop for the DDSketch
-    value-quantile rollup (operators/sketch.py::quantile_materialize) —
-    log-bucket counts keyed by seg, merged by addition, so the per-batch
-    incremental refresh composes like the others.
+    Continuous aggregates refreshed after each batch lands (the
+    hypertable loop: ingest advances the raw table, the refresh rewrites
+    only the open partitions, so per-batch cost is O(open segments), not
+    O(store)): ``rollup_dest``/``rollup_step`` the step rollup,
+    ``hist_dest``/``hist_bounds`` the le-bucket value histogram
+    (operators/histogram.py), ``card_dest`` the HLL series cardinality and
+    ``quantile_dest``/``quantile_alpha`` the DDSketch value quantiles
+    (operators/sketch.py).  One ``min(ts)`` probe per batch gives the
+    lowest segment a late row touched; each aggregate refreshes from it
+    or its watermark, whichever is lower, and builds in full when its
+    ``dest`` holds no partition yet
+    (:func:`sources.segment_store.refresh_aggregate`), so it always
+    equals a full build over the store.
 
     ``nh_dest``/``nh_step``/``nh_schema``: continuous NATIVE-HISTOGRAM
     maintenance — each micro-batch's raw values are observed into one
@@ -160,96 +153,34 @@ class StreamingIngestor:
         self.store.append(batch_df)
         if self.label_dim_dest:
             from ..model import canonicalize
-            from ..operators.tsdb_ops import refresh_label_dim
 
-            refresh_label_dim(
+            tsdb_ops.refresh_label_dim(
                 self.label_dim_dest, canonicalize(batch_df, self.store.segment_duration)
             )
-        if self.rollup_dest:
+        dur = self.store.segment_duration
+        aggregates = [
+            (dest, materialize, kwargs) for dest, materialize, kwargs in (
+                (self.rollup_dest, tsdb_ops.materialize_rollup,
+                 {"step": self.rollup_step, "segment_duration": dur}),
+                (self.hist_dest, histogram.materialize,
+                 {"bounds": self.hist_bounds or histogram.DEFAULT_BOUNDS}),
+                (self.card_dest, sketch.cardinality_materialize, {}),
+                (self.quantile_dest, sketch.quantile_materialize,
+                 {"alpha": self.quantile_alpha}),
+            ) if dest
+        ]
+        if aggregates:
             from pyspark.sql import functions as F
 
-            from ..operators.tsdb_ops import materialize_rollup
-
-            # Late rows may land BELOW the rollup's high-watermark; their
-            # partitions would silently go stale under a pure watermark
-            # refresh.  The batch knows its own minimum event time, so
-            # refresh from the partition of the BUCKET containing it
-            # (bucket-aligned: a step>duration bucket starts in an earlier
-            # partition than the row's own segment).
+            # Late rows may land BELOW an aggregate's watermark; the batch
+            # knows its own minimum event time, so every refresh starts no
+            # later than that row's segment (each aggregate aligns it)
             min_ts = batch_df.agg(F.min("ts")).first()[0]
-            since = (
-                None
-                if min_ts is None
-                else (min_ts // self.rollup_step) * self.rollup_step
-                // self.store.segment_duration
-            )
-            materialize_rollup(
-                self.store.spark,
-                self.store.relation(),
-                self.rollup_dest,
-                step=self.rollup_step,
-                segment_duration=self.store.segment_duration,
-                incremental=True,
-                since_seg=since,
-            )
-        if self.hist_dest:
-            from pyspark.sql import functions as F
-
-            from ..operators.histogram import DEFAULT_BOUNDS, materialize
-
-            # same late-row guard as the step rollup, without the bucket
-            # alignment step: histogram rows are keyed by seg directly
-            min_ts = batch_df.agg(F.min("ts")).first()[0]
-            since = (
-                None
-                if min_ts is None
-                else min_ts // self.store.segment_duration
-            )
-            materialize(
-                self.store.spark,
-                self.store.relation(),
-                self.hist_dest,
-                bounds=self.hist_bounds or DEFAULT_BOUNDS,
-                incremental=True,
-                since_seg=since,
-            )
-        if self.card_dest:
-            from pyspark.sql import functions as F
-
-            from ..operators.sketch import cardinality_materialize
-
-            min_ts = batch_df.agg(F.min("ts")).first()[0]
-            since = (
-                None
-                if min_ts is None
-                else min_ts // self.store.segment_duration
-            )
-            cardinality_materialize(
-                self.store.spark,
-                self.store.relation(),
-                self.card_dest,
-                incremental=True,
-                since_seg=since,
-            )
-        if self.quantile_dest:
-            from pyspark.sql import functions as F
-
-            from ..operators.sketch import quantile_materialize
-
-            min_ts = batch_df.agg(F.min("ts")).first()[0]
-            since = (
-                None
-                if min_ts is None
-                else min_ts // self.store.segment_duration
-            )
-            quantile_materialize(
-                self.store.spark,
-                self.store.relation(),
-                self.quantile_dest,
-                alpha=self.quantile_alpha,
-                incremental=True,
-                since_seg=since,
-            )
+            since = None if min_ts is None else min_ts // dur
+            rel = self.store.relation()
+            for dest, materialize, kwargs in aggregates:
+                materialize(self.store.spark, rel, dest, incremental=True,
+                            since_seg=since, **kwargs)
         if self.nh_dest:
             from pyspark.sql import functions as F
 

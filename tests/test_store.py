@@ -6,6 +6,8 @@ from __future__ import annotations
 import random
 from pathlib import Path
 
+import pytest
+
 from mandodb_spark import TSDB, LabelMatcher, ROW_SCHEMA
 
 START = 1_700_000_000
@@ -126,6 +128,99 @@ def test_incremental_rollup_rejects_incompatible_step(spark, tmp_path_factory):
     # compatible steps still work both ways
     db.materialize_rollup(str(path / "r2"), step=3600, incremental=True)
     db.materialize_rollup(str(path / "r3"), step=14400, incremental=True)
+
+
+def _canon(v):
+    """A Row value made comparable: maps and structs become sorted tuples."""
+    if isinstance(v, dict):
+        return tuple(sorted((k, _canon(x)) for k, x in v.items()))
+    if isinstance(v, (tuple, list)):
+        return tuple(_canon(x) for x in v)
+    return v
+
+
+def _aggregate_rows(spark, dest):
+    """Every row of a materialized aggregate; HLL sketches by estimate."""
+    from pyspark.sql import functions as F
+
+    df = spark.read.parquet(dest)
+    if "sketch" in df.columns:
+        df = df.select("seg", "n_points",
+                       F.hll_sketch_estimate("sketch").alias("est"))
+    return sorted(_canon(tuple(r)) for r in df.collect())
+
+
+#: The five continuous aggregates, each as materialize(db, dest, **refresh).
+_AGGREGATES = {
+    "rollup": lambda db, d, **kw: db.materialize_rollup(d, step=21600, **kw),
+    "hist": lambda db, d, **kw: db.materialize_value_histogram(d, **kw),
+    "card": lambda db, d, **kw: db.materialize_series_cardinality(d, **kw),
+    "quantile": lambda db, d, **kw: db.materialize_value_quantile(d, **kw),
+    "nh": lambda db, d, **kw: db.materialize_nh_rollup(d, step=3600, **kw),
+}
+
+
+@pytest.mark.parametrize("case,agg", [
+    ("straddling_step", "nh"),
+    ("since_seg_mid_bucket", "rollup"),
+    *[("empty_dest", agg) for agg in _AGGREGATES],
+])
+def test_refresh_equals_full_rebuild(spark, tmp_path_factory, case, agg):
+    """Every continuous-aggregate refresh equals a full rebuild over the
+    same store, or raises:
+    - ``straddling_step``: 5000 s native-histogram windows straddle the
+      7200 s segments, and a refresh from the watermark would rewrite
+      the straddling window from part of its rows, so it raises
+      ValueError, as the float rollup's does;
+    - ``since_seg_mid_bucket``: a late row in seg 4, the second segment
+      of the 21600 s bucket starting at seg 3, must refresh that whole
+      bucket, so ``since_seg`` is floored to the bucket, not ceiled;
+    - ``empty_dest``: a full build over an empty store leaves ``dest``
+      with no partition and no schema to infer, so the next incremental
+      refresh is a full build."""
+    from pyspark.sql import functions as F
+
+    from mandodb_spark.functions import native_hist as nh
+
+    base = tmp_path_factory.mktemp(f"refresh-{case}-{agg}")
+    db = TSDB(spark, str(base / "s"))
+    materialize = _AGGREGATES[agg]
+
+    def insert(rows):
+        if agg != "nh":
+            db.insert_rows(rows)
+            return
+        snaps = nh.observe_histograms(spark.createDataFrame(rows, ROW_SCHEMA))
+        db.insert_histograms(
+            snaps.select(F.lit("m").alias("metric"), "labels", "ts", "hist"))
+
+    rows = [("m", {"n": str(i % 2)}, i * 600, float(i % 7)) for i in range(101)]
+    dest = str(base / "agg")
+    if case == "straddling_step":
+        def materialize(db, d, **kw):
+            db.materialize_nh_rollup(d, step=5000, **kw)
+
+        insert(rows)
+        materialize(db, dest)
+        with pytest.raises(ValueError, match="divide-compatible"):
+            materialize(db, dest, incremental=True)
+    elif case == "since_seg_mid_bucket":
+        insert(rows)
+        materialize(db, dest)
+        insert([("m", {"n": "0"}, 30000, 100.0)])
+        materialize(db, dest, since_seg=30000 // 7200)
+    else:
+        materialize(db, dest)
+        assert not list(Path(dest).glob("seg=*"))
+        insert(rows)
+        materialize(db, dest, incremental=True)
+    full = str(base / "full")
+    materialize(db, full)
+    got, want = _aggregate_rows(spark, dest), _aggregate_rows(spark, full)
+    assert got == want and len(got) > 1
+    if case == "since_seg_mid_bucket":
+        assert db.rollup_relation(dest).filter(
+            F.col("bucket_ts") == 21600).agg(F.max("max_value")).first()[0] == 100.0
 
 
 # ------------------------------------------------------- duplicate policies
@@ -781,6 +876,31 @@ def test_reads_plan_no_jobs_and_run_two_each(spark, tmp_path_factory):
     assert {name: _jobs_run_by(spark, fn) for name, fn in reads.items()} == {
         name: 2 for name in reads
     }
+
+
+def test_micro_batch_runs_one_probe_for_all_aggregates(spark, tmp_path_factory):
+    """A micro-batch refreshing all four seg-keyed aggregates runs one
+    ``min(ts)`` probe (2 jobs) for all of them: 16 jobs (a probe per
+    aggregate would make 22).  A label-dim-only batch, the benchmark's
+    ``stream_mixed`` shape, runs no probe: 5 jobs."""
+    from mandodb_spark.streaming.ingest import StreamingIngestor
+
+    base = tmp_path_factory.mktemp("batchjobs")
+
+    def batch(t):
+        rows = [("m", {"n": str(i % 3)}, t + i * 60, float(i)) for i in range(30)]
+        return spark.createDataFrame(rows, ROW_SCHEMA)
+
+    aggregates = StreamingIngestor(
+        TSDB(spark, str(base / "a")).store, rollup_dest=str(base / "roll"),
+        hist_dest=str(base / "hist"), card_dest=str(base / "card"),
+        quantile_dest=str(base / "q"))
+    dim = StreamingIngestor(TSDB(spark, str(base / "d")).store,
+                            label_dim_dest=str(base / "dim"))
+    for ing, want in ((aggregates, 16), (dim, 5)):
+        ing.process_batch(batch(START), 0)
+        assert _jobs_run_by(
+            spark, lambda: ing.process_batch(batch(START + 7200), 1)) == want
 
 
 def test_label_values_sorted_across_segments_and_partitions(spark, tmp_path_factory):

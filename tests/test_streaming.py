@@ -16,6 +16,13 @@ from mandodb_spark.workloads.common import events_relation
 START = 1_700_000_000
 
 
+#: What a store already holds when a StreamingIngestor starts on it: a day
+#: before every streamed row, so no late row's refresh reaches it, and in
+#: series the streamed rows also have.
+HISTORY = [("m", {"n": "0"}, START - 86_400 + i * 600, float(i % 5 + 1))
+           for i in range(30)]
+
+
 def _rows(n=300, metrics=("cpu.busy", "disk.used")):
     out = []
     for i in range(n):
@@ -356,37 +363,41 @@ def test_streaming_incremental_rollup_equals_full_rebuild(spark, tmp_path_factor
     """Continuous-aggregate maintenance: the per-batch incremental rollup
     kept by StreamingIngestor(rollup_dest=…) — including a batch of LATE
     rows landing below the high-watermark — must equal a from-scratch
-    rebuild over the final store."""
-    base = tmp_path_factory.mktemp("roll")
-    src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
-    rollup = str(base / "rollup")
+    rebuild over the final store, also when the store already held
+    :data:`HISTORY`."""
+    for history in ([], HISTORY):
+        base = tmp_path_factory.mktemp("roll")
+        src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
+        rollup = str(base / "rollup")
 
-    db = TSDB(spark, store_dir)
-    ing = StreamingIngestor(db.store, rollup_dest=rollup, rollup_step=21600)
+        db = TSDB(spark, store_dir)
+        if history:
+            db.insert_rows(history)
+        ing = StreamingIngestor(db.store, rollup_dest=rollup, rollup_step=21600)
 
-    batch1 = [("m", {"n": str(i % 2)}, START + 40_000 + i * 600, float(i)) for i in range(20)]
-    late = [("m", {"n": "0"}, START + 100, 99.0)]  # far below the watermark
-    spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    StreamingIngestor.start(ing, spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt
-                            ).awaitTermination(120)
-    spark.createDataFrame(late, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    StreamingIngestor.start(ing, spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt
-                            ).awaitTermination(120)
+        batch1 = [("m", {"n": str(i % 2)}, START + 40_000 + i * 600, float(i)) for i in range(20)]
+        late = [("m", {"n": "0"}, START + 100, 99.0)]  # far below the watermark
+        spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        StreamingIngestor.start(ing, spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt
+                                ).awaitTermination(120)
+        spark.createDataFrame(late, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        StreamingIngestor.start(ing, spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt
+                                ).awaitTermination(120)
 
-    full = str(base / "full")
-    db.materialize_rollup(full, step=21600)  # from-scratch rebuild
+        full = str(base / "full")
+        db.materialize_rollup(full, step=21600)  # from-scratch rebuild
 
-    cols = ["series_key", "bucket_ts", "n", "avg_value", "min_value", "max_value",
-            "sum_value", "last_value", "seg"]
-    inc_rows = sorted(
-        (tuple(r[c] for c in cols) for r in spark.read.parquet(rollup).collect())
-    )
-    full_rows = sorted(
-        (tuple(r[c] for c in cols) for r in spark.read.parquet(full).collect())
-    )
-    assert inc_rows == full_rows and len(inc_rows) > 0
-    # the late row really reached its (older) bucket
-    assert any(r[1] == (START + 100) // 21600 * 21600 and r[7] == 99.0 for r in inc_rows)
+        cols = ["series_key", "bucket_ts", "n", "avg_value", "min_value", "max_value",
+                "sum_value", "last_value", "seg"]
+        inc_rows = sorted(
+            (tuple(r[c] for c in cols) for r in spark.read.parquet(rollup).collect())
+        )
+        full_rows = sorted(
+            (tuple(r[c] for c in cols) for r in spark.read.parquet(full).collect())
+        )
+        assert inc_rows == full_rows and len(inc_rows) > 0
+        # the late row really reached its (older) bucket
+        assert any(r[1] == (START + 100) // 21600 * 21600 and r[7] == 99.0 for r in inc_rows)
 
 
 def test_stream_stream_interval_join_equals_batch(spark, tmp_path_factory):
@@ -652,62 +663,69 @@ def test_streaming_bloom_gate_filters_known_content(spark, tmp_path_factory):
 def test_streaming_ingest_maintains_value_histogram(spark, tmp_path_factory):
     """The ingest loop's percentile-aggregate hook: after two micro-batches
     (the second delivering a LATE row into an earlier segment), the
-    maintained le-bucket rollup equals a from-scratch rebuild."""
-    base = tmp_path_factory.mktemp("histstream")
-    src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
-    hist_dest = str(base / "hist")
+    maintained le-bucket rollup equals a from-scratch rebuild, also over
+    :data:`HISTORY`."""
+    for history in ([], HISTORY):
+        base = tmp_path_factory.mktemp("histstream")
+        src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
+        hist_dest = str(base / "hist")
 
-    batch1 = [("m", {"n": "a"}, START + 9000 + i * 60, float(i)) for i in range(20)]
-    spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    db = TSDB(spark, store_dir)
-    ing = StreamingIngestor(db.store, hist_dest=hist_dest)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        batch1 = [("m", {"n": "a"}, START + 9000 + i * 60, float(i)) for i in range(20)]
+        spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        db = TSDB(spark, store_dir)
+        if history:
+            db.insert_rows(history)
+        ing = StreamingIngestor(db.store, hist_dest=hist_dest)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    # batch 2: one late row, one new-segment row
-    batch2 = [("m", {"n": "a"}, START + 60, 450.0),
-              ("m", {"n": "a"}, START + 20000, 0.3)]
-    spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        # batch 2: one late row, one new-segment row
+        batch2 = [("m", {"n": "a"}, START + 60, 450.0),
+                  ("m", {"n": "a"}, START + 20000, 0.3)]
+        spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    full = str(base / "hist_full")
-    db.materialize_value_histogram(full)
-    a = sorted(map(tuple, spark.read.parquet(hist_dest).select("series_key", "seg", "le", "n").collect()))
-    b = sorted(map(tuple, spark.read.parquet(full).select("series_key", "seg", "le", "n").collect()))
-    assert a == b and len(a) > 0
+        full = str(base / "hist_full")
+        db.materialize_value_histogram(full)
+        a = sorted(map(tuple, spark.read.parquet(hist_dest).select("series_key", "seg", "le", "n").collect()))
+        b = sorted(map(tuple, spark.read.parquet(full).select("series_key", "seg", "le", "n").collect()))
+        assert a == b and len(a) > 0
 
-    got = db.query_quantile_histogram(hist_dest, 0.5, START, START + 30000).collect()
-    assert len(got) == 1 and got[0].value > 0
+        got = db.query_quantile_histogram(hist_dest, 0.5, START, START + 30000).collect()
+        assert len(got) == 1 and got[0].value > 0
 
 
 def test_streaming_ingest_maintains_cardinality_sketch(spark, tmp_path_factory):
     """The ingest loop's cardinality-aggregate hook: after two
     micro-batches (the second adding a NEW series late into an earlier
     segment), the maintained sketch table answers range estimates
-    identically to a from-scratch rebuild."""
+    identically to a from-scratch rebuild, also over :data:`HISTORY`."""
     from mandodb_spark.operators.sketch import cardinality_estimate
 
-    base = tmp_path_factory.mktemp("cardstream")
-    src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
-    dest = str(base / "card")
+    for history in ([], HISTORY):
+        base = tmp_path_factory.mktemp("cardstream")
+        src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
+        dest = str(base / "card")
 
-    batch1 = [("m", {"n": str(i % 7)}, START + 9000 + i * 60, 1.0) for i in range(30)]
-    spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    db = TSDB(spark, store_dir)
-    ing = StreamingIngestor(db.store, card_dest=dest)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        batch1 = [("m", {"n": str(i % 7)}, START + 9000 + i * 60, 1.0) for i in range(30)]
+        spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        db = TSDB(spark, store_dir)
+        if history:
+            db.insert_rows(history)
+        ing = StreamingIngestor(db.store, card_dest=dest)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    batch2 = [("m", {"n": "late-new"}, START + 60, 1.0),
-              ("m", {"n": "0"}, START + 20000, 1.0)]
-    spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        batch2 = [("m", {"n": "late-new"}, START + 60, 1.0),
+                  ("m", {"n": "0"}, START + 20000, 1.0)]
+        spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    full = str(base / "card_full")
-    db.materialize_series_cardinality(full)
-    lo, hi = START // 7200, (START + 30000) // 7200
-    a = cardinality_estimate(spark, dest, lo, hi).first()
-    b = cardinality_estimate(spark, full, lo, hi).first()
-    assert (a.n_segs, a.n_points, a.est_series) == (b.n_segs, b.n_points, b.est_series)
-    assert a.est_series == 8.0  # 7 base series + the late new one
+        full = str(base / "card_full")
+        db.materialize_series_cardinality(full)
+        lo, hi = (START - 86_400) // 7200, (START + 30000) // 7200
+        a = cardinality_estimate(spark, dest, lo, hi).first()
+        b = cardinality_estimate(spark, full, lo, hi).first()
+        assert (a.n_segs, a.n_points, a.est_series) == (b.n_segs, b.n_points, b.est_series)
+        assert a.est_series == 8.0  # 7 base series + the late new one
 
 
 def test_vector_index_streaming_lifecycle_rebuilds_on_drift(spark, tmp_path_factory):
@@ -844,31 +862,34 @@ def test_streaming_ingest_maintains_quantile_sketch(spark, tmp_path_factory):
     second landing late rows in an earlier segment), the maintained
     sketch table answers range quantiles identically to a from-scratch
     rebuild (bucket counts merge by addition, so the incremental refresh
-    must be lossless)."""
+    must be lossless), also over :data:`HISTORY`."""
     from mandodb_spark.operators.sketch import quantile_estimate
 
-    base = tmp_path_factory.mktemp("qstream")
-    src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
-    dest = str(base / "q")
+    for history in ([], HISTORY):
+        base = tmp_path_factory.mktemp("qstream")
+        src, ckpt, store_dir = str(base / "src"), str(base / "ckpt"), str(base / "s")
+        dest = str(base / "q")
 
-    batch1 = [("m", {"n": str(i % 3)}, START + 9000 + i * 60, float(i % 40) + 1)
-              for i in range(40)]
-    spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    db = TSDB(spark, store_dir)
-    ing = StreamingIngestor(db.store, quantile_dest=dest)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        batch1 = [("m", {"n": str(i % 3)}, START + 9000 + i * 60, float(i % 40) + 1)
+                  for i in range(40)]
+        spark.createDataFrame(batch1, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        db = TSDB(spark, store_dir)
+        if history:
+            db.insert_rows(history)
+        ing = StreamingIngestor(db.store, quantile_dest=dest)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    batch2 = [("m", {"n": "x"}, START + 60, 500.0),
-              ("m", {"n": "0"}, START + 20000, 0.5)]
-    spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
-    ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
+        batch2 = [("m", {"n": "x"}, START + 60, 500.0),
+                  ("m", {"n": "0"}, START + 20000, 0.5)]
+        spark.createDataFrame(batch2, ROW_SCHEMA).coalesce(1).write.mode("append").parquet(src)
+        ing.start(spark.readStream.schema(ROW_SCHEMA).parquet(src), ckpt).awaitTermination(120)
 
-    full = str(base / "q_full")
-    db.materialize_value_quantile(full)
-    lo, hi = START // 7200, (START + 30000) // 7200
-    a = {r.q: r.est for r in quantile_estimate(spark, dest, lo, hi, [0.5, 0.99]).collect()}
-    b = {r.q: r.est for r in quantile_estimate(spark, full, lo, hi, [0.5, 0.99]).collect()}
-    assert a == b and set(a) == {0.5, 0.99}
+        full = str(base / "q_full")
+        db.materialize_value_quantile(full)
+        lo, hi = (START - 86_400) // 7200, (START + 30000) // 7200
+        a = {r.q: r.est for r in quantile_estimate(spark, dest, lo, hi, [0.5, 0.99]).collect()}
+        b = {r.q: r.est for r in quantile_estimate(spark, full, lo, hi, [0.5, 0.99]).collect()}
+        assert a == b and set(a) == {0.5, 0.99}
 
 
 def test_streaming_cusum_matches_batch_closed_form(spark, tmp_path_factory):
