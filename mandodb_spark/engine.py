@@ -363,16 +363,27 @@ class TSDB:
         ``query_range`` (tsdb.go:278-293)."""
         from .functions import promql_parser
 
+        ast, rel, hist_rel = self._promql_scope(query, at_ts, at_ts, lookback)
+        return promql_parser.eval_instant(
+            rel, ast, at_ts, lookback, hist_rel=hist_rel,
+            hist_metrics=self._hist_metric_names())
+
+    def _promql_scope(self, query: str, start: int, end: int,
+                      lookback: int):
+        """Parse ``query`` and prune both stores to what it can touch on
+        the eval grid [start, end]: (ast, float relation, histogram
+        relation or None).  Window bounds are monotone in the eval time,
+        so the scan covers [time_window(start).lo, time_window(end).hi]
+        (never below ``end``) — for an instant query start = end."""
+        from .functions import promql_parser
+
         ast = promql_parser.parse(query)
-        lo, hi = promql_parser.time_window(ast, at_ts, lookback)
+        lo, _ = promql_parser.time_window(ast, start, lookback)
+        hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
         rel = self.store.relation()
         pruned = rel.filter(tsdb_ops.time_predicate(
             lo, hi, "seg" in rel.columns, self.segment_duration))
-        return promql_parser.eval_instant(
-            pruned, ast, at_ts, lookback,
-            hist_rel=self._pruned_hist_rel(lo, hi),
-            hist_metrics=self._hist_metric_names(),
-        )
+        return ast, pruned, self._pruned_hist_rel(lo, hi)
 
     def _hist_metric_names(self) -> "set[str] | None":
         """Cached metric-name set of the histogram store — the selector
@@ -419,17 +430,10 @@ class TSDB:
         Scan pruning covers [start − expression reach, end]."""
         from .functions import promql_parser
 
-        ast = promql_parser.parse(query)
-        lo, _ = promql_parser.time_window(ast, start, lookback)
-        hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
+        ast, rel, hist_rel = self._promql_scope(query, start, end, lookback)
         return promql_parser.eval_range(
-            pruned, ast, start, end, step, lookback,
-            hist_rel=self._pruned_hist_rel(lo, hi),
-            hist_metrics=self._hist_metric_names(),
-        )
+            rel, ast, start, end, step, lookback, hist_rel=hist_rel,
+            hist_metrics=self._hist_metric_names())
 
     def promql_range_tiered(self, query: str, start: int, end: int,
                             step: int, rollup_dest: str, rollup_step: int,
@@ -489,14 +493,9 @@ class TSDB:
         :meth:`alert_intervals`."""
         from .functions import promql_parser
 
-        ast = promql_parser.parse(query)
-        lo, _ = promql_parser.time_window(ast, start, lookback)
-        hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
+        ast, rel, _hist = self._promql_scope(query, start, end, lookback)
         return promql_parser.eval_alerts(
-            pruned, ast, for_duration, start, end, step, lookback)
+            rel, ast, for_duration, start, end, step, lookback)
 
     def promql_record(self, rule_name: str, query: str, start: int,
                       end: int, step: int, lookback: int = 300,

@@ -1029,57 +1029,24 @@ def hist_sum_by(rel: DataFrame, by: list[str] | None,
 HIST_OVER_TIME = ("avg", "sum", "count", "last", "present")
 
 
-def hist_over_time(rel: DataFrame, start: int, end: int,
-                   mode: str) -> DataFrame:
-    """``<mode>_over_time`` over a native-histogram window ``[start, end]``
-    (VERDICT r10 item 6 — histogram-valued subqueries under over-time
-    aggregates).  ``avg``/``sum`` are element-wise per series (mixed
-    schemas downscale, zero thresholds widen — :func:`hist_sum_by`'s
-    contract, reused verbatim with ``by=None``); ``count`` is the float
-    sample count; ``last`` the newest histogram sample.  Output stamped
-    ``ts = end``."""
-    if mode not in HIST_OVER_TIME:
-        raise ValueError(f"hist_over_time mode {mode!r}")
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    if mode in ("count", "present"):
-        val = (F.lit(1.0) if mode == "present"
-               else F.count(F.lit(1)).cast("double"))
-        return (
-            rel.groupBy("series_key")
-            .agg(F.any_value("labels").alias("labels"), val.alias("value"))
-            .withColumn("ts", F.lit(int(end)).cast("long"))
-            .select("series_key", "labels", "ts", "value")
-        )
-    if mode == "last":
-        return (
-            rel.groupBy("series_key")
-            .agg(F.any_value("labels").alias("labels"),
-                 F.max_by("hist", F.col("ts")).alias("hist"))
-            .withColumn("ts", F.lit(int(end)).cast("long"))
-            .select("series_key", "labels", "ts", "hist")
-        )
-    out = hist_sum_by(rel, by=None, group_ts=False, mean=(mode == "avg"))
-    return out.withColumn("ts", F.lit(int(end)).cast("long")).select(
-        "series_key", "labels", "ts", "hist")
-
-
 def grid_hist_over_time(rel: DataFrame, start: int, end: int, window: int,
                         step: int, mode: str) -> DataFrame:
     """``<mode>_over_time(h[window])`` at every grid eval point over
-    histogram samples/pseudo-samples — the range-mode companion of
-    :func:`hist_over_time`.  Samples explode to their covering eval
-    points (``promql._grid_points``, fan-out capped like every grid
+    histogram samples/pseudo-samples (an instant query is the one-point
+    grid).  ``avg``/``sum`` are element-wise per series (mixed schemas
+    downscale, zero thresholds widen — :func:`hist_sum_by`'s contract);
+    ``count`` is the float sample count; ``last`` the newest histogram
+    sample.  Samples explode to their covering eval
+    points (``promql._cover``, fan-out capped like every grid
     lowering), then ONE aggregation per (series, t): the
     :func:`hist_sum_by` component merge keyed additionally by the eval
     point for avg/sum, a plain hash aggregate for count/last."""
-    from .promql import _check_fanout, _grid_points
+    from .promql import _check_fanout, _cover
 
     if mode not in HIST_OVER_TIME:
         raise ValueError(f"grid_hist_over_time mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_hist_over_time({mode})")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, f"grid_hist_over_time({mode})")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     if mode in ("count", "present"):
         val = (F.lit(1.0) if mode == "present"
                else F.count(F.lit(1)).cast("double"))
@@ -1110,44 +1077,18 @@ def grid_hist_instant(rel: DataFrame, start: int, end: int, step: int,
     """Instant HISTOGRAM vector at every eval point t = start + k·step:
     the newest sample per series within the lookback window of each t —
     the native analogue of ``promql.grid_instant`` (same explode-to-
-    covering-points + one hash agg; fan-out capped identically)."""
-    from .promql import _check_fanout, _grid_points
+    covering-points + top-1 row per (series, t); fan-out capped
+    identically)."""
+    from .promql import _check_fanout, _cover
 
-    _check_fanout(lookback, step, "grid_hist_instant")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - lookback, end))
-    covered = rel.withColumn("__t", _grid_points(lookback, start, end, step))
+    _check_fanout(lookback, start, end, step, "grid_hist_instant")
+    covered = _cover(_ensure_series_key(rel), lookback, start, end, step)
+    w = Window.partitionBy("series_key", "__t").orderBy(F.col("ts").desc())
     return (
-        covered.groupBy("series_key", "__t")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.max_by(F.col("hist"), F.col("ts")).alias("hist"),
-        )
+        covered.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
         .select("series_key", "labels", F.col("__t").alias("ts"), "hist")
     )
-
-
-def _step_points(start: int, end: int, step: int, window: int):
-    """Covering eval points of a STEP (prev_ts → ts): the t = start + k·step
-    with ts ≤ t AND prev_ts ≥ t − window + 1 — i.e. both step endpoints
-    inside (t − window, t].  Column-reach variant of
-    ``promql._grid_points`` (the upper bound depends on prev_ts)."""
-    k_lo = F.greatest(
-        F.ceil((F.col("ts") - F.lit(start)) / F.lit(step)).cast("long"),
-        F.lit(0).cast("long"),
-    )
-    k_hi = F.least(
-        F.floor(
-            (F.col("__prev_ts") + F.lit(window - 1) - F.lit(start)) / F.lit(step)
-        ).cast("long"),
-        F.lit((end - start) // step).cast("long"),
-    )
-    seq = F.when(
-        k_lo <= k_hi,
-        F.transform(F.sequence(k_lo, k_hi),
-                    lambda k: (F.lit(start) + k * step).cast("long")),
-    ).otherwise(F.array().cast("array<long>"))
-    return F.explode(seq)
 
 
 def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
@@ -1166,16 +1107,17 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
     themselves (consecutive steps chain: span = max ts − min prev_ts), so
     no second sample-level explode is needed.  Fan-out is capped by
     ``promql.GRID_FANOUT_CAP`` exactly like the scalar grid."""
-    from .promql import _check_fanout
+    from .promql import _check_fanout, _cover
 
     if mode not in ("rate", "increase", "delta"):
         raise ValueError(f"grid_hist_rate mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_hist_rate({mode})")
+    _check_fanout(window - 1, start, end, step, f"grid_hist_rate({mode})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
     sc, _ = _step_frames(rel, mode != "delta")
-    pts = _step_points(start, end, step, window)
-    scg = sc.filter(F.col("__prev_ts").isNotNull()).withColumn("__t", pts)
+    # a step covers the eval points whose window holds BOTH endpoints:
+    # ts ≤ t ≤ prev_ts + window − 1
+    scg = _cover(sc, window - 1, start, end, step, anchor=F.col("__prev_ts"))
     # ONE aggregation for scalars AND bucket maps (r13, guide §2.4): the
     # per-step delta maps from _step_frames are collected per (series, t)
     # and merged in expression space — map_zip_with union-sum, zero

@@ -467,8 +467,16 @@ GRID_FANOUT_CAP = 500
 _SLIDING = {"sum", "count", "avg"}
 
 
-def _check_fanout(reach_incl: int, step: int, what: str) -> None:
-    f = reach_incl // step + 1
+def _fanout(reach_incl: int, start: int, end: int, step: int) -> int:
+    """Eval points one sample can serve: ``reach/step + 1``, but never
+    more than the grid holds — a short range (or the one-point grid of an
+    instant query) bounds the explode whatever the window."""
+    return min(reach_incl // step + 1, (end - start) // step + 1)
+
+
+def _check_fanout(reach_incl: int, start: int, end: int, step: int,
+                  what: str) -> None:
+    f = _fanout(reach_incl, start, end, step)
     if f > GRID_FANOUT_CAP:
         raise ValueError(
             f"{what}: window/step fan-out {f} exceeds GRID_FANOUT_CAP="
@@ -478,35 +486,43 @@ def _check_fanout(reach_incl: int, step: int, what: str) -> None:
             f"sum/count/avg over_time shapes.")
 
 
-def _grid_points(reach_incl: int, start: int, end: int, step: int):
-    """Covering eval-point column for a sample at ``ts``: the t = start+k·step
-    within [start, end] with ts ≤ t ≤ ts + reach_incl."""
+def _cover(rel: DataFrame, reach_incl: int, start: int, end: int,
+           step: int, anchor: Column | None = None) -> DataFrame:
+    """The rows of ``rel`` that serve an eval point t = start+k·step
+    within [start, end] — ts ≤ t ≤ anchor + reach_incl, ``anchor``
+    defaulting to ``ts`` — one per such point, in column ``__t``.  A
+    one-point grid (start == end, an instant query) is the filter and a
+    literal — no per-row sequence and no explode."""
+    anchor = F.col("ts") if anchor is None else anchor
+    rel = rel.filter((F.col("ts") <= F.lit(end))
+                     & (anchor >= F.lit(start - reach_incl)))
+    if start == end:
+        return rel.withColumn("__t", F.lit(start).cast("long"))
     k_lo = F.ceil((F.col("ts") - F.lit(start)) / F.lit(step)).cast("long")
-    k_hi = F.floor((F.col("ts") + F.lit(reach_incl) - F.lit(start)) / F.lit(step)).cast("long")
+    k_hi = F.floor((anchor + F.lit(reach_incl) - F.lit(start)) / F.lit(step)).cast("long")
     k_lo = F.greatest(k_lo, F.lit(0).cast("long"))
     k_hi = F.least(k_hi, F.lit((end - start) // step).cast("long"))
     seq = F.when(
         k_lo <= k_hi,
         F.transform(F.sequence(k_lo, k_hi), lambda k: (F.lit(start) + k * step).cast("long")),
     ).otherwise(F.array().cast("array<long>"))
-    return F.explode(seq)
+    return rel.withColumn("__t", F.explode(seq))
 
 
 def grid_instant(rel: DataFrame, start: int, end: int, step: int,
                  lookback: int = 300) -> DataFrame:
     """Instant vector at EVERY eval point of the grid: newest sample per
     series within the lookback window of each t.  Output (series_key,
-    labels, ts=eval point, value)."""
-    _check_fanout(lookback, step, "grid_instant")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - lookback, end))
-    covered = rel.withColumn("__t", _grid_points(lookback, start, end, step))
+    labels, ts=eval point, value).  A top-1 row_number per (series, t),
+    which Spark plans as a group limit on both sides of the exchange —
+    the labels map rides along without the sort-based aggregate a map
+    column forces on a groupBy."""
+    _check_fanout(lookback, start, end, step, "grid_instant")
+    covered = _cover(_ensure_series_key(rel), lookback, start, end, step)
+    w = Window.partitionBy("series_key", "__t").orderBy(F.col("ts").desc())
     return (
-        covered.groupBy("series_key", "__t")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.max_by(F.col("value"), F.col("ts")).alias("value"),
-        )
+        covered.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
         .select("series_key", "labels", F.col("__t").alias("ts"), "value")
     )
 
@@ -516,10 +532,8 @@ def grid_over_time(rel: DataFrame, fn: str, start: int, end: int,
     """``<fn>_over_time(sel[window])`` at every grid eval point (SLIDING,
     unlike the tumbling :func:`over_time`).  ``q`` feeds
     quantile_over_time's interpolated percentile."""
-    _check_fanout(window - 1, step, f"grid_over_time({fn})")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, f"grid_over_time({fn})")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     agg = (F.expr(f"percentile(value, {float(q)}d)") if fn == "quantile"
            else _OVER_TIME[fn](F.col("value")))
     return (
@@ -541,10 +555,8 @@ def grid_rate(rel: DataFrame, start: int, end: int, window: int, step: int,
     if mode not in ("rate", "increase", "delta", "irate", "idelta",
                     "changes", "resets"):
         raise ValueError(f"grid_rate mode {mode!r}")
-    _check_fanout(window - 1, step, f"grid_rate({mode})")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, f"grid_rate({mode})")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     w = Window.partitionBy("series_key", "__t").orderBy("ts")
     has_prev = F.col("__prev").isNotNull()
     stepped = (
@@ -602,10 +614,8 @@ def grid_mad(rel: DataFrame, start: int, end: int, window: int,
     equi-join on (series, t)); groups are window-sized, so the exact
     ``percentile`` is the right tool here (unlike the cross-series
     quantile aggregators)."""
-    _check_fanout(window - 1, step, "grid_mad")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, "grid_mad")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     med = covered.groupBy("series_key", "__t").agg(
         F.expr("percentile(value, 0.5d)").alias("__med"))
     joined = covered.join(med, ["series_key", "__t"])
@@ -759,7 +769,7 @@ def grid_over_time_tiered(
     # whose raw span is the window
     pseudo = parts.withColumn(
         "ts", (F.col("bucket_ts") + F.lit(rs - 1)).cast("long"))
-    covered = pseudo.withColumn("__t", _grid_points(window - 1, start, end, step))
+    covered = _cover(pseudo, window - 1, start, end, step)
     aggs = {
         "sum": F.sum("sum_value"),
         "count": F.sum("n"),
@@ -1198,22 +1208,6 @@ def agg_by(vector: DataFrame, fn: str, by: list[str]) -> DataFrame:
     return grouped.select(new_labels.alias("labels"), "value")
 
 
-def agg_without(vector: DataFrame, fn: str, without: list[str]) -> DataFrame:
-    """PromQL ``<fn> without (labels) (vector)``: aggregate over every
-    label EXCEPT the listed ones (and ``__name__``, which ``without``
-    always drops — promql/engine.go aggregation).  The group key is the
-    canonical JSON of the retained label subset, so arbitrary label
-    schemas group correctly without a fixed column list."""
-    agg = _OVER_TIME[fn]
-    kept = match_labels(F.col("labels"), None, list(without))
-    keyed = vector.withColumn("__kl", kept)
-    return (
-        keyed.groupBy(canonical_labels_json(F.col("__kl")).alias("__gk"))
-        .agg(F.any_value("__kl").alias("labels"), agg(F.col("value")).alias("value"))
-        .select("labels", "value")
-    )
-
-
 def agg_quantile_by(vector: DataFrame, q: float, by: list[str]) -> DataFrame:
     """PromQL ``quantile by (labels) (q, vector)``: the interpolated
     q-quantile of the instant vector's values ACROSS series, per label
@@ -1398,14 +1392,12 @@ def _hw_fold(v: Column, sf: float, tf: float) -> Column:
 def grid_holt_winters(rel: DataFrame, start: int, end: int, window: int,
                       step: int, sf: float, tf: float) -> DataFrame:
     """``holt_winters(sel[window], sf, tf)`` at every grid eval point:
-    the same sequential-per-window :func:`_hw_fold` the instant evaluator
+    the same sequential-per-window :func:`_hw_fold` :func:`holt_winters`
     runs, over per-(series, t) sorted value arrays assembled by the
     covering-points explode — array size bounded by samples-per-window,
     one hash aggregate, no Python."""
-    _check_fanout(window - 1, step, "grid_holt_winters")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, "grid_holt_winters")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     vals = F.transform(
         F.array_sort(F.collect_list(F.struct("ts", "value"))), lambda p: p["value"]
     )
@@ -1427,10 +1419,8 @@ def grid_deriv(rel: DataFrame, start: int, end: int, window: int,
     stability, so the eval point sits at x = window − 1 and
     predict_linear extrapolates to x = window − 1 + horizon, exactly the
     instant form's arithmetic."""
-    _check_fanout(window - 1, step, "grid_deriv")
-    rel = _ensure_series_key(rel).filter(
-        F.col("ts").between(start - window + 1, end))
-    covered = rel.withColumn("__t", _grid_points(window - 1, start, end, step))
+    _check_fanout(window - 1, start, end, step, "grid_deriv")
+    covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     x = (F.col("ts") - (F.col("__t") - F.lit(window - 1))).cast("double")
     g = (
         covered.groupBy("series_key", "__t")

@@ -1578,3 +1578,116 @@ def test_toplevel_matrix_to_api(spark):
         "result": [{"metric": {"__name__": "m", "a": "x"},
                     "values": [(120, "120"), (180, "180")]}],
     }
+
+
+# ------------------------------------------- one evaluator, two grid shapes
+
+#: (fixture, query, eval time): the instant queries pinned above — offset
+#: and @ selectors, rate and *_over_time, by/without aggregations, topk
+#: and count_values, group_left and set ops, scalar functions and time(),
+#: float and histogram subqueries — plus [1d] windows, whose window/step
+#: ratio only a short grid keeps under the fan-out cap
+_AGREEMENT = [
+    ("rel", 'http_requests_total{job="api",instance=~"i."}', AT),
+    ("rel", "mem_bytes offset 2m", AT),
+    ("rel", "mem_bytes @ 300 offset 1m", AT),
+    ("rel", "avg_over_time(mem_bytes[5m] @ 300)", AT),
+    ("rel", "sum by (job) (rate(http_requests_total[5m]))", AT),
+    ("rel", "rate(http_requests_total[1d])", AT),
+    ("rel", "max_over_time(mem_bytes[1d])", AT),
+    ("rel", "avg_over_time(mem_bytes[10m])", AT),
+    ("rel", "quantile_over_time(0.5, mem_bytes[10m])", AT),
+    ("rel", "sum without (instance) (http_requests_total)", AT),
+    ("rel", "topk(2, http_requests_total)", AT),
+    ("rel", "topk by (job) (1, http_requests_total)", AT),
+    ("rel", 'count_values("v", http_requests_total)', AT),
+    ("rel", "quantile(0.5, http_requests_total)", AT),
+    ("rel", '100 * sum by (job)(http_requests_total{instance="i1"})'
+            " / on(job) group_left sum by (job)(http_requests_total)", AT),
+    ("rel", 'http_requests_total{job="db"} unless on(instance) mem_bytes', AT),
+    ("rel", 'mem_bytes or http_requests_total{job="db"}', AT),
+    ("rel", 'absent(nosuch{zone="eu"})', AT),
+    ("rel", "sqrt(4) + 1", AT),
+    ("rel", "time() * 2", AT),
+    ("rel", "minute()", AT),
+    ("rel", "hour(timestamp(mem_bytes))", AT),
+    ("rel", "max_over_time(sum by (job)(http_requests_total)[4m:1m])", AT),
+    ("rel", "rate(sum by (job)(http_requests_total)[4m:1m])", AT),
+    ("rel", "max_over_time(rate(http_requests_total[5m] @ 600)[4m:1m])", AT),
+    ("rrel", "holt_winters(reqs[5m], 0.5, 0.3)", 900),
+    ("rrel", "predict_linear(reqs[5m], 60)", 1200),
+    ("hrel", "histogram_quantile(0.5, lat_bucket)", AT),
+    ("hrel", 'scalar(sum(lat_bucket{job="api",le="+Inf"})) * 2', AT),
+    ("hrel", "max_over_time(rate(ctr[10m])[1h:10m])", 7200),
+    ("hrel", "rate(ctr[1d])", 7200),
+    ("nhist", "histogram_count(sum_over_time(h[3m:1m]))", 260),
+    ("nhist", "histogram_sum(increase(h[3m:1m]))", 260),
+    ("nhist", "histogram_count(sum_over_time(increase(h[2m:1m])[2m:1m]))", 260),
+]
+
+
+@pytest.mark.parametrize("fixture,query,t", _AGREEMENT)
+def test_instant_equals_last_range_point(request, spark, fixture, query, t):
+    """An instant query is the range evaluator on the one-point grid {t}:
+    its answer equals the last point of a 3-point range query ending at
+    t, row for row (labels and value)."""
+    import math
+
+    kw = {}
+    if fixture == "nhist":
+        r = spark.createDataFrame(
+            [], "labels map<string,string>, ts long, value double")
+        kw["hist_rel"] = _two_sample_hist(spark)
+    else:
+        r = request.getfixturevalue(fixture)
+
+    def norm(rows):
+        return sorted(((tuple(sorted(x["labels"].items())),
+                        "nan" if math.isnan(x["value"]) else round(x["value"], 9))
+                       for x in rows), key=str)
+
+    inst = norm(eval_instant(r, query, t, **kw).collect())
+    last = norm(x for x in eval_range(r, query, t - 120, t, 60, **kw).collect()
+                if x["ts"] == t)
+    assert inst == last and inst, query
+
+
+def test_short_range_query_bounds_fanout_by_its_grid(spark):
+    """A sample can serve at most the grid's own points: ``rate(m[1d])``
+    over three 60 s points explodes each sample 3×, not 1440×, so the
+    fan-out guard must accept it — and a long grid stays capped."""
+    rows = [({"__name__": "m", "j": "a"}, k * 600, float(k))
+            for k in range(150)]
+    r = spark.createDataFrame(
+        rows, "labels map<string,string>, ts long, value double")
+    for q in ("rate(m[1d])", "max_over_time(m[1d])"):
+        got = {x["ts"]: x["value"]
+               for x in eval_range(r, q, 86_400, 86_520, 60).collect()}
+        assert sorted(got) == [86_400, 86_460, 86_520], q
+        inst = eval_instant(r, q, 86_520).collect()
+        assert [x["value"] for x in inst] == [got[86_520]], q
+    assert promql._fanout(86_399, 86_400, 86_520, 60) == 3
+    with pytest.raises(ValueError, match="GRID_FANOUT_CAP"):
+        promql.grid_rate(r, 0, 86_400, 86_400, 60)
+
+
+def test_instant_promql_runs_three_jobs(spark, tmp_path):
+    """The dashboard's instant aggregation costs what the range form
+    does per point: three Spark jobs through ``TSDB.promql``, the
+    one-point grid adding none (no broadcast, no probe)."""
+    import uuid
+
+    from mandodb_spark import TSDB
+
+    db = TSDB(spark, str(tmp_path / "store"), segment_duration=3600)
+    db.insert_rows([("m", {"dc": f"d{i % 3}"}, k * 60, float(i * k))
+                    for i in range(12) for k in range(100)])
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        got = db.promql("sum by (dc) (m)", 99 * 60).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(got) == 3
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3
