@@ -25,7 +25,21 @@ from pyspark.sql import functions as F
 from .matchers import LabelMatcher
 from .model import DEFAULT_RETENTION, DEFAULT_SEGMENT_DURATION, ROW_SCHEMA
 from .operators import tsdb_ops
+from .sources.exemplar_store import (
+    EXEMPLAR_ROW_SCHEMA,
+    ExemplarStore,
+    MemoryExemplarStore,
+    group_exemplars,
+)
+from .sources.hist_store import HistStore, MemoryHistStore
 from .sources.segment_store import SegmentStore
+
+#: The sample stores beside the float store, by kind: the directory
+#: suffix on the float store's root, then the disk and memory classes.
+_SIBLINGS = {
+    "hist": ("__hist", HistStore, MemoryHistStore),
+    "exemplar": ("__exemplars", ExemplarStore, MemoryExemplarStore),
+}
 
 
 class TSDB:
@@ -489,13 +503,15 @@ class TSDB:
         """Prometheus ALERTING rule (``expr`` + ``for:``) over the store:
         activation runs of the text expression on the eval grid, FIRING
         after ``for_duration`` of continuous activity — see
-        ``promql_parser.eval_alerts``.  Sample-level dual:
+        ``promql_parser.alert_runs``.  The grid is :meth:`promql_range`'s,
+        so native-histogram selectors resolve as they do there.
+        Sample-level dual:
         :meth:`alert_intervals`."""
         from .functions import promql_parser
 
-        ast, rel, _hist = self._promql_scope(query, start, end, lookback)
-        return promql_parser.eval_alerts(
-            rel, ast, for_duration, start, end, step, lookback)
+        return promql_parser.alert_runs(
+            self.promql_range(query, start, end, step, lookback),
+            for_duration, step)
 
     def promql_record(self, rule_name: str, query: str, start: int,
                       end: int, step: int, lookback: int = 300,
@@ -540,18 +556,16 @@ class TSDB:
     # ----------------------------------------------------------- maintenance
     def remove_expires(self, now_ts: int | None = None) -> list[int]:
         """Retention purge (tsdb.go:384-406); returns dropped segment ids.
-        A native-histogram sibling store, if one has been written, is
+        The native-histogram and exemplar sibling stores, if written, are
         purged under the same cutoff (its segments share the id space) —
         including stores written by a PREVIOUS process (disk probe, not
         just the lazily-materialized handle)."""
         now = int(time.time()) if now_ts is None else now_ts
         dropped = self.store.remove_expired(now, self.retention)
-        hist = self.hist_store_if_exists()
-        if hist is not None:
-            hist.remove_expired(now, self.retention)
-        exemplars = self.exemplar_store_if_exists()
-        if exemplars is not None:
-            exemplars.remove_expired(now, self.retention)
+        for kind in _SIBLINGS:
+            sibling = self._sibling(kind, create=False)
+            if sibling is not None:
+                sibling.remove_expired(now, self.retention)
         return dropped
 
     def hist_store_if_exists(self):
@@ -559,18 +573,31 @@ class TSDB:
         lazily-created handle when present, else a disk probe for
         ``<root>__hist`` (a store written by a previous process).  Returns
         None when this TSDB has never written histograms, so the float
-        hot paths pay only a directory existence check.  Single source of
-        the sibling-path convention (used by retention, the PromQL
-        routing, and streaming rule recovery)."""
+        hot paths pay only a directory existence check."""
+        return self._sibling("hist", create=False)
+
+    def _sibling(self, kind: str, create: bool = True):
+        """The ``kind`` sibling store (see :data:`_SIBLINGS`): the handle
+        made on first use, ``<root><suffix>`` on disk or the memory
+        variant under ``only_memory``.  With ``create=False`` a store no
+        process has written yet is None instead.  Single source of the
+        sibling-path convention (retention, snapshots, the PromQL
+        routing, streaming rule recovery)."""
         from pathlib import Path
 
-        store = getattr(self, "_hist_store", None)
+        store = getattr(self, f"_{kind}_store", None)
         if store is not None:
             return store
+        suffix, disk, memory = _SIBLINGS[kind]
         root = getattr(self.store, "root", None)
-        if root is not None and Path(str(root) + "__hist").exists():
-            return self.hist_store
-        return None
+        if not create and (root is None or not Path(root + suffix).exists()):
+            return None
+        if root is None:
+            store = memory(self.spark, self.segment_duration)
+        else:
+            store = disk(self.spark, root + suffix, self.segment_duration)
+        setattr(self, f"_{kind}_store", store)
+        return store
 
     def downsample_expire(self, step: int, dest_root: str,
                           now_ts: int | None = None) -> list[int]:
@@ -711,25 +738,44 @@ class TSDB:
 
     def snapshot(self, dest: str) -> int:
         """Instant hardlink snapshot of the on-disk store (see
-        ``sources.segment_store.snapshot``); memory-only stores have
-        nothing to snapshot."""
+        ``sources.segment_store.snapshot``) and of each written sibling
+        store, ``<root><suffix>`` to ``<dest><suffix>``; memory-only
+        stores have nothing to snapshot.  Returns the linked file count."""
+        from pathlib import Path
+
         from .sources.segment_store import snapshot as _snap
 
         root = getattr(self.store, "root", None)
         if root is None:
             raise ValueError("memory-only TSDB has no on-disk store to snapshot")
-        return _snap(root, dest)
+        n = _snap(root, dest)
+        for suffix, *_ in _SIBLINGS.values():
+            if Path(root + suffix).exists():
+                n += _snap(root + suffix, dest + suffix)
+        return n
 
     def restore(self, snapshot_root: str) -> int:
-        """Atomically restore the store from a snapshot (staging hardlink
-        tree + swap — see ``sources.segment_store.restore``); invalidates
-        cached relations so subsequent queries read the restored data."""
+        """Atomically restore the store and its siblings from a
+        :meth:`snapshot` (per root: staging hardlink tree + swap — see
+        ``sources.segment_store.restore``).  A sibling the snapshot lacks
+        is removed, so the TSDB reads as it did at snapshot time.
+        Invalidates cached relations so subsequent queries read the
+        restored data.  Returns the restored file count."""
+        import shutil
+        from pathlib import Path
+
         from .sources.segment_store import restore as _restore
 
         root = getattr(self.store, "root", None)
         if root is None:
             raise ValueError("memory-only TSDB has no on-disk store to restore")
         n = _restore(snapshot_root, root)
+        for suffix, *_ in _SIBLINGS.values():
+            if Path(snapshot_root + suffix).exists():
+                n += _restore(snapshot_root + suffix, root + suffix)
+            else:
+                shutil.rmtree(root + suffix, ignore_errors=True)
+        self._hist_metric_cache = None
         self.spark.catalog.clearCache()
         self.spark.catalog.refreshByPath(root)
         return n
@@ -959,21 +1005,9 @@ class TSDB:
         """Lazy sibling store for NATIVE-HISTOGRAM samples (the engine's
         superset over the reference's float-only sample type,
         tsdb.go:158-163): ``<path>__hist`` on disk, or the in-memory
-        variant under ``only_memory`` — same seg partitioning and
-        retention contract as the float store."""
-        store = getattr(self, "_hist_store", None)
-        if store is None:
-            from .sources.hist_store import HistStore, MemoryHistStore
-
-            root = getattr(self.store, "root", None)
-            if root is None:
-                store = MemoryHistStore(self.spark, self.segment_duration)
-            else:
-                store = HistStore(
-                    self.spark, str(root) + "__hist", self.segment_duration
-                )
-            self._hist_store = store
-        return store
+        variant under ``only_memory`` — the float store with a ``hist``
+        payload."""
+        return self._sibling("hist")
 
     def insert_histograms(self, rows: "DataFrame | list[tuple]",
                           dedup_against_store: bool = False) -> None:
@@ -1088,46 +1122,20 @@ class TSDB:
         """Lazy sibling store for EXEMPLARS (``<path>__exemplars`` on
         disk, memory variant under ``only_memory``) — sampled raw
         observations with their own label set (trace ids), the
-        ``/api/v1/query_exemplars`` data source.  Same seg partitioning,
-        retention, and deletion contract as the other stores."""
-        store = getattr(self, "_exemplar_store", None)
-        if store is None:
-            from .sources.exemplar_store import (
-                ExemplarStore,
-                MemoryExemplarStore,
-            )
-
-            root = getattr(self.store, "root", None)
-            if root is None:
-                store = MemoryExemplarStore(self.spark, self.segment_duration)
-            else:
-                store = ExemplarStore(
-                    self.spark, str(root) + "__exemplars",
-                    self.segment_duration,
-                )
-            self._exemplar_store = store
-        return store
+        ``/api/v1/query_exemplars`` data source.  The float store with a
+        ``(value, exemplar)`` payload."""
+        return self._sibling("exemplar")
 
     def exemplar_store_if_exists(self):
         """The exemplar sibling store IFF one holds data (same probe
         protocol as :meth:`hist_store_if_exists`)."""
-        from pathlib import Path
-
-        store = getattr(self, "_exemplar_store", None)
-        if store is not None:
-            return store
-        root = getattr(self.store, "root", None)
-        if root is not None and Path(str(root) + "__exemplars").exists():
-            return self.exemplar_store
-        return None
+        return self._sibling("exemplar", create=False)
 
     def insert_exemplars(self, rows: "DataFrame | list[tuple]",
                          dedup_against_store: bool = False) -> None:
         """Append exemplar rows (``EXEMPLAR_ROW_SCHEMA``: metric, labels,
         ts, value, exemplar-label map) beside the series' samples."""
         if not isinstance(rows, DataFrame):
-            from .sources.exemplar_store import EXEMPLAR_ROW_SCHEMA
-
             rows = self.spark.createDataFrame(rows, EXEMPLAR_ROW_SCHEMA)
         self.exemplar_store.append(
             rows, dedup_against_store=dedup_against_store)
@@ -1140,8 +1148,6 @@ class TSDB:
         exemplar lists — the ``/api/v1/query_exemplars`` data layout
         (render with ``promql_parser.to_api_exemplars``).  Same
         prune+filter front half as every other query path."""
-        from .sources.exemplar_store import group_exemplars
-
         rel = tsdb_ops._filtered(
             self.exemplar_store.relation(), metric, matchers or [],
             start, end, self.segment_duration,
@@ -1187,8 +1193,8 @@ class TSDB:
         released if present.  Disk-backed stores hold nothing between
         calls; the method exists so reference code ports 1:1.
         """
-        for store in (self.store, getattr(self, "_hist_store", None),
-                      getattr(self, "_exemplar_store", None)):
+        for store in (self.store,
+                      *(getattr(self, f"_{kind}_store", None) for kind in _SIBLINGS)):
             release = getattr(store, "close", None)
             if release is not None:
                 release()

@@ -1827,24 +1827,26 @@ def eval_alerts(rel: DataFrame, query, for_duration: int, start: int,
     the [start, end] grid (``eval_range``); a series is ACTIVE at every
     eval point where the expression returns a sample for it (PromQL alert
     semantics — comparisons FILTER, so ``expr > bound`` yields presence),
-    and FIRING once it has been active continuously for ``for_duration``.
+    and FIRING once it has been active continuously for ``for_duration``
+    — see :func:`alert_runs`."""
+    return alert_runs(eval_range(rel, query, start, end, step, lookback),
+                      for_duration, step)
 
-    Gaps-and-islands over consecutive grid points per series — two
-    windows partitioned by the series' canonical label key, state bounded
-    by that series' grid rows, never global.  Output one row per
-    activation run: ``(labels, active_since, last_active, n_evals,
-    firing, firing_since)`` with ``firing_since = active_since +
-    for_duration`` (null while only pending), mirroring the sample-level
-    ``operators.tsdb_ops.alert_intervals`` contract on the rule grid.
-    """
+
+def mark_runs(df: DataFrame, step: int) -> DataFrame:
+    """Number each series' activation runs: ``df`` holds one row per
+    (series key ``__k``, eval point ``ts``) where the series is active;
+    the result adds ``__run``, which counts the runs so far — a run
+    starts at a series' first point and after every gap wider than
+    ``step``.  Gaps-and-islands over one window partitioned by the
+    series, so state is bounded by that series' grid rows, never global.
+    Shared by :func:`alert_runs` and the streaming
+    ``AlertRuleMaintainer``."""
     from pyspark.sql.window import Window as W
 
-    grid = eval_range(rel, query, start, end, step, lookback)
-    key = promql.canonical_labels_json(F.col("labels"))
-    g = grid.withColumn("__k", key)
     w = W.partitionBy("__k").orderBy("ts")
-    marked = (
-        g.withColumn("__prev", F.lag("ts").over(w))
+    return (
+        df.withColumn("__prev", F.lag("ts").over(w))
         .withColumn(
             "__new",
             (F.col("__prev").isNull()
@@ -1852,7 +1854,17 @@ def eval_alerts(rel: DataFrame, query, for_duration: int, start: int,
         .withColumn("__run", F.sum("__new").over(
             w.rowsBetween(W.unboundedPreceding, 0)))
     )
-    runs = marked.groupBy("__k", "__run").agg(
+
+
+def alert_runs(grid: DataFrame, for_duration: int, step: int) -> DataFrame:
+    """One row per activation run of an evaluated rule ``grid`` (the
+    ``(labels, ts, …)`` output of a range evaluation): ``(labels,
+    active_since, last_active, n_evals, firing, firing_since)`` with
+    ``firing_since = active_since + for_duration`` (null while only
+    pending), mirroring the sample-level
+    ``operators.tsdb_ops.alert_intervals`` contract on the rule grid."""
+    g = grid.withColumn("__k", promql.canonical_labels_json(F.col("labels")))
+    runs = mark_runs(g, step).groupBy("__k", "__run").agg(
         F.any_value("labels").alias("labels"),
         F.min("ts").alias("active_since"),
         F.max("ts").alias("last_active"),

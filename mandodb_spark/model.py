@@ -132,17 +132,21 @@ def seg_bucket(ts: Column, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> 
     return F.floor(ts / F.lit(segment_duration)).cast("long")
 
 
-def canonicalize(df: DataFrame, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> DataFrame:
+def canonicalize(df: DataFrame, segment_duration: int = DEFAULT_SEGMENT_DURATION,
+                 payload: tuple = ("value",)) -> DataFrame:
     """Normalize an ingest batch to the storage shape.
 
-    Input columns: ``metric, labels, ts, value`` (ROW_SCHEMA).  Output adds
-    ``series_key`` and ``seg`` and folds ``__name__``; this is the write-path
-    canonicalization of memory_segment.go:91-122 expressed declaratively.
+    Input columns: ``metric, labels, ts`` plus the ``payload`` columns —
+    ``value`` for float samples (ROW_SCHEMA), ``hist`` for native
+    histograms, ``value, exemplar`` for exemplars.  Output is ``labels,
+    ts, *payload, series_key, seg`` with ``__name__`` folded; this is the
+    write-path canonicalization of memory_segment.go:91-122 expressed
+    declaratively, one label discipline for every sample type.
     """
     labels = fold_metric_name(F.col("metric"), clean_labels(F.coalesce(F.col("labels"), F.create_map())))
     return (
         df.withColumn("labels", labels)
         .withColumn("series_key", series_key(F.col("labels")))
         .withColumn("seg", seg_bucket(F.col("ts"), segment_duration))
-        .select("labels", "ts", "value", "series_key", "seg")
+        .select("labels", "ts", *payload, "series_key", "seg")
     )

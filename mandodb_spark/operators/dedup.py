@@ -22,6 +22,8 @@ import weakref
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import checkpoint, release
+
 #: Defaults: 8 minhashes in 2 bands of 4 → P(candidate) = 1-(1-s⁴)²,
 #: steep around s≈0.7 — tuned for "near-duplicate", not "vaguely similar".
 N_HASHES = 8
@@ -575,28 +577,17 @@ def release_minhash_checkpoints(spark) -> int:
     Mirrors ``connected_components``' per-round release pattern, but
     deferred to the caller because the checkpointed tables back the
     function's RESULT rather than an internal round."""
-    sc = spark.sparkContext
     with _RETAINED_LOCK:
-        rids = _RETAINED_CKPTS.pop(sc, set())
-    registry = sc._jsc.getPersistentRDDs()
-    released = 0
-    for rid in rids:
-        ref = registry.get(rid)
-        if ref is not None:
-            ref.unpersist(False)
-            released += 1
-    return released
+        rids = _RETAINED_CKPTS.pop(spark.sparkContext, set())
+    return release(spark, rids)
 
 
 def _ckpt_tracked(df: DataFrame) -> DataFrame:
     """localCheckpoint + record the persisted RDD ids it created so
     :func:`release_minhash_checkpoints` can free them."""
-    sc = df.sparkSession.sparkContext
-    before = set(sc._jsc.getPersistentRDDs().keySet().toArray())
-    out = df.localCheckpoint()
-    new = set(sc._jsc.getPersistentRDDs().keySet().toArray()) - before
+    out, new = checkpoint(df)
     with _RETAINED_LOCK:
-        _RETAINED_CKPTS.setdefault(sc, set()).update(new)
+        _RETAINED_CKPTS.setdefault(df.sparkSession.sparkContext, set()).update(new)
     return out
 
 
@@ -681,12 +672,11 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     ``localCheckpoint`` for a reliable ``checkpoint`` dir to survive
     executor loss.
 
-    Storage hygiene (ADVICE r1, same registry pattern as
-    ``sources.memory_store``): every intermediate checkpoint — the
-    directed pairs, the edge table, each superseded round's labels — is
-    unpersisted as soon as the next one materializes.  Exactly ONE
-    persisted RDD outlives the call: the converged label table that backs
-    the returned (lazy) DataFrame.  It is O(nodes-with-an-edge) — tiny
+    Storage hygiene (ADVICE r1, ``session.checkpoint``/``release``):
+    every intermediate checkpoint — the directed pairs, the edge table,
+    each superseded round's labels — is unpersisted as soon as the next
+    one materializes.  Exactly ONE persisted RDD outlives the call: the
+    converged label table that backs the returned (lazy) DataFrame.  It is O(nodes-with-an-edge) — tiny
     next to the corpus — and a long-lived session accumulates one such
     table per CC invocation, not one per round.
 
@@ -702,23 +692,9 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     spark = pairs.sparkSession
 
     def _ckpt(df: DataFrame) -> tuple[DataFrame, list[int]]:
-        """Eager localCheckpoint + the persisted RDD ids it created
-        (``Dataset.unpersist`` can't free a localCheckpoint — release
-        goes through the context registry, as in memory_store)."""
         from ..plans import note_iteration
 
-        registry = spark.sparkContext._jsc.getPersistentRDDs()
-        before = {rid for rid in registry.keySet().toArray()}
-        out = note_iteration(df, "connected_components:iter").localCheckpoint(eager=True)
-        registry = spark.sparkContext._jsc.getPersistentRDDs()
-        return out, [rid for rid in registry.keySet().toArray() if rid not in before]
-
-    def _release(rdd_ids: list[int]) -> None:
-        registry = spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in rdd_ids:
-            rdd = registry.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
+        return checkpoint(note_iteration(df, "connected_components:iter"))
 
     # Checkpoint the directed pair list FIRST: the symmetrization union
     # below references the pairs plan twice, and without truncation each
@@ -728,7 +704,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
     edges, edge_ids = _ckpt(
         directed.union(directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     )
-    _release(directed_ids)
+    release(spark, directed_ids)
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "cluster_id", F.col("id")
     )
@@ -753,7 +729,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
                 )
             )
             changed = updated.filter(F.col("__changed")).limit(1).count()
-            _release(held)
+            release(spark, held)
             held = round_ids
             labels = updated.drop("__changed")
             round_secs.append(_time.monotonic() - _t0)
@@ -767,7 +743,7 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b
             "(graph diameter exceeds the bound — raise max_iter)"
         )
     finally:
-        _release(edge_ids)
+        release(spark, edge_ids)
 
 
 def neardup_clusters(pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b") -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..plans import note_iteration
+from ..session import checkpoint, release
 
 
 def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -54,22 +55,24 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     if undirected:
         e = e.unionByName(e.select(F.col("d").alias("s"), F.col("s").alias("d")))
     e = e.filter(F.col("s") != F.col("d")).distinct()
-    e = note_iteration(e, "pagerank:edges").localCheckpoint(eager=True)
+    spark = e.sparkSession
+    e, edge_ids = checkpoint(note_iteration(e, "pagerank:edges"))
 
     nodes = (
         e.select(F.col("s").alias("node"))
         .unionByName(e.select(F.col("d").alias("node")))
         .distinct()
     )
-    nodes = note_iteration(nodes, "pagerank:nodes").localCheckpoint(eager=True)
+    nodes, node_ids = checkpoint(note_iteration(nodes, "pagerank:nodes"))
     n = nodes.count()
     if n == 0:
+        release(spark, edge_ids)
         return nodes.withColumn("rank", F.lit(0.0))
     outdeg = e.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).alias("deg")
     )
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    prev = None
+    held: list[int] = []
     for _ in range(n_iter):
         with_deg = ranks.join(outdeg, "node", "left")
         contrib = (
@@ -99,10 +102,11 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                 ).alias("rank"),
             )
         )
-        nxt = note_iteration(nxt, "pagerank:iter").localCheckpoint(eager=True)
-        if prev is not None:
-            prev.unpersist()
-        prev, ranks = ranks, nxt
+        ranks, nxt_ids = checkpoint(note_iteration(nxt, "pagerank:iter"))
+        release(spark, held)
+        held = nxt_ids
+    # only the last round's ranks back the result
+    release(spark, edge_ids + node_ids)
     return ranks.select("node", F.round("rank", 8).alias("rank"))
 
 
@@ -265,28 +269,25 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
         und.select(F.col("a").alias("s"), F.col("b").alias("d"))
         .unionByName(und.select(F.col("b").alias("s"), F.col("a").alias("d")))
     )
-    e = note_iteration(e, "k_core:edges").localCheckpoint(eager=True)
-    prev = None
+    spark = e.sparkSession
+    e, held = checkpoint(note_iteration(e, "k_core:edges"))
     for _ in range(max_rounds):
         deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
         weak = deg.filter(F.col("deg") < k).select("s")
         if weak.isEmpty():
-            out = deg.select(F.col("s").alias("node"),
-                             F.col("deg").cast("long").alias("degree"))
-            if prev is not None:
-                prev.unpersist()
-            return out
+            return deg.select(F.col("s").alias("node"),
+                              F.col("deg").cast("long").alias("degree"))
         nxt = (
             e.join(F.broadcast(weak), "s", "left_anti")
             .join(F.broadcast(weak.withColumnRenamed("s", "d")), "d", "left_anti")
         )
-        nxt = note_iteration(nxt, "k_core:iter").localCheckpoint(eager=True)
-        if prev is not None:
-            prev.unpersist()
-        prev, e = e, nxt
+        e, nxt_ids = checkpoint(note_iteration(nxt, "k_core:iter"))
+        release(spark, held)
+        held = nxt_ids
         if e.isEmpty():
             return e.select(F.col("s").alias("node"),
                             F.lit(0).cast("long").alias("degree")).limit(0)
+    release(spark, held)
     raise RuntimeError(f"k_core: no fixpoint within {max_rounds} rounds")
 
 

@@ -9,13 +9,16 @@ Two confs are semantic requirements, not tuning:
 The rest is scale posture: AQE on (runtime re-planning, skew-join
 handling), shuffle partitions sized to the local core count — on a real
 cluster these come from the deployment, not the code.
+
+:func:`checkpoint` and :func:`release` are the engine's one way to free a
+``localCheckpoint`` once nothing reads it.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 
 def get_spark(
@@ -42,3 +45,29 @@ def get_spark(
         .config("spark.ui.enabled", "false")
     )
     return builder.getOrCreate()
+
+
+def checkpoint(df: DataFrame) -> tuple[DataFrame, list[int]]:
+    """Eager ``localCheckpoint`` of ``df`` plus the ids of the persistent
+    RDDs it created.  ``Dataset.unpersist()`` does not free a
+    localCheckpoint (checkpointing persists the internal RDD directly, not
+    through the cache manager), so hand the ids to :func:`release` once
+    nothing reads the checkpoint any more; until then its blocks stay in
+    executor storage memory."""
+    registry = df.sparkSession.sparkContext._jsc.getPersistentRDDs
+    before = set(registry().keySet().toArray())
+    out = df.localCheckpoint(eager=True)
+    return out, [rid for rid in registry().keySet().toArray() if rid not in before]
+
+
+def release(spark: SparkSession, rdd_ids) -> int:
+    """Unpersist the RDDs :func:`checkpoint` reported; returns how many
+    were still held.  A released checkpoint cannot be read again."""
+    registry = spark.sparkContext._jsc.getPersistentRDDs()
+    released = 0
+    for rid in rdd_ids:
+        rdd = registry.get(rid)
+        if rdd is not None:
+            rdd.unpersist(False)
+            released += 1
+    return released

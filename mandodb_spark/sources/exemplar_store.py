@@ -4,11 +4,10 @@ series, the Prometheus ``/api/v1/query_exemplars`` data source.
 
 The reference engine has no exemplar concept (tsdb.go stores float
 samples only); this is part of the engine's Prometheus-surface superset.
-Exemplars are tiny and write-heavy, so the store reuses the
-payload-agnostic sibling-store machinery of ``hist_store`` verbatim
-(seg-partitioned sorted zstd parquet, store-dedup for at-least-once
-replays, directory retention, targeted deletion): the payload is two
-columns — the exemplar's float ``value`` and its ``exemplar`` label map.
+The store is the float-sample store with a two-column payload — the
+exemplar's float ``value`` and its ``exemplar`` label map — so
+seg-partitioned sorted zstd parquet, store-dedup for at-least-once
+replays, retention and targeted deletion are ``SegmentStore``'s.
 
 Scale shape: identical to every other store — seg-partition pruning on
 the time range, pushable series matchers, and the per-series grouping is

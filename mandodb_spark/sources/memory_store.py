@@ -2,12 +2,16 @@
 
 The reference can pin everything in the head segment and never freeze it
 (tsdb.go:30,83-87; memory_segment.go:64-66).  The Spark analogue keeps the
-canonical relation as a cached in-memory DataFrame: each append unions the
-canonicalized batch and ``localCheckpoint``s eagerly, which both
+canonical relation as one checkpointed in-memory DataFrame: each append
+unions the canonicalized batch and ``localCheckpoint``s eagerly, which both
 materializes the data in executor memory and truncates lineage so repeated
-appends don't grow the plan.
+appends don't grow the plan.  The superseded checkpoint is released on
+every swap, so exactly one materialized copy lives in executor storage.
 
-Same interface as SegmentStore, so TSDB works over either.
+The same :class:`~.segment_store.SampleStore` contract as the disk store
+(payload as class data, declared schema with ``seg`` INT, one expiry
+rule), so TSDB works over either and ``MemoryHistStore`` /
+``MemoryExemplarStore`` only change the payload.
 """
 
 from __future__ import annotations
@@ -15,10 +19,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, canonicalize
+from ..model import DEFAULT_SEGMENT_DURATION
+from ..session import checkpoint, release
+from .segment_store import SampleStore, write_rollup_and_verify
 
 
-class MemoryStore:
+class MemoryStore(SampleStore):
     def __init__(
         self,
         spark: SparkSession,
@@ -27,7 +33,7 @@ class MemoryStore:
         self.spark = spark
         self.segment_duration = segment_duration
         self._df: DataFrame | None = None
-        self._rdd_ids: list[int] = []
+        self._held: list[int] = []
 
     # ---------------------------------------------------------------- write
     def append(
@@ -39,63 +45,38 @@ class MemoryStore:
         """Same duplicate-policy surface as ``SegmentStore.append``
         (multiset default / within-batch last-write-wins /
         first-write-wins vs the stored head)."""
-        from .segment_store import dedup_last_write
-
-        batch = canonicalize(rows, self.segment_duration)
-        if dedup_points:
-            batch = dedup_last_write(batch)
+        # seg INT, as the disk store's partition directories read back
+        batch = self._canonical(rows, dedup_points).withColumn(
+            "seg", F.col("seg").cast("int"))
         if dedup_against_store and self._df is not None:
             batch = batch.join(
                 self._df.select("seg", "series_key", "ts"),
                 ["seg", "series_key", "ts"],
                 "left_anti",
             )
-        merged = batch if self._df is None else self._df.unionByName(batch)
-        self._swap(merged)
+        self._swap(batch if self._df is None else self._df.unionByName(batch))
 
     def _swap(self, plan: DataFrame) -> None:
-        """Checkpoint ``plan`` as the new relation and release the superseded
-        checkpoint's executor memory.  ``Dataset.unpersist()`` does NOT free a
-        localCheckpoint (it clears cache-manager entries, while checkpointing
-        persists the internal RDD directly), so the store tracks the persisted
-        RDD ids it creates and unpersists them through the context registry —
-        only ONE materialized copy ever lives in executor storage memory."""
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        before = {rid for rid in registry.keySet().toArray()}
-        self._df = plan.localCheckpoint(eager=True)
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        fresh = [rid for rid in registry.keySet().toArray() if rid not in before]
-        for rid in self._rdd_ids:
-            old = registry.get(rid)
-            if old is not None:
-                old.unpersist(False)
-        self._rdd_ids = fresh
-
-    def insert_pylist(self, rows: list[tuple]) -> None:
-        self.append(self.spark.createDataFrame(rows, ROW_SCHEMA))
+        """Checkpoint ``plan`` as the new relation and release the
+        superseded checkpoint's executor memory."""
+        self._df, fresh = checkpoint(plan)
+        release(self.spark, self._held)
+        self._held = fresh
 
     # ----------------------------------------------------------------- read
     def relation(self) -> DataFrame:
         if self._df is not None:
             return self._df
-        return self.spark.createDataFrame([], ROW_SCHEMA).select(
-            "labels",
-            "ts",
-            "value",
-            F.lit(None).cast("long").alias("series_key"),
-            F.lit(None).cast("long").alias("seg"),
-        )
+        return self.spark.createDataFrame([], self.schema)
+
+    def _segments(self) -> list[int]:
+        if self._df is None:
+            return []
+        return sorted(r.seg for r in self._df.select("seg").distinct().collect())
 
     # ------------------------------------------------------------ retention
     def remove_expired(self, now_ts: int, retention: int) -> list[int]:
-        if self._df is None:
-            return []
-        cutoff = now_ts - retention
-        expired = sorted(
-            r.seg
-            for r in self._df.select("seg").distinct().collect()
-            if (r.seg + 1) * self.segment_duration - 1 < cutoff
-        )
+        expired = self._expired_segments(now_ts, retention)
         if expired:
             self._swap(self._df.filter(~F.col("seg").isin(expired)))
         return expired
@@ -108,17 +89,9 @@ class MemoryStore:
         ``dest_root`` BEFORE the expired segments leave the head; purge
         gated on the Σn coverage invariant), so ``TSDB.downsample_expire``
         works over either store."""
-        if self._df is None:
-            return []
-        cutoff = now_ts - retention
-        expired = sorted(
-            r.seg for r in self._df.select("seg").distinct().collect()
-            if (r.seg + 1) * self.segment_duration - 1 < cutoff
-        )
+        expired = self._expired_segments(now_ts, retention)
         if not expired:
             return []
-        from .segment_store import write_rollup_and_verify
-
         rel = self._df.filter(F.col("seg").isin(expired))
         write_rollup_and_verify(self.spark, rel, expired, step, dest_root)
         self._swap(self._df.filter(~F.col("seg").isin(expired)))
@@ -128,42 +101,20 @@ class MemoryStore:
         """Targeted series deletion, memory-mode form — same matcher
         language and return contract as ``SegmentStore.delete_series``;
         the "rewrite" is simply the next checkpointed head."""
-        from ..matchers import add_metric_name, matchers_predicate
-
-        lms = add_metric_name(metric, list(matchers))
-        if not lms:
-            raise ValueError("delete_series: need at least one matcher")
+        pred = self._deletion_predicate(matchers, metric)
         if self._df is None:
             return 0
         n_before = self._df.count()
-        self._swap(self._df.filter(~matchers_predicate(F.col("labels"), lms)))
+        self._swap(self._df.filter(~pred))
         return int(n_before - self._df.count())
 
     # ---------------------------------------------------------------- close
     def close(self) -> None:
         """Release the in-memory relation (executor storage memory)."""
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in self._rdd_ids:
-            rdd = registry.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-        self._rdd_ids = []
+        release(self.spark, self._held)
+        self._held = []
         self._df = None
 
     # ----------------------------------------------------------- compaction
     def compact(self) -> None:
         """No-op: memory rows have no file layout to restore."""
-
-    # ---------------------------------------------------------------- stats
-    def stats(self) -> DataFrame:
-        return (
-            self.relation()
-            .groupBy("seg")
-            .agg(
-                F.countDistinct("series_key").alias("series_count"),
-                F.count(F.lit(1)).alias("data_points_count"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-            )
-            .orderBy("seg")
-        )

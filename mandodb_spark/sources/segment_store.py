@@ -16,11 +16,14 @@ disk_segment.go, metadata.go, pkg/mmap) with a partitioned Parquet layout:
 - compression codec is a session conf (``zstd`` default), replacing
   BytesCompressor (compressor.go:22-81, S8).
 
-The schema is declared, not discovered: :data:`STORE_SCHEMA` is what every
-read gets, so building the relation opens no file footer and runs no Spark
-job.  Discovery only LISTS files — again on every read, because a stream
-adds files between reads — and :func:`fsck` is where a file's own schema
-is checked against the declaration.
+The sample type is class data (:class:`SampleStore`): ``PAYLOAD`` names
+the value columns, so the native-histogram and exemplar stores are this
+store with another payload, not copies of it.  The schema is declared,
+not discovered: :attr:`SampleStore.schema` (:data:`STORE_SCHEMA` for float
+samples) is what every read gets, so building the relation opens no file
+footer and runs no Spark job.  Discovery only LISTS files — again on every
+read, because a stream adds files between reads — and :func:`fsck` is
+where a file's own schema is checked against the declaration.
 
 Scale posture: segment discovery (tsdb.go:408-463, S5) is Spark's partition
 discovery; at 100 TB you'd put a metastore/Delta table over the same layout,
@@ -35,33 +38,28 @@ from __future__ import annotations
 import shutil
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    DoubleType,
-    IntegerType,
-    LongType,
-    MapType,
-    StringType,
-    StructField,
-    StructType,
-)
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, as_nullable, canonicalize
 
-#: The store as every read sees it: the canonical columns plus the ``seg``
-#: partition column.  ``seg`` is INT because that is what partition
-#: inference gives the written directories; every field is nullable, as
-#: Parquet reads back.
-STORE_SCHEMA = StructType(
-    [
-        StructField("labels", MapType(StringType(), StringType())),
-        StructField("ts", LongType()),
-        StructField("value", DoubleType()),
-        StructField("series_key", LongType()),
-        StructField("seg", IntegerType()),
-    ]
-)
+
+def _declared_schema(row_schema: StructType, payload: tuple) -> StructType:
+    """The store as every read sees it: the canonical columns ``(labels,
+    ts, *payload, series_key)`` plus the ``seg`` partition column.
+    ``seg`` is INT because that is what partition inference gives the
+    written directories; every field is nullable, as Parquet reads back."""
+    row = {f.name: f for f in row_schema.fields}
+    return as_nullable(StructType(
+        [row[c] for c in ("labels", "ts", *payload)]
+        + [StructField("series_key", LongType()), StructField("seg", IntegerType())]
+    ))
+
+
+#: The float-sample store's declared schema (:attr:`SampleStore.schema`
+#: for ``PAYLOAD = ("value",)``).
+STORE_SCHEMA = _declared_schema(ROW_SCHEMA, ("value",))
 
 
 def dedup_last_write(batch: DataFrame, order_col: str | None = None) -> DataFrame:
@@ -364,7 +362,79 @@ def write_rollup_and_verify(spark, rel, expired: list[int], step: int,
         )
 
 
-class SegmentStore:
+class SampleStore:
+    """The sample-store contract the disk (:class:`SegmentStore`) and
+    memory (``memory_store.MemoryStore``) stores share.  The sample type
+    is class data: ``PAYLOAD`` names the value columns and ``ROW_SCHEMA``
+    the ingest rows, so the native-histogram and exemplar stores are
+    subclasses that set those two attributes and nothing else."""
+
+    PAYLOAD: tuple = ("value",)
+    ROW_SCHEMA: StructType = ROW_SCHEMA
+
+    spark: SparkSession
+    segment_duration: int
+
+    @property
+    def schema(self) -> StructType:
+        """The declared read schema ``(labels, ts, *PAYLOAD, series_key,
+        seg)`` — :data:`STORE_SCHEMA` for float samples.  Every read of
+        the store, empty or populated, has it, so none opens a footer."""
+        return _declared_schema(self.ROW_SCHEMA, self.PAYLOAD)
+
+    def _canonical(self, rows: DataFrame, dedup_points: bool = False) -> DataFrame:
+        """An ingest batch in the storage shape (``dedup_points`` is the
+        float-only within-batch last-write-wins policy)."""
+        batch = canonicalize(rows, self.segment_duration, self.PAYLOAD)
+        return dedup_last_write(batch) if dedup_points else batch
+
+    def insert_pylist(self, rows: list[tuple]) -> None:
+        """Convenience for tests: ``ROW_SCHEMA`` tuples, e.g. (metric,
+        labels, ts, value) for float samples."""
+        self.append(self.spark.createDataFrame(rows, self.ROW_SCHEMA))
+
+    def _expired_segments(self, now_ts: int, retention: int) -> list[int]:
+        """Segment ids whose max possible ts — ``(seg+1)*duration - 1`` —
+        is older than ``now - retention`` (tsdb.go:384-406)."""
+        cutoff = now_ts - retention
+        return [
+            seg for seg in self._segments()
+            if (seg + 1) * self.segment_duration - 1 < cutoff
+        ]
+
+    @staticmethod
+    def _deletion_predicate(matchers: list, metric: str | None) -> Column:
+        """The ``labels`` predicate of :meth:`delete_series` (AND matcher
+        semantics); an empty matcher list is rejected — a full-store
+        delete should be explicit, not a matcher typo."""
+        from ..matchers import add_metric_name, matchers_predicate
+
+        lms = add_metric_name(metric, list(matchers))
+        if not lms:
+            raise ValueError("delete_series: need at least one matcher")
+        return matchers_predicate(F.col("labels"), lms)
+
+    def stats(self) -> DataFrame:
+        """Per-segment Desc stats (segment.go:31-36, A6).
+
+        ``seriesCount / dataPointsCount / minTs / maxTs`` per segment —
+        computed from data here; at scale these come free from Parquet
+        footers / table-format metadata.
+        """
+        return (
+            self.relation()
+            .groupBy("seg")
+            .agg(
+                F.countDistinct("series_key").alias("series_count"),
+                F.count(F.lit(1)).alias("data_points_count"),
+                F.min("ts").alias("min_ts"),
+                F.max("ts").alias("max_ts"),
+            )
+            .orderBy("seg")
+        )
+
+
+class SegmentStore(SampleStore):
     """Partitioned-Parquet segment store (replaces segmentList, segment.go:38-46)."""
 
     def __init__(
@@ -444,9 +514,7 @@ class SegmentStore:
         O(touched segments) — the same bounded-metadata class as the
         segment list.
         """
-        batch = canonicalize(rows, self.segment_duration)
-        if dedup_points:
-            batch = dedup_last_write(batch)
+        batch = self._canonical(rows, dedup_points)
         if dedup_against_store and Path(self.root).exists():
             segs = [r["seg"] for r in batch.select("seg").distinct().collect()]
             existing = (
@@ -482,23 +550,19 @@ class SegmentStore:
         )
         writer.partitionBy("seg").mode("append").parquet(self.root)
 
-    def insert_pylist(self, rows: list[tuple]) -> None:
-        """Convenience for tests: list of (metric, labels, ts, value) tuples."""
-        self.append(self.spark.createDataFrame(rows, ROW_SCHEMA))
-
     # ----------------------------------------------------------------- read
     def relation(self) -> DataFrame:
         """The full store as a DataFrame (lazy; S5/S6 ≙ partition discovery).
 
-        Read with :data:`STORE_SCHEMA`: Spark lists the files on every call
-        (a stream adds files between reads) but infers nothing, so the call
-        runs no job.  A root retention emptied reads as 0 rows; a store
-        never written returns the same empty relation, mirroring a fresh
-        TSDB.
+        Read with the declared :attr:`schema`: Spark lists the files on
+        every call (a stream adds files between reads) but infers nothing,
+        so the call runs no job.  A root retention emptied reads as 0
+        rows; a store never written returns the same empty relation,
+        mirroring a fresh TSDB.
         """
         if Path(self.root).exists():
-            return self.spark.read.schema(STORE_SCHEMA).parquet(self.root)
-        return self.spark.createDataFrame([], STORE_SCHEMA)
+            return self.spark.read.schema(self.schema).parquet(self.root)
+        return self.spark.createDataFrame([], self.schema)
 
     def segment_ids(self) -> list[int]:
         """Sorted segment ids from the partition DIRECTORY LISTING alone —
@@ -509,17 +573,10 @@ class SegmentStore:
         hit)."""
         return segment_ids(self.root)
 
-    # ------------------------------------------------------------ retention
-    def _expired_segments(self, now_ts: int, retention: int) -> list[int]:
-        """Segment ids whose max possible ts — ``(seg+1)*duration - 1`` —
-        is older than ``now - retention`` (tsdb.go:384-406), from the
-        partition directory listing alone."""
-        cutoff = now_ts - retention
-        return [
-            seg for seg in self.segment_ids()
-            if (seg + 1) * self.segment_duration - 1 < cutoff
-        ]
+    def _segments(self) -> list[int]:
+        return segment_ids(self.root)
 
+    # ------------------------------------------------------------ retention
     def remove_expired(self, now_ts: int, retention: int) -> list[int]:
         """Drop whole segments older than the retention window (S7/T5).
 
@@ -593,13 +650,8 @@ class SegmentStore:
         rejected (a full-store delete should be an explicit
         ``shutil.rmtree``, not a matcher typo).
         """
-        from ..matchers import add_metric_name, matchers_predicate
-
-        lms = add_metric_name(metric, list(matchers))
-        if not lms:
-            raise ValueError("delete_series: need at least one matcher")
+        pred = self._deletion_predicate(matchers, metric)
         rel = self.relation()
-        pred = matchers_predicate(F.col("labels"), lms)
         touched = [r["seg"] for r in
                    rel.filter(pred).select("seg").distinct().collect()]
         if not touched:
@@ -744,26 +796,6 @@ class SegmentStore:
         shutil.rmtree(staging_root, ignore_errors=True)
         shutil.rmtree(f"{self.root}__old", ignore_errors=True)
         return picked
-
-    # ---------------------------------------------------------------- stats
-    def stats(self) -> DataFrame:
-        """Per-segment Desc stats (segment.go:31-36, A6).
-
-        ``seriesCount / dataPointsCount / minTs / maxTs`` per segment —
-        computed from data here; at scale these come free from Parquet
-        footers / table-format metadata.
-        """
-        return (
-            self.relation()
-            .groupBy("seg")
-            .agg(
-                F.countDistinct("series_key").alias("series_count"),
-                F.count(F.lit(1)).alias("data_points_count"),
-                F.min("ts").alias("min_ts"),
-                F.max("ts").alias("max_ts"),
-            )
-            .orderBy("seg")
-        )
 
 
 def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:

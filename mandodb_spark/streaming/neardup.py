@@ -54,6 +54,7 @@ from ..operators.dedup import (
     _band_array,
     minhash_signatures,
 )
+from ..session import checkpoint, release
 
 
 def _shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -204,23 +205,6 @@ class NearDupGate:
         self.dropped_docs = 0
         self._held: list[int] = []  # prior batch's checkpoint RDD ids
 
-    def _ckpt(self, df: DataFrame) -> tuple[DataFrame, list[int]]:
-        """Eager localCheckpoint + the persisted RDD ids it created (the
-        connected_components release discipline — a long-running gate
-        must not leak one checkpoint block per micro-batch)."""
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        before = {rid for rid in registry.keySet().toArray()}
-        out = df.localCheckpoint(eager=True)
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        return out, [r for r in registry.keySet().toArray() if r not in before]
-
-    def _release(self, rdd_ids: list[int]) -> None:
-        registry = self.spark.sparkContext._jsc.getPersistentRDDs()
-        for rid in rdd_ids:
-            rdd = registry.get(rid)
-            if rdd is not None:
-                rdd.unpersist(False)
-
     def _state(self) -> DataFrame | None:
         p = Path(self.root)
         if not p.exists() or not any(p.rglob("*.parquet")):
@@ -273,7 +257,7 @@ class NearDupGate:
         bseq = -1 if batch_id is None else int(batch_id)
         # the PREVIOUS batch's kept-rows anti-join has been consumed by
         # now — release its checkpoint blocks before creating this one's
-        self._release(self._held)
+        release(self.spark, self._held)
         self._held = []
         n = self.n_hashes
         bands = signature_bands(df, id_col, text_col, n, self.n_bands).withColumn(
@@ -282,7 +266,7 @@ class NearDupGate:
         # the band table is batch-sized but referenced three times
         # (in-batch join both sides + state probe + state append) —
         # checkpoint so the shingle→signature pipeline runs ONCE
-        bands, bands_ids = self._ckpt(bands)
+        bands, bands_ids = checkpoint(bands)
 
         # in-batch: dropped iff a SMALLER id in this batch matches
         a = bands.select(
@@ -330,7 +314,7 @@ class NearDupGate:
             )
             dropped_in = dropped_in.unionByName(dropped_cross)
 
-        dropped_ids, dropped_ck = self._ckpt(dropped_in.distinct())
+        dropped_ids, dropped_ck = checkpoint(dropped_in.distinct())
         kept = df.join(F.broadcast(dropped_ids), id_col, "left_anti")
 
         # append the whole batch's band rows (kept AND dropped); a
@@ -349,7 +333,7 @@ class NearDupGate:
         self.dropped_docs += n_dropped
         # bands has no live consumers anymore; dropped_ids feeds the
         # returned `kept` plan — hold it until the next batch
-        self._release(bands_ids)
+        release(self.spark, bands_ids)
         self._held = dropped_ck
         return kept
 

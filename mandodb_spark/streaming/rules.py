@@ -250,6 +250,7 @@ class AlertRuleMaintainer:
         from pyspark.sql.window import Window as W
 
         from ..functions import promql
+        from ..functions.promql_parser import mark_runs
 
         self.batches += 1
         if self.batches % self.every != 0:
@@ -275,15 +276,7 @@ class AlertRuleMaintainer:
                          F.col("ts").cast("long").alias("ts"))
         act = act.withColumn(
             "__k", promql.canonical_labels_json(F.col("__lbl")))
-        w = W.partitionBy("__k").orderBy("ts")
-        runs = (
-            act.withColumn("__prev", F.lag("ts").over(w))
-            .withColumn("__new", F.when(
-                F.col("__prev").isNull()
-                | (F.col("ts") - F.col("__prev") > self.step), 1).otherwise(0))
-            .withColumn("__run", F.sum("__new").over(
-                w.rowsBetween(W.unboundedPreceding, 0)))
-        )
+        runs = mark_runs(act, self.step)
         rw = W.partitionBy("__k", "__run")
         runs = runs.withColumn("__rstart", F.min("ts").over(rw))
         carried = self._carried(first - self.step)

@@ -2974,8 +2974,8 @@ def x_tsdb_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
     into ts-sorted exemplar lists (group_exemplars, the
     /api/v1/query_exemplars layout).  The md5 over the trace chain pins
     the ORDER INSIDE each series' exemplar array, not just membership."""
+    from ..model import canonicalize
     from ..sources.exemplar_store import group_exemplars
-    from ..sources.hist_store import canonicalize_payload
     from .common import (
         EV_END,
         EV_START,
@@ -3006,7 +3006,7 @@ def x_tsdb_exemplars(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat(F.lit("t"), F.col("event_id").cast("string")),
         ).alias("exemplar"),
     )
-    g = group_exemplars(canonicalize_payload(rows, ("value", "exemplar"), SEG))
+    g = group_exemplars(canonicalize(rows, SEG, ("value", "exemplar")))
     chain = F.md5(F.array_join(
         F.transform(F.col("exemplars"), lambda e: e["labels"]["trace"]), ","))
     return g.select(

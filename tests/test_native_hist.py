@@ -516,6 +516,18 @@ def test_promql_range_top_level_hvector(grid_tsdb):
     assert out.count() == 3
 
 
+def test_promql_alerts_reads_native_histograms(grid_tsdb):
+    """An alerting rule over a native-histogram selector runs on the grid
+    promql_range answers for the same expression."""
+    q = "histogram_count(rate(lat[201s])) > 0"
+    ts = sorted(r["ts"] for r in grid_tsdb.promql_range(q, 1100, 1300, 100).collect())
+    runs = grid_tsdb.promql_alerts(q, 100, 1100, 1300, 100).collect()
+    assert len(ts) >= 2 and len(runs) == 1
+    r = runs[0]
+    assert (r["active_since"], r["last_active"], r["n_evals"]) == (ts[0], ts[-1], len(ts))
+    assert r["firing"] and r["firing_since"] == ts[0] + 100
+
+
 def test_promql_range_hist_fraction(grid_tsdb):
     out = grid_tsdb.promql_range(
         "histogram_fraction(3.0, 1e9, lat)", 1300, 1300, 100).collect()

@@ -3479,6 +3479,28 @@ def test_pagerank_undirected_symmetry_and_dedup(spark):
     assert sum(got.values()) == pytest.approx(1.0, abs=1e-5)
 
 
+def test_pagerank_and_k_core_hold_one_checkpoint_whatever_the_rounds(spark):
+    """Only the checkpoint backing the result outlives pagerank / k_core:
+    every earlier round's checkpoint is released, so the retained count
+    does not grow with ``n_iter`` or with the peel depth."""
+    from mandodb_spark.operators.graph import k_core, pagerank
+
+    sc = spark.sparkContext
+    persistent = lambda: set(sc._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    df = spark.createDataFrame([(0, 1), (1, 2), (2, 0), (2, 3)], "src long, dst long")
+    chain = spark.createDataFrame([(i, i + 1) for i in range(8)], "src long, dst long")
+    held = {}
+    for name, run in [("pagerank-2", lambda: pagerank(df, n_iter=2)),
+                      ("pagerank-8", lambda: pagerank(df, n_iter=8)),
+                      ("k_core-triangle", lambda: k_core(df, 2)),
+                      ("k_core-chain", lambda: k_core(chain, 2))]:
+        before = persistent()
+        run().collect()
+        held[name] = len(persistent() - before)
+    assert held == {"pagerank-2": 1, "pagerank-8": 1,
+                    "k_core-triangle": 1, "k_core-chain": 1}
+
+
 def test_pagerank_validations(spark):
     from mandodb_spark.operators.graph import pagerank
 

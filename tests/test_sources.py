@@ -891,8 +891,8 @@ def test_remote_write_schema_string_parses(spark):
 def test_remote_write_exemplars_round_trip(spark):
     """Exemplar rows → prompb TimeSeries.exemplars → rows is the identity
     (series labels incl __name__, ms timestamps, exemplar label lists)."""
+    from mandodb_spark.model import DEFAULT_SEGMENT_DURATION, canonicalize
     from mandodb_spark.sources.exemplar_store import EXEMPLAR_ROW_SCHEMA
-    from mandodb_spark.sources.hist_store import canonicalize_payload
     from mandodb_spark.sources.loaders import (
         exemplars_from_remote_write,
         exemplars_to_remote_write,
@@ -903,9 +903,9 @@ def test_remote_write_exemplars_round_trip(spark):
         ("lat", {"job": "api"}, 100, 6.0, {"trace_id": "d", "span_id": "s"}),
         ("lat", {"job": "db"}, 110, 2.5, {}),
     ]
-    rel = canonicalize_payload(
+    rel = canonicalize(
         spark.createDataFrame(rows, EXEMPLAR_ROW_SCHEMA),
-        ("value", "exemplar"))
+        DEFAULT_SEGMENT_DURATION, ("value", "exemplar"))
     wire = exemplars_to_remote_write(rel)
     per_series = {tuple((e["name"], e["value"]) for e in r["labels"]):
                   [(x["timestamp"], x["value"]) for x in r["exemplars"]]

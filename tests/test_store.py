@@ -772,6 +772,28 @@ def test_snapshot_restore_roundtrip(spark, tmp_path_factory):
     assert fsck(str(base / "live"))["ok"]
 
 
+def test_snapshot_restore_covers_sibling_stores(spark, tmp_path_factory):
+    """snapshot/restore carry the native-histogram and exemplar sibling
+    stores with the float store: writes after the snapshot are rolled back
+    in each, and a sibling the snapshot lacks is removed."""
+    hist = {"count": 1.0, "sum": 2.5, "zero_count": 0.0, "zero_threshold": 0.001,
+            "schema": 3, "pos": {11: 1.0}, "neg": {}}
+    base = tmp_path_factory.mktemp("restore_siblings")
+    db = TSDB(spark, str(base / "live"))
+    db.insert_rows([("m", {}, START, 1.0)])
+    db.insert_histograms([("h", {}, START, hist)])
+    linked = db.snapshot(str(base / "snap"))
+    db.insert_rows([("m", {}, START + 60, 2.0)])
+    db.insert_histograms([("h", {}, START + 60, hist)])
+    db.insert_exemplars([("m", {}, START + 60, 2.0, {"trace_id": "t"})])
+
+    assert db.restore(str(base / "snap")) == linked
+    assert db.store.relation().count() == 1
+    assert db.hist_store.relation().count() == 1
+    assert db.exemplar_store_if_exists().relation().count() == 0
+    assert not (base / "live__exemplars").exists()
+
+
 def test_relation_after_full_purge_is_empty_not_error(spark, tmp_path_factory):
     """Retention can purge EVERY segment: the root dir then exists but
     holds no seg partitions, and relation() must return the empty
