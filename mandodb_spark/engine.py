@@ -32,7 +32,7 @@ from .sources.exemplar_store import (
     group_exemplars,
 )
 from .sources.hist_store import HistStore, MemoryHistStore
-from .sources.segment_store import SegmentStore
+from .sources.segment_store import TIER_SCHEMA, SegmentStore
 
 #: The sample stores beside the float store, by kind: the directory
 #: suffix on the float store's root, then the disk and memory classes.
@@ -77,6 +77,8 @@ class TSDB:
             )
         self.segment_duration = segment_duration
         self.retention = retention
+        self._siblings: dict = {}  # kind -> sibling store, made on first use
+        self._hist_metric_cache: set[str] | None = None
 
     # ---------------------------------------------------------------- write
     def insert_rows(
@@ -253,9 +255,8 @@ class TSDB:
             # end_ms] iff ceil(start_ms/1000) <= s <= floor(end_ms/1000)
             start = -(-q["start_ms"] // 1000)
             end = q["end_ms"] // 1000
-            rel = self.store.relation()
-            rel = rel.filter(time_predicate(start, end, "seg" in rel.columns,
-                                            self.segment_duration))
+            rel = self.store.relation().filter(
+                time_predicate(start, end, self.segment_duration))
             filt = _matcher_filter(rel, None, q["matchers"])
             grouped = to_remote_write(filt.select("labels", "ts", "value"))
             rows = grouped.withColumn("_n", F.size("samples")).collect()
@@ -308,9 +309,8 @@ class TSDB:
                 prompb.decode_read_request(prompb.snappy_decompress(payload))):
             start = -(-q["start_ms"] // 1000)
             end = q["end_ms"] // 1000
-            rel = self.store.relation()
-            rel = rel.filter(time_predicate(start, end, "seg" in rel.columns,
-                                            self.segment_duration))
+            rel = self.store.relation().filter(
+                time_predicate(start, end, self.segment_duration))
             filt = _matcher_filter(rel, None, q["matchers"])
             grouped = prompb.xor_chunks_from_timeseries(
                 to_remote_write(filt.select("labels", "ts", "value")),
@@ -394,9 +394,8 @@ class TSDB:
         ast = promql_parser.parse(query)
         lo, _ = promql_parser.time_window(ast, start, lookback)
         hi = max(int(end), promql_parser.time_window(ast, end, lookback)[1])
-        rel = self.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
+        pruned = self.store.relation().filter(
+            tsdb_ops.time_predicate(lo, hi, self.segment_duration))
         return ast, pruned, self._pruned_hist_rel(lo, hi)
 
     def _hist_metric_names(self) -> "set[str] | None":
@@ -410,7 +409,7 @@ class TSDB:
         store = self.hist_store_if_exists()
         if store is None:
             return None
-        cached = getattr(self, "_hist_metric_cache", None)
+        cached = self._hist_metric_cache
         if cached is None:
             from .model import METRIC_NAME_LABEL
 
@@ -431,9 +430,8 @@ class TSDB:
         store = self.hist_store_if_exists()
         if store is None:
             return None
-        rel = store.relation()
-        return rel.filter(tsdb_ops.time_predicate(
-            lo, hi, "seg" in rel.columns, self.segment_duration))
+        return store.relation().filter(
+            tsdb_ops.time_predicate(lo, hi, self.segment_duration))
 
     def promql_range(self, query: str, start: int, end: int, step: int,
                      lookback: int = 300) -> DataFrame:
@@ -556,17 +554,12 @@ class TSDB:
     # ----------------------------------------------------------- maintenance
     def remove_expires(self, now_ts: int | None = None) -> list[int]:
         """Retention purge (tsdb.go:384-406); returns dropped segment ids.
-        The native-histogram and exemplar sibling stores, if written, are
-        purged under the same cutoff (its segments share the id space) —
-        including stores written by a PREVIOUS process (disk probe, not
-        just the lazily-materialized handle)."""
+        The native-histogram and exemplar sibling stores are purged under
+        the same cutoff (their segments share the id space) — including
+        stores written by a PREVIOUS process (see :meth:`_stores`)."""
         now = int(time.time()) if now_ts is None else now_ts
-        dropped = self.store.remove_expired(now, self.retention)
-        for kind in _SIBLINGS:
-            sibling = self._sibling(kind, create=False)
-            if sibling is not None:
-                sibling.remove_expired(now, self.retention)
-        return dropped
+        dropped = [store.remove_expired(now, self.retention) for store in self._stores()]
+        return dropped[0]  # the float store's
 
     def hist_store_if_exists(self):
         """The native-histogram sibling store IFF one holds data — the
@@ -585,19 +578,27 @@ class TSDB:
         routing, streaming rule recovery)."""
         from pathlib import Path
 
-        store = getattr(self, f"_{kind}_store", None)
-        if store is not None:
-            return store
-        suffix, disk, memory = _SIBLINGS[kind]
-        root = getattr(self.store, "root", None)
-        if not create and (root is None or not Path(root + suffix).exists()):
-            return None
-        if root is None:
-            store = memory(self.spark, self.segment_duration)
-        else:
-            store = disk(self.spark, root + suffix, self.segment_duration)
-        setattr(self, f"_{kind}_store", store)
+        store = self._siblings.get(kind)
+        if store is None:
+            root = self.store.root
+            if not create and (root is None or not Path(root + _SIBLINGS[kind][0]).exists()):
+                return None
+            store = self._siblings[kind] = self._sibling_handle(kind)
         return store
+
+    def _sibling_handle(self, kind: str):
+        """A new handle on the ``kind`` sibling store, written or not."""
+        suffix, disk, memory = _SIBLINGS[kind]
+        if self.store.root is None:
+            return memory(self.spark, self.segment_duration)
+        return disk(self.spark, self.store.root + suffix, self.segment_duration)
+
+    def _stores(self) -> list:
+        """The float store, then every sibling store — its handle when
+        made, else a new one, so a maintenance pass also reaches a sibling
+        a previous process wrote, and its crashed-swap leftovers."""
+        return [self.store, *(self._siblings.get(kind) or self._sibling_handle(kind)
+                              for kind in _SIBLINGS)]
 
     def downsample_expire(self, step: int, dest_root: str,
                           now_ts: int | None = None) -> list[int]:
@@ -629,11 +630,9 @@ class TSDB:
         from pathlib import Path as _P
 
         rollup = (
-            self.spark.read.parquet(rollup_root)
+            self.spark.read.schema(TIER_SCHEMA).parquet(rollup_root)
             if _P(rollup_root).exists()
-            else self.spark.createDataFrame(
-                [], "series_key long, labels map<string,string>, bucket_ts long, "
-                    "n long, sum double, min double, max double, seg long")
+            else self.spark.createDataFrame([], TIER_SCHEMA)
         )
         return tsdb_ops.query_range_buckets_tiered(
             self.store.relation(), rollup, metric, matchers or [],
@@ -652,7 +651,8 @@ class TSDB:
 
         ``min_files_per_segment=N`` = selective size-tiered mode: only
         segments fragmented into >= N files are rewritten (see
-        :meth:`SegmentStore.compact`).  Returns compacted segment ids."""
+        :meth:`SegmentStore.compact`); a memory store has no files and
+        compacts nothing.  Returns compacted segment ids."""
         return self.store.compact(min_files_per_segment)
 
     def alert_intervals(self, condition, for_duration: int, max_gap: int,
@@ -745,7 +745,7 @@ class TSDB:
 
         from .sources.segment_store import snapshot as _snap
 
-        root = getattr(self.store, "root", None)
+        root = self.store.root
         if root is None:
             raise ValueError("memory-only TSDB has no on-disk store to snapshot")
         n = _snap(root, dest)
@@ -766,7 +766,7 @@ class TSDB:
 
         from .sources.segment_store import restore as _restore
 
-        root = getattr(self.store, "root", None)
+        root = self.store.root
         if root is None:
             raise ValueError("memory-only TSDB has no on-disk store to restore")
         n = _restore(snapshot_root, root)
@@ -782,28 +782,27 @@ class TSDB:
 
     def fsck(self) -> dict:
         """Storage integrity report (the reference's loadFiles startup
-        validation, tsdb.go:408-463, on demand): corrupt footers, footer
-        schemas that differ from the declared one, leftover swap dirs,
-        ts-stats-vs-segment-bounds violations.  Footer-only,
-        O(files).  Memory-only stores have no files — trivially ok."""
-        from .sources.segment_store import fsck as _fsck
-
-        root = getattr(self.store, "root", None)
-        if root is None:
-            return {"segments": [], "corrupt": [], "schema_mismatch": [],
-                    "orphans": [], "ok": True}
-        return _fsck(root, self.store.segment_duration)
+        validation, tsdb.go:408-463, on demand) over the float store and
+        its siblings: corrupt footers, footer schemas that differ from the
+        store's declared one, leftover swap dirs, ts-stats-vs-segment-
+        bounds violations (see :meth:`SegmentStore.fsck`).  Each list
+        covers every store, and ``ok`` holds only if it holds for each.
+        Footer-only, O(files).  Memory-only stores have no files —
+        trivially ok."""
+        reports = [store.fsck() for store in self._stores()]
+        merged = {key: [x for r in reports for x in r[key]]
+                  for key in ("segments", "corrupt", "schema_mismatch", "orphans")}
+        return {**merged, "ok": all(r["ok"] for r in reports)}
 
     def vacuum(self, dry_run: bool = True) -> dict:
-        """Reclaim the recovery-garbage trees fsck flags as orphans
-        (``sources.segment_store.vacuum``) — corrupt files are never
-        auto-deleted.  Memory-only stores: nothing to do."""
-        from .sources.segment_store import vacuum as _vac
-
-        root = getattr(self.store, "root", None)
-        if root is None:
-            return {"removed": [], "freed_bytes": 0, "dry_run": dry_run}
-        return _vac(root, dry_run)
+        """Reclaim the recovery-garbage trees fsck flags as orphans, for
+        the float store and its siblings (see :meth:`SegmentStore.vacuum`)
+        — corrupt files are never auto-deleted.  Memory-only stores:
+        nothing to do."""
+        reports = [store.vacuum(dry_run) for store in self._stores()]
+        return {"removed": [p for r in reports for p in r["removed"]],
+                "freed_bytes": sum(r["freed_bytes"] for r in reports),
+                "dry_run": dry_run}
 
     def materialize_rollup(self, dest: str, step: int = 21600,
                            incremental: bool = False,
@@ -1193,8 +1192,5 @@ class TSDB:
         released if present.  Disk-backed stores hold nothing between
         calls; the method exists so reference code ports 1:1.
         """
-        for store in (self.store,
-                      *(getattr(self, f"_{kind}_store", None) for kind in _SIBLINGS)):
-            release = getattr(store, "close", None)
-            if release is not None:
-                release()
+        for store in (self.store, *self._siblings.values()):
+            store.close()

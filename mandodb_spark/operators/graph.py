@@ -171,12 +171,13 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         edges.filter(a != b)
         .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .distinct()
-        # und feeds three consumers (deg, withdeg, n_edges) and oriented
-        # feeds two — checkpoint so the upstream edge pipeline (often a
-        # full LSH candidate generation) runs ONCE, same constant-depth
-        # rule as pagerank/connected_components
+        # und feeds two consumers (deg, withdeg) and oriented five —
+        # checkpoint so the upstream edge pipeline (often a full LSH
+        # candidate generation) runs ONCE, same constant-depth rule as
+        # pagerank/connected_components
     )
-    und = note_iteration(und, "triangle:und").localCheckpoint(eager=True)
+    spark = edges.sparkSession
+    und, und_ids = checkpoint(note_iteration(und, "triangle:und"))
     deg = (
         und.select(F.col("a").alias("n")).unionAll(und.select(F.col("b").alias("n")))
         .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
@@ -195,7 +196,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         F.when(lower_first, F.col("db")).otherwise(F.col("da")).alias("dv"),
         F.when(lower_first, F.col("b")).otherwise(F.col("a")).alias("v"),
     )
-    oriented = note_iteration(oriented, "triangle:oriented").localCheckpoint(eager=True)
+    # oriented holds every canonical edge once, so it also gives the node
+    # and edge counts, and its checkpoint alone backs the result
+    oriented, _ = checkpoint(note_iteration(oriented, "triangle:oriented"))
+    release(spark, und_ids)
     o1 = oriented.select("u", F.col("dv").alias("d1"), F.col("v").alias("v1"))
     o2 = oriented.select("u", F.col("dv").alias("d2"), F.col("v").alias("v2"))
     wedges = o1.join(o2, "u").filter(
@@ -207,8 +211,10 @@ def triangle_count(edges: DataFrame, src: str = "src", dst: str = "dst") -> Data
         ["v1", "v2"],
     )
     tri = closed.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    nn = deg.agg(F.count(F.lit(1)).cast("long").alias("n_nodes"))
-    ne = und.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
+    nn = (oriented.select(F.col("u").alias("n"))
+          .unionByName(oriented.select(F.col("v").alias("n"))).distinct()
+          .agg(F.count(F.lit(1)).cast("long").alias("n_nodes")))
+    ne = oriented.agg(F.count(F.lit(1)).cast("long").alias("n_edges"))
     return nn.crossJoin(F.broadcast(ne)).crossJoin(F.broadcast(tri))
 
 
@@ -257,6 +263,13 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     Output: ``(node, degree)`` for k-core members (degree within the
     core).  Empty when no k-core exists.
     """
+    return _k_core(edges, k, src, dst, max_rounds)[0]
+
+
+def _k_core(edges: DataFrame, k: int, src: str, dst: str,
+            max_rounds: int) -> tuple[DataFrame, list[int]]:
+    """:func:`k_core` plus the ids of the one checkpoint its result reads,
+    for a caller that releases them once done with the core."""
     if k < 1:
         raise ValueError("k must be >= 1")
     a, b = F.col(src), F.col(dst)
@@ -276,7 +289,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
         weak = deg.filter(F.col("deg") < k).select("s")
         if weak.isEmpty():
             return deg.select(F.col("s").alias("node"),
-                              F.col("deg").cast("long").alias("degree"))
+                              F.col("deg").cast("long").alias("degree")), held
         nxt = (
             e.join(F.broadcast(weak), "s", "left_anti")
             .join(F.broadcast(weak.withColumnRenamed("s", "d")), "d", "left_anti")
@@ -286,7 +299,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
         held = nxt_ids
         if e.isEmpty():
             return e.select(F.col("s").alias("node"),
-                            F.lit(0).cast("long").alias("degree")).limit(0)
+                            F.lit(0).cast("long").alias("degree")).limit(0), held
     release(spark, held)
     raise RuntimeError(f"k_core: no fixpoint within {max_rounds} rounds")
 
@@ -355,24 +368,30 @@ def coreness(edges: DataFrame, src: str = "src", dst: str = "dst",
         .select(F.least(a, b).alias("a"), F.greatest(a, b).alias("b"))
         .distinct()
     )
-    und = note_iteration(und, "coreness:und").localCheckpoint(eager=True)
+    spark = edges.sparkSession
+    und, und_ids = checkpoint(note_iteration(und, "coreness:und"))
     nodes = (
         und.select(F.col("a").alias("node"))
         .unionByName(und.select(F.col("b").alias("node")))
         .distinct()
     )
-    out = nodes.withColumn("coreness", F.lit(1).cast("long"))
+    # `held` backs `out` once a rung has checkpointed it; until then `out`
+    # reads und's checkpoint, which is then the one that outlives the call
+    out, held = nodes.withColumn("coreness", F.lit(1).cast("long")), []
     pair_edges = und.select(F.col("a").alias(src), F.col("b").alias(dst))
     for k in range(2, max_k + 1):
-        core = k_core(pair_edges, k, src=src, dst=dst)
+        core, core_ids = _k_core(pair_edges, k, src, dst, max_rounds=100)
         if core.isEmpty():
+            release(spark, core_ids + (und_ids if held else []))
             return out
-        out = (
+        out, out_ids = checkpoint(note_iteration(
             out.join(core.select(F.col("node"), F.lit(k).alias("__k")),
                      "node", "left")
             .select("node",
                     F.coalesce(F.col("__k"), F.col("coreness"))
-                    .cast("long").alias("coreness"))
-        )
-        out = note_iteration(out, "coreness:rung").localCheckpoint(eager=True)
+                    .cast("long").alias("coreness")),
+            "coreness:rung"))
+        release(spark, core_ids + held)
+        held = out_ids
+    release(spark, und_ids + held)
     raise RuntimeError(f"coreness: graph has a core beyond max_k={max_k}")

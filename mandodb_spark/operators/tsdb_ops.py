@@ -1,7 +1,7 @@
 """The reference's three query operators as pure DataFrame transforms.
 
 Each takes a canonical relation (``labels MAP<STRING,STRING>, ts LONG,
-value DOUBLE`` + optional ``series_key``/``seg``) and returns a DataFrame —
+value DOUBLE`` + ``series_key``/``seg``) and returns a DataFrame —
 no driver-side state, no collect, no UDFs; every stage is a Catalyst-planned
 expression so the same code runs on local[32] or a 1000-executor cluster.
 
@@ -32,22 +32,19 @@ LABEL_DIM_SCHEMA = StructType(
 )
 
 
-def time_predicate(start: int, end: int, has_seg: bool, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> Column:
+def time_predicate(start: int, end: int, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> Column:
     """Inclusive time-range predicate ``start <= ts <= end`` (F1/F9).
 
-    When the relation carries the ``seg`` partition column, an equivalent
-    predicate on ``seg`` is ANDed in so Catalyst's
+    Every canonical relation carries the ``seg`` partition column, so an
+    equivalent predicate on ``seg`` is ANDed in and Catalyst's
     ``PruneFileSourcePartitions`` prunes whole segment directories — the
     DataFrame form of ``segmentList.Get`` (segment.go:48-69).  Row-group
     skipping via Parquet ts min/max stats replaces the reference's
     early-exit scan (series.go:48-50).
     """
-    pred = F.col("ts").between(F.lit(start), F.lit(end))
-    if has_seg:
-        pred = (
-            F.col("seg").between(F.lit(start // segment_duration), F.lit(end // segment_duration)) & pred
-        )
-    return pred
+    return (F.col("seg").between(F.lit(start // segment_duration),
+                                 F.lit(end // segment_duration))
+            & F.col("ts").between(F.lit(start), F.lit(end)))
 
 
 def label_values_dim(df: DataFrame) -> DataFrame:
@@ -198,10 +195,9 @@ def _filtered(
     the join shuffle-free).
     """
     lms = add_metric_name(metric, matchers)
-    has_seg = "seg" in df.columns
     inline = [m for m in lms if not (regex_via_dim and m.is_regex and not m.is_present)]
     out = df.filter(
-        time_predicate(start, end, has_seg, segment_duration)
+        time_predicate(start, end, segment_duration)
         & matchers_predicate(F.col("labels"), inline)
     )
     if regex_via_dim:
@@ -545,16 +541,13 @@ def query_range_buckets_tiered(
         )
         .select("series_key", "labels", "bucket_ts", "n", "sum", "min", "max")
     )
-    has_seg = "seg" in rollup.columns
-    roll_pred = F.col("bucket_ts").between(F.lit(b0), F.lit(b1))
-    if has_seg:
-        # a rollup row's seg comes from its POINTS: ts ∈ [bucket_ts,
-        # bucket_ts + step), so the admissible seg range for buckets in
-        # [b0, b1] is [b0 // duration, (b1 + step - 1) // duration]
-        roll_pred = roll_pred & F.col("seg").between(
-            F.lit(b0 // segment_duration),
-            F.lit((b1 + step - 1) // segment_duration),
-        )
+    # a rollup row's seg comes from its POINTS: ts ∈ [bucket_ts,
+    # bucket_ts + step), so the admissible seg range for buckets in
+    # [b0, b1] is [b0 // duration, (b1 + step - 1) // duration]
+    roll_pred = F.col("bucket_ts").between(F.lit(b0), F.lit(b1)) & F.col("seg").between(
+        F.lit(b0 // segment_duration),
+        F.lit((b1 + step - 1) // segment_duration),
+    )
     roll_part = (
         rollup.filter(roll_pred & matchers_predicate(F.col("labels"), lms))
         .select("series_key", "labels", "bucket_ts", "n", "sum", "min", "max")

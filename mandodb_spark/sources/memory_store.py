@@ -10,7 +10,8 @@ every swap, so exactly one materialized copy lives in executor storage.
 
 The same :class:`~.segment_store.SampleStore` contract as the disk store
 (payload as class data, declared schema with ``seg`` INT, one expiry
-rule), so TSDB works over either and ``MemoryHistStore`` /
+rule, ``segment_ids``/``max_ts``, and the fileless ``fsck``/``vacuum``
+with ``root`` None), so TSDB works over either and ``MemoryHistStore`` /
 ``MemoryExemplarStore`` only change the payload.
 """
 
@@ -69,7 +70,10 @@ class MemoryStore(SampleStore):
             return self._df
         return self.spark.createDataFrame([], self.schema)
 
-    def _segments(self) -> list[int]:
+    def segment_ids(self) -> list[int]:
+        """Sorted ids of the segments the held relation spans: one distinct
+        collect, run by the rare callers (expiry, rule recovery) instead
+        of a job per ``append``."""
         if self._df is None:
             return []
         return sorted(r.seg for r in self._df.select("seg").distinct().collect())
@@ -116,5 +120,7 @@ class MemoryStore(SampleStore):
         self._df = None
 
     # ----------------------------------------------------------- compaction
-    def compact(self) -> None:
-        """No-op: memory rows have no file layout to restore."""
+    def compact(self, min_files_per_segment: int | None = None) -> list[int]:
+        """No-op: memory rows have no file layout to restore, so no segment
+        is compacted."""
+        return []

@@ -22,8 +22,15 @@ store with another payload, not copies of it.  The schema is declared,
 not discovered: :attr:`SampleStore.schema` (:data:`STORE_SCHEMA` for float
 samples) is what every read gets, so building the relation opens no file
 footer and runs no Spark job.  Discovery only LISTS files — again on every
-read, because a stream adds files between reads — and :func:`fsck` is
-where a file's own schema is checked against the declaration.
+read, because a stream adds files between reads — and
+:meth:`SegmentStore.fsck` is where a file's own schema is checked against
+the store's declaration.
+
+Every store answers the same protocol itself — ``append``, ``relation``,
+``segment_ids``, ``max_ts``, retention, ``delete_series``, ``compact``,
+``fsck``, ``vacuum`` and ``close`` — so callers never ask a store what it
+can do; a memory store's file operations are the fileless defaults of
+:class:`SampleStore`.
 
 Scale posture: segment discovery (tsdb.go:408-463, S5) is Spark's partition
 discovery; at 100 TB you'd put a metastore/Delta table over the same layout,
@@ -40,7 +47,8 @@ from pathlib import Path
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import IntegerType, LongType, StructField, StructType
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, as_nullable, canonicalize
 
@@ -225,6 +233,12 @@ def refresh_aggregate(rel: DataFrame, dest: str, build, *, step: int = 1,
     overwrite mode is a per-write option (ADVICE r5), never a session
     conf a concurrent writer could inherit.  Either way the result equals
     a full build over the same relation.
+
+    The purge tier's :func:`write_rollup_and_verify` is deliberately a
+    separate protocol: it writes ``(seg, gen)`` content-hash partitions
+    that keep every expiry generation beside the others, and it gates
+    the raw purge on Σn, neither of which a watermark refresh of
+    ``seg`` partitions can express.
     """
     refresh = incremental or since_seg is not None
     if refresh and step % segment_duration and segment_duration % step:
@@ -249,6 +263,17 @@ def refresh_aggregate(rel: DataFrame, dest: str, build, *, step: int = 1,
         .mode("overwrite")
         .parquet(dest)
     )
+
+
+#: The purge tier as every read sees it: :func:`mergeable_rollup`'s
+#: columns plus the ``(seg, gen)`` partition columns that
+#: :func:`write_rollup_and_verify` writes (``seg`` INT, as partition
+#: inference reads it; ``gen`` is a content-hash string).
+TIER_SCHEMA = as_nullable(StructType([
+    StructField("series_key", LongType()), ROW_SCHEMA["labels"],
+    *(StructField(c, LongType()) for c in ("bucket_ts", "n")),
+    *(StructField(c, DoubleType()) for c in ("sum", "min", "max")),
+    StructField("seg", IntegerType()), StructField("gen", StringType())]))
 
 
 def mergeable_rollup(rel, step: int):
@@ -351,7 +376,7 @@ def write_rollup_and_verify(spark, rel, expired: list[int], step: int,
         w = w.option("compression", codec)
     w.partitionBy("seg", "gen").parquet(dest_root)
     rolled = (
-        spark.read.parquet(dest_root)
+        spark.read.schema(TIER_SCHEMA).parquet(dest_root)
         .filter(F.col("seg").isin(expired) & F.col("gen").isin(list(gens.values())))
         .agg(F.coalesce(F.sum("n"), F.lit(0))).collect()[0][0]
     )
@@ -367,13 +392,18 @@ class SampleStore:
     memory (``memory_store.MemoryStore``) stores share.  The sample type
     is class data: ``PAYLOAD`` names the value columns and ``ROW_SCHEMA``
     the ingest rows, so the native-histogram and exemplar stores are
-    subclasses that set those two attributes and nothing else."""
+    subclasses that set those two attributes and nothing else.
+
+    The file operations default to a store without files (``root`` None):
+    an ok :meth:`fsck`, an empty :meth:`vacuum` and a no-op :meth:`close`;
+    :class:`SegmentStore` overrides the first two."""
 
     PAYLOAD: tuple = ("value",)
     ROW_SCHEMA: StructType = ROW_SCHEMA
 
     spark: SparkSession
     segment_duration: int
+    root: str | None = None
 
     @property
     def schema(self) -> StructType:
@@ -398,9 +428,42 @@ class SampleStore:
         is older than ``now - retention`` (tsdb.go:384-406)."""
         cutoff = now_ts - retention
         return [
-            seg for seg in self._segments()
+            seg for seg in self.segment_ids()
             if (seg + 1) * self.segment_duration - 1 < cutoff
         ]
+
+    def max_ts(self, pred: Column) -> int | None:
+        """Largest ``ts`` of the rows matching ``pred``, or None: the rule
+        maintainers' restart recovery (the store IS their state).  A
+        ``labels`` predicate prunes nothing, but the newest segment holding
+        a match holds the max, so segments are probed newest-first, one
+        partition-pruned scan each, up to the first hit — a continuously
+        maintained rule is found in the newest one."""
+        rel = self.relation()
+        for seg in reversed(self.segment_ids()):
+            m = self._max_ts_probe(rel, pred, seg).collect()[0]["m"]
+            if m is not None:
+                return int(m)
+        return None
+
+    @staticmethod
+    def _max_ts_probe(rel: DataFrame, pred: Column, seg: int) -> DataFrame:
+        """One :meth:`max_ts` probe: max matching ``ts`` within ONE
+        segment partition."""
+        return (rel.filter(F.col("seg") == int(seg)).filter(pred)
+                .agg(F.max("ts").alias("m")))
+
+    def fsck(self) -> dict:
+        """The integrity report of a store without files: nothing to check."""
+        return {"segments": [], "corrupt": [], "schema_mismatch": [],
+                "orphans": [], "ok": True}
+
+    def vacuum(self, dry_run: bool = True) -> dict:
+        """The vacuum report of a store without files: nothing to remove."""
+        return {"removed": [], "freed_bytes": 0, "dry_run": dry_run}
+
+    def close(self) -> None:
+        """Release what the store holds between calls (nothing by default)."""
 
     @staticmethod
     def _deletion_predicate(matchers: list, metric: str | None) -> Column:
@@ -565,15 +628,8 @@ class SegmentStore(SampleStore):
         return self.spark.createDataFrame([], self.schema)
 
     def segment_ids(self) -> list[int]:
-        """Sorted segment ids from the partition DIRECTORY LISTING alone —
-        metadata-only segment discovery (S5, segment.go:17-29), no data
-        scan.  Newest-first iteration over this list is the store's
-        "probe the head first" primitive (e.g. recording-rule restart
-        recovery probes segments newest-first and stops at the first
-        hit)."""
-        return segment_ids(self.root)
-
-    def _segments(self) -> list[int]:
+        """Sorted segment ids from the partition DIRECTORY LISTING alone
+        (:func:`segment_ids`), no data scan."""
         return segment_ids(self.root)
 
     # ------------------------------------------------------------ retention
@@ -797,57 +853,55 @@ class SegmentStore(SampleStore):
         shutil.rmtree(f"{self.root}__old", ignore_errors=True)
         return picked
 
+    # ---------------------------------------------------------- integrity
+    def _orphans(self) -> list[str]:
+        """The crashed-swap leftovers beside the root (see :meth:`fsck`)."""
+        return [f"{self.root}{suffix}" for suffix in ("__old", "__compact", "__rebuild")
+                if Path(f"{self.root}{suffix}").exists()]
 
-def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
-    """Store integrity check — the startup validation the reference does in
-    ``loadFiles`` (tsdb.go:408-463: walk ``seg-*`` dirs, open each data
-    file, parse each ``meta.json``, surface failures) re-expressed over the
-    Parquet layout.  Pure footer-metadata work: every file's Parquet footer
-    is opened (reads declare :data:`STORE_SCHEMA` and never do) and its
-    columns, row count and ``ts`` min/max statistics checked against the
-    declaration and the segment's time bounds — no data pages are read,
-    so cost is O(files), not O(rows).
+    def fsck(self) -> dict:
+        """Store integrity check — the startup validation the reference does
+        in ``loadFiles`` (tsdb.go:408-463: walk ``seg-*`` dirs, open each
+        data file, parse each ``meta.json``, surface failures) re-expressed
+        over the Parquet layout.  Pure footer-metadata work: every file's
+        Parquet footer is opened (reads declare :attr:`schema` and never
+        do) and its columns, row count and ``ts`` min/max statistics
+        checked against the declaration and the segment's time bounds — no
+        data pages are read, so cost is O(files), not O(rows).
 
-    Returns ``{"segments": [{seg, files, rows, min_ts, max_ts,
-    out_of_bounds}], "corrupt": [path], "schema_mismatch": [path],
-    "orphans": [path], "ok": bool}``:
+        Returns ``{"segments": [{root, seg, files, rows, min_ts, max_ts,
+        out_of_bounds}], "corrupt": [path], "schema_mismatch": [path],
+        "orphans": [path], "ok": bool}``:
 
-    - ``corrupt`` — files whose footer cannot be read (truncated/partial
-      writes that escaped the atomic-rename discipline, e.g. a kill -9
-      mid-copy of an external restore);
-    - ``schema_mismatch`` — files whose footer columns or types differ
-      from :data:`STORE_SCHEMA` (less its ``seg`` directory column).
-      Reads use the declared schema and open no footer, so a dropped-in
-      file missing ``series_key`` would otherwise read back as nulls
-      without any error;
-    - ``out_of_bounds`` — rows whose ts stats fall outside
-      ``[seg*duration, (seg+1)*duration)`` (a mis-partitioned writer —
-      impossible through :meth:`SegmentStore.append`, catchable when
-      files are dropped in by hand);
-    - ``orphans`` — leftover ``__old`` / ``__compact`` / ``__rebuild``
-      siblings (recovery garbage from a crashed swap; safe to delete,
-      flagged so the cleanup is a decision, not a surprise).
-    """
-    from pathlib import Path as _P
+        - ``corrupt`` — files whose footer cannot be read (truncated/partial
+          writes that escaped the atomic-rename discipline, e.g. a kill -9
+          mid-copy of an external restore);
+        - ``schema_mismatch`` — files whose footer columns or types differ
+          from :attr:`schema` (less its ``seg`` directory column).  Reads
+          use the declared schema and open no footer, so a dropped-in file
+          missing ``series_key`` would otherwise read back as nulls
+          without any error;
+        - ``out_of_bounds`` — rows whose ts stats fall outside
+          ``[seg*duration, (seg+1)*duration)`` (a mis-partitioned writer —
+          impossible through :meth:`append`, catchable when files are
+          dropped in by hand);
+        - ``orphans`` — leftover ``__old`` / ``__compact`` / ``__rebuild``
+          siblings (recovery garbage from a crashed swap; safe to delete,
+          flagged so the cleanup is a decision, not a surprise).
+        """
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import from_arrow_type
 
-    import pyarrow.parquet as _pq
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    expected = {f.name: f.dataType for f in STORE_SCHEMA.fields if f.name != "seg"}
-    report: dict = {"segments": [], "corrupt": [], "schema_mismatch": [],
-                    "orphans": []}
-    rootp = _P(root)
-    for suffix in ("__old", "__compact", "__rebuild"):
-        if _P(f"{root}{suffix}").exists():
-            report["orphans"].append(f"{root}{suffix}")
-    if rootp.exists():
-        for segdir in sorted(rootp.glob("seg=*")):
-            seg = int(segdir.name.split("=", 1)[1])
-            lo, hi = seg * segment_duration, (seg + 1) * segment_duration - 1
+        expected = {f.name: f.dataType for f in self.schema.fields if f.name != "seg"}
+        report: dict = {"segments": [], "corrupt": [], "schema_mismatch": [],
+                        "orphans": self._orphans()}
+        for seg in self.segment_ids():
+            segdir = Path(self.root) / f"seg={seg}"
+            lo, hi = seg * self.segment_duration, (seg + 1) * self.segment_duration - 1
             rows, tmin, tmax, nfiles = 0, None, None, 0
             for f in sorted(segdir.glob("*.parquet")):
                 try:
-                    pf = _pq.ParquetFile(str(f))
+                    pf = pq.ParquetFile(str(f))
                     md = pf.metadata
                 except Exception:
                     report["corrupt"].append(str(f))
@@ -861,67 +915,42 @@ def fsck(root: str, segment_duration: int = DEFAULT_SEGMENT_DURATION) -> dict:
                     report["schema_mismatch"].append(str(f))
                 nfiles += 1
                 rows += md.num_rows
-                names = [
-                    md.row_group(0).column(i).path_in_schema
-                    for i in range(md.row_group(0).num_columns)
-                ] if md.num_row_groups else []
-                if "ts" in names:
-                    ti = names.index("ts")
-                    for g in range(md.num_row_groups):
-                        st = md.row_group(g).column(ti).statistics
-                        if st is None:
-                            continue
+                names = [md.schema.column(i).path for i in range(md.num_columns)]
+                for g in range(md.num_row_groups if "ts" in names else 0):
+                    st = md.row_group(g).column(names.index("ts")).statistics
+                    if st is not None:
                         tmin = st.min if tmin is None else min(tmin, st.min)
                         tmax = st.max if tmax is None else max(tmax, st.max)
-            report["segments"].append(
-                {
-                    "seg": seg,
-                    "files": nfiles,
-                    "rows": rows,
-                    "min_ts": tmin,
-                    "max_ts": tmax,
-                    "out_of_bounds": (
-                        tmin is not None and (tmin < lo or tmax > hi)
-                    ),
-                }
-            )
-    report["ok"] = (
-        not report["corrupt"]
-        and not report["schema_mismatch"]
-        and not report["orphans"]
-        and not any(s["out_of_bounds"] for s in report["segments"])
-    )
-    return report
+            report["segments"].append({
+                "root": self.root, "seg": seg, "files": nfiles, "rows": rows,
+                "min_ts": tmin, "max_ts": tmax,
+                "out_of_bounds": tmin is not None and (tmin < lo or tmax > hi)})
+        report["ok"] = not (report["corrupt"] or report["schema_mismatch"]
+                            or report["orphans"]
+                            or any(s["out_of_bounds"] for s in report["segments"]))
+        return report
 
+    def vacuum(self, dry_run: bool = True) -> dict:
+        """Reclaim recovery garbage that :meth:`fsck` flags as ``orphans``
+        — the ``__old`` / ``__compact`` / ``__rebuild`` sibling trees a
+        crashed atomic swap leaves behind (plus selective-compact's
+        displaced trees, which live OUTSIDE the root by design and are
+        covered by their own cleanup).  Deliberately narrow: corrupt data
+        files are REPORTED by fsck but never auto-deleted — garbage trees
+        are provably reconstruction residue (the live root superseded them
+        at swap time), while a corrupt file inside the root is potential
+        data whose deletion must be a human decision.
 
-def vacuum(root: str, dry_run: bool = True) -> dict:
-    """Reclaim recovery garbage that :func:`fsck` flags as ``orphans`` —
-    the ``__old`` / ``__compact`` / ``__rebuild`` sibling trees a crashed
-    atomic swap leaves behind (plus selective-compact's displaced trees,
-    which live OUTSIDE the root by design and are covered by their own
-    cleanup).  Deliberately narrow: corrupt data files are REPORTED by
-    fsck but never auto-deleted — garbage trees are provably
-    reconstruction residue (the live root superseded them at swap
-    time), while a corrupt file inside the root is potential data whose
-    deletion must be a human decision.
-
-    ``dry_run=True`` (default) only reports.  Returns ``{"removed":
-    [paths], "freed_bytes": n, "dry_run": bool}``.
-    """
-    import shutil
-    from pathlib import Path as _P
-
-    targets = [
-        f"{root}{suffix}" for suffix in ("__old", "__compact", "__rebuild")
-        if _P(f"{root}{suffix}").exists()
-    ]
-    freed = 0
-    for t in targets:
-        freed += sum(f.stat().st_size for f in _P(t).rglob("*") if f.is_file())
-    if not dry_run:
-        for t in targets:
-            shutil.rmtree(t)
-    return {"removed": targets, "freed_bytes": freed, "dry_run": dry_run}
+        ``dry_run=True`` (default) only reports.  Returns ``{"removed":
+        [paths], "freed_bytes": n, "dry_run": bool}``.
+        """
+        targets = self._orphans()
+        freed = sum(f.stat().st_size for t in targets
+                    for f in Path(t).rglob("*") if f.is_file())
+        if not dry_run:
+            for t in targets:
+                shutil.rmtree(t)
+        return {"removed": targets, "freed_bytes": freed, "dry_run": dry_run}
 
 
 def _link_tree(src: Path, dst: Path) -> int:
@@ -950,7 +979,7 @@ def snapshot(root: str, dest: str) -> int:
     between jobs is crash-consistent and stays frozen while the live tree
     moves on.
 
-    Validate with :func:`fsck`; restore with :func:`restore`.  The
+    Validate with :meth:`SegmentStore.fsck`; restore with :func:`restore`.  The
     object-store analogue is a manifest copy.  Returns the linked file
     count.  Refuses an existing non-empty ``dest``."""
     src, dst = Path(root), Path(dest)

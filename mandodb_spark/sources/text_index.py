@@ -245,7 +245,7 @@ class TextIndex:
         self.spark.catalog.refreshByPath(self._doclen)
 
     def fsck(self) -> dict:
-        """Integrity audit (VectorIndex.fsck / segment_store.fsck
+        """Integrity audit (VectorIndex.fsck / SegmentStore.fsck
         convention): recompute what the stored stats CLAIM from the
         doclen relation, check every posting row's bucket matches its
         term's hash, and find postings for unknown doc ids.  Returns

@@ -415,7 +415,7 @@ class VectorIndex:
 
     def fsck(self) -> dict:
         """Index integrity audit (the ANN analogue of
-        :func:`segment_store.fsck`): footer-readability of every cell
+        :meth:`SegmentStore.fsck`): footer-readability of every cell
         file (O(files) metadata), leftover swap/staging dirs, and — when a
         PQ sidecar is attached — id-set consistency between the float tree
         and the codes tree (an interrupted ``append`` that committed one

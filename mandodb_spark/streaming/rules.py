@@ -63,51 +63,18 @@ class RecordingRuleMaintainer:
     # ------------------------------------------------------------ state
     def _recover_hwm(self) -> int | None:
         """The recorded series' own max timestamp — restart recovery
-        without sidecar state (the store IS the state).
-
-        A plain ``labels['__name__'] == rule`` filter over the whole
-        relation is a MapType predicate that prunes NOTHING — a full-store
-        scan per restart at 100 TB (the r8 verdict's watch item).  Instead:
-        segments partition the timeline, so the NEWEST segment containing
-        any of the rule's rows holds their global max ts — probe segments
-        newest-first (each probe is one partition-pruned scan) and stop at
-        the first hit.  A continuously-maintained rule lands in the newest
-        segment, so a restart typically reads ONE segment.  Stores
-        without segment listing (memory mode) keep the direct aggregate —
-        they are in-memory by definition.
-        """
-        recovered = [self._recover_from(self.db.store)]
-        # a HISTOGRAM-valued rule records into the sibling hist store —
-        # probe it too when one exists (same newest-first discipline);
-        # exactly one of the two holds the rule's rows
-        hist = self.db.hist_store_if_exists()
-        if hist is not None:
-            recovered.append(self._recover_from(hist))
-        found = [r for r in recovered if r is not None]
-        return max(found) if found else None
-
-    def _recover_from(self, store) -> int | None:
+        without sidecar state (the store IS the state): ``max_ts``'s
+        newest-first segment probes, so a restart typically reads ONE
+        segment.  A HISTOGRAM-valued rule records into the sibling hist
+        store, which is probed too when one exists; exactly one of the
+        two holds the rule's rows."""
         from ..model import METRIC_NAME_LABEL
 
-        rel = store.relation()
         pred = F.col("labels").getItem(METRIC_NAME_LABEL) == self.rule_name
-        seg_ids = getattr(store, "segment_ids", None)
-        segs = sorted(seg_ids(), reverse=True) if callable(seg_ids) else None
-        if segs and "seg" in rel.columns:
-            for seg in segs:
-                row = self._seg_probe(rel, pred, seg).collect()[0]
-                if row["m"] is not None:
-                    return int(row["m"])
-            return None
-        row = rel.filter(pred).agg(F.max("ts").alias("m")).collect()[0]
-        return int(row["m"]) if row["m"] is not None else None
-
-    @staticmethod
-    def _seg_probe(rel: DataFrame, pred, seg: int) -> DataFrame:
-        """One recovery probe: max rule ts within ONE segment partition
-        (plan-asserted partition-pruned by test_streaming)."""
-        return (rel.filter(F.col("seg") == int(seg)).filter(pred)
-                .agg(F.max("ts").alias("m")))
+        stores = [s for s in (self.db.store, self.db.hist_store_if_exists())
+                  if s is not None]
+        found = [m for m in (s.max_ts(pred) for s in stores) if m is not None]
+        return max(found) if found else None
 
     # ------------------------------------------------------------- hook
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -202,27 +169,13 @@ class AlertRuleMaintainer:
             base, F.create_map(F.lit("alertname"), F.lit(self.alert_name)))
 
     def _recover_hwm(self) -> int | None:
-        """Max recorded ``ALERTS_FOR_STATE{alertname=...}`` timestamp via
-        the same newest-first partition-pruned segment probes as
-        :meth:`RecordingRuleMaintainer._recover_hwm`."""
+        """Max recorded ``ALERTS_FOR_STATE{alertname=...}`` timestamp, by
+        the store's newest-first segment probes (``max_ts``)."""
         from ..model import METRIC_NAME_LABEL
 
-        store = self.db.store
-        rel = store.relation()
-        pred = (
+        return self.db.store.max_ts(
             (F.col("labels").getItem(METRIC_NAME_LABEL) == "ALERTS_FOR_STATE")
             & (F.col("labels").getItem("alertname") == self.alert_name))
-        seg_ids = getattr(store, "segment_ids", None)
-        segs = sorted(seg_ids(), reverse=True) if callable(seg_ids) else None
-        if segs and "seg" in rel.columns:
-            for seg in segs:
-                row = RecordingRuleMaintainer._seg_probe(
-                    rel, pred, seg).collect()[0]
-                if row["m"] is not None:
-                    return int(row["m"])
-            return None
-        row = rel.filter(pred).agg(F.max("ts").alias("m")).collect()[0]
-        return int(row["m"]) if row["m"] is not None else None
 
     def _carried(self, at_ts: int) -> DataFrame:
         """ALERTS_FOR_STATE rows at exactly the previous eval point —
@@ -232,9 +185,8 @@ class AlertRuleMaintainer:
         from ..model import METRIC_NAME_LABEL
         from ..operators import tsdb_ops
 
-        rel = self.db.store.relation()
-        pruned = rel.filter(tsdb_ops.time_predicate(
-            at_ts, at_ts, "seg" in rel.columns, self.db.segment_duration))
+        pruned = self.db.store.relation().filter(
+            tsdb_ops.time_predicate(at_ts, at_ts, self.db.segment_duration))
         rows = pruned.filter(
             (F.col("ts") == int(at_ts))
             & (F.col("labels").getItem(METRIC_NAME_LABEL) == "ALERTS_FOR_STATE")

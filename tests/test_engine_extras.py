@@ -429,6 +429,8 @@ def test_tsdb_fsck_surface(spark, tmp_path_factory):
     mem = TSDB(spark, None, only_memory=True)
     mem.insert_rows([("m", {"a": "1"}, 1_700_000_000, 1.0)])
     assert mem.fsck()["ok"] and mem.fsck()["segments"] == []
+    assert mem.vacuum() == {"removed": [], "freed_bytes": 0, "dry_run": True}
+    assert mem.compact() == [] and mem.compact(2) == []
 
 
 def test_alert_intervals_for_duration_and_gap_semantics(spark):
@@ -826,11 +828,11 @@ def test_close_releases_sibling_memory_stores(spark):
                             "zero_threshold": 0.001, "schema": 3,
                             "pos": {11: 1.0}, "neg": {}})])
     db.insert_exemplars([("m", {}, 100, 1.0, {"trace_id": "t"})])
-    assert db._hist_store._df is not None
-    assert db._exemplar_store._df is not None
+    assert db.hist_store._df is not None
+    assert db.exemplar_store._df is not None
     db.close()
-    assert db._hist_store._df is None
-    assert db._exemplar_store._df is None
+    assert db.hist_store._df is None
+    assert db.exemplar_store._df is None
 
 
 def test_federate_round_trips_instant_vector(spark):

@@ -3501,6 +3501,36 @@ def test_pagerank_and_k_core_hold_one_checkpoint_whatever_the_rounds(spark):
                     "k_core-triangle": 1, "k_core-chain": 1}
 
 
+#: A 3-clique with a tail and a 5-clique: coreness peels them over two
+#: and four rungs, each rung a multi-round k_core.
+_GRAPHS = {
+    "clique3-tail": [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4)],
+    "clique5": [(i, j) for i in range(5) for j in range(i + 1, 5)],
+}
+
+
+@pytest.mark.parametrize("op,graph", [
+    *[("coreness", g) for g in _GRAPHS], ("triangle_count", "clique5"),
+])
+def test_graph_operators_retain_at_most_one_checkpoint(spark, op, graph):
+    """coreness (through k_core's checkpoint ids) and triangle_count
+    release every intermediate checkpoint: a call leaves at most the one
+    behind its result, as pagerank and k_core do above."""
+    from mandodb_spark.operators import graph as g
+
+    sc = spark.sparkContext
+    persistent = lambda: set(sc._jsc.getPersistentRDDs().keySet())  # noqa: E731
+    df = spark.createDataFrame(_GRAPHS[graph], "src long, dst long")
+    before = persistent()
+    out = sorted(tuple(r) for r in getattr(g, op)(df).collect())
+    assert len(persistent() - before) <= 1
+    assert out == {
+        ("coreness", "clique3-tail"): [(0, 2), (1, 2), (2, 2), (3, 1), (4, 1)],
+        ("coreness", "clique5"): [(i, 4) for i in range(5)],
+        ("triangle_count", "clique5"): [(5, 10, 10)],
+    }[(op, graph)]
+
+
 def test_pagerank_validations(spark):
     from mandodb_spark.operators.graph import pagerank
 

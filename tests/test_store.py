@@ -355,14 +355,14 @@ def test_fsck_clean_corrupt_and_orphan_detection(spark, tmp_path_factory):
     """fsck mirrors the reference's loadFiles startup validation
     (tsdb.go:408-463) over the Parquet layout: footer-only (no data pages),
     flags truncated files, leftover swap dirs, and out-of-bounds ts stats."""
-    from mandodb_spark.sources.segment_store import SegmentStore, fsck
+    from mandodb_spark.sources.segment_store import SegmentStore
 
     path = str(tmp_path_factory.mktemp("store") / "f")
     store = SegmentStore(spark, path)
     store.insert_pylist(
         [("m", {"x": str(i % 3)}, START + i * 1800, float(i)) for i in range(12)]
     )
-    rep = fsck(path)
+    rep = store.fsck()
     assert rep["ok"] and not rep["corrupt"] and not rep["orphans"]
     assert sum(s["rows"] for s in rep["segments"]) == 12
     assert all(not s["out_of_bounds"] for s in rep["segments"])
@@ -371,7 +371,7 @@ def test_fsck_clean_corrupt_and_orphan_detection(spark, tmp_path_factory):
     victim = next(Path(path).glob("seg=*/*.parquet"))
     victim.write_bytes(victim.read_bytes()[: victim.stat().st_size // 2])
     (Path(f"{path}__compact")).mkdir()
-    rep2 = fsck(path)
+    rep2 = store.fsck()
     assert not rep2["ok"]
     assert [str(victim)] == rep2["corrupt"]
     assert rep2["orphans"] == [f"{path}__compact"]
@@ -381,7 +381,7 @@ def test_snapshot_is_instant_frozen_and_fsck_clean(spark, tmp_path_factory):
     """Hardlink snapshot: zero-copy, reads identically, stays frozen while
     the live store compacts and expires segments, and fsck passes on both
     trees.  Restore = snapshot back over a fresh root."""
-    from mandodb_spark.sources.segment_store import fsck, snapshot
+    from mandodb_spark.sources.segment_store import SegmentStore, snapshot
 
     base = tmp_path_factory.mktemp("snap")
     path = str(base / "live")
@@ -396,7 +396,7 @@ def test_snapshot_is_instant_frozen_and_fsck_clean(spark, tmp_path_factory):
     assert sorted(p.name for p in Path(snap).rglob("*.parquet")) == sorted(
         p.name for p in Path(path).rglob("*.parquet")
     )
-    assert fsck(snap)["ok"]
+    assert SegmentStore(spark, snap).fsck()["ok"]
 
     # live tree mutates: compaction rewrites files, retention drops segments
     db.compact()
@@ -411,7 +411,7 @@ def test_snapshot_is_instant_frozen_and_fsck_clean(spark, tmp_path_factory):
         for r in spark.read.parquet(snap).filter("labels['__name__'] = 'm'").collect()
     )
     assert snap_rows == before
-    assert fsck(snap)["ok"]
+    assert SegmentStore(spark, snap).fsck()["ok"]
 
     # restore into a fresh root and query through the engine again
     restored = str(base / "restored")
@@ -532,8 +532,6 @@ def test_vacuum_removes_only_orphan_trees(spark, tmp_path_factory):
     from pathlib import Path
 
     from mandodb_spark import TSDB
-    from mandodb_spark.sources.segment_store import fsck, vacuum
-
     root = str(tmp_path_factory.mktemp("vac") / "s")
     db = TSDB(spark, root)
     db.insert_rows([("m", {"n": "a"}, 1_700_000_000 + i, float(i))
@@ -548,10 +546,10 @@ def test_vacuum_removes_only_orphan_trees(spark, tmp_path_factory):
     corrupt = seg / "part-corrupt.parquet"
     corrupt.write_bytes(b"not a parquet file")
 
-    rep = fsck(root, db.store.segment_duration)
+    rep = db.store.fsck()
     assert str(old) in rep["orphans"] and str(corrupt) in rep["corrupt"]
 
-    dry = vacuum(root)
+    dry = db.store.vacuum()
     assert dry["dry_run"] and dry["removed"] == [str(old)]
     assert dry["freed_bytes"] >= 1024 and old.exists()
 
@@ -562,6 +560,39 @@ def test_vacuum_removes_only_orphan_trees(spark, tmp_path_factory):
     assert rep2["orphans"] == [] and str(corrupt) in rep2["corrupt"]
     corrupt.unlink()
     assert db.query_range("m", [], 0, 2**40).count() == n_before
+
+
+def test_fsck_and_vacuum_cover_sibling_stores(spark, tmp_path_factory):
+    """The facade's fsck and vacuum walk the histogram and exemplar roots
+    as well as the float one: a corrupt file in ``<root>__hist`` and a
+    crashed swap's ``<root>__exemplars__old`` tree are both reported, and
+    vacuum removes only the orphan tree."""
+    root = str(tmp_path_factory.mktemp("vacsib") / "s")
+    db = TSDB(spark, root)
+    db.insert_rows([("m", {"n": "a"}, START, 1.0)])
+    db.insert_histograms([("h", {"n": "a"}, START, {
+        "count": 1.0, "sum": 2.5, "zero_count": 0.0, "zero_threshold": 0.001,
+        "schema": 3, "pos": {11: 1.0}, "neg": {}})])
+    assert db.fsck()["ok"]
+
+    corrupt = next(Path(f"{root}__hist").glob("seg=*")) / "part-corrupt.parquet"
+    corrupt.write_bytes(b"not a parquet file")
+    old = Path(f"{root}__exemplars__old") / "seg=0"
+    old.mkdir(parents=True)
+    (old / "part-junk.parquet").write_bytes(b"x" * 1024)
+    rep = db.fsck()
+    assert not rep["ok"]
+    assert rep["corrupt"] == [str(corrupt)]
+    assert rep["orphans"] == [f"{root}__exemplars__old"]
+    assert sorted((s["root"], s["rows"], s["min_ts"], s["max_ts"], s["out_of_bounds"])
+                  for s in rep["segments"]) == [(root, 1, START, START, False),
+                                                (f"{root}__hist", 1, START, START, False)]
+
+    wet = db.vacuum(dry_run=False)
+    assert wet["removed"] == [f"{root}__exemplars__old"]
+    assert wet["freed_bytes"] == 1024
+    assert not old.parent.exists() and corrupt.exists()
+    assert db.fsck()["orphans"] == []
 
 
 def test_downsample_expire_tiered_retention(spark, tmp_path_factory):
@@ -747,8 +778,6 @@ def test_snapshot_restore_roundtrip(spark, tmp_path_factory):
     """restore() returns the store to the snapshotted state atomically:
     post-snapshot mutations (GDPR delete + new appends) are rolled back,
     fsck passes, and queries read the restored data."""
-    from mandodb_spark.sources.segment_store import fsck
-
     base = tmp_path_factory.mktemp("restore")
     db = TSDB(spark, str(base / "live"), segment_duration=2 * 3600)
     rows = [("m", {"u": chr(97 + i % 2)}, START + i * 3600, float(i))
@@ -769,7 +798,7 @@ def test_snapshot_restore_roundtrip(spark, tmp_path_factory):
     after = sorted((r["ts"], r["value"]) for r in
                    db.query_range_rows("m", [], 0, 10**12).collect())
     assert after == before
-    assert fsck(str(base / "live"))["ok"]
+    assert db.store.fsck()["ok"]
 
 
 def test_snapshot_restore_covers_sibling_stores(spark, tmp_path_factory):
@@ -836,11 +865,12 @@ def _jobs_run_by(spark, fn) -> int:
 def test_declared_schemas_equal_what_the_writers_leave(spark, tmp_path_factory):
     """Reads declare their schema instead of inferring it, so each
     declaration must equal what inference returns over a written root:
-    the segment store, the label dim and the histogram/exemplar stores."""
+    the segment store, the label dim, the histogram/exemplar stores and
+    the purge tier."""
     from mandodb_spark.operators.tsdb_ops import LABEL_DIM_SCHEMA
     from mandodb_spark.sources.exemplar_store import ExemplarStore
     from mandodb_spark.sources.hist_store import HistStore
-    from mandodb_spark.sources.segment_store import STORE_SCHEMA
+    from mandodb_spark.sources.segment_store import STORE_SCHEMA, TIER_SCHEMA
 
     base = tmp_path_factory.mktemp("declared")
     db = TSDB(spark, str(base / "s"))
@@ -858,6 +888,13 @@ def test_declared_schemas_equal_what_the_writers_leave(spark, tmp_path_factory):
     ex.insert_pylist([("m", {"x": "1"}, START, 1.0, {"trace_id": "t"})])
     assert ex.schema == spark.read.parquet(str(base / "e")).schema
     assert hist.relation().count() == 1 and ex.relation().count() == 1
+
+    tiered = TSDB(spark, str(base / "t"))
+    tiered.insert_rows([("m", {"x": "1"}, START, 1.0), ("m", {"x": "1"}, START + 60, 3.0)])
+    assert tiered.downsample_expire(3600, str(base / "tier"), now_ts=START + 10**7)
+    assert TIER_SCHEMA == spark.read.parquet(str(base / "tier")).schema
+    assert [(r.n, r.sum) for r in tiered.query_range_buckets_tiered(
+        "m", [], START, START, 3600, str(base / "tier")).collect()] == [(2, 4.0)]
 
 
 def test_empty_purged_and_populated_stores_share_one_schema(spark, tmp_path_factory):
@@ -955,12 +992,10 @@ def test_fsck_flags_a_file_whose_schema_differs(spark, tmp_path_factory):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from mandodb_spark.sources.segment_store import fsck
-
     path = str(tmp_path_factory.mktemp("fsckschema") / "s")
     db = TSDB(spark, path)
     db.insert_rows([("m", {"x": "1"}, START, 1.0)])
-    rep = fsck(path)
+    rep = db.store.fsck()
     assert rep["ok"] and rep["schema_mismatch"] == []
 
     segdir = next(Path(path).glob("seg=*"))
@@ -970,10 +1005,10 @@ def test_fsck_flags_a_file_whose_schema_differs(spark, tmp_path_factory):
     wrong_type = segdir / "dropped-wrong-type.parquet"
     pq.write_table(pa.table({"labels": labels, "ts": [START + 2], "value": ["2.0"],
                              "series_key": [7]}), wrong_type)
-    rep = fsck(path)
+    rep = db.store.fsck()
     assert not rep["ok"] and rep["corrupt"] == []
     assert sorted(rep["schema_mismatch"]) == sorted([str(no_key), str(wrong_type)])
     pq.write_table(pa.table({"labels": labels, "ts": [START + 2], "value": [2.0],
                              "series_key": [7]}), wrong_type)
-    assert fsck(path)["schema_mismatch"] == [str(no_key)]
+    assert db.store.fsck()["schema_mismatch"] == [str(no_key)]
     assert db.store.relation().where("series_key IS NULL").count() == 1

@@ -5,7 +5,10 @@ all of them alike."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
+from pyspark.sql import functions as F
 
 from mandodb_spark import LabelMatcher
 from mandodb_spark.model import as_nullable
@@ -52,16 +55,45 @@ def test_store_contract(spark, tmp_path, kind, mode):
             assert len(persistent() - before) <= 1
         return rel
 
+    def app(name):
+        return F.col("labels").getItem("app") == name
+
     # declared schema, never written: seg INT, as partition inference reads it
     assert store.schema["seg"].dataType.simpleString() == "int"
     assert (store.schema == STORE_SCHEMA) == (kind == "float")
     assert check_schema().count() == 0
+    assert store.segment_ids() == [] and store.max_ts(app("x")) is None
+    assert store.root is None if mode == "memory" else store.root == str(tmp_path / "s")
 
     # x lives alone in segment S0+2; y alone in S0+4; both share S0
     store.insert_pylist(_rows(kind, [("x", T0 + 10, 1.0), ("y", T0 + 20, 2.0),
                                      ("x", T0 + 2 * SEG + 10, 3.0),
                                      ("y", T0 + 4 * SEG + 10, 4.0)]))
     assert check_schema().count() == 4
+    assert store.segment_ids() == sorted(
+        r.seg for r in store.relation().select("seg").distinct().collect()
+    ) == [S0, S0 + 2, S0 + 4]
+    # x's newest segment is S0+2: the newest segment S0+4 (y only) misses
+    assert store.max_ts(app("x")) == T0 + 2 * SEG + 10
+    assert store.max_ts(app("nobody")) is None
+
+    # the file operations: a healthy store is ok, a disk store names a
+    # crashed swap's leftover tree, compaction keeps every row
+    assert store.fsck()["ok"]
+    if mode == "disk":
+        orphan = Path(f"{store.root}__old") / f"seg={S0}"
+        orphan.mkdir(parents=True)
+        (orphan / "part-0.parquet").write_bytes(b"x" * 64)
+        assert not store.fsck()["ok"]
+        assert store.vacuum() == {"removed": [f"{store.root}__old"],
+                                  "freed_bytes": 64, "dry_run": True}
+        store.vacuum(dry_run=False)
+        assert store.fsck()["ok"]
+    assert store.vacuum() == {"removed": [], "freed_bytes": 0, "dry_run": True}
+    rows = sorted(store.relation().collect(), key=lambda r: r.ts)
+    compacted = store.compact(1)
+    assert compacted == ([] if mode == "memory" else [S0, S0 + 2, S0 + 4])
+    assert sorted(check_schema().collect(), key=lambda r: r.ts) == rows
 
     # a replayed (series, ts) is dropped, a new one lands
     store.append(

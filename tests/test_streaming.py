@@ -1714,7 +1714,7 @@ def test_recover_hwm_pruned_newest_first(spark, tmp_path_factory):
     # the probe the recovery loop runs is partition-pruned to ONE segment
     rel = db.store.relation()
     pred = F.col("labels").getItem(METRIC_NAME_LABEL) == "rule:x"
-    plan = physical_plan(RecordingRuleMaintainer._seg_probe(rel, pred, 2))
+    plan = physical_plan(db.store._max_ts_probe(rel, pred, 2))
     assert "PartitionFilters" in plan
     assert "seg" in plan.split("PartitionFilters", 1)[1][:200]
 
