@@ -237,6 +237,7 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
 
+    from mandodb_spark.operators.dedup import release_minhash_checkpoints
     from mandodb_spark.session import get_spark
     from mandodb_spark.workloads import QUERIES
 
@@ -278,6 +279,8 @@ def main() -> None:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 dt = time.time() - t0
                 best = dt if best is None else min(best, dt)
+            # each run's minhash/jaccard checkpoints back only that run
+            release_minhash_checkpoints(spark)
             timings[name] = round(best, 3)
             total += best
             print(f"# {name}: {best:.2f}s ({n} rows)", file=sys.stderr)

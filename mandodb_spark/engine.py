@@ -482,8 +482,7 @@ class TSDB:
         import os
 
         if os.path.exists(rollup_dest):
-            rollup = pp._matcher_filter(
-                self.spark.read.parquet(rollup_dest), name, matchers)
+            rollup = pp._matcher_filter(self.rollup_relation(rollup_dest), name, matchers)
         vec = P.grid_over_time_tiered(
             raw, rollup, fn, start, end, w, step, rollup_step, cutover_ts
         ).select("labels", "ts",
@@ -844,7 +843,7 @@ class TSDB:
 
     def rollup_relation(self, dest: str) -> DataFrame:
         """Read back a materialized rollup (partition-pruned on seg)."""
-        return self.spark.read.parquet(dest)
+        return self.spark.read.schema(tsdb_ops.ROLLUP_SCHEMA).parquet(dest)
 
     def query_range_tiered(
         self,
@@ -988,10 +987,11 @@ class TSDB:
         """Per-series quantile estimate for [start, end] from a
         materialized value histogram — seg predicates prune rollup
         partitions before any bucket is read."""
-        from .operators.histogram import histogram_quantile_over
+        from .operators.histogram import VALUE_HIST_SCHEMA, histogram_quantile_over
 
         lo, hi = start // self.segment_duration, end // self.segment_duration
-        hist = self.rollup_relation(dest).filter(F.col("seg").between(lo, hi))
+        hist = self.spark.read.schema(VALUE_HIST_SCHEMA).parquet(dest).filter(
+            F.col("seg").between(lo, hi))
         labels = hist.groupBy("series_key").agg(
             F.any_value("labels").alias("labels")
         )
@@ -1172,7 +1172,9 @@ class TSDB:
 
     def nh_rollup_relation(self, dest: str) -> DataFrame:
         """Read back a materialized histogram rollup (seg-pruned scans)."""
-        return self.spark.read.parquet(dest)
+        from .functions.native_hist import HIST_ROLLUP_SCHEMA
+
+        return self.spark.read.schema(HIST_ROLLUP_SCHEMA).parquet(dest)
 
     def delete_hist_series(self, matchers: list[LabelMatcher],
                            metric: str | None = None) -> int:

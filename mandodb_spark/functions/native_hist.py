@@ -59,7 +59,7 @@ from ..model import (
     seg_bucket,
     series_key,
 )
-from ..sources.segment_store import refresh_aggregate
+from ..sources.segment_store import declared_schema, refresh_aggregate
 
 #: One native-histogram sample (exposition-format fields).
 HIST_STRUCT = StructType(
@@ -1319,6 +1319,11 @@ def hist_merge_partials(rel: DataFrame) -> DataFrame:
         "labels",
         F.map_filter(F.col("labels"), lambda k, _: k != F.lit(BATCH_LABEL)))
     return hist_sum_by(rel, None, group_ts=True)
+
+
+#: A materialized native-histogram rollup as every read sees it: the
+#: histogram store's own columns, ``seg`` INT.
+HIST_ROLLUP_SCHEMA = declared_schema(HIST_ROW_SCHEMA, ("hist",))
 
 
 def materialize_hist_rollup(spark, rel: DataFrame, dest: str,

@@ -29,7 +29,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructField, StructType
 
+from ..model import ROW_SCHEMA, as_nullable
 from ..sources.segment_store import refresh_aggregate
 
 #: Default bucket ladder (events.value spans 0.01..~500; roughly
@@ -88,6 +90,12 @@ def histogram_quantile_over(
     )
     cum = merged.withColumn("cum", F.sum("__n").over(w).cast("double")).drop("__n")
     return histogram_quantile(cum, q, group_cols)
+
+
+#: A materialized value histogram as every read sees it (``seg`` INT).
+VALUE_HIST_SCHEMA = as_nullable(StructType([
+    StructField("series_key", LongType()), StructField("le", DoubleType()),
+    ROW_SCHEMA["labels"], StructField("n", LongType()), StructField("seg", IntegerType())]))
 
 
 def materialize(

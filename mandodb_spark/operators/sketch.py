@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, IntegerType, LongType, StructField, StructType
 
 from ..sources.segment_store import refresh_aggregate
 
@@ -102,6 +103,12 @@ def series_cardinality_sketch(rel: DataFrame) -> DataFrame:
     )
 
 
+#: A materialized cardinality rollup as every read sees it (``seg`` INT).
+CARDINALITY_SCHEMA = StructType([
+    StructField("sketch", BinaryType()), StructField("n_points", LongType()),
+    StructField("seg", IntegerType())])
+
+
 def cardinality_materialize(spark, rel: DataFrame, dest: str,
                             incremental: bool = False,
                             since_seg: int | None = None) -> None:
@@ -117,7 +124,8 @@ def cardinality_estimate(spark, dest: str, start_seg: int, end_seg: int) -> Data
     seg partitions, UNION the surviving sketches, estimate — O(segments
     in range) sketch rows touched, zero point rows.  Returns a 1-row
     DataFrame ``(n_segs, n_points, est_series)``."""
-    sk = spark.read.parquet(dest).filter(F.col("seg").between(start_seg, end_seg))
+    sk = spark.read.schema(CARDINALITY_SCHEMA).parquet(dest).filter(
+        F.col("seg").between(start_seg, end_seg))
     return sk.agg(
         F.count(F.lit(1)).alias("n_segs"),
         F.sum("n_points").alias("n_points"),
@@ -239,6 +247,13 @@ def dds_quantiles(sketch: DataFrame, qs: list[float],
     return hit.select(*group_cols, "q", est.alias("est"))
 
 
+#: A materialized quantile rollup as every read sees it (``seg`` INT).
+QUANTILE_SCHEMA = StructType([
+    StructField("sgn", IntegerType()),
+    *(StructField(c, LongType()) for c in ("bucket", "n")),
+    StructField("seg", IntegerType())])
+
+
 def quantile_materialize(spark, rel: DataFrame, dest: str,
                          alpha: float = DDS_ALPHA,
                          incremental: bool = False,
@@ -257,7 +272,8 @@ def quantile_estimate(spark, dest: str, start_seg: int, end_seg: int,
     """Quantiles over ``[start_seg, end_seg]``: prune seg partitions,
     merge the surviving sketches bucket-wise, walk once — O(buckets)
     rows touched, zero point rows.  Returns (q, est) rows."""
-    sk = spark.read.parquet(dest).filter(F.col("seg").between(start_seg, end_seg))
+    sk = spark.read.schema(QUANTILE_SCHEMA).parquet(dest).filter(
+        F.col("seg").between(start_seg, end_seg))
     merged = sk.groupBy("sgn", "bucket").agg(F.sum("n").alias("n"))
     return dds_quantiles(merged, qs, alpha)
 

@@ -19,10 +19,11 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType, StructField,
+                               StructType)
 
 from ..matchers import LabelMatcher, add_metric_name, matchers_predicate, regex_predicate
-from ..model import DEFAULT_SEGMENT_DURATION, series_key
+from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, as_nullable, series_key
 from ..sources.segment_store import refresh_aggregate
 
 #: A materialized label-value dim as every read sees it (declared, so the
@@ -154,6 +155,16 @@ def tiered_range(raw_rel: DataFrame, rollup: DataFrame,
         .select(*cols)
     )
     return old.unionByName(new)
+
+
+#: A materialized step rollup as every read sees it: the
+#: :func:`rollup_aggregate` columns plus the ``seg`` partition column (INT,
+#: as partition inference reads it).
+ROLLUP_SCHEMA = as_nullable(StructType([
+    *(StructField(c, LongType()) for c in ("series_key", "bucket_ts")),
+    ROW_SCHEMA["labels"], StructField("n", LongType()),
+    *(StructField(f"{c}_value", DoubleType()) for c in ("avg", "min", "max", "sum", "last")),
+    StructField("seg", IntegerType())]))
 
 
 def materialize_rollup(spark, rel: DataFrame, dest: str, step: int = 21600,

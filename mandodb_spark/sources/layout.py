@@ -113,15 +113,17 @@ def files_overlapping(path: str, box: dict[str, tuple]) -> tuple[int, int]:
     conjunctive range predicate ``{col: (lo, hi)}`` — computed from real
     Parquet footer statistics (pyarrow), i.e. exactly the information a
     scan's file/row-group skipping sees.  The layout-quality measurement
-    used by the tests and SCALE.md."""
+    used by the tests and SCALE.md.  A file with no row group (an empty
+    micro-batch's append) holds no rows and counts in neither."""
     from pathlib import Path
 
     import pyarrow.parquet as pq
 
-    files = sorted(p for p in Path(path).glob("*.parquet"))
+    footers = [pq.ParquetFile(str(p)).metadata
+               for p in sorted(Path(path).glob("*.parquet"))]
+    footers = [md for md in footers if md.num_row_groups]
     hit = 0
-    for f in files:
-        md = pq.ParquetFile(str(f)).metadata
+    for md in footers:
         schema_names = [md.row_group(0).column(i).path_in_schema
                         for i in range(md.row_group(0).num_columns)]
         overlaps = True
@@ -137,7 +139,7 @@ def files_overlapping(path: str, box: dict[str, tuple]) -> tuple[int, int]:
                 break
         if overlaps:
             hit += 1
-    return hit, len(files)
+    return hit, len(footers)
 
 
 def relayout(spark, path: str, cols: list[str], n_files: int,

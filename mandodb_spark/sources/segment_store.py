@@ -53,7 +53,7 @@ from pyspark.sql.types import (DoubleType, IntegerType, LongType, StringType, St
 from ..model import DEFAULT_SEGMENT_DURATION, ROW_SCHEMA, as_nullable, canonicalize
 
 
-def _declared_schema(row_schema: StructType, payload: tuple) -> StructType:
+def declared_schema(row_schema: StructType, payload: tuple) -> StructType:
     """The store as every read sees it: the canonical columns ``(labels,
     ts, *payload, series_key)`` plus the ``seg`` partition column.
     ``seg`` is INT because that is what partition inference gives the
@@ -67,7 +67,7 @@ def _declared_schema(row_schema: StructType, payload: tuple) -> StructType:
 
 #: The float-sample store's declared schema (:attr:`SampleStore.schema`
 #: for ``PAYLOAD = ("value",)``).
-STORE_SCHEMA = _declared_schema(ROW_SCHEMA, ("value",))
+STORE_SCHEMA = declared_schema(ROW_SCHEMA, ("value",))
 
 
 def dedup_last_write(batch: DataFrame, order_col: str | None = None) -> DataFrame:
@@ -410,7 +410,7 @@ class SampleStore:
         """The declared read schema ``(labels, ts, *PAYLOAD, series_key,
         seg)`` — :data:`STORE_SCHEMA` for float samples.  Every read of
         the store, empty or populated, has it, so none opens a footer."""
-        return _declared_schema(self.ROW_SCHEMA, self.PAYLOAD)
+        return declared_schema(self.ROW_SCHEMA, self.PAYLOAD)
 
     def _canonical(self, rows: DataFrame, dedup_points: bool = False) -> DataFrame:
         """An ingest batch in the storage shape (``dedup_points`` is the

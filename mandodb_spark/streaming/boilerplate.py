@@ -28,12 +28,17 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .maintainer import Maintainer
 
-class BoilerplateDict:
+
+class BoilerplateDict(Maintainer):
+    skip_empty = True
+
     def __init__(self, spark: SparkSession, root: str,
                  id_col: str = "doc_id", text_col: str = "text",
                  n_partitions: int = 64, min_dup_docs: int = 2,
                  sep: str = "\n") -> None:
+        super().__init__()
         self.spark = spark
         self.root = str(root)
         self.id_col = id_col
@@ -106,7 +111,7 @@ class BoilerplateDict:
         return strip_lines(batch, id_col, text_col, self.boilerplate_keys(),
                            sep=self.sep)
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         """foreachBatch hook: fold the micro-batch into the dictionary."""
-        if not batch_df.isEmpty():
-            self.update(batch_df, self.id_col, self.text_col)
+        self.update(batch_df, self.id_col, self.text_col)
+        return {}

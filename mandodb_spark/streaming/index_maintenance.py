@@ -1,8 +1,7 @@
 """Streaming lifecycle loop for the persistent IVF vector index.
 
 Composes the :class:`~mandodb_spark.sources.vector_index.VectorIndex`
-primitives into the production maintenance job (the ANN analogue of
-``StreamingIngestor``'s continuous-aggregate loops): every embedding
+primitives into the production maintenance job: every embedding
 micro-batch is appended into its cell partitions (O(batch) — history is
 never re-read), the measured drift (mean assignment cosine vs the
 build-time baseline recorded in the index meta) is checked on a cadence,
@@ -24,18 +23,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.vector_index import VectorIndex
+from .maintainer import Maintainer
 
 
-class VectorIndexMaintainer:
+class VectorIndexMaintainer(Maintainer):
     """foreachBatch sink: append → drift check → (rebuild) → (compact).
 
     ``max_drop``: rebuild trigger threshold on the mean-assignment-cosine
     drop (see ``VectorIndex.needs_rebuild``).  ``check_every``: drift is
     evaluated every N batches (the check is a column-pruned AVG over the
     index — cheap, but not free at every trigger).  ``compact_every``:
-    optional compaction cadence in batches.  ``rebuilds`` counts fired
-    re-trainings (observable by tests and monitoring).
+    optional compaction cadence in batches.  Each report counts the
+    batch's ``rebuilds`` and ``compactions``.
     """
+
+    skip_empty = True
 
     def __init__(
         self,
@@ -48,6 +50,7 @@ class VectorIndexMaintainer:
         rebuild_cells: int | None = None,
         seed: int = 42,
     ) -> None:
+        super().__init__()
         self.index = index
         self.id_col = id_col
         self.vec_col = vec_col
@@ -56,17 +59,11 @@ class VectorIndexMaintainer:
         self.compact_every = compact_every
         self.rebuild_cells = rebuild_cells
         self.seed = seed
-        self.batches = 0
-        self.rebuilds = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
+        counts = {}
         self.index.append(batch_df, self.id_col, self.vec_col)
-        self.batches += 1
-        if self.batches % self.check_every == 0 and self.index.needs_rebuild(
-            self.max_drop
-        ):
+        if self._every(self.check_every) and self.index.needs_rebuild(self.max_drop):
             # a rebuild's root swap drops any PQ codes sidecar by
             # construction (codes partitioning is tied to the old cells);
             # remember the geometry and re-train it over the new cells so
@@ -78,27 +75,19 @@ class VectorIndexMaintainer:
                     cb.agg(F.max("sub"), F.max("code")).first(),
                 )
             self.index.rebuild(n_cells=self.rebuild_cells, seed=self.seed)
-            self.rebuilds += 1
+            counts["rebuilds"] = 1
             if pq_geom is not None:
                 mx = pq_geom[0]
                 self.index.attach_pq(
                     m=int(mx[0]) + 1, ksub=int(mx[1]) + 1, seed=self.seed
                 )
-        if self.compact_every and self.batches % self.compact_every == 0:
+        if self._every(self.compact_every):
             self.index.compact()
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Attach to an embedding stream (availableNow trigger — drain
-        what exists, then stop; swap the trigger for continuous serving)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+            counts["compactions"] = 1
+        return counts
 
 
-class TextIndexMaintainer:
+class TextIndexMaintainer(Maintainer):
     """foreachBatch sink keeping a :class:`TextIndex` current against a
     document stream: append each micro-batch's postings (O(batch) — the
     corpus is never re-tokenized), optional compaction cadence to heal
@@ -107,30 +96,19 @@ class TextIndexMaintainer:
     the BM25 stats stay exact because the index stores additive sums,
     not averages (text_index.py stats contract)."""
 
+    skip_empty = True
+
     def __init__(self, index, id_col: str = "doc_id", text_col: str = "text",
                  compact_every: int | None = None) -> None:
+        super().__init__()
         self.index = index
         self.id_col = id_col
         self.text_col = text_col
         self.compact_every = compact_every
-        self.batches = 0
-        self.compactions = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         self.index.append(batch_df, self.id_col, self.text_col)
-        self.batches += 1
-        if self.compact_every and self.batches % self.compact_every == 0:
-            self.index.compact()
-            self.compactions += 1
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Attach to a document stream (availableNow trigger — drain what
-        exists, then stop; swap the trigger for continuous serving)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        if not self._every(self.compact_every):
+            return {}
+        self.index.compact()
+        return {"compactions": 1}

@@ -33,10 +33,10 @@ one-sorted-file-per-segment invariant periodically.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming import StreamingQuery
 
 from ..operators import histogram, sketch, tsdb_ops
 from ..sources.segment_store import SegmentStore
+from .maintainer import Maintainer
 
 
 def bounded_source(
@@ -77,7 +77,7 @@ def bounded_source(
     return reader.load(path) if path is not None else reader.load()
 
 
-class StreamingIngestor:
+class StreamingIngestor(Maintainer):
     """foreachBatch sink writing the canonical relation into a SegmentStore.
 
     ``label_dim_dest``: optional path of a materialized label-value dim
@@ -118,6 +118,8 @@ class StreamingIngestor:
     windows.
     """
 
+    skip_empty = True
+
     def __init__(self, store: SegmentStore, label_dim_dest: str | None = None,
                  rollup_dest: str | None = None, rollup_step: int = 21600,
                  hist_dest: str | None = None,
@@ -128,6 +130,7 @@ class StreamingIngestor:
                  nh_dest: str | None = None,
                  nh_step: int = 3600,
                  nh_schema: int | None = None) -> None:
+        super().__init__()
         self.store = store
         self.label_dim_dest = label_dim_dest
         self.rollup_dest = rollup_dest
@@ -141,15 +144,13 @@ class StreamingIngestor:
         self.nh_step = nh_step
         self.nh_schema = nh_schema
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         """One micro-batch → one transactional Parquet append (S4).
 
         foreachBatch may redeliver a batch after recovery; the Parquet
         append is idempotent per batch only via checkpoint bookkeeping —
         exactly-once to the store under Spark's guarantees.
         """
-        if batch_df.isEmpty():
-            return
         self.store.append(batch_df)
         if self.label_dim_dest:
             from ..model import canonicalize
@@ -212,37 +213,7 @@ class StreamingIngestor:
             HistStore(self.store.spark, self.nh_dest,
                       self.store.segment_duration).append(
                 partials, dedup_against_store=True)
-
-    def start(
-        self,
-        rows: DataFrame,
-        checkpoint_dir: str,
-        trigger_seconds: int | None = None,
-        watermark: str | None = None,
-    ) -> StreamingQuery:
-        """Attach the ingest sink to a streaming DataFrame of ROW_SCHEMA rows.
-
-        ``rows`` must carry (metric, labels, ts, value) columns, e.g. from a
-        Kafka/file/rate source already mapped to the ingest shape.
-        """
-        if watermark:
-            # Watermark over the event-time view of ts (seconds→timestamp);
-            # only needed when composing windowed aggregations upstream.
-            from pyspark.sql import functions as F
-
-            rows = rows.withColumn("__ev", F.timestamp_seconds(F.col("ts"))).withWatermark(
-                "__ev", watermark
-            ).drop("__ev")
-        writer = (
-            rows.writeStream.outputMode("append")
-            .option("checkpointLocation", checkpoint_dir)
-            .foreachBatch(self.process_batch)
-        )
-        if trigger_seconds:
-            writer = writer.trigger(processingTime=f"{trigger_seconds} seconds")
-        else:
-            writer = writer.trigger(availableNow=True)
-        return writer.start()
+        return {}
 
 
 def dedup_stream(rows: DataFrame, watermark: str = "1 hour") -> DataFrame:
@@ -282,7 +253,7 @@ def dedup_stream(rows: DataFrame, watermark: str = "1 hour") -> DataFrame:
     )
 
 
-class ExemplarSinkMaintainer:
+class ExemplarSinkMaintainer(Maintainer):
     """foreachBatch sink for EXEMPLARS: idempotent append into the TSDB's
     exemplar sibling store — the streaming leg of the exemplar scrape
     path (``sources/exemplar_store.py``; read side
@@ -296,21 +267,20 @@ class ExemplarSinkMaintainer:
     already be exemplar rows.  At-least-once replays dedup against the
     store on (series, ts) — the same first-write-wins contract as the nh
     partial sink — and retention rides ``TSDB.remove_expires``, which
-    purges the exemplar sibling under the raw cutoff.  Chain from an
-    ingest ``foreachBatch`` like the other maintainers."""
+    purges the exemplar sibling under the raw cutoff."""
 
     def __init__(self, db, derive=None) -> None:
+        super().__init__()
         self.db = db
         self.derive = derive
-        self.batches = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         rows = self.derive(batch_df) if self.derive is not None else batch_df
         self.db.insert_exemplars(rows, dedup_against_store=True)
-        self.batches += 1
+        return {}
 
 
-class WireIngressMaintainer:
+class WireIngressMaintainer(Maintainer):
     """foreachBatch sink exercising the FULL remote-write wire loop per
     micro-batch: canonical rows → prompb ``WriteRequest`` payload BYTES
     (executor-side encode, ``prompb.prompb_from_timeseries``) → wire
@@ -329,11 +299,11 @@ class WireIngressMaintainer:
     seams, so per-batch cost is O(batch) with no driver decode."""
 
     def __init__(self, db, series_per_request: int = 500) -> None:
+        super().__init__()
         self.db = db
         self.series_per_request = series_per_request
-        self.batches = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         from pyspark.sql import functions as F
 
         from ..model import fold_metric_name
@@ -348,4 +318,4 @@ class WireIngressMaintainer:
             series_per_request=self.series_per_request)
         decoded = rows_from_remote_write(prompb.timeseries_from_prompb(wire))
         self.db.insert_rows(decoded, dedup_against_store=True)
-        self.batches += 1
+        return {}

@@ -1,7 +1,6 @@
 """Streaming layout-maintenance loop for Z-ordered Parquet directories.
 
-The data-layout analogue of :class:`VectorIndexMaintainer`: micro-batch
-appends land as plain unordered files (O(batch) — cheap, correct, but
+Micro-batch appends land as plain unordered files (O(batch) — cheap, correct, but
 they erode the Z-order clustering that makes footer-stats pruning work),
 and a measured quality trigger decides when to pay for a rewrite.  The
 trigger is :func:`~mandodb_spark.sources.layout.files_overlapping` over a
@@ -22,9 +21,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..sources.layout import files_overlapping, relayout
+from .maintainer import Maintainer
 
 
-class LayoutMaintainer:
+class LayoutMaintainer(Maintainer):
     """foreachBatch sink: append → (measure pruning quality) → (relayout).
 
     ``cols``/``n_files``: the Z-order spec handed to ``relayout``.
@@ -33,7 +33,7 @@ class LayoutMaintainer:
     ``max_hit_frac``: relayout trigger (e.g. 0.5 — when a typical query
     must open more than half the files, clustering has eroded).
     ``check_every``: measure every N batches (O(files) footer reads).
-    ``relayouts`` counts fired rewrites (observable by tests/monitoring).
+    Each report counts the batch's ``relayouts``.
     """
 
     def __init__(
@@ -49,6 +49,7 @@ class LayoutMaintainer:
     ) -> None:
         if not (0.0 < max_hit_frac <= 1.0):
             raise ValueError(f"max_hit_frac must be in (0, 1], got {max_hit_frac}")
+        super().__init__()
         self.spark = spark
         self.path = path
         self.cols = list(cols)
@@ -57,8 +58,6 @@ class LayoutMaintainer:
         self.max_hit_frac = max_hit_frac
         self.check_every = max(1, check_every)
         self.codec = codec
-        self.batches = 0
-        self.relayouts = 0
 
     def hit_fraction(self) -> float:
         """Current pruning quality: probed-files / total-files (1.0 when
@@ -70,16 +69,11 @@ class LayoutMaintainer:
         hit, total = files_overlapping(self.path, self.probe_box)
         return hit / total if total else 1.0
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        """The foreachBatch hook."""
+    def _on_batch(self, batch: DataFrame, batch_id: int) -> dict[str, int]:
         batch.write.mode("append").option("compression", self.codec).parquet(
             self.path
         )
-        self.batches += 1
-        if self.batches % self.check_every:
-            return
-        if self.hit_fraction() > self.max_hit_frac:
-            relayout(
-                self.spark, self.path, self.cols, self.n_files, codec=self.codec
-            )
-            self.relayouts += 1
+        if not self._every(self.check_every) or self.hit_fraction() <= self.max_hit_frac:
+            return {}
+        relayout(self.spark, self.path, self.cols, self.n_files, codec=self.codec)
+        return {"relayouts": 1}

@@ -55,6 +55,7 @@ from ..operators.dedup import (
     minhash_signatures,
 )
 from ..session import checkpoint, release
+from .maintainer import Maintainer
 
 
 def _shingle_rows(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
@@ -408,41 +409,34 @@ class NearDupGate:
         }
 
 
-class NearDupGateMaintainer:
+class NearDupGateMaintainer(Maintainer):
     """foreachBatch sink: gate each micro-batch through a
-    :class:`NearDupGate` and append survivors to ``sink_path`` — the
-    streaming crawl-dedup loop.  ``compact_every`` heals the state's
-    per-append file accumulation (same cadence knob as the text/vector
-    index maintainers)."""
+    :class:`NearDupGate` and write survivors to ``sink_path`` — the
+    streaming crawl-dedup loop.  Each batch's survivors land in their own
+    ``bseq=<batch_id>`` partition by dynamic overwrite, like the gate's
+    state, so a redelivered batch replaces its rows instead of adding a
+    second copy.  ``compact_every`` heals the state's per-append file
+    accumulation; each report counts the batch's ``compactions``."""
+
+    skip_empty = True
 
     def __init__(self, gate: NearDupGate, sink_path: str,
                  id_col: str = "doc_id", text_col: str = "text",
                  compact_every: int | None = None) -> None:
+        super().__init__()
         self.gate = gate
         self.sink_path = sink_path
         self.id_col = id_col
         self.text_col = text_col
         self.compact_every = compact_every
-        self.batches = 0
-        self.compactions = 0
 
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         kept = self.gate.filter_batch(
             batch_df, self.id_col, self.text_col, batch_id=batch_id)
-        kept.write.mode("append").parquet(self.sink_path)
-        self.batches += 1
-        if self.compact_every and self.batches % self.compact_every == 0:
-            self.gate.compact()
-            self.compactions += 1
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Attach to a document stream (availableNow trigger — drain what
-        exists, then stop; swap the trigger for continuous operation)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
+        (kept.withColumn("bseq", F.lit(int(batch_id))).write.partitionBy("bseq")
+         .mode("overwrite").option("partitionOverwriteMode", "dynamic")
+         .parquet(self.sink_path))
+        if not self._every(self.compact_every):
+            return {}
+        self.gate.compact()
+        return {"compactions": 1}

@@ -15,10 +15,6 @@ contract as ``insert_rows(dedup_against_store=True)``).  On restart the
 high-water mark is recovered from the recorded series' own max timestamp
 — the store IS the state, no sidecar files.
 
-Same family as ``RetentionMaintainer`` / ``VectorIndexMaintainer``:
-chain ``process_batch`` after an ingest sink, or ``start(stream,
-checkpoint)`` standalone.
-
 Late-data caveat (documented, not hidden): a grid point is evaluated
 when the event high-water mark passes it; samples arriving later than
 that do not retroactively update the recorded value — rerun
@@ -32,8 +28,47 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .maintainer import Maintainer
 
-class RecordingRuleMaintainer:
+
+class _EventGridRule(Maintainer):
+    """The event-time clock both rule maintainers share.  Every batch
+    ticks the cadence; on every ``every``-th one the step-aligned grid
+    points in (``hwm``, batch max ts − ``delay``] are handed to
+    ``_evaluate(first, last)`` once, and ``hwm`` (the last evaluated
+    point, recovered from the store on the first run) advances to
+    ``last``.  A cold start evaluates only the newest point.  Each
+    report counts the batch's ``runs`` and grid ``points``."""
+
+    def __init__(self, db, query: str, step: int, lookback: int, delay: int,
+                 every: int) -> None:
+        super().__init__()
+        self.db = db
+        self.query = query
+        self.step = int(step)
+        self.lookback = int(lookback)
+        self.delay = int(delay)
+        self.every = max(1, every)
+        self.hwm: int | None = None  # last evaluated grid point
+
+    def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
+        if not self._every(self.every) or "ts" not in batch_df.columns:
+            return {}
+        event_max = batch_df.agg(F.max("ts")).collect()[0][0]
+        if event_max is None:
+            return {}
+        last = (int(event_max) - self.delay) // self.step * self.step
+        if self.hwm is None:
+            self.hwm = self._recover_hwm()
+        first = last if self.hwm is None else (self.hwm // self.step + 1) * self.step
+        if last < first:
+            return {}
+        self._evaluate(first, last)
+        self.hwm = last
+        return {"runs": 1, "points": (last - first) // self.step + 1}
+
+
+class RecordingRuleMaintainer(_EventGridRule):
     """foreachBatch hook: continuous recording-rule evaluation.
 
     ``db``: TSDB holding both the inputs and the recorded output.
@@ -42,25 +77,14 @@ class RecordingRuleMaintainer:
     ``step``: grid resolution in seconds (eval points are step-aligned,
     as Prometheus aligns to the epoch).  ``delay``: evaluate a point only
     once the event high-water mark is ``delay`` seconds past it (the
-    rule-evaluation analogue of a watermark).  Counters ``runs`` /
-    ``points`` / ``hwm`` are observable by tests and monitoring.
+    rule-evaluation analogue of a watermark).
     """
 
     def __init__(self, db, rule_name: str, query: str, step: int,
                  lookback: int = 300, delay: int = 0, every: int = 1) -> None:
-        self.db = db
+        super().__init__(db, query, step, lookback, delay, every)
         self.rule_name = rule_name
-        self.query = query
-        self.step = int(step)
-        self.lookback = int(lookback)
-        self.delay = int(delay)
-        self.every = max(1, every)
-        self.batches = 0
-        self.runs = 0
-        self.points = 0
-        self.hwm: int | None = None  # last evaluated grid point
 
-    # ------------------------------------------------------------ state
     def _recover_hwm(self) -> int | None:
         """The recorded series' own max timestamp — restart recovery
         without sidecar state (the store IS the state): ``max_ts``'s
@@ -76,44 +100,13 @@ class RecordingRuleMaintainer:
         found = [m for m in (s.max_ts(pred) for s in stores) if m is not None]
         return max(found) if found else None
 
-    # ------------------------------------------------------------- hook
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        self.batches += 1
-        if self.batches % self.every != 0:
-            return
-        if "ts" not in batch_df.columns:
-            return
-        row = batch_df.agg(F.max("ts").alias("m")).collect()[0]
-        if row["m"] is None:
-            return
-        event_max = int(row["m"]) - self.delay
-        if self.hwm is None:
-            self.hwm = self._recover_hwm()
-        # step-aligned grid points in (hwm, event_max]
-        first = ((self.hwm // self.step) + 1) * self.step \
-            if self.hwm is not None else (event_max // self.step) * self.step
-        last = (event_max // self.step) * self.step
-        if last < first:
-            return
-        self.runs += 1
+    def _evaluate(self, first: int, last: int) -> None:
         self.db.promql_record(self.rule_name, self.query, first, last,
                               self.step, self.lookback,
                               dedup_against_store=True)
-        self.points += (last - first) // self.step + 1
-        self.hwm = last
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        """Standalone: the stream is both the ingested data's mirror and
-        the evaluation clock (availableNow — drain, evaluate, stop)."""
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
 
 
-class AlertRuleMaintainer:
+class AlertRuleMaintainer(_EventGridRule):
     """foreachBatch hook: continuous ALERTING-rule evaluation — the
     streaming dual of ``TSDB.promql_alerts``, recording Prometheus's own
     synthetic series so every normal query path sees alert state:
@@ -125,9 +118,7 @@ class AlertRuleMaintainer:
       ``active_since`` timestamp — exactly the series Prometheus persists
       for ``for``-duration restart recovery.
 
-    Incremental contract (same event-time discipline as
-    :class:`RecordingRuleMaintainer`): each batch evaluates only the
-    step-aligned grid points in (hwm, event max]; the previous eval
+    Each batch evaluates only its new grid points; the previous eval
     point's ``ALERTS_FOR_STATE`` row (one partition-pruned point read)
     seeds runs that straddle the batch boundary, so a series active
     across N batches fires exactly when a one-shot ``promql_alerts`` over
@@ -142,20 +133,10 @@ class AlertRuleMaintainer:
     def __init__(self, db, alert_name: str, query: str, step: int,
                  for_duration: int = 0, lookback: int = 300,
                  delay: int = 0, every: int = 1) -> None:
-        self.db = db
+        super().__init__(db, query, step, lookback, delay, every)
         self.alert_name = alert_name
-        self.query = query
-        self.step = int(step)
         self.for_duration = int(for_duration)
-        self.lookback = int(lookback)
-        self.delay = int(delay)
-        self.every = max(1, every)
-        self.batches = 0
-        self.runs = 0
-        self.points = 0
-        self.hwm: int | None = None
 
-    # ------------------------------------------------------------ state
     def _ident(self, labels_col):
         """Alert series identity: expression labels minus __name__ (and
         any stale alertname/alertstate), plus this rule's alertname."""
@@ -197,30 +178,11 @@ class AlertRuleMaintainer:
             F.col("value").cast("long").alias("__carried"),
         ).groupBy("__k").agg(F.min("__carried").alias("__carried"))
 
-    # ------------------------------------------------------------- hook
-    def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
+    def _evaluate(self, first: int, last: int) -> None:
         from pyspark.sql.window import Window as W
 
         from ..functions import promql
         from ..functions.promql_parser import mark_runs
-
-        self.batches += 1
-        if self.batches % self.every != 0:
-            return
-        if "ts" not in batch_df.columns:
-            return
-        row = batch_df.agg(F.max("ts").alias("m")).collect()[0]
-        if row["m"] is None:
-            return
-        event_max = int(row["m"]) - self.delay
-        if self.hwm is None:
-            self.hwm = self._recover_hwm()
-        first = ((self.hwm // self.step) + 1) * self.step \
-            if self.hwm is not None else (event_max // self.step) * self.step
-        last = (event_max // self.step) * self.step
-        if last < first:
-            return
-        self.runs += 1
 
         vec = self.db.promql_range(self.query, first, last, self.step,
                                    self.lookback)
@@ -254,13 +216,3 @@ class AlertRuleMaintainer:
             F.col("__since").cast("double").alias("value"))
         self.db.insert_rows(alerts.unionByName(for_state),
                             dedup_against_store=True)
-        self.points += (last - first) // self.step + 1
-        self.hwm = last
-
-    def start(self, stream: DataFrame, checkpoint: str):
-        return (
-            stream.writeStream.foreachBatch(self.process_batch)
-            .option("checkpointLocation", checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )

@@ -268,7 +268,7 @@ def test_value_histogram_rollup_quantile_and_pruning(spark, tmp_path_factory):
     assert abs(got[0].value - want[0].value) < 1e-12
 
     # associativity: per-seg histograms summed == whole-range histogram
-    hist = db.rollup_relation(dest)
+    hist = spark.read.parquet(dest)
     segs = sorted(r.seg for r in hist.select("seg").distinct().collect())
     assert len(segs) >= 2
     half_a = hist.filter(F.col("seg") <= segs[len(segs) // 2])

@@ -953,7 +953,7 @@ def test_streaming_histogram_recording_rule(spark, tmp_path):
     b1 = ingest([(1000, [1.0]), (1100, [2.0, 4.0])])
     m.process_batch(b1, 0)
     # cold start: only the newest aligned point evaluates (documented)
-    assert m.hwm == 1100 and m.points == 1
+    assert m.hwm == 1100 and m.totals["points"] == 1
     # retry the same batch: first-write-wins, nothing duplicated
     m.process_batch(b1, 0)
     rec = db.query_hist_rows("rule:lat:byapp", None, 0, 10**10)

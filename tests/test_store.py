@@ -865,8 +865,8 @@ def _jobs_run_by(spark, fn) -> int:
 def test_declared_schemas_equal_what_the_writers_leave(spark, tmp_path_factory):
     """Reads declare their schema instead of inferring it, so each
     declaration must equal what inference returns over a written root:
-    the segment store, the label dim, the histogram/exemplar stores and
-    the purge tier."""
+    the segment store, the label dim, the histogram/exemplar stores, the
+    purge tier and the five continuous-aggregate kinds."""
     from mandodb_spark.operators.tsdb_ops import LABEL_DIM_SCHEMA
     from mandodb_spark.sources.exemplar_store import ExemplarStore
     from mandodb_spark.sources.hist_store import HistStore
@@ -895,6 +895,33 @@ def test_declared_schemas_equal_what_the_writers_leave(spark, tmp_path_factory):
     assert TIER_SCHEMA == spark.read.parquet(str(base / "tier")).schema
     assert [(r.n, r.sum) for r in tiered.query_range_buckets_tiered(
         "m", [], START, START, 3600, str(base / "tier")).collect()] == [(2, 4.0)]
+
+    # the continuous aggregates: step rollup, native-histogram rollup,
+    # cardinality and quantile sketches; building the rollup relation
+    # runs no job
+    from mandodb_spark.functions.native_hist import HIST_ROLLUP_SCHEMA
+    from mandodb_spark.operators.histogram import VALUE_HIST_SCHEMA
+    from mandodb_spark.operators.sketch import CARDINALITY_SCHEMA, QUANTILE_SCHEMA
+    from mandodb_spark.operators.tsdb_ops import ROLLUP_SCHEMA
+
+    db.materialize_rollup(str(base / "roll"), step=3600)
+    db.insert_histograms([("h", {"x": "1"}, START,
+                           (2.0, 3.0, 0.0, 0.0, 3, {1: 2.0}, {}))])
+    db.materialize_nh_rollup(str(base / "nhroll"), step=3600)
+    db.materialize_series_cardinality(str(base / "card"))
+    db.materialize_value_quantile(str(base / "quant"))
+    db.materialize_value_histogram(str(base / "vhist"))
+    for schema, dest in ((ROLLUP_SCHEMA, "roll"), (HIST_ROLLUP_SCHEMA, "nhroll"),
+                         (CARDINALITY_SCHEMA, "card"), (QUANTILE_SCHEMA, "quant"),
+                         (VALUE_HIST_SCHEMA, "vhist")):
+        assert schema == spark.read.parquet(str(base / dest)).schema, dest
+    assert _jobs_run_by(spark, lambda: db.rollup_relation(str(base / "roll"))) == 0
+    assert db.rollup_relation(str(base / "roll")).count() == 2
+    assert db.nh_rollup_relation(str(base / "nhroll")).count() == 1
+    assert [r.est_series for r in db.query_series_cardinality(
+        str(base / "card"), START, START + 7200).collect()] == [2]
+    assert db.query_quantile_sketch(str(base / "quant"), [0.0], START, START + 7200).count() == 1
+    assert db.query_quantile_histogram(str(base / "vhist"), 0.5, START, START + 7200).count() == 2
 
 
 def test_empty_purged_and_populated_stores_share_one_schema(spark, tmp_path_factory):

@@ -4,6 +4,7 @@ query parity with batch ingestion (the reference's write path, T1-T6)."""
 from __future__ import annotations
 
 import time
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -770,7 +771,7 @@ def test_vector_index_streaming_lifecycle_rebuilds_on_drift(spark, tmp_path_fact
     q = maintainer.start(stream, ckpt)
     q.awaitTermination(120)
 
-    assert maintainer.rebuilds >= 1, "drift should have triggered a rebuild"
+    assert maintainer.totals["rebuilds"] >= 1, "drift should have triggered a rebuild"
     assert not idx.needs_rebuild(max_drop=0.02)
     assert idx.relation().count() == 80
     probe = spark.createDataFrame([shift_rows[7]], schema).select(
@@ -959,10 +960,10 @@ def test_layout_maintainer_relayouts_on_measured_erosion(spark, tmp_path_factory
     )
     batch(0).coalesce(1).write.mode("append").parquet(src)
     stream = spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
-    q = stream.writeStream.foreachBatch(m).outputMode("append").start()
+    q = stream.writeStream.foreachBatch(m.process_batch).outputMode("append").start()
     try:
         q.processAllAvailable()
-        assert m.relayouts == 1          # 1 unordered file -> hit 1.0 -> rewrite
+        assert m.totals["relayouts"] == 1  # 1 unordered file -> hit 1.0 -> rewrite
         frac_clustered = m.hit_fraction()
         assert frac_clustered <= 0.15    # z-order prunes the probe box (2/16 measured)
         for s in (1, 2, 3):              # erode: three more full-range files
@@ -971,7 +972,7 @@ def test_layout_maintainer_relayouts_on_measured_erosion(spark, tmp_path_factory
     finally:
         q.stop()
 
-    assert m.batches == 4 and m.relayouts >= 2   # erosion re-triggered
+    assert m.totals["batches"] == 4 and m.totals["relayouts"] >= 2  # erosion re-triggered
     assert m.hit_fraction() <= 0.2
     assert spark.read.parquet(dest).count() == 16000  # nothing lost
 
@@ -998,7 +999,7 @@ def test_index_maintainer_retrains_pq_sidecar_across_rebuild(spark, tmp_path_fac
         [(100 + i, [-1.0 if j == (i + 3) % dim else -0.02 for j in range(dim)])
          for i in range(40)], "vec_id long, embedding array<float>")
     m.process_batch(shifted, 0)
-    assert m.rebuilds == 1
+    assert m.totals["rebuilds"] == 1
     assert idx.has_pq()                       # re-attached, not dropped
     cb = idx.pq_codebooks().agg(F.max("sub"), F.max("code")).first()
     assert (int(cb[0]) + 1, int(cb[1]) + 1) == (4, 8)   # same geometry
@@ -1102,7 +1103,7 @@ def test_text_index_maintainer_appends_and_compacts(spark, tmp_path_factory):
     q = m.start(stream, str(base / "ckpt"))
     q.awaitTermination(120)
 
-    assert m.batches == 3 and m.compactions == 1
+    assert m.totals["batches"] == 3 and m.totals["compactions"] == 1
     rep = idx.fsck()
     assert rep["ok"], rep
     got = {r["id"] for r in idx.search(["spark"], k=20).collect()}
@@ -1146,15 +1147,14 @@ def test_retention_maintainer_tiers_and_purges(spark, tmp_path_factory):
     q = m.start(stream, str(base / "ckpt"))
     q.awaitTermination(120)
 
-    assert m.runs == 1 and m.dropped_raw
+    assert m.totals["runs"] == 1 and m.totals["dropped_raw"]
     tiered = db.query_range_buckets_tiered(
         "m", [], START_, START_ + 16 * 1800, 3600, str(base / "tier"))
     assert tiered.agg(F.sum("n")).collect()[0][0] == 16  # nothing lost
 
     # advance the clock far enough that even the TIER expires
     clock["now"] = START_ + 40 * 3600
-    m.maintain()
-    assert m.dropped_rollup  # second-tier retention fired
+    assert m.maintain()["dropped_rollup"]  # second-tier retention fired
 
 
 def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
@@ -1275,7 +1275,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
         exem_m.process_batch(batch, bid)
         wire_m.process_batch(batch, bid)
         retention.process_batch(batch, bid)
-        layout(batch.select("ts", "value"), bid)
+        layout.process_batch(batch.select("ts", "value"), bid)
         docs = derive_docs(batch)
         docs.write.mode("append").parquet(docs_mirror)  # scan-parity mirror
         text_m.process_batch(docs, bid)
@@ -1292,9 +1292,25 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
          .trigger(availableNow=True).start())
     q.awaitTermination(300)
 
+    # --- every maintainer reported each of the six batches once, with
+    # its actions on the batch they happened in, and its reports add up
+    # to its totals
+    chained = [ingestor, rules_m, alerts_m, exem_m, wire_m, retention,
+               layout, text_m, vec_m, nd_m]
+    for m in chained:
+        assert [r.batch_id for r in m.reports] == list(range(6)), m
+        assert all(r.counts["batches"] == 1 and r.seconds > 0
+                   for r in m.reports), m
+        assert sum((Counter(r.counts) for r in m.reports), Counter()) == m.totals, m
+    per_batch = lambda m, key: [r.counts.get(key, 0) for r in m.reports]  # noqa: E731
+    assert per_batch(text_m, "compactions") == [0, 0, 1, 0, 0, 1]
+    assert per_batch(nd_m, "compactions") == [0, 0, 1, 0, 0, 1]
+    assert per_batch(retention, "runs") == [1] * 6
+    assert set(ingestor.totals) == {"batches"}
+
     # --- ingest + retention: tiered accounting loses nothing, and the
     # streamed+tiered bucket aggregation equals the batch-computed one
-    assert retention.runs == 6 and retention.dropped_raw
+    assert retention.totals["runs"] == 6 and retention.totals["dropped_raw"]
     tiered = db.query_range_buckets_tiered(
         "m", [], 0, 2**40, 3600, str(base / "tier"))
     got = sorted((r["labels"]["node"], r["bucket_ts"], r["n"], r["sum"])
@@ -1314,14 +1330,14 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
                         ("node", "vm1"), ("node", "vm2")}
 
     # --- layout: every row landed, relayout fired on measured erosion
-    assert layout.batches == 6 and layout.relayouts >= 1
+    assert layout.totals["batches"] == 6 and layout.totals["relayouts"] >= 1
     assert spark.read.parquet(str(base / "events")).count() == len(all_rows)
     assert layout.hit_fraction() <= 0.5
 
     # --- text index: healthy, and search ≡ the bm25 scan over the mirror
     rep = tidx.fsck()
     assert rep["ok"], rep
-    assert text_m.batches == 6 and text_m.compactions == 2
+    assert text_m.totals["batches"] == 6 and text_m.totals["compactions"] == 2
     docs_df = spark.read.parquet(docs_mirror)
     want_bm = [(r["id"] if "id" in r.__fields__ else r["doc_id"], r["score"])
                for r in bm25_topk(docs_df.unionByName(
@@ -1336,7 +1352,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
     # mid-soak compactions (kept-sink + dropped = seen), state healthy,
     # and the LATE file — byte-identical doc texts re-derived from the
     # re-sent segment-0 rows — was dropped wholesale cross-batch
-    assert nd_m.batches == 6 and nd_m.compactions == 2
+    assert nd_m.totals["batches"] == 6 and nd_m.totals["compactions"] == 2
     assert nd_gate.seen_docs == len(all_rows)
     nd_kept = {r["doc_id"]
                for r in spark.read.parquet(str(base / "ndkept")).collect()}
@@ -1350,20 +1366,25 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
     # behind the hwm) recorded nothing and did not regress the hwm; a
     # replay of the final file is a no-op (idempotent under retry)
     want_runs, want_points, want_hwm = 0, 0, None
+    want_batch_points = []
     for f in files:
         emax = max(r[2] for r in f)
         first = ((want_hwm // 1800) + 1) * 1800 if want_hwm is not None \
             else (emax // 1800) * 1800
         last = (emax // 1800) * 1800
+        want_batch_points.append((last - first) // 1800 + 1 if last >= first else 0)
         if last >= first:
             want_runs += 1
             want_points += (last - first) // 1800 + 1
             want_hwm = last
-    assert (rules_m.runs, rules_m.points, rules_m.hwm) == \
+    assert per_batch(rules_m, "points") == want_batch_points
+    assert per_batch(alerts_m, "points") == want_batch_points
+    assert sum(map(bool, want_batch_points)) == want_runs
+    assert (rules_m.totals["runs"], rules_m.totals["points"], rules_m.hwm) == \
         (want_runs, want_points, want_hwm)
     replay = spark.createDataFrame(files[-1], ROW_SCHEMA)
     rules_m.process_batch(replay, 99)
-    assert rules_m.points == want_points and rules_m.hwm == want_hwm
+    assert rules_m.totals["points"] == want_points and rules_m.hwm == want_hwm
 
     # --- native-histogram maintenance (9th maintainer, via the ingest
     # sink's nh_dest): per-batch PARTIAL window histograms conserve every
@@ -1391,7 +1412,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
     # ingested row's exemplar is queryable exactly once — the store-level
     # (series, ts) dedup makes an at-least-once replay a no-op — and the
     # grouped read side matches the batch expectation verbatim
-    assert exem_m.batches == 6
+    assert exem_m.totals["batches"] == 6
     replay = spark.createDataFrame(files[-1], ROW_SCHEMA)
     exem_m.process_batch(replay, 99)  # redelivery: must not double-record
     got_ex = {}
@@ -1411,7 +1432,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
     # bytes-in/bytes-out loop under restart/idempotency discipline
     from mandodb_spark.sources import prompb as _prompb
 
-    assert wire_m.batches == 6
+    assert wire_m.totals["batches"] == 6
     wire_got = {(r.labels["node"], r.ts, r.value)
                 for r in wire_db.query_range_rows("m", [], 0, 2**40).collect()}
     assert wire_got == {(lbl["node"], ts, v) for _m, lbl, ts, v in all_rows}
@@ -1430,7 +1451,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
     # --- alerting rule: same event-time grid as the recording rule, and
     # every recorded ALERTS row is internally consistent with its
     # ALERTS_FOR_STATE run timestamp (firing iff held >= for_duration)
-    assert (alerts_m.runs, alerts_m.points, alerts_m.hwm) == \
+    assert (alerts_m.totals["runs"], alerts_m.totals["points"], alerts_m.hwm) == \
         (want_runs, want_points, want_hwm)
     a_rows = db.query_range_rows("ALERTS", [], 0, 2**40).collect()
     s_rows = {(str(sorted((k, v) for k, v in r["labels"].items()
@@ -1449,7 +1470,7 @@ def test_streaming_soak_all_maintainers_chained(spark, tmp_path_factory):
 
     # --- vector index: drift rebuild fired, and with every cell probed
     # the index answer is EXACT brute-force cosine over all appended rows
-    assert vec_m.rebuilds >= 1
+    assert vec_m.totals["rebuilds"] >= 1
     qdf = spark.createDataFrame([([0.4] * dim,)], "qe array<float>")
     n_cells = vidx.centroids().count()
     got_knn = [r["vec_id"] for r in vidx.topk(qdf, n_probe=n_cells, k=5).collect()]
@@ -1563,7 +1584,7 @@ def test_neardup_gate_maintainer_writestream(spark, tmp_path_factory):
     q = m.start(stream, str(base / "ckpt"))
     q.awaitTermination(180)
 
-    assert m.batches == 3 and m.compactions == 1
+    assert m.totals["batches"] == 3 and m.totals["compactions"] == 1
     want = {r["doc_id"] for r in
             neardup_keep_ids(corpus, "doc_id", "text", threshold=0.6).collect()}
     got = {r["doc_id"] for r in spark.read.parquet(str(base / "kept")).collect()}
@@ -1575,6 +1596,28 @@ def test_neardup_gate_maintainer_writestream(spark, tmp_path_factory):
         files = [f for f in glob.glob(d + "/part-*") if not f.endswith(".crc")]
         assert len(files) == 1, (d, files)
     assert gate.fsck()["ok"]
+
+
+def test_neardup_maintainer_redelivered_epoch_keeps_one_copy(spark, tmp_path):
+    """foreachBatch is at-least-once: a redelivered epoch replaces its
+    kept rows in the sink (its own ``bseq`` partition) instead of adding
+    a second copy, and the next epoch still lands beside it."""
+    from mandodb_spark.streaming.neardup import NearDupGate, NearDupGateMaintainer
+
+    corpus = _neardup_corpus(spark)
+    gate = NearDupGate(spark, str(tmp_path / "state"), threshold=0.6, n_buckets=4)
+    m = NearDupGateMaintainer(gate, str(tmp_path / "kept"))
+
+    def kept():
+        return sorted(r["doc_id"] for r in spark.read.parquet(str(tmp_path / "kept")).collect())
+
+    m.process_batch(corpus.filter(F.col("doc_id") < 6), 0)
+    first = kept()
+    assert first and len(set(first)) == len(first)
+    m.process_batch(corpus.filter(F.col("doc_id") < 6), 0)
+    assert kept() == first
+    m.process_batch(corpus.filter(F.col("doc_id").between(6, 11)), 1)
+    assert set(first) < set(kept()) and len(set(kept())) == len(kept())
 
 
 def test_neardup_gate_retry_idempotent(spark, tmp_path_factory):
@@ -1663,7 +1706,7 @@ def test_recording_rule_maintainer_incremental_idempotent(spark, tmp_path_factor
         .trigger(availableNow=True).start()
     q.awaitTermination(180)
 
-    assert m.runs >= 1 and m.points > 0
+    assert m.totals["runs"] >= 1 and m.totals["points"] > 0
     rec = db.query_range_rows("job:cpu:avg30m", [], 0, 2**40)
     recorded = {r["ts"]: r["value"] for r in rec.collect()}
     assert all(t % 1800 == 0 for t in recorded)  # epoch-aligned grid
@@ -1674,7 +1717,7 @@ def test_recording_rule_maintainer_incremental_idempotent(spark, tmp_path_factor
     expect = {r["ts"]: r["value"] for r in direct.collect()}
     for t, v in recorded.items():
         assert v == pytest.approx(expect[t]), t
-    n_points = m.points
+    n_points = m.totals["points"]
 
     # replayed batch (at-least-once retry): nothing double-recorded
     last = spark.read.parquet(src).filter(
@@ -1688,7 +1731,7 @@ def test_recording_rule_maintainer_incremental_idempotent(spark, tmp_path_factor
     m2.process_batch(last, batch_id=100)
     assert db.query_range_rows("job:cpu:avg30m", [], 0, 2**40).count() \
         == rows_now
-    assert m2.hwm == m.hwm and m.points == n_points
+    assert m2.hwm == m.hwm and m.totals["points"] == n_points
 
 
 def test_recover_hwm_pruned_newest_first(spark, tmp_path_factory):

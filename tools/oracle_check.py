@@ -74,6 +74,7 @@ def main() -> int:
             if "/" not in a and a not in ("--extra", "--no-record")]
 
     import __spark_entry__ as entry_mod
+    from mandodb_spark.operators.dedup import release_minhash_checkpoints
     from mandodb_spark.session import get_spark
 
     spark = get_spark("oracle-check", master="local[8]", shuffle_partitions=8)
@@ -98,6 +99,9 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {exc}")
             n_fail += 1
             continue
+        finally:
+            # the result is consumed: free its minhash/jaccard checkpoints
+            release_minhash_checkpoints(spark)
         if name not in oracles:
             print(f"SKIP {name}: no oracle (rows-only: {len(sdf)})")
             continue
