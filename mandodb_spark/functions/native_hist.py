@@ -607,26 +607,24 @@ def hist_fraction(rel: DataFrame, lo: float, hi: float,
 # counter math: increase / rate / delta over histogram-valued series
 # --------------------------------------------------------------------------
 
-def _step_frames(rel: DataFrame, detect_resets: bool):
-    """Per-STEP difference frames shared by the whole-range counter math
-    (:func:`_hist_counter_math`) and the grid evaluator
-    (:func:`grid_hist_rate`).
-
-    Returns ``(sc, exr)``:
-
-    - ``sc`` — one row per SAMPLE: scalars + previous-sample scalars
-      (``__pc/__ps/__pz``), ``__prev_ts`` and the step's ``__reset`` flag;
-    - ``exr`` — one row per (sample, bucket) at the series-min schema:
-      ``cnt``, ``__aligned_prev`` (0 when the bucket was absent from the
-      previous sample) and the same ``__reset``/``__prev_ts``.
+def _step_frames(rel: DataFrame, detect_resets: bool) -> DataFrame:
+    """Per-STEP difference frame behind :func:`grid_hist_rate` (and so
+    behind the single-window :func:`hist_increase`/:func:`hist_rate`/
+    :func:`hist_delta`): one row per SAMPLE carrying its scalars, the
+    previous sample's scalars (``__pc/__ps/__pz``) and zero threshold
+    (``__pzt``), ``__prev_ts``, the step's ``__reset`` flag and the
+    step's bucket delta maps ``__dpos``/``__dneg``.
 
     Counter-reset contract (Prometheus histogram counter semantics): a
     step resets iff ``count`` or ``zero_count`` drops OR ANY bucket's
     cumulative count drops; a reset step contributes the new sample
     verbatim (the counter restarted from empty).  Mixed schemas are first
-    normalized to the series' coarsest schema (bucket i at schema s maps
-    to ceil(i / 2^(s-s')) at coarser s' — the exact exponential-boundary
-    merge), so map keys align before any subtraction.
+    normalized to the series' coarsest schema in ``rel`` (bucket i at
+    schema s maps to ceil(i / 2^(s-s')) at coarser s' — the exact
+    exponential-boundary merge), so map keys align before any
+    subtraction.  That minimum is taken over the whole relation given,
+    so on a multi-point grid every window of a series reports the
+    coarsest schema anywhere in the grid's range.
 
     Everything is derived from ONE window pass over the sample frame —
     JOIN-FREE and bucket-window-free (r12 restructure): each sample row
@@ -693,6 +691,7 @@ def _step_frames(rel: DataFrame, detect_resets: bool):
         .withColumn("__pc", F.lag("__c").over(ws))
         .withColumn("__ps", F.lag("__s").over(ws))
         .withColumn("__pz", F.lag("__z").over(ws))
+        .withColumn("__pzt", F.lag("__zt").over(ws))
         .withColumn("__ppos", F.lag("__npos").over(ws))
         .withColumn("__pneg", F.lag("__nneg").over(ws))
     )
@@ -716,14 +715,15 @@ def _step_frames(rel: DataFrame, detect_resets: bool):
         reset = F.lit(False)
     base = base.withColumn("__reset", reset)
 
-    # -- per-step bucket DELTA MAPS on the sample row itself (r13): the
-    #    map-space analogue of _step_bucket, so grid_hist_rate can run
-    #    ONE aggregation (collect + expression-merge) instead of the
-    #    exploded per-bucket groupBy + map regroup + join.  Counts are
-    #    integer-valued doubles, so the subtraction and any later merge
-    #    order are exact.  Consumers that only need the scalars
-    #    (_hist_counter_math) never reference these columns and Catalyst
-    #    prunes them with the rest of the map lag state.
+    # -- per-step bucket DELTA MAPS on the sample row itself (r13), so
+    #    grid_hist_rate runs ONE aggregation (collect + expression-merge)
+    #    instead of an exploded per-bucket groupBy + map regroup + join.
+    #    Counter mode keys on current-sample buckets only (a vanished
+    #    bucket implies a reset, where the step is the new sample
+    #    verbatim); gauge mode keys on cur ∪ prev so a vanished bucket
+    #    still emits its explicit -prev step and the per-bucket deltas
+    #    telescope to last-minus-first.  Counts are integer-valued
+    #    doubles, so the subtraction and any later merge order are exact.
     def step_map(sign: int) -> Column:
         cur = F.col("__npos") if sign == 1 else F.col("__nneg")
         prev = F.coalesce(F.col("__ppos") if sign == 1 else F.col("__pneg"),
@@ -745,59 +745,11 @@ def _step_frames(rel: DataFrame, detect_resets: bool):
             .otherwise(diff)
         )
 
-    sc = (
+    return (
         base.withColumn("__dpos", step_map(1))
         .withColumn("__dneg", step_map(-1))
         .drop("__npos", "__nneg", "__ppos", "__pneg")
     )
-
-    # -- bucket step frame: ONE explode over the fused ± entry array, the
-    #    aligned previous count read from the lagged map on the same row.
-    #    Counter mode iterates CURRENT-sample buckets (a vanished bucket
-    #    implies a reset, where each bucket contributes the new sample
-    #    verbatim — absent buckets contribute nothing).  Gauge mode
-    #    iterates cur ∪ prev keys so a vanished bucket still emits its
-    #    explicit zero-count step (cnt 0, aligned_prev = its previous
-    #    count) — without it the per-bucket deltas would stop telescoping
-    #    to last-minus-first and the bucket sum would contradict count.
-    carried = ["series_key", "ts", "__prev_ts", "__c", "__pc", "__z", "__pz",
-               "__reset"]
-
-    def sided(sign: int) -> Column:
-        cur = F.col("__npos") if sign == 1 else F.col("__nneg")
-        prev = F.coalesce(F.col("__ppos") if sign == 1 else F.col("__pneg"),
-                          _empty_buckets())
-        if detect_resets:
-            keys = F.map_keys(cur)
-        else:
-            keys = F.array_distinct(F.concat(F.map_keys(cur),
-                                             F.map_keys(prev)))
-        return F.transform(
-            keys,
-            lambda k: F.struct(
-                F.lit(sign).cast("int").alias("sign"),
-                k.cast("int").alias("idx"),
-                F.coalesce(F.element_at(cur, k), F.lit(0.0)).alias("cnt"),
-                F.when(
-                    F.col("__prev_ts").isNotNull(),
-                    F.coalesce(F.element_at(prev, k), F.lit(0.0)),
-                ).otherwise(F.lit(0.0)).alias("ap"),
-            ),
-        )
-
-    exr = (
-        base.select(
-            *carried,
-            F.col("__schema").alias("schema"),
-            F.explode(F.concat(sided(1), sided(-1))).alias("__b"),
-        )
-        .select(*carried, "schema",
-                F.col("__b.sign").alias("sign"),
-                F.col("__b.idx").alias("idx"),
-                F.col("__b.cnt").alias("cnt"),
-                F.col("__b.ap").alias("__aligned_prev"))
-    )
-    return sc, exr
 
 
 def _step_scalar(cur: Column, prev: Column) -> Column:
@@ -810,93 +762,30 @@ def _step_scalar(cur: Column, prev: Column) -> Column:
     )
 
 
-def _step_bucket() -> Column:
-    """Per-step contribution of one bucket (same contract as
-    :func:`_step_scalar`, over the exploded bucket step frame)."""
-    return (
-        F.when(F.col("__prev_ts").isNull(), F.lit(0.0))
-        .when(F.col("__reset"), F.col("cnt"))
-        .otherwise(F.col("cnt") - F.col("__aligned_prev"))
-    )
-
-
-def _hist_counter_math(rel: DataFrame, start: int, end: int,
-                       detect_resets: bool) -> DataFrame:
-    """Whole-range counter math for :func:`hist_increase`
-    (detect_resets=True) and :func:`hist_delta` (False): per-series
-    element-wise sum of the per-step differences of :func:`_step_frames`
-    over [start, end] — per-component hash sums, ~3 shuffles total."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    sc, exr = _step_frames(rel, detect_resets)
-    step = _step_scalar
-
-    agg_scalars = sc.groupBy("series_key").agg(
-        F.any_value("labels").alias("labels"),
-        F.sum(step(F.col("__c"), F.col("__pc"))).alias("count"),
-        F.sum(step(F.col("__s"), F.col("__ps"))).alias("sum"),
-        F.sum(step(F.col("__z"), F.col("__pz"))).alias("zero_count"),
-        F.max("__zt").alias("zero_threshold"),
-        F.min("__schema").alias("schema"),
-        (F.max("ts") - F.min("ts")).alias("__span"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    binc = _step_bucket()
-    per_bucket = (
-        exr.groupBy("series_key", "sign", "idx")
-        .agg(F.sum(binc).alias("__v"))
-        .filter(F.col("__v") != 0)
-    )
-    pos_agg, neg_agg = _bucket_map_aggs("sign", "idx", "__v")
-    maps = per_bucket.groupBy("series_key").agg(
-        pos_agg.alias("__pos"), neg_agg.alias("__neg"))
-    joined = agg_scalars.join(maps, "series_key", "left").filter(F.col("__n") >= 2)
-    hist = _hist_struct(F.col("count"), F.col("sum"), F.col("zero_count"),
-                        F.col("zero_threshold"), F.col("schema"),
-                        F.col("__pos"), F.col("__neg"), coalesce_maps=True)
-    return joined.select(
-        "series_key", "labels", hist.alias("hist"), "__span"
-    ).withColumn("ts", F.lit(int(end)).cast("long"))
-
-
 def hist_increase(rel: DataFrame, start: int, end: int) -> DataFrame:
     """``increase(h[range])`` over native-histogram counters: element-wise
     sum of per-step increases with histogram-level reset handling (see
-    :func:`_hist_counter_math`).  No extrapolation — consistent with this
-    engine's scalar ``promql.increase`` contract.  Output rows are
-    stamped ``ts = end`` (the evaluation time), so the result composes
-    directly with :func:`hist_quantile` / :func:`hist_fraction`."""
-    return _hist_counter_math(rel, start, end, True).select(
-        "series_key", "labels", "ts", "hist"
-    )
+    :func:`_step_frames`) — :func:`grid_hist_rate` on the one-point grid
+    {end}.  No extrapolation — consistent with this engine's scalar
+    ``promql.increase`` contract.  Output rows are stamped ``ts = end``
+    (the evaluation time), so the result composes directly with
+    :func:`hist_quantile` / :func:`hist_fraction`."""
+    return grid_hist_rate(rel, end, end, end - start + 1, 1, "increase")
 
 
 def hist_rate(rel: DataFrame, start: int, end: int) -> DataFrame:
     """``rate(h[range])``: :func:`hist_increase` divided element-wise by
-    the observed span — one map_from... transform_values, still a
-    histogram-valued vector (feed to :func:`hist_quantile` for the
-    canonical ``histogram_quantile(q, rate(h[5m]))``)."""
-    out = _hist_counter_math(rel, start, end, True).filter(F.col("__span") > 0)
-    span = F.col("__span").cast("double")
-    scale = lambda c: c / span  # noqa: E731
-    hist = F.struct(
-        scale(F.col("hist.count")).alias("count"),
-        scale(F.col("hist.sum")).alias("sum"),
-        scale(F.col("hist.zero_count")).alias("zero_count"),
-        F.col("hist.zero_threshold").alias("zero_threshold"),
-        F.col("hist.schema").alias("schema"),
-        F.transform_values("hist.pos", lambda _, v: v / span).alias("pos"),
-        F.transform_values("hist.neg", lambda _, v: v / span).alias("neg"),
-    )
-    return out.select("series_key", "labels", "ts", hist.alias("hist"))
+    the observed span, still a histogram-valued vector (feed to
+    :func:`hist_quantile` for the canonical
+    ``histogram_quantile(q, rate(h[5m]))``)."""
+    return grid_hist_rate(rel, end, end, end - start + 1, 1, "rate")
 
 
 def hist_delta(rel: DataFrame, start: int, end: int) -> DataFrame:
     """``delta(h[range])`` for GAUGE histograms: last − first element-wise
     (per-step differences telescope; no reset detection).  ``ts = end``,
     as :func:`hist_increase`."""
-    return _hist_counter_math(rel, start, end, False).select(
-        "series_key", "labels", "ts", "hist"
-    )
+    return grid_hist_rate(rel, end, end, end - start + 1, 1, "delta")
 
 
 # --------------------------------------------------------------------------
@@ -1097,12 +986,14 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
     HISTOGRAM-valued — the distributed lowering behind range-mode
     ``histogram_quantile(q, rate(h[5m]))`` dashboards.
 
-    Design mirrors ``promql.grid_rate``: the per-step difference frames
-    (:func:`_step_frames`) are computed ONCE per series — never per eval
+    Design mirrors ``promql.grid_rate``: the per-step difference frame
+    (:func:`_step_frames`) is computed ONCE per series — never per eval
     point — then each step explodes to the eval points whose window
     contains BOTH its endpoints (per-(series, t) recomputation would give
-    identical steps, since restricting to a window only truncates the
-    sample sequence's ends).  A window's first sample is its baseline;
+    identical steps for a uniform-schema series, since restricting to a
+    window only truncates the sample sequence's ends; a mixed-schema
+    series is normalized to its coarsest schema over the whole grid
+    range).  A window's first sample is its baseline;
     per-(series, t) span/sample-count derive from the contributing steps
     themselves (consecutive steps chain: span = max ts − min prev_ts), so
     no second sample-level explode is needed.  Fan-out is capped by
@@ -1114,7 +1005,7 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
     _check_fanout(window - 1, start, end, step, f"grid_hist_rate({mode})")
     rel = _ensure_series_key(rel).filter(
         F.col("ts").between(start - window + 1, end))
-    sc, _ = _step_frames(rel, mode != "delta")
+    sc = _step_frames(rel, mode != "delta")
     # a step covers the eval points whose window holds BOTH endpoints:
     # ts ≤ t ≤ prev_ts + window − 1
     scg = _cover(sc, window - 1, start, end, step, anchor=F.col("__prev_ts"))
@@ -1130,7 +1021,10 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
         F.sum(_step_scalar(F.col("__c"), F.col("__pc"))).alias("count"),
         F.sum(_step_scalar(F.col("__s"), F.col("__ps"))).alias("sum"),
         F.sum(_step_scalar(F.col("__z"), F.col("__pz"))).alias("zero_count"),
-        F.max("__zt").alias("zero_threshold"),
+        # the window's baseline sample is no step, so its threshold
+        # arrives as the first step's __pzt (Prometheus widens the zero
+        # bucket to the larger threshold on Sub)
+        F.greatest(F.max("__zt"), F.max("__pzt")).alias("zero_threshold"),
         F.min("__smin").alias("schema"),
         (F.max("ts") - F.min("__prev_ts")).alias("__span"),
         F.collect_list("__dpos").alias("__lp"),
@@ -1165,6 +1059,7 @@ def grid_hist_rate(rel: DataFrame, start: int, end: int, window: int,
         F.col("schema"),
         F.transform_values(F.col("__pos"), lambda _, v: v / span),
         F.transform_values(F.col("__neg"), lambda _, v: v / span),
+        coalesce_maps=True,  # the merged maps are never null: say so in the schema
     )
     return joined.select(
         "series_key", "labels", F.col("__t").alias("ts"), hist.alias("hist")

@@ -6,8 +6,11 @@ switching from the reference + an external PromQL layer needs these; they
 are the natural "complete engine" surface for the data model, and every one
 is a pure DataFrame transform:
 
-- range-vector functions: ``rate``, ``increase``, ``delta`` — per-series
-  counter math over [start, end] windows via window functions;
+- range-vector functions: ``rate``, ``increase``, ``delta``, ``irate``,
+  ``idelta``, ``changes``, ``deriv``, ``predict_linear`` and
+  ``holt_winters`` over one [start, end] window — each is its range-query
+  grid primitive (``grid_rate``, ``grid_deriv``, ``grid_holt_winters``)
+  evaluated on the one-point grid {end}, so one body serves both;
 - ``*_over_time`` aggregations: avg/min/max/sum/count per series per
   tumbling window;
 - instant-vector selection: ``instant`` (latest sample per series at t);
@@ -25,10 +28,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..model import METRIC_NAME_LABEL, canonical_labels_json, series_key
-
-
-def _series_window():
-    return Window.partitionBy("series_key").orderBy("ts")
 
 
 def _ensure_series_key(rel: DataFrame) -> DataFrame:
@@ -52,68 +51,19 @@ def instant(rel: DataFrame, at_ts: int, lookback: int = 300) -> DataFrame:
 
 def delta(rel: DataFrame, start: int, end: int) -> DataFrame:
     """Gauge delta over the range: last - first per series."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    return (
-        rel.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            (F.max_by("value", "ts") - F.min_by("value", "ts")).alias("value"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
-        .filter(F.col("n_samples") >= 2)
-        .drop("n_samples")
-    )
+    return grid_rate(rel, end, end, end - start + 1, 1, "delta").drop("ts")
 
 
 def increase(rel: DataFrame, start: int, end: int) -> DataFrame:
     """Counter increase over the range: sum of positive per-sample deltas
     (counter resets clamp to the new value, mirroring PromQL's reset
     handling without extrapolation)."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
-    stepped = rel.withColumn("__prev", F.lag("value").over(w)).withColumn(
-        "__inc",
-        F.when(F.col("__prev").isNull(), F.lit(0.0))
-        .when(F.col("value") >= F.col("__prev"), F.col("value") - F.col("__prev"))
-        .otherwise(F.col("value")),  # reset: counter restarted at `value`
-    )
-    return (
-        stepped.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.sum("__inc").alias("value"),
-            F.count(F.lit(1)).alias("n_samples"),
-        )
-        .filter(F.col("n_samples") >= 2)
-        .drop("n_samples")
-    )
+    return grid_rate(rel, end, end, end - start + 1, 1, "increase").drop("ts")
 
 
 def rate(rel: DataFrame, start: int, end: int) -> DataFrame:
     """Counter rate: increase / observed time span (per series)."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
-    stepped = rel.withColumn("__prev", F.lag("value").over(w)).withColumn(
-        "__inc",
-        F.when(F.col("__prev").isNull(), F.lit(0.0))
-        .when(F.col("value") >= F.col("__prev"), F.col("value") - F.col("__prev"))
-        .otherwise(F.col("value")),
-    )
-    return (
-        stepped.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.sum("__inc").alias("__total"),
-            (F.max("ts") - F.min("ts")).alias("__span"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        .filter((F.col("__n") >= 2) & (F.col("__span") > 0))
-        .select(
-            "series_key",
-            "labels",
-            (F.col("__total") / F.col("__span")).alias("value"),
-        )
-    )
+    return grid_rate(rel, end, end, end - start + 1, 1, "rate").drop("ts")
 
 
 _OVER_TIME = {
@@ -256,7 +206,7 @@ def resets(rel: DataFrame, start: int, end: int) -> DataFrame:
     """PromQL ``resets``: number of counter resets (value drops) per series
     over the range."""
     rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
+    w = Window.partitionBy("series_key").orderBy("ts")
     stepped = rel.withColumn("__prev", F.lag("value").over(w))
     return (
         stepped.groupBy("series_key")
@@ -274,95 +224,27 @@ def resets(rel: DataFrame, start: int, end: int) -> DataFrame:
 
 def deriv(rel: DataFrame, start: int, end: int) -> DataFrame:
     """PromQL ``deriv``: per-second derivative of a gauge via simple linear
-    regression over the range (exactly PromQL's definition).
-
-    One codegen'd aggregation (``regr_slope`` is covariance/variance —
-    partial-aggregable map-side, same scale shape as sum/avg).  Time is
-    shifted to range-relative before regressing: both engines compute in
-    double, and regressing on raw epoch seconds (~1.7e9) loses precision to
-    cancellation differently per engine.
-    """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    x = (F.col("ts") - F.lit(start)).cast("double")
-    return (
-        rel.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.regr_slope(F.col("value"), x).alias("value"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        .filter((F.col("__n") >= 2) & F.col("value").isNotNull())
-        .select("series_key", "labels", "value")
-    )
+    regression over the range (exactly PromQL's definition)."""
+    return grid_deriv(rel, end, end, end - start + 1, 1).drop("ts")
 
 
 def predict_linear(rel: DataFrame, start: int, end: int, horizon: int) -> DataFrame:
     """PromQL ``predict_linear``: extrapolate each series ``horizon``
     seconds past ``end`` on the least-squares line over the range."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    x = (F.col("ts") - F.lit(start)).cast("double")
-    at = float(end - start + horizon)
-    return (
-        rel.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.regr_slope(F.col("value"), x).alias("__slope"),
-            F.regr_intercept(F.col("value"), x).alias("__icept"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        .filter((F.col("__n") >= 2) & F.col("__slope").isNotNull())
-        .select(
-            "series_key",
-            "labels",
-            (F.col("__icept") + F.col("__slope") * F.lit(at)).alias("value"),
-        )
-    )
+    return grid_deriv(rel, end, end, end - start + 1, 1,
+                      horizon=horizon).drop("ts")
 
 
 def irate(rel: DataFrame, start: int, end: int) -> DataFrame:
     """PromQL ``irate``: instantaneous rate from the LAST TWO samples per
-    series (counter-reset aware).
-
-    One window pass (lag of value and ts) then keep each series' newest row
-    via ``max_by`` over a struct — a single series-keyed shuffle, same
-    partitioning as every other range function.
-    """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
-    stepped = (
-        rel.withColumn("__prev_v", F.lag("value").over(w))
-        .withColumn("__prev_ts", F.lag("ts").over(w))
-        .filter(F.col("__prev_ts").isNotNull())
-    )
-    inc = F.when(F.col("value") >= F.col("__prev_v"), F.col("value") - F.col("__prev_v")).otherwise(
-        F.col("value")
-    )
-    per_step = stepped.withColumn("__rate", inc / (F.col("ts") - F.col("__prev_ts")))
-    return (
-        per_step.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.max_by("__rate", "ts").alias("value"),
-        )
-        .select("series_key", "labels", "value")
-    )
+    series (counter-reset aware)."""
+    return grid_rate(rel, end, end, end - start + 1, 1, "irate").drop("ts")
 
 
 def idelta(rel: DataFrame, start: int, end: int) -> DataFrame:
     """PromQL ``idelta``: difference of the last two samples per series
     (gauge semantics — no reset handling)."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
-    stepped = (
-        rel.withColumn("__prev_v", F.lag("value").over(w))
-        .filter(F.col("__prev_v").isNotNull())
-        .withColumn("__d", F.col("value") - F.col("__prev_v"))
-    )
-    return (
-        stepped.groupBy("series_key")
-        .agg(F.any_value("labels").alias("labels"), F.max_by("__d", "ts").alias("value"))
-        .select("series_key", "labels", "value")
-    )
+    return grid_rate(rel, end, end, end - start + 1, 1, "idelta").drop("ts")
 
 
 def changes(rel: DataFrame, start: int, end: int) -> DataFrame:
@@ -372,21 +254,9 @@ def changes(rel: DataFrame, start: int, end: int) -> DataFrame:
     A single-sample series yields 0 (not an empty result) — Prometheus'
     ``funcChanges`` counts transitions and a one-sample window simply has
     none (promql/functions.go), so no minimum-sample filter here."""
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    w = _series_window()
-    stepped = rel.withColumn("__prev", F.lag("value").over(w))
-    return (
-        stepped.groupBy("series_key")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.sum(
-                F.when(
-                    F.col("__prev").isNotNull() & (F.col("value") != F.col("__prev")), 1
-                ).otherwise(0)
-            ).cast("long").alias("value"),
-        )
-        .select("series_key", "labels", "value")
-    )
+    out = grid_rate(rel, end, end, end - start + 1, 1, "changes")
+    return out.select("series_key", "labels",
+                      F.col("value").cast("long").alias("value"))
 
 
 def rate_sliding(rel: DataFrame, start: int, end: int, window: int, step: int) -> DataFrame:
@@ -543,63 +413,66 @@ def grid_over_time(rel: DataFrame, fn: str, start: int, end: int,
     )
 
 
+def _step_inc() -> Column:
+    """Reset-aware increase of one lagged step: 0 on a window's first
+    sample, the new value verbatim after a counter reset."""
+    v, prev = F.col("value"), F.col("__prev")
+    return F.when(prev.isNull(), F.lit(0.0)).when(v >= prev, v - prev).otherwise(v)
+
+
+def _transitions(differs: Column) -> Column:
+    return F.sum(F.when(F.col("__prev").isNotNull() & differs, 1).otherwise(0))
+
+
+#: grid_rate's modes: the aggregates each reads over a window's lagged
+#: rows, ``__v`` its value.  Built per call, so a query constructs only
+#: its own mode's expressions.  ``__n`` marks a mode that needs two
+#: samples; ``__span`` marks rate, which keeps a window with a positive
+#: observed span (two samples at least) and divides after that filter.
+_RATE_MODES = {
+    "rate": lambda: {"__v": F.sum(_step_inc()),
+                     "__span": F.max("ts") - F.min("ts")},
+    "increase": lambda: {"__v": F.sum(_step_inc()), "__n": F.count(F.lit(1))},
+    "delta": lambda: {"__v": F.max_by("value", "ts") - F.min_by("value", "ts"),
+                      "__n": F.count(F.lit(1))},
+    "irate": lambda: {"__v": F.max_by(_step_inc() / (F.col("ts") - F.col("__prev_ts")),
+                                      "ts"),
+                      "__n": F.count(F.lit(1))},
+    "idelta": lambda: {"__v": F.max_by(F.col("value") - F.col("__prev"), "ts"),
+                       "__n": F.count(F.lit(1))},
+    "changes": lambda: {"__v": _transitions(F.col("value") != F.col("__prev"))},
+    "resets": lambda: {"__v": _transitions(F.col("value") < F.col("__prev"))},
+}
+
+
 def grid_rate(rel: DataFrame, start: int, end: int, window: int, step: int,
               mode: str = "rate") -> DataFrame:
     """rate / increase / delta / irate / idelta / changes / resets over
-    ``[window]`` at every grid eval point — ONE shared lag pass per
-    (series, t) feeds every mode.  rate/increase/irate are reset-aware
-    (this engine's observed-span rate, §3 delta); delta/idelta are gauge
-    differences; changes/resets count transitions (a single-sample window
-    yields 0, as funcChanges does).  Modes needing two samples filter
-    ``n ≥ 2``; rate additionally needs a positive observed span."""
-    if mode not in ("rate", "increase", "delta", "irate", "idelta",
-                    "changes", "resets"):
+    ``[window]`` at every grid eval point — one lag pass per (series, t),
+    then the aggregates ``mode`` reads.  rate/increase/irate are
+    reset-aware (this engine's observed-span rate, §3 delta); delta/idelta
+    are gauge differences; changes/resets count transitions (a
+    single-sample window yields 0, as funcChanges does).  Modes needing
+    two samples filter ``n ≥ 2``; rate additionally needs a positive
+    observed span.  The single-window functions (:func:`rate`,
+    :func:`changes`, ...) are this on the one-point grid {end}."""
+    if mode not in _RATE_MODES:
         raise ValueError(f"grid_rate mode {mode!r}")
     _check_fanout(window - 1, start, end, step, f"grid_rate({mode})")
     covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     w = Window.partitionBy("series_key", "__t").orderBy("ts")
-    has_prev = F.col("__prev").isNotNull()
-    stepped = (
-        covered.withColumn("__prev", F.lag("value").over(w))
-        .withColumn("__prev_ts", F.lag("ts").over(w))
-        .withColumn(
-            "__inc",
-            F.when(~has_prev, F.lit(0.0))
-            .when(F.col("value") >= F.col("__prev"),
-                  F.col("value") - F.col("__prev"))
-            .otherwise(F.col("value")),
-        )
-    )
+    stepped = covered.withColumns({"__prev": F.lag("value").over(w),
+                                   "__prev_ts": F.lag("ts").over(w)})
+    aggs = _RATE_MODES[mode]()
     grouped = stepped.groupBy("series_key", "__t").agg(
         F.any_value("labels").alias("labels"),
-        F.sum("__inc").alias("__total"),
-        (F.max_by(F.col("value"), F.col("ts"))
-         - F.min_by(F.col("value"), F.col("ts"))).alias("__delta"),
-        F.max_by(F.col("__inc") / (F.col("ts") - F.col("__prev_ts")),
-                 F.col("ts")).alias("__irate"),
-        F.max_by(F.col("value") - F.col("__prev"), F.col("ts")).alias("__idelta"),
-        F.sum(F.when(has_prev & (F.col("value") != F.col("__prev")), 1)
-              .otherwise(0)).alias("__changes"),
-        F.sum(F.when(has_prev & (F.col("value") < F.col("__prev")), 1)
-              .otherwise(0)).alias("__resets"),
-        (F.max("ts") - F.min("ts")).alias("__span"),
-        F.count(F.lit(1)).alias("__n"),
-    )
-    if mode in ("changes", "resets"):
-        value = F.col("__" + mode)
-    else:
+        *(c.alias(name) for name, c in aggs.items()))
+    value = F.col("__v")
+    if "__n" in aggs:
         grouped = grouped.filter(F.col("__n") >= 2)
-        if mode == "rate":
-            grouped = grouped.filter(F.col("__span") > 0)
-            value = F.col("__total") / F.col("__span")
-        elif mode == "increase":
-            value = F.col("__total")
-        elif mode == "delta":
-            value = F.col("__delta")
-        elif mode == "irate":
-            value = F.col("__irate")
-        else:
-            value = F.col("__idelta")
+    if "__span" in aggs:
+        grouped = grouped.filter(F.col("__span") > 0)
+        value = value / F.col("__span")
     return grouped.select(
         "series_key", "labels", F.col("__t").alias("ts"),
         value.cast("double").alias("value"))
@@ -1340,33 +1213,17 @@ def holt_winters(rel: DataFrame, start: int, end: int,
                  sf: float, tf: float) -> DataFrame:
     """PromQL ``holt_winters`` / ``double_exponential_smoothing``
     (promql/functions.go funcHoltWinters): per-series smoothed value over
-    [start, end] with smoothing factor ``sf`` and trend factor ``tf``.
-
-    The recurrence (s_i depends on s_{i-1}, s_{i-2}, b_{i-1}) is inherently
-    sequential per series, but series are independent — so the scale shape
-    is: one groupBy shuffle to assemble each series' ordered points, then a
-    JVM-side ``F.aggregate`` fold over the sorted array (no Python, no
-    window, no per-row state).  State per series is O(1); the fold mirrors
-    the Go loop exactly (trend update uses the PREVIOUS two smoothed
-    values; the second raw sample both seeds the trend and is consumed by
-    the first iteration).
-    """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    vals = F.transform(
-        F.array_sort(F.collect_list(F.struct("ts", "value"))), lambda p: p["value"]
-    )
-    per_series = rel.groupBy("series_key").agg(
-        F.any_value("labels").alias("labels"), vals.alias("__vals")
-    ).filter(F.size("__vals") >= 2)
-    return per_series.select(
-        "series_key", "labels",
-        _hw_fold(F.col("__vals"), sf, tf).cast("double").alias("value"),
-    )
+    [start, end] with smoothing factor ``sf`` and trend factor ``tf``."""
+    return grid_holt_winters(rel, end, end, end - start + 1, 1,
+                             sf, tf).drop("ts")
 
 
 def _hw_fold(v: Column, sf: float, tf: float) -> Column:
     """The Holt-Winters recurrence as one JVM ``F.aggregate`` fold over a
-    ts-sorted value array — shared by the instant and grid evaluators."""
+    ts-sorted value array.  State per series is O(1); the fold mirrors
+    the Go loop exactly (trend update uses the PREVIOUS two smoothed
+    values; the second raw sample both seeds the trend and is consumed by
+    the first iteration)."""
     init = F.struct(
         F.element_at(v, 1).alias("sp"),
         F.element_at(v, 1).alias("s"),
@@ -1392,10 +1249,10 @@ def _hw_fold(v: Column, sf: float, tf: float) -> Column:
 def grid_holt_winters(rel: DataFrame, start: int, end: int, window: int,
                       step: int, sf: float, tf: float) -> DataFrame:
     """``holt_winters(sel[window], sf, tf)`` at every grid eval point:
-    the same sequential-per-window :func:`_hw_fold` :func:`holt_winters`
-    runs, over per-(series, t) sorted value arrays assembled by the
-    covering-points explode — array size bounded by samples-per-window,
-    one hash aggregate, no Python."""
+    the recurrence is sequential per window but windows are independent,
+    so the sequential :func:`_hw_fold` runs over per-(series, t) sorted
+    value arrays assembled by the covering-points explode — array size
+    bounded by samples-per-window, one hash aggregate, no Python."""
     _check_fanout(window - 1, start, end, step, "grid_holt_winters")
     covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     vals = F.transform(
@@ -1415,10 +1272,11 @@ def grid_deriv(rel: DataFrame, start: int, end: int, window: int,
     ``predict_linear(sel[window], horizon)`` — at every grid eval point:
     per-(series, t) least-squares slope/intercept (``regr_slope`` /
     ``regr_intercept``, partial-aggregatable) over the window's samples.
-    x is window-relative (ts − window start) for cross-engine numeric
-    stability, so the eval point sits at x = window − 1 and
-    predict_linear extrapolates to x = window − 1 + horizon, exactly the
-    instant form's arithmetic."""
+    x is window-relative (ts − window start): both engines compute in
+    double, and regressing on raw epoch seconds (~1.7e9) loses precision
+    to cancellation differently per engine.  The eval point sits at
+    x = window − 1 and predict_linear extrapolates to
+    x = window − 1 + horizon."""
     _check_fanout(window - 1, start, end, step, "grid_deriv")
     covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
     x = (F.col("ts") - (F.col("__t") - F.lit(window - 1))).cast("double")

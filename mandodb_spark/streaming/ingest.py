@@ -21,8 +21,9 @@ The Spark shape replaces all of it with one construct:
   bounding (:func:`bounded_source` wires maxFilesPerTrigger /
   maxOffsetsPerTrigger / maxBytesPerTrigger); ingestion lags rather
   than erroring.
-- T4 (async, lossy)        → checkpointing upgrades this to exactly-once
-  into the store (strictly stronger than the reference).
+- T4 (async, lossy)        → checkpointing makes delivery at-least-once
+  into the store (no batch is lost; a batch replayed after a failure is
+  appended again).
 - T6 (memory mode)         → format("memory") sink for tests.
 
 Small-files posture: one file per segment per micro-batch (repartition by
@@ -147,9 +148,9 @@ class StreamingIngestor(Maintainer):
     def _on_batch(self, batch_df: DataFrame, batch_id: int) -> dict[str, int]:
         """One micro-batch → one transactional Parquet append (S4).
 
-        foreachBatch may redeliver a batch after recovery; the Parquet
-        append is idempotent per batch only via checkpoint bookkeeping —
-        exactly-once to the store under Spark's guarantees.
+        foreachBatch may redeliver a batch after recovery, and the append
+        does not look at ``batch_id``: a redelivered batch is appended
+        again, so delivery to the store is at-least-once.
         """
         self.store.append(batch_df)
         if self.label_dim_dest:

@@ -473,23 +473,175 @@ def test_grid_hist_instant_matches_per_point_instant(grid_tsdb):
         assert by_t[t] == one, t
 
 
+def _hist_samples(rel):
+    """The rows of a hist relation as plain dicts: ts, labels and the
+    histogram's fields, bucket maps as dicts."""
+    out = []
+    for r in rel.collect():
+        h = r["hist"].asDict()
+        h["pos"], h["neg"] = dict(h["pos"] or {}), dict(h["neg"] or {})
+        out.append({"ts": r["ts"], "labels": dict(r["labels"]), **h})
+    return out
+
+
+def _ref_hist_window(samples, mode):
+    """Reference increase / rate / delta of one series over one window's
+    samples (uniform schema), or None when the window yields no row.
+
+    The first sample is the baseline; every later one is a step from its
+    predecessor.  In the counter modes a step resets iff count or
+    zero_count drops or any bucket of the previous sample shrinks or
+    vanishes, and a reset step counts as the new sample verbatim; delta
+    never resets, so its steps telescope to last − first.  Zero bucket
+    totals are dropped, rate divides by the observed span (last ts −
+    first ts, which must be positive), and the zero threshold is the
+    largest in the window, the baseline's included."""
+    samples = sorted(samples, key=lambda h: h["ts"])
+    if len(samples) < 2:
+        return None
+    span = samples[-1]["ts"] - samples[0]["ts"]
+    if mode == "rate" and span <= 0:
+        return None
+    out = {"count": 0.0, "sum": 0.0, "zero_count": 0.0, "pos": {}, "neg": {}}
+    for prev, cur in zip(samples, samples[1:]):
+        reset = mode != "delta" and (
+            cur["count"] < prev["count"]
+            or cur["zero_count"] < prev["zero_count"]
+            or any(cur[f].get(k, 0.0) < v
+                   for f in ("pos", "neg") for k, v in prev[f].items()))
+        for k in ("count", "sum", "zero_count"):
+            out[k] += cur[k] if reset else cur[k] - prev[k]
+        for f in ("pos", "neg"):
+            keys = set(cur[f]) | (set(prev[f]) if mode == "delta" else set())
+            for k in keys:
+                base = 0.0 if reset else prev[f].get(k, 0.0)
+                out[f][k] = out[f].get(k, 0.0) + cur[f].get(k, 0.0) - base
+    div = float(span) if mode == "rate" else 1.0
+    for k in ("count", "sum", "zero_count"):
+        out[k] /= div
+    for f in ("pos", "neg"):
+        out[f] = {k: v / div for k, v in out[f].items() if v != 0}
+    out["zero_threshold"] = max(h["zero_threshold"] for h in samples)
+    out["schema"] = samples[0]["schema"]
+    return out
+
+
+def _assert_hist_matches(got, ref, where):
+    for k in ("count", "sum", "zero_count"):
+        assert got[k] == pytest.approx(ref[k]), (where, k)
+    for f in ("pos", "neg"):
+        assert dict(got[f]) == pytest.approx(ref[f]), (where, f)
+    assert got["zero_threshold"] == ref["zero_threshold"], where
+    assert got["schema"] == ref["schema"], where
+
+
 def test_grid_hist_rate_matches_whole_range_rate_per_point(grid_tsdb):
-    """grid rate at eval point t == hist_rate over (t-w, t] — the grid
-    lowering is bit-equal to per-point evaluation."""
+    """grid rate at eval point t == hist_rate over (t-w, t] == the
+    plain-Python reference over that window's samples — on a
+    uniform-schema series the grid lowering is bit-equal to per-point
+    evaluation (a mixed-schema series is normalized to its coarsest
+    schema over the whole grid range instead)."""
     rel = grid_tsdb.query_hist_rows("lat", None, 0, 10**10)
+    samples = _hist_samples(rel)
     w = 250
     grid = {r["ts"]: r["hist"]
             for r in nh.grid_hist_rate(rel, 1100, 1300, w, 100).collect()}
+    expected = {}
     for t in (1100, 1200, 1300):
+        expected[t] = _ref_hist_window(
+            [h for h in samples if t - w < h["ts"] <= t], "rate")
         whole = nh.hist_rate(rel, t - w + 1, t).collect()
         if not whole:
             assert t not in grid
+            assert expected[t] is None, t
             continue
         ref = whole[0]["hist"]
         got = grid[t]
         assert got["count"] == pytest.approx(ref["count"]), t
         assert got["sum"] == pytest.approx(ref["sum"]), t
         assert dict(got["pos"]) == pytest.approx(dict(ref["pos"])), t
+        assert got["zero_threshold"] == ref["zero_threshold"], t
+        assert got["schema"] == ref["schema"], t
+        _assert_hist_matches(ref, expected[t], ("hist_rate", t))
+        _assert_hist_matches(got, expected[t], ("grid_hist_rate", t))
+    assert set(grid) == {t for t, ref in expected.items() if ref is not None}
+
+
+def _reset_series_rel(spark):
+    """A counter histogram series with every kind of reset — a bucket
+    that shrinks while count grows (400), a zero_count drop (500), a
+    count drop (600) and a vanished negative bucket (900) — zero
+    thresholds that widen and narrow, and a one-sample series beside it
+    that never yields a row."""
+    tiny = nh.DEFAULT_ZERO_THRESHOLD
+
+    def h(zt, zero, pos, neg, total):
+        return {"count": zero + sum(pos.values()) + sum(neg.values()),
+                "sum": total, "zero_count": zero, "zero_threshold": zt,
+                "schema": nh.DEFAULT_SCHEMA, "pos": pos, "neg": neg}
+
+    rows = [("r", {"s": "r"}, ts, h(*spec)) for ts, spec in (
+        (100, (tiny, 1.0, {1: 2.0, 2: 1.0}, {1: 1.0}, 5.0)),
+        (200, (0.5, 2.0, {1: 3.0, 2: 2.0}, {1: 1.0}, 9.5)),
+        (300, (tiny, 2.0, {1: 3.0, 2: 4.0, 3: 1.0}, {1: 2.0}, 20.25)),
+        (400, (tiny, 3.0, {1: 1.0, 2: 6.0, 3: 3.0}, {1: 2.0}, 30.0)),
+        (500, (tiny, 1.0, {1: 2.0, 2: 7.0, 3: 4.0}, {1: 3.0}, 41.5)),
+        (600, (tiny, 0.0, {2: 1.0}, {}, 1.25)),
+        (700, (0.25, 1.0, {2: 2.0, 4: 1.0}, {2: 1.0}, 6.0)),
+        (800, (tiny, 1.0, {2: 4.0, 4: 1.0}, {2: 1.0}, 9.0)),
+        (900, (tiny, 1.0, {2: 5.0, 4: 2.0}, {}, 14.0)),
+        (1000, (tiny, 2.0, {2: 6.0, 4: 2.0, 5: 1.0}, {3: 1.0}, 20.0)),
+    )]
+    rows.append(("r", {"s": "one"}, 500, h(tiny, 1.0, {1: 1.0}, {}, 1.0)))
+    return spark.createDataFrame(rows, nh.HIST_ROW_SCHEMA).select(
+        F.map_concat(F.create_map(F.lit("__name__"), F.col("metric")),
+                     F.col("labels")).alias("labels"), "ts", "hist")
+
+
+@pytest.mark.parametrize("mode", ["rate", "increase", "delta"])
+def test_grid_hist_rate_matches_python_reference_across_resets(spark, mode):
+    """grid_hist_rate on a multi-point grid, and the single-window hist
+    function of the same mode (the one-point grid), equal the plain-Python
+    reference window by window over a series whose windows span every
+    kind of reset, and the single-window form keeps its output schema.
+    A window's baseline sample is no step of its own, but its zero
+    threshold still widens the result's (Prometheus Sub takes the larger
+    threshold): (150, 500] holds 0.5 only at its baseline, 200."""
+    rel = _reset_series_rel(spark)
+    samples = _hist_samples(rel)
+    w = 350
+    got = {(r["labels"]["s"], r["ts"]): r["hist"]
+           for r in nh.grid_hist_rate(rel, 100, 1000, w, 100, mode).collect()}
+    expected = {}
+    for s in ("r", "one"):
+        for t in range(100, 1001, 100):
+            ref = _ref_hist_window(
+                [h for h in samples
+                 if h["labels"]["s"] == s and t - w < h["ts"] <= t], mode)
+            if ref is not None:
+                expected[(s, t)] = ref
+    assert set(got) == set(expected)
+    assert sum(1 for s, _ in expected if s == "r") == 9
+    for key, ref in expected.items():
+        _assert_hist_matches(got[key], ref, (mode, key))
+    assert got[("r", 500)]["zero_threshold"] == 0.5
+    single = {"rate": nh.hist_rate, "increase": nh.hist_increase,
+              "delta": nh.hist_delta}[mode]
+    hist_schema = (
+        "struct<series_key:bigint,labels:map<string,string>,ts:bigint,"
+        "hist:struct<count:double,sum:double,zero_count:double,"
+        "zero_threshold:double,schema:int,pos:map<int,double>,"
+        "neg:map<int,double>>>")
+    assert single(rel, 1, 1000).schema.simpleString() == hist_schema
+    for t in (500, 1000):
+        out = {r["labels"]["s"]: r for r in single(rel, t - w + 1, t).collect()}
+        assert set(out) == {"r"}, t
+        assert out["r"]["ts"] == t
+        _assert_hist_matches(out["r"]["hist"], expected[("r", t)], (mode, t))
+    whole = single(rel, 1, 1000).collect()
+    assert len(whole) == 1
+    _assert_hist_matches(whole[0]["hist"], _ref_hist_window(
+        [h for h in samples if h["labels"]["s"] == "r"], mode), (mode, "whole"))
 
 
 def test_promql_range_histogram_quantile_of_rate(grid_tsdb):

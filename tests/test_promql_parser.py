@@ -777,7 +777,11 @@ def test_promql_store_parity_disk_bucketed_memory(spark, tmp_path):
 def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     """Cross-implementation pin: each grid primitive evaluated on a
     one-point grid must equal the corresponding batch function over the
-    same window — random sparse series, counter resets included."""
+    same window — random sparse series, counter resets included.  The
+    single-window range functions ARE their grid primitive on the
+    one-point grid {end}, so both are checked against a plain-Python
+    reference over the test's own rows, and each keeps its output
+    schema."""
     import random
 
     rng = random.Random(seed)
@@ -794,11 +798,6 @@ def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     def by_series(df, val="value"):
         return {r["labels"]["s"]: round(r[val], 9) for r in df.collect()}
 
-    g = promql.grid_rate(rel, t, t, w, 600, "rate")
-    b = promql.rate(rel.filter(F.col("ts").between(t - w + 1, t)),
-                    t - w + 1, t)
-    assert by_series(g) == by_series(b)
-
     for fn in ("avg", "sum", "min", "max", "count", "stddev", "last"):
         g = promql.grid_over_time(rel, fn, t, t, w, 600)
         b = promql.over_time(rel, fn, t - w + 1, t, w)
@@ -808,16 +807,73 @@ def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     b = promql.instant(rel, t, lookback=1800)
     assert by_series(g) == by_series(b)
 
-    # irate/idelta against the batch forms
-    g = promql.grid_rate(rel, t, t, w, 600, "irate")
-    b = promql.irate(rel.filter(F.col("ts").between(t - w + 1, t)),
-                     t - w + 1, t)
-    assert by_series(g) == by_series(b)
-    g = promql.grid_rate(rel, t, t, w, 600, "changes")
-    b = promql.changes(rel.filter(F.col("ts").between(t - w + 1, t)),
-                       t - w + 1, t)
-    assert {k: int(v) for k, v in by_series(g).items()} == \
-        {k: int(v) for k, v in by_series(b).items()}
+    # plain-Python reference of the single-window functions over (t-w, t]
+    lo, horizon, sf, tf = t - w + 1, 600, 0.5, 0.3
+    win: dict = {}
+    for labels, ts, v in rows:
+        if lo <= ts <= t:
+            win.setdefault(labels["s"], []).append((ts, v))
+
+    def inc(p, v):
+        return v - p if v >= p else v  # a reset restarts at v
+
+    def ref(fn, pts):
+        ts, vs = [p[0] for p in pts], [p[1] for p in pts]
+        steps = list(zip(vs, vs[1:]))
+        if fn == "changes":
+            return sum(v != p for p, v in steps)
+        if len(pts) < 2:
+            return None
+        if fn in ("increase", "rate"):
+            total = sum(inc(p, v) for p, v in steps)
+            return total if fn == "increase" else total / (ts[-1] - ts[0])
+        if fn == "delta":
+            return vs[-1] - vs[0]
+        if fn == "irate":
+            return inc(vs[-2], vs[-1]) / (ts[-1] - ts[-2])
+        if fn == "idelta":
+            return vs[-1] - vs[-2]
+        if fn == "holt_winters":
+            sp = s_ = vs[0]
+            b = vs[1] - vs[0]
+            for i, x in enumerate(vs[1:], start=1):
+                if i > 1:
+                    b = tf * (s_ - sp) + (1 - tf) * b
+                sp, s_ = s_, sf * x + (1 - sf) * (s_ + b)
+            return s_
+        xs = [x - lo for x in ts]
+        mx, my = sum(xs) / len(xs), sum(vs) / len(vs)
+        slope = (sum((x - mx) * (y - my) for x, y in zip(xs, vs))
+                 / sum((x - mx) ** 2 for x in xs))
+        if fn == "deriv":
+            return slope
+        return my - slope * mx + slope * (w - 1 + horizon)  # predict_linear
+
+    batch_rel = rel.filter(F.col("ts").between(lo, t))
+    legs = {
+        fn: (promql.grid_rate(rel, t, t, w, 600, fn),
+             getattr(promql, fn)(batch_rel, lo, t))
+        for fn in ("rate", "increase", "delta", "irate", "idelta", "changes")
+    }
+    legs["deriv"] = (promql.grid_deriv(rel, t, t, w, 600),
+                     promql.deriv(batch_rel, lo, t))
+    legs["predict_linear"] = (
+        promql.grid_deriv(rel, t, t, w, 600, horizon=horizon),
+        promql.predict_linear(batch_rel, lo, t, horizon))
+    legs["holt_winters"] = (
+        promql.grid_holt_winters(rel, t, t, w, 600, sf, tf),
+        promql.holt_winters(batch_rel, lo, t, sf, tf))
+    for fn, (g, b) in legs.items():
+        want = {k: ref(fn, pts) for k, pts in win.items()}
+        want = {k: x for k, x in want.items() if x is not None}
+        assert len(want) == 4, fn  # every series spans the window
+        assert by_series(g) == by_series(b), fn
+        assert by_series(g) == pytest.approx(want, rel=1e-9, abs=1e-9), fn
+        assert by_series(b) == pytest.approx(want, rel=1e-9, abs=1e-9), fn
+        value_type = "bigint" if fn == "changes" else "double"
+        assert b.schema.simpleString() == (
+            "struct<series_key:bigint,labels:map<string,string>,"
+            f"value:{value_type}>"), fn
 
 
 def test_promql_range_tiered_equals_raw_and_survives_purge(spark, tmp_path):
