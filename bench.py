@@ -1,8 +1,9 @@
 #!/usr/bin/env python
 """Headline benchmark: run the declared queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...},
-"sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print the
+full JSON payload {"metric": ..., "value": N, "unit": "sec", "queries":
+{...}, "sf": ...}, then one short JSON line per suite's timing map at
+2 decimals, the last line holding the headline map and the scalars.
 
 Each query is fully executed (collected to the driver via a count over the
 materialized result — write-discard shape) and timed individually; the
@@ -300,24 +301,28 @@ def main() -> None:
 
     pts_per_sec, bytes_per_point = ingest_bench_isolated(cpus)
 
-    # CLEAN_CANARY: the cleanest canary ever recorded in the committed
-    # artifact (falls back to the r9/r10 judge quiet-box reading, 0.187s,
-    # when no artifact exists yet).  Reading it from BENCH_LATEST.json
-    # instead of a constant keeps the gate meaningful across host changes
-    # (r10 verdict item 3).  In-session readings on this host run up to
-    # ~1.4x hot under concurrent load (see VERDICT r8-r10 watch item) —
-    # warn loudly so a contaminated headline is never mistaken for a code
-    # regression.
+    # CLEAN_CANARY: the cleanest canary recorded at THIS core count
+    # (SPARK_GRAFT_CPUS) in the committed artifact's clean_canary_by_cpus
+    # map.  The canary runs on every core, so a 4-core reading measured
+    # against a 32-core reference would flag every run as loaded.  An
+    # artifact without the map holds local[32] runs only (falling back to
+    # the r9/r10 judge quiet-box reading, 0.187s, when none exists).  With
+    # no reference at this core count the run is not judged, and a clean
+    # run becomes the reference.  In-session readings run up to ~1.4x hot
+    # under concurrent load — warn loudly so a contaminated headline is
+    # never mistaken for a code regression.
     latest_path = os.path.join(
         os.path.dirname(os.path.abspath(__file__)), "BENCH_LATEST.json")
-    prior_canary = None
+    clean_by_cpus = {"32": 0.187}
     try:
         with open(latest_path) as fh:
-            prior_canary = json.load(fh).get("calibration_canary_seconds")
+            prior = json.load(fh)
+        clean_by_cpus = prior.get("clean_canary_by_cpus") or {
+            "32": prior.get("calibration_canary_seconds") or 0.187}
     except (OSError, ValueError):
         pass
-    CLEAN_CANARY = prior_canary if prior_canary else 0.187
-    contaminated = canary_s > CLEAN_CANARY * 1.15
+    CLEAN_CANARY = clean_by_cpus.get(str(cpus))
+    contaminated = CLEAN_CANARY is not None and canary_s > CLEAN_CANARY * 1.15
     if contaminated:
         print(
             f"# WARNING: canary {canary_s:.3f}s is >15% above the clean-host "
@@ -334,6 +339,7 @@ def main() -> None:
         "metric": "headline_suite_seconds",
         "unit": "sec",
         "sf": sf,
+        "cpus": cpus,
         "queries": timings,
         "extended_queries": ext_timings,
         "extra_queries": extra_timings,
@@ -353,7 +359,9 @@ def main() -> None:
     # replaced by a run whose canary is at least as clean (small tolerance
     # so equal-quality hosts still refresh it).
     replace_clean = not contaminated and (
-        prior_canary is None or canary_s <= prior_canary * 1.05)
+        CLEAN_CANARY is None or canary_s <= CLEAN_CANARY * 1.05)
+    payload["clean_canary_by_cpus"] = {
+        **clean_by_cpus, **({str(cpus): canary_s} if replace_clean else {})}
     target = latest_path if replace_clean else latest_path.replace(
         "BENCH_LATEST.json", "BENCH_LATEST_HOT.json")
     if not replace_clean:
@@ -371,16 +379,22 @@ def main() -> None:
     # The driver archives only the TAIL of stdout (~2000 chars): the full
     # payload above is ~6 KB, so a tail capture alone cannot reparse it
     # (r11's BENCH artifact was front-truncated for exactly this reason —
-    # VERDICT r12 item 2).  Print a second, compact scalars-only line
-    # LAST so any tail window ends with one complete parseable JSON line;
-    # the complete per-query payload stays in the line above and in
-    # BENCH_LATEST(.HOT).json.
+    # VERDICT r12 item 2).  So the per-query maps follow at 2 decimals,
+    # one complete JSON line per suite, and the LAST line holds the
+    # headline map with the scalars: any tail window ends with whole
+    # parseable lines, the headline map always among them.
+    def rounded(m: dict[str, float]) -> dict[str, float]:
+        return {k: round(v, 2) for k, v in m.items()}
+
+    for key in ("extra_queries", "extended_queries"):
+        print(json.dumps({key: rounded(payload[key])}, separators=(",", ":")))
     compact = {k: payload[k] for k in (
-        "metric", "unit", "sf", "extended_suite_seconds",
+        "metric", "unit", "sf", "cpus", "extended_suite_seconds",
         "extra_suite_seconds", "ingest_points_per_sec",
         "storage_bytes_per_point", "calibration_canary_seconds", "value")}
+    compact["queries"] = rounded(timings)
     compact["compact"] = True
-    print(json.dumps(compact))
+    print(json.dumps(compact, separators=(",", ":")))
     sys.stdout.flush()
 
 

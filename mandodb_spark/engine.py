@@ -339,7 +339,10 @@ class TSDB:
 
     def over_time(self, fn: str, metric: str, matchers: list[LabelMatcher] | None,
                   start: int, end: int, step: int) -> DataFrame:
-        """``<fn>_over_time`` (avg/min/max/sum/count) on tumbling steps."""
+        """``<fn>_over_time`` (any ``promql._OVER_TIME`` fn) on tumbling
+        ``step`` windows [ws, ws + step − 1], ws = start, start + step, …
+        ≤ end, the last one clipped at ``end``: one row per (series,
+        window) — ``grid_over_time`` on the window-equals-step grid."""
         from .functions import promql
 
         return promql.over_time(self._selected(metric, matchers, start, end), fn, start, end, step)
@@ -360,12 +363,15 @@ class TSDB:
                            matchers: list[LabelMatcher] | None,
                            start: int, end: int, window: int, step: int) -> DataFrame:
         """PromQL subquery ``<fn>_over_time(rate(metric[window])[start..end:step])``
-        — e.g. per-series peak 1h rate over a week."""
+        — e.g. per-series peak 1h rate over a week.  The inner rate is
+        ``grid_rate`` over the step-aligned windows [k·step, k·step +
+        window) up to ``end``, so a window/step fan-out over
+        ``promql.GRID_FANOUT_CAP`` raises, as the text subquery does."""
         from .functions import promql
 
         return promql.subquery_over_time(
-            self._selected(metric, matchers, start - window, end), fn, start, end, window, step
-        )
+            self._selected(metric, matchers, start // step * step, end),
+            fn, start, end, window, step)
 
     def promql(self, query: str, at_ts: int, lookback: int = 300) -> DataFrame:
         """Evaluate a PromQL TEXT query as an instant query at ``at_ts``

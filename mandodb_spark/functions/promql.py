@@ -11,8 +11,11 @@ is a pure DataFrame transform:
   ``holt_winters`` over one [start, end] window — each is its range-query
   grid primitive (``grid_rate``, ``grid_deriv``, ``grid_holt_winters``)
   evaluated on the one-point grid {end}, so one body serves both;
-- ``*_over_time`` aggregations: avg/min/max/sum/count per series per
-  tumbling window;
+- ``*_over_time`` aggregations (``over_time``, ``quantile_over_time``,
+  ``mad_over_time``, ``absent_over_time``) per series per tumbling
+  ``step`` window, and the subquery rate ``rate_sliding`` — each is its
+  grid primitive on the grid whose eval points close the windows
+  (window = step for the tumbling forms);
 - instant-vector selection: ``instant`` (latest sample per series at t);
 - label aggregation: ``sum_by`` / ``avg_by`` etc. — regroup series by a
   label subset (PromQL's ``sum by (labels) (...)``).
@@ -97,20 +100,35 @@ _OVER_TIME = {
 }
 
 
+def _window_starts(grid: DataFrame, window: int) -> DataFrame:
+    """A grid result re-keyed by window start: the eval point t closes
+    the window [t − window + 1, t]."""
+    return grid.select("series_key", "labels",
+                       (F.col("ts") - (window - 1)).alias("window_start"),
+                       "value")
+
+
+def _tumbling(grid, rel: DataFrame, start: int, end: int, step: int,
+              *args, **kwargs) -> DataFrame:
+    """``grid(rel, *args, t0, t1, window, step, **kwargs)`` on the
+    tumbling windows [ws, ws + step − 1], ws = start, start + step, … ≤
+    end: window = step on the grid t = ws + step − 1, the relation
+    clipped at ``end`` (a partial last window).  Each sample serves one
+    eval point, so the cover is a filter and a computed column
+    (:func:`_cover`)."""
+    out = grid(rel.filter(F.col("ts") <= F.lit(end)), *args,
+               start + step - 1, end + step - 1, step, step, **kwargs)
+    return _window_starts(out, step)
+
+
 def over_time(rel: DataFrame, fn: str, start: int, end: int, step: int) -> DataFrame:
     """``<fn>_over_time`` evaluated on tumbling ``step`` windows across
-    [start, end]: one row per (series, window).
+    [start, end]: one row per (series, window) — :func:`grid_over_time`
+    on the window-equals-step grid (:func:`_tumbling`).
 
     Output: series_key, labels, window_start, value.
     """
-    agg = _OVER_TIME[fn]
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    bucket = (F.floor((F.col("ts") - F.lit(start)) / F.lit(step)) * step + start).cast("long")
-    return (
-        rel.groupBy("series_key", bucket.alias("window_start"))
-        .agg(F.any_value("labels").alias("labels"), agg(F.col("value")).alias("value"))
-        .select("series_key", "labels", "window_start", "value")
-    )
+    return _tumbling(grid_over_time, rel, start, end, step, fn)
 
 
 def mad_over_time(rel: DataFrame, start: int, end: int, step: int) -> DataFrame:
@@ -119,29 +137,9 @@ def mad_over_time(rel: DataFrame, start: int, end: int, step: int) -> DataFrame:
     ``median(|x_i − median(x)|)`` per (series, window), both medians with
     the linear-interpolation quantile Prometheus uses (== Spark
     ``percentile`` == DuckDB ``quantile_cont``, the pinned cross-engine
-    triple).
-
-    Two aggregates on the SAME (series_key, window) key — the join back
-    and the second groupBy stay co-partitioned with the first shuffle's
-    output, so the op costs one real exchange of the range's samples.
-    Per-group percentile here is window-bounded (samples per series per
-    step), never the corpus-global buffer the quantile-sketch path
-    exists to avoid.
+    triple) — :func:`grid_mad` on tumbling ``step`` windows.
     """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    bucket = (F.floor((F.col("ts") - F.lit(start)) / F.lit(step)) * step + start).cast("long")
-    w = rel.select("series_key", "labels", "value", bucket.alias("window_start"))
-    med = w.groupBy("series_key", "window_start").agg(
-        F.expr("percentile(value, 0.5d)").alias("__med"))
-    return (
-        w.join(med, ["series_key", "window_start"])
-        .groupBy("series_key", "window_start")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.expr("percentile(abs(value - __med), 0.5d)").alias("value"),
-        )
-        .select("series_key", "labels", "window_start", "value")
-    )
+    return _tumbling(grid_mad, rel, start, end, step)
 
 
 def absent_over_time(rel: DataFrame, start: int, end: int, step: int,
@@ -151,55 +149,34 @@ def absent_over_time(rel: DataFrame, start: int, end: int, step: int,
     holds NO sample of the (already matcher-filtered) relation —
     dashboards' "was this thing silent during the outage" primitive.
 
-    The full window grid is a generated ``sequence`` (O(windows) rows,
-    no data scan); present windows are one distinct-aggregate of the
-    pruned range; absent = grid ANTI-JOIN present, broadcast because the
-    present set is ≤ the grid.  ``labels`` (typically the equality
-    matchers, as in PromQL's absent()) decorate the output rows.
+    The full window grid is a generated sequence (O(windows) rows, no
+    data scan) anti-joined against the windows the tumbling ``count``
+    reports — the shape the text ``absent_over_time`` lowers to.
+    ``labels`` (typically the equality matchers, as in PromQL's absent())
+    decorate the output rows.
     """
-    spark = rel.sparkSession
-    grid = spark.range(1).select(
-        F.explode(
-            F.sequence(F.lit(int(start)), F.lit(int(end)), F.lit(int(step)))
-        ).alias("window_start")
-    )
-    bucket = (F.floor((F.col("ts") - F.lit(start)) / F.lit(step)) * step + start).cast("long")
-    present = (
-        rel.filter(F.col("ts").between(start, end))
-        .select(bucket.alias("window_start")).distinct()
-    )
+    # absence looks across series: one key for every sample, so the
+    # count groups by window alone (no per-row series hash)
+    one = rel.withColumn("series_key", F.lit(0).cast("long"))
+    present = _tumbling(grid_over_time, one, start, end, step,
+                        "count").select("window_start")
+    grid = rel.sparkSession.range(1).select(
+        F.explode(F.sequence(F.lit(start), F.lit(end), F.lit(step))).alias("window_start"))
     lab = labels or {"absent": "true"}
     lab_col = F.create_map(*[x for k, v in sorted(lab.items())
                              for x in (F.lit(k), F.lit(v))])
     return (
-        grid.join(F.broadcast(present), "window_start", "left_anti")
+        grid.join(present, "window_start", "left_anti")
         .select(lab_col.alias("labels"), "window_start", F.lit(1.0).alias("value"))
     )
 
 
-def quantile_over_time(
-    rel: DataFrame, q: float, start: int, end: int, step: int, exact: bool = True
-) -> DataFrame:
-    """``quantile_over_time(q, ...)`` on tumbling ``step`` windows.
-
-    ``exact=True`` uses ``percentile`` (exact, needs the window's samples
-    grouped — right for dashboards over pruned ranges); ``exact=False``
-    uses ``approx_percentile`` (t-digest sketch, mergeable map-side — the
-    100 TB path, where an exact per-group sort of raw samples is the
-    bottleneck).  Same output shape either way.
-    """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start, end))
-    bucket = (F.floor((F.col("ts") - F.lit(start)) / F.lit(step)) * step + start).cast("long")
-    quant = (
-        F.percentile(F.col("value"), F.lit(q))
-        if exact
-        else F.approx_percentile(F.col("value"), F.lit(q), F.lit(10_000))
-    )
-    return (
-        rel.groupBy("series_key", bucket.alias("window_start"))
-        .agg(F.any_value("labels").alias("labels"), quant.alias("value"))
-        .select("series_key", "labels", "window_start", "value")
-    )
+def quantile_over_time(rel: DataFrame, q: float, start: int, end: int,
+                       step: int) -> DataFrame:
+    """``quantile_over_time(q, ...)`` on tumbling ``step`` windows: the
+    exact interpolated ``percentile`` of each window's samples —
+    :func:`grid_over_time` on the window-equals-step grid."""
+    return _tumbling(grid_over_time, rel, start, end, step, "quantile", q=q)
 
 
 def resets(rel: DataFrame, start: int, end: int) -> DataFrame:
@@ -263,53 +240,19 @@ def rate_sliding(rel: DataFrame, start: int, end: int, window: int, step: int) -
     """Counter rate evaluated on SLIDING windows of ``window`` seconds every
     ``step`` seconds — the engine of a PromQL subquery ``rate(x[w])[r:s]``.
 
-    Spark-first shape: each sample lands in its window/step covering
-    windows via a JVM-side sequence explode (bounded fan-out = w/s, the
-    same duplication ``F.window(slide)`` performs), then one window pass
-    per (series, window_start) computes the reset-aware increase and the
-    observed span.  Windows are step-aligned ([k·s, k·s+w)), evaluation
-    point = window end — PromQL's instant grid shifted to bucket starts,
-    documented rather than hidden.  Output: series_key, labels,
-    window_start, value — feed any ``_OVER_TIME`` aggregate for the outer
+    Windows are step-aligned, [ws, ws + window) for ws = k·step from
+    ``(start // step)·step`` up to ``end``, the relation clipped at
+    ``end`` — PromQL's instant grid shifted to window starts, documented
+    rather than hidden.  This is :func:`grid_rate` on the grid
+    t = ws + window − 1, so it shares that primitive's
+    :data:`GRID_FANOUT_CAP`.  Output: series_key, labels, window_start,
+    value — feed any ``_OVER_TIME`` aggregate for the outer
     ``<fn>_over_time(...[r:s])`` (see :func:`subquery_over_time`).
     """
-    rel = _ensure_series_key(rel).filter(F.col("ts").between(start - window, end))
-    # covering window starts: k·step in [ts-window+1, ts], clamped to range
-    lo = F.greatest(
-        (F.floor((F.col("ts") - F.lit(window)) / step) + 1) * step, F.lit((start // step) * step)
-    ).cast("long")
-    hi = F.least((F.floor(F.col("ts") / F.lit(step)) * step).cast("long"), F.lit(end))
-    covered = rel.withColumn(
-        "window_start",
-        F.explode(
-            F.when(lo <= hi, F.sequence(lo, hi, F.lit(step).cast("long"))).otherwise(
-                F.array().cast("array<long>")
-            )
-        ),
-    ).filter(F.col("ts") >= F.col("window_start"))  # window is [ws, ws+w): ts in it
-    w = Window.partitionBy("series_key", "window_start").orderBy("ts")
-    stepped = covered.withColumn("__prev", F.lag("value").over(w)).withColumn(
-        "__inc",
-        F.when(F.col("__prev").isNull(), F.lit(0.0))
-        .when(F.col("value") >= F.col("__prev"), F.col("value") - F.col("__prev"))
-        .otherwise(F.col("value")),
-    )
-    return (
-        stepped.groupBy("series_key", "window_start")
-        .agg(
-            F.any_value("labels").alias("labels"),
-            F.sum("__inc").alias("__total"),
-            (F.max("ts") - F.min("ts")).alias("__span"),
-            F.count(F.lit(1)).alias("__n"),
-        )
-        .filter((F.col("__n") >= 2) & (F.col("__span") > 0))
-        .select(
-            "series_key",
-            "labels",
-            "window_start",
-            (F.col("__total") / F.col("__span")).alias("value"),
-        )
-    )
+    first = start // step * step
+    out = grid_rate(rel.filter(F.col("ts") <= F.lit(end)), first + window - 1,
+                    end + window - 1, window, step, "rate")
+    return _window_starts(out, window)
 
 
 # ---------------------------------------------------------------------------
@@ -361,13 +304,21 @@ def _cover(rel: DataFrame, reach_incl: int, start: int, end: int,
     """The rows of ``rel`` that serve an eval point t = start+k·step
     within [start, end] — ts ≤ t ≤ anchor + reach_incl, ``anchor``
     defaulting to ``ts`` — one per such point, in column ``__t``.  A
-    one-point grid (start == end, an instant query) is the filter and a
-    literal — no per-row sequence and no explode."""
+    cover whose fan-out is 1 — the one-point grid of an instant query, or
+    a reach shorter than the step (the tumbling windows) — is one filter
+    and one computed column, the first eval point at or after ts (a
+    literal on a one-point grid): no per-row sequence and no explode."""
     anchor = F.col("ts") if anchor is None else anchor
+    if _fanout(reach_incl, start, end, step) == 1:
+        last = start + (end - start) // step * step
+        keep = (F.col("ts") <= F.lit(last)) & (anchor >= F.lit(start - reach_incl))
+        if last == start:
+            return rel.filter(keep).withColumn("__t", F.lit(start).cast("long"))
+        t = (F.lit(start)
+             + F.ceil((F.col("ts") - F.lit(start)) / F.lit(step)) * step).cast("long")
+        return rel.filter(keep & (t <= anchor + F.lit(reach_incl))).withColumn("__t", t)
     rel = rel.filter((F.col("ts") <= F.lit(end))
                      & (anchor >= F.lit(start - reach_incl)))
-    if start == end:
-        return rel.withColumn("__t", F.lit(start).cast("long"))
     k_lo = F.ceil((F.col("ts") - F.lit(start)) / F.lit(step)).cast("long")
     k_hi = F.floor((anchor + F.lit(reach_incl) - F.lit(start)) / F.lit(step)).cast("long")
     k_lo = F.greatest(k_lo, F.lit(0).cast("long"))
@@ -399,8 +350,8 @@ def grid_instant(rel: DataFrame, start: int, end: int, step: int,
 
 def grid_over_time(rel: DataFrame, fn: str, start: int, end: int,
                    window: int, step: int, q: float | None = None) -> DataFrame:
-    """``<fn>_over_time(sel[window])`` at every grid eval point (SLIDING,
-    unlike the tumbling :func:`over_time`).  ``q`` feeds
+    """``<fn>_over_time(sel[window])`` at every grid eval point (sliding;
+    :func:`over_time` is its tumbling form, window = step).  ``q`` feeds
     quantile_over_time's interpolated percentile."""
     _check_fanout(window - 1, start, end, step, f"grid_over_time({fn})")
     covered = _cover(_ensure_series_key(rel), window - 1, start, end, step)
@@ -481,10 +432,10 @@ def grid_rate(rel: DataFrame, start: int, end: int, window: int, step: int,
 def grid_mad(rel: DataFrame, start: int, end: int, window: int,
              step: int) -> DataFrame:
     """``mad_over_time(sel[window])`` at every grid eval point: median
-    absolute deviation per (series, t) — the sliding dual of
-    :func:`mad_over_time`'s tumbling windows.  Two bounded aggregations
-    over the same explode (median, then median of |x − med| after an
-    equi-join on (series, t)); groups are window-sized, so the exact
+    absolute deviation per (series, t) — :func:`mad_over_time` is its
+    tumbling form.  Two bounded aggregations over the same cover
+    (median, then median of |x − med| after an equi-join on
+    (series, t)); groups are window-sized, so the exact
     ``percentile`` is the right tool here (unlike the cross-series
     quantile aggregators)."""
     _check_fanout(window - 1, start, end, step, "grid_mad")
@@ -664,8 +615,9 @@ def subquery_over_time(rel: DataFrame, fn: str, start: int, end: int,
     """PromQL subquery ``<fn>_over_time(rate(x[window])[start..end:step])``:
     the sliding-window rate series re-aggregated per series by ``fn``
     (max/min/avg/...) — e.g. "peak 1h request rate over the last week".
-    Two shuffles total: the sliding-rate window pass and a tiny per-series
-    regroup."""
+    The inner rate is :func:`rate_sliding` (:func:`grid_rate`, so a
+    window/step fan-out over :data:`GRID_FANOUT_CAP` raises, as the text
+    subquery does); then a tiny per-series regroup."""
     inner = rate_sliding(rel, start, end, window, step)
     agg = _OVER_TIME[fn]
     return (

@@ -234,6 +234,18 @@ def test_tsdb_binop_and_subquery_api(spark, tmp_path_factory):
     assert len(peak) == 1 and peak[0].value > 0
 
 
+def test_tsdb_subquery_reads_whole_first_window(spark, tmp_path_factory):
+    """window < step with start off the step grid: the store is read from
+    the first window's start, (start // step)·step, not start − window.
+    value = ts², ts 60..129: windows [60, 89] and [120, 149] rate 149
+    and 249, so the min is 149 (159 with the first window cut to
+    [70, 89])."""
+    db = TSDB(spark, str(tmp_path_factory.mktemp("subq") / "s"))
+    db.insert_rows([("c", {"n": "a"}, ts, float(ts * ts)) for ts in range(60, 130)])
+    low = db.subquery_over_time("min", "c", [], 100, 130, window=30, step=60)
+    assert [r.value for r in low.collect()] == pytest.approx([149.0])
+
+
 def test_value_histogram_rollup_quantile_and_pruning(spark, tmp_path_factory):
     """Percentile continuous aggregate: the materialized le-bucket rollup
     answers quantile queries equal to computing them from raw points with

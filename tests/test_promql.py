@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import math
+import statistics
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -512,6 +515,195 @@ def test_absent_over_time_grid(spark):
     assert set(got) == {100, 300} and got[100] == {"job": "x"}
     # every window populated -> empty result
     assert promql.absent_over_time(rel, 0, 299, 250).count() == 0
+
+
+#: the tumbling tests' range: five step windows from 1003, the last one
+#: [1403, 1502] clipped at 1455 with samples past it
+T_START, T_END, T_STEP = 1003, 1455, 100
+
+
+def _tumbling_rows():
+    """Two hand-built series around [T_START, T_END]: ``a`` every 17 s
+    (repeated values, one counter reset at 1257), ``b`` sparse with a
+    silent window [1203, 1302] and samples on both edges of T_END."""
+    rows, v = [], 0.0
+    for ts in range(985, 1521, 17):
+        v = 2.0 if ts == 1257 else v + float(ts * 7 % 11)
+        rows.append(({"__name__": "m", "s": "a"}, ts, v))
+    for ts in (990, 1010, 1011, 1090, 1150, 1310, 1399, 1403, 1454, 1455, 1456):
+        rows.append(({"__name__": "m", "s": "b"}, ts, float(ts % 13)))
+    return rows
+
+
+def _windows(rows, starts, end, width):
+    """{(series, ws): [(ts, value), ...] ts-sorted} over [ws, ws+width−1],
+    samples past ``end`` dropped; empty windows absent."""
+    out: dict = {}
+    for labels, ts, v in sorted(rows, key=lambda r: r[1]):
+        for ws in starts:
+            if ws <= ts <= min(ws + width - 1, end):
+                out.setdefault((labels["s"], ws), []).append((ts, v))
+    return out
+
+
+def _pct(xs, q):
+    """Linear-interpolation percentile (Spark ``percentile``)."""
+    xs = sorted(xs)
+    r = q * (len(xs) - 1)
+    lo, hi = math.floor(r), math.ceil(r)
+    return xs[lo] + (xs[hi] - xs[lo]) * (r - lo)
+
+
+def _vals(p):
+    return [v for _, v in p]
+
+
+#: plain-Python ``<fn>_over_time`` over one window's ts-sorted samples
+_OVER_REF = {
+    "avg": lambda p: statistics.fmean(_vals(p)),
+    "min": lambda p: min(_vals(p)),
+    "max": lambda p: max(_vals(p)),
+    "sum": lambda p: sum(_vals(p)),
+    "count": len,
+    "stddev": lambda p: statistics.pstdev(_vals(p)),
+    "stdvar": lambda p: statistics.pvariance(_vals(p)),
+    "last": lambda p: p[-1][1],
+    "present": lambda p: 1.0,
+    "group": lambda p: 1.0,
+    # ties resolve to the latest timestamp (Prometheus' >= / <= scan)
+    "ts_of_max": lambda p: max(p, key=lambda x: (x[1], x[0]))[0],
+    "ts_of_min": lambda p: max(p, key=lambda x: (-x[1], x[0]))[0],
+    "ts_of_last": lambda p: p[-1][0],
+}
+
+_WINDOW_SCHEMA = ("struct<series_key:bigint,labels:map<string,string>,"
+                  "window_start:bigint,value:double>")
+
+
+def _by_window(df):
+    return {(r["labels"]["s"], r["window_start"]): r["value"]
+            for r in df.collect()}
+
+
+def test_tumbling_family_matches_python_reference(spark):
+    """over_time (every fn), quantile_over_time, mad_over_time and
+    absent_over_time against plain Python over the tumbling windows of
+    hand-built rows — start off any round number, samples before start
+    and past end, and a partial last window."""
+    rows = _tumbling_rows()
+    rel = _mk_rel(spark, rows).cache()
+    starts = range(T_START, T_END + 1, T_STEP)
+    wins = _windows(rows, starts, T_END, T_STEP)
+    assert ("b", 1403) in wins and ("b", 1203) not in wins
+    assert set(_OVER_REF) == set(promql._OVER_TIME)
+    for fn, f in _OVER_REF.items():
+        out = promql.over_time(rel, fn, T_START, T_END, T_STEP)
+        want = {k: float(f(p)) for k, p in wins.items()}
+        assert _by_window(out) == pytest.approx(want, rel=1e-9, abs=1e-9), fn
+        assert out.schema.simpleString() == _WINDOW_SCHEMA, fn
+
+    out = promql.quantile_over_time(rel, 0.3, T_START, T_END, T_STEP)
+    want = {k: _pct(_vals(p), 0.3) for k, p in wins.items()}
+    assert _by_window(out) == pytest.approx(want, rel=1e-9, abs=1e-9)
+    assert out.schema.simpleString() == _WINDOW_SCHEMA
+
+    out = promql.mad_over_time(rel, T_START, T_END, T_STEP)
+    want = {}
+    for k, p in wins.items():
+        med = _pct(_vals(p), 0.5)
+        want[k] = _pct([abs(v - med) for v in _vals(p)], 0.5)
+    assert _by_window(out) == pytest.approx(want, rel=1e-9, abs=1e-9)
+    assert out.schema.simpleString() == _WINDOW_SCHEMA
+
+    b_rel = rel.filter(F.col("labels")["s"] == "b")
+    got = {r["window_start"]: (r["labels"], r["value"]) for r in
+           promql.absent_over_time(b_rel, T_START, T_END, T_STEP,
+                                   labels={"s": "b"}).collect()}
+    silent = {ws for ws in starts if ("b", ws) not in wins}
+    assert silent == {1203}
+    assert got == {ws: ({"s": "b"}, 1.0) for ws in silent}
+    assert promql.absent_over_time(rel, T_START, T_END, T_STEP).count() == 0
+
+
+def _ref_rate(p):
+    """Observed-span rate of one window: a reset counts the new value."""
+    if len(p) < 2 or p[-1][0] == p[0][0]:
+        return None
+    inc = sum(v - u if v >= u else v for (_, u), (_, v) in zip(p, p[1:]))
+    return inc / (p[-1][0] - p[0][0])
+
+
+@pytest.mark.parametrize("start,window", [(1003, 150), (1063, 40)])
+def test_rate_sliding_matches_python_reference(spark, start, window):
+    """rate_sliding's step-aligned windows [k·step, k·step + window) from
+    (start // step)·step to end against plain Python — windows wider than
+    the step, and narrower ones whose first window starts before
+    start − window."""
+    rows = _tumbling_rows()
+    rel = _mk_rel(spark, rows)
+    starts = range(start // T_STEP * T_STEP, T_END + 1, T_STEP)
+    want = {k: _ref_rate(p) for k, p in
+            _windows(rows, starts, T_END, window).items()}
+    want = {k: x for k, x in want.items() if x is not None}
+    out = promql.rate_sliding(rel, start, T_END, window, T_STEP)
+    assert _by_window(out) == pytest.approx(want, rel=1e-9, abs=1e-9)
+    assert out.schema.simpleString() == _WINDOW_SCHEMA
+    peak = promql.subquery_over_time(rel, "max", start, T_END, window, T_STEP)
+    per_series = {s: max(x for (s2, _), x in want.items() if s2 == s)
+                  for s, _ in want}
+    assert {r["labels"]["s"]: r["value"] for r in peak.collect()} == \
+        pytest.approx(per_series, rel=1e-9)
+
+
+def test_rate_sliding_first_window_whole_when_start_unaligned(spark):
+    """window < step with start off the step grid: the first window
+    starts at (start // step)·step, before start − window, and still sees
+    all its samples.  value = ts², ts 60..129: window [60, 89] rates
+    (89² − 60²)/29 = 149, not the [70, 89] rate 159."""
+    rel = _mk_rel(spark, [({"__name__": "m"}, ts, float(ts * ts))
+                          for ts in range(60, 130)])
+    got = {r["window_start"]: r["value"] for r in
+           promql.rate_sliding(rel, 100, 130, window=30, step=60).collect()}
+    assert got == pytest.approx({60: 149.0, 120: (129 ** 2 - 120 ** 2) / 9})
+    grid = promql.grid_rate(rel, 89, 89, 30, 60, "rate").collect()
+    assert grid[0]["value"] == pytest.approx(149.0)
+
+
+def test_fanout_one_cover_is_filter_and_column(spark):
+    """A cover whose fan-out is 1 — reach under the step, or a one-point
+    grid — plans no Generate (no sequence explode) and serves exactly the
+    brute-force eval points, an anchor below ts included; a fan-out-2
+    cover still explodes."""
+    rows = _tumbling_rows()
+    rel = promql._ensure_series_key(_mk_rel(spark, rows)).withColumn(
+        "__a", F.col("ts") - 30)
+
+    def plan(df):
+        return df._jdf.queryExecution().optimizedPlan().toString()
+
+    def pairs(df):
+        return sorted((r["ts"], r["__t"]) for r in df.collect())
+
+    def brute(reach, start, end, step, lag=0):
+        return sorted((ts, t) for _, ts, _ in rows
+                      for t in range(start, end + 1, step)
+                      if ts <= t <= ts - lag + reach)
+
+    for reach, start, end, step, anchored in (
+            (99, 1102, 1555, 100, False), (40, 1102, 1555, 100, False),
+            (40, 1102, 1555, 100, True), (500, 1300, 1350, 100, False)):
+        anchor = F.col("__a") if anchored else None
+        df = promql._cover(rel, reach, start, end, step, anchor=anchor)
+        assert "Generate" not in plan(df), (reach, start, end, anchored)
+        assert pairs(df) == brute(reach, start, end, step,
+                                  30 if anchored else 0), (reach, anchored)
+    wide = promql._cover(rel, 100, 1102, 1555, 100)
+    assert "Generate" in plan(wide)
+    assert pairs(wide) == brute(100, 1102, 1555, 100)
+    for df in (promql.over_time(rel, "max", T_START, T_END, T_STEP),
+               promql.quantile_over_time(rel, 0.5, T_START, T_END, T_STEP),
+               promql.mad_over_time(rel, T_START, T_END, T_STEP)):
+        assert "Generate" not in plan(df)
 
 
 def test_sort_by_label_and_calendar(spark):

@@ -783,6 +783,7 @@ def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     reference over the test's own rows, and each keeps its output
     schema."""
     import random
+    import statistics
 
     rng = random.Random(seed)
     rows = []
@@ -798,11 +799,6 @@ def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     def by_series(df, val="value"):
         return {r["labels"]["s"]: round(r[val], 9) for r in df.collect()}
 
-    for fn in ("avg", "sum", "min", "max", "count", "stddev", "last"):
-        g = promql.grid_over_time(rel, fn, t, t, w, 600)
-        b = promql.over_time(rel, fn, t - w + 1, t, w)
-        assert by_series(g) == by_series(b), fn
-
     g = promql.grid_instant(rel, t, t, 600, lookback=1800)
     b = promql.instant(rel, t, lookback=1800)
     assert by_series(g) == by_series(b)
@@ -813,6 +809,18 @@ def test_grid_primitives_equal_batch_at_single_point(spark, seed):
     for labels, ts, v in rows:
         if lo <= ts <= t:
             win.setdefault(labels["s"], []).append((ts, v))
+
+    # over_time is grid_over_time on a window-equals-step grid, so both
+    # legs are checked against the reference as well as each other
+    over_ref = {"avg": statistics.fmean, "sum": sum, "min": min, "max": max,
+                "count": len, "stddev": statistics.pstdev,
+                "last": lambda vs: vs[-1]}
+    for fn, f in over_ref.items():
+        g = promql.grid_over_time(rel, fn, t, t, w, 600)
+        b = promql.over_time(rel, fn, t - w + 1, t, w)
+        want = {k: f([v for _, v in pts]) for k, pts in win.items()}
+        assert by_series(g) == by_series(b), fn
+        assert by_series(g) == pytest.approx(want, rel=1e-9, abs=1e-9), fn
 
     def inc(p, v):
         return v - p if v >= p else v  # a reset restarts at v
