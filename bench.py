@@ -2,8 +2,8 @@
 """Headline benchmark: run the declared queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print the
 full JSON payload {"metric": ..., "value": N, "unit": "sec", "queries":
-{...}, "sf": ...}, then one short JSON line per suite's timing map at
-2 decimals, the last line holding the headline map and the scalars.
+{...}, "sf": ...}, then one compact line (:func:`tail_line`) holding the
+scalars and every suite's timings at 2 decimals.
 
 Each query is fully executed (collected to the driver via a count over the
 materialized result — write-discard shape) and timed individually; the
@@ -234,6 +234,51 @@ def _ingest_only() -> None:
     print(json.dumps({"points_per_sec": pts, "bytes_per_point": bpp}))
 
 
+def artifact_path(cpus: int) -> str:
+    """The side artifact of a run on local[cpus]: BENCH_LATEST.json for
+    the 32-core reference host, BENCH_LATEST_c<cpus>.json otherwise."""
+    name = "BENCH_LATEST.json" if cpus == 32 else f"BENCH_LATEST_c{cpus}.json"
+    return os.path.join(os.path.dirname(os.path.abspath(__file__)), name)
+
+
+#: tail_line's suite lists: payload key -> key of its value list.
+_TAIL_LISTS = {"extended_queries": "extended_s", "extra_queries": "extra_s"}
+
+
+def _suite_order(key: str) -> list[str]:
+    if key == "extended_queries":
+        return EXTENDED
+    from mandodb_spark.workloads import extra_parity
+    return list(extra_parity.QUERIES)
+
+
+def tail_line(payload: dict) -> str:
+    """The compact last stdout line: the scalars, the headline ``queries``
+    map and the extended/extra timings, all at 2 decimals.  A name-keyed
+    map of all ~160 queries is ~5 KB, so the two longer suites are value
+    lists in their fixed order (:data:`EXTENDED`, then
+    ``extra_parity.QUERIES``) — ~1.5 KB in all; :func:`expand_tail` maps
+    them back to names."""
+    compact = {k: payload[k] for k in (
+        "metric", "unit", "sf", "cpus", "extended_suite_seconds",
+        "extra_suite_seconds", "ingest_points_per_sec",
+        "storage_bytes_per_point", "calibration_canary_seconds", "value")}
+    compact["queries"] = {k: round(v, 2) for k, v in payload["queries"].items()}
+    for key, short in _TAIL_LISTS.items():
+        compact[short] = [round(payload[key][n], 2) for n in _suite_order(key)]
+    compact["compact"] = True
+    return json.dumps(compact, separators=(",", ":"))
+
+
+def expand_tail(line: str) -> dict:
+    """Parse a :func:`tail_line` back into name-keyed suite maps (a line
+    written with other suite lists raises rather than misnaming)."""
+    out = json.loads(line)
+    for key, short in _TAIL_LISTS.items():
+        out[key] = dict(zip(_suite_order(key), out.pop(short), strict=True))
+    return out
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or 0.1)
@@ -302,26 +347,21 @@ def main() -> None:
     pts_per_sec, bytes_per_point = ingest_bench_isolated(cpus)
 
     # CLEAN_CANARY: the cleanest canary recorded at THIS core count
-    # (SPARK_GRAFT_CPUS) in the committed artifact's clean_canary_by_cpus
-    # map.  The canary runs on every core, so a 4-core reading measured
-    # against a 32-core reference would flag every run as loaded.  An
-    # artifact without the map holds local[32] runs only (falling back to
-    # the r9/r10 judge quiet-box reading, 0.187s, when none exists).  With
-    # no reference at this core count the run is not judged, and a clean
-    # run becomes the reference.  In-session readings run up to ~1.4x hot
-    # under concurrent load — warn loudly so a contaminated headline is
-    # never mistaken for a code regression.
-    latest_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_LATEST.json")
-    clean_by_cpus = {"32": 0.187}
+    # (SPARK_GRAFT_CPUS), read from that core count's own artifact — the
+    # canary runs on every core, so a 4-core reading judged against a
+    # 32-core reference would flag every run as loaded, and one file
+    # shared by core counts would mix local[4] and local[32] timings.
+    # local[32] falls back to the r9/r10 judge quiet-box reading (0.187s)
+    # when no artifact exists yet.  In-session readings run up to ~1.4x
+    # hot under concurrent load — warn loudly so a contaminated headline
+    # is never mistaken for a code regression.
+    latest_path = artifact_path(cpus)
+    CLEAN_CANARY = 0.187 if cpus == 32 else None
     try:
         with open(latest_path) as fh:
-            prior = json.load(fh)
-        clean_by_cpus = prior.get("clean_canary_by_cpus") or {
-            "32": prior.get("calibration_canary_seconds") or 0.187}
+            CLEAN_CANARY = json.load(fh).get("calibration_canary_seconds")
     except (OSError, ValueError):
         pass
-    CLEAN_CANARY = clean_by_cpus.get(str(cpus))
     contaminated = CLEAN_CANARY is not None and canary_s > CLEAN_CANARY * 1.15
     if contaminated:
         print(
@@ -333,8 +373,8 @@ def main() -> None:
     # Per-query dicts FIRST, headline scalars LAST: the driver archives only
     # the final ~2000 chars of stdout (r8+r9 lost their headline numbers to
     # that truncation), so the fields a round-over-round comparison needs
-    # must sit at the tail.  The COMPLETE artifact is also written to
-    # BENCH_LATEST.json next to this script.
+    # must sit at the tail.  The COMPLETE artifact is also written next to
+    # this script (:func:`artifact_path`).
     payload = {
         "metric": "headline_suite_seconds",
         "unit": "sec",
@@ -355,15 +395,18 @@ def main() -> None:
     # A hot run must never clobber a clean-canary artifact (r10's driver
     # bench ran at canary 0.254 and overwrote the committed 0.186 artifact
     # — the clean numbers survived only in git history).  Contaminated
-    # readings go to BENCH_LATEST_HOT.json; the clean artifact is only
-    # replaced by a run whose canary is at least as clean (small tolerance
-    # so equal-quality hosts still refresh it).
+    # readings go to the core count's _HOT artifact; the clean artifact is
+    # only replaced by a run whose canary is at least as clean (small
+    # tolerance so equal-quality hosts still refresh it).  The first run
+    # at a core count has no reference to be judged by: it opens that core
+    # count's artifact (no other core count's file is touched) marked
+    # "canary_judged": false, and only a run at least as clean replaces
+    # it, so the reference ratchets down to the cleanest reading.
+    payload["canary_judged"] = CLEAN_CANARY is not None
     replace_clean = not contaminated and (
         CLEAN_CANARY is None or canary_s <= CLEAN_CANARY * 1.05)
-    payload["clean_canary_by_cpus"] = {
-        **clean_by_cpus, **({str(cpus): canary_s} if replace_clean else {})}
-    target = latest_path if replace_clean else latest_path.replace(
-        "BENCH_LATEST.json", "BENCH_LATEST_HOT.json")
+    target = latest_path if replace_clean else (
+        latest_path.removesuffix(".json") + "_HOT.json")
     if not replace_clean:
         print(f"# canary {canary_s:.3f}s not cleaner than recorded "
               f"{CLEAN_CANARY}s — writing {os.path.basename(target)} and "
@@ -379,22 +422,10 @@ def main() -> None:
     # The driver archives only the TAIL of stdout (~2000 chars): the full
     # payload above is ~6 KB, so a tail capture alone cannot reparse it
     # (r11's BENCH artifact was front-truncated for exactly this reason —
-    # VERDICT r12 item 2).  So the per-query maps follow at 2 decimals,
-    # one complete JSON line per suite, and the LAST line holds the
-    # headline map with the scalars: any tail window ends with whole
-    # parseable lines, the headline map always among them.
-    def rounded(m: dict[str, float]) -> dict[str, float]:
-        return {k: round(v, 2) for k, v in m.items()}
-
-    for key in ("extra_queries", "extended_queries"):
-        print(json.dumps({key: rounded(payload[key])}, separators=(",", ":")))
-    compact = {k: payload[k] for k in (
-        "metric", "unit", "sf", "cpus", "extended_suite_seconds",
-        "extra_suite_seconds", "ingest_points_per_sec",
-        "storage_bytes_per_point", "calibration_canary_seconds", "value")}
-    compact["queries"] = rounded(timings)
-    compact["compact"] = True
-    print(json.dumps(compact, separators=(",", ":")))
+    # VERDICT r12 item 2).  So one compact line follows LAST, whole in any
+    # tail window: the scalars, the headline map and the other two suites'
+    # timings (see :func:`tail_line`).
+    print(tail_line(payload))
     sys.stdout.flush()
 
 

@@ -158,8 +158,7 @@ def absent_over_time(rel: DataFrame, start: int, end: int, step: int,
     # absence looks across series: one key for every sample, so the
     # count groups by window alone (no per-row series hash)
     one = rel.withColumn("series_key", F.lit(0).cast("long"))
-    present = _tumbling(grid_over_time, one, start, end, step,
-                        "count").select("window_start")
+    present = over_time(one, "count", start, end, step).select("window_start")
     grid = rel.sparkSession.range(1).select(
         F.explode(F.sequence(F.lit(start), F.lit(end), F.lit(step))).alias("window_start"))
     lab = labels or {"absent": "true"}
@@ -305,7 +304,8 @@ def _cover(rel: DataFrame, reach_incl: int, start: int, end: int,
     within [start, end] — ts ≤ t ≤ anchor + reach_incl, ``anchor``
     defaulting to ``ts`` — one per such point, in column ``__t``.  A
     cover whose fan-out is 1 — the one-point grid of an instant query, or
-    a reach shorter than the step (the tumbling windows) — is one filter
+    a reach shorter than the step (the tumbling windows, a selector or
+    range function stepped past its lookback or window) — is one filter
     and one computed column, the first eval point at or after ts (a
     literal on a one-point grid): no per-row sequence and no explode."""
     anchor = F.col("ts") if anchor is None else anchor
